@@ -3,15 +3,20 @@ package graft
 /** Central switch for the engine's size-adaptive driver-side gates.
   *
   * Several operators pick between a driver-local fast path and a
-  * distributed fallback by comparing a measured size against a budget —
-  * pageRank's rank vector (`maxVectorNodes`), connectedComponents' edge
-  * collect (`driverEdgeLimit`), groupedMedianMad's median collect
-  * (`maxLocalGroups`), and the broadcast-vs-shuffle joins in kCore /
-  * triangleStats / Distribution. At test scale the driver-local branch
-  * always wins, so the distributed branches — the ones that actually run
-  * on a 100 TB cluster — would otherwise only ever execute in targeted
-  * unit specs, never under the full oracle sweep (round-10 verdict item
-  * 1).
+  * distributed fallback by comparing a measured size against a budget:
+  *  - pageRank's rank vector (`maxVectorNodes`);
+  *  - the shared edge gate `Graph.driverLocal` (`maxDriverEdges`), which
+  *    sends triangleStats, kCore and commonNeighborScores to one
+  *    collected, indexed edge list and their driver-local kernels;
+  *  - connectedComponents' edge collect (`driverEdgeLimit`);
+  *  - groupedMedianMad's median collect (`maxLocalGroups`);
+  *  - the broadcast-vs-shuffle joins of the distributed kCore and
+  *    triangleStats plans and of Distribution.
+  *
+  * At test scale the driver-local branch always wins, so the distributed
+  * branches — the ones that actually run on a 100 TB cluster — would
+  * otherwise only ever execute in targeted unit specs, never under the
+  * full oracle sweep (round-10 verdict item 1).
   *
   * Setting the system property `graft.forceDistributed=true` (or env
   * `SPARK_GRAFT_FORCE_DISTRIBUTED=1`, for the out-of-process Verify

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Iterative graph analytics as repeated shuffle joins — PageRank here, the
   * same skeleton serves label propagation / hubs-authorities.
@@ -61,8 +62,7 @@ object Graph {
       adjPartitions: Int = 0): DataFrame =
     pageRankImpl(edges, srcCol, dstCol, iterations, scale, maxVectorNodes,
       dedupEdges, hubDegreeThreshold, hubSalts, adjPartitions) match {
-      case Left((spark, schema, rows)) => spark.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), schema)
+      case Left((spark, schema, rows)) => localFrame(spark, rows, schema)
       case Right(df) => df // the one leaked handle (Dedup cache contract)
     }
 
@@ -93,14 +93,10 @@ object Graph {
           .toArray
           .sortBy { case (label, rank) => (-rank, label) }
           .take(k)
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        spark.createDataFrame(new java.util.ArrayList(
-          java.util.Arrays.asList(top.map { case (l, r) =>
-            org.apache.spark.sql.Row(l, r) }: _*)), schema)
+        val schema = StructType(Seq(
+          StructField("node", StringType, nullable = false),
+          StructField("rank", LongType, nullable = false)))
+        localFrame(spark, top.map { case (l, r) => Row(l, r) }, schema)
       case Right(df) =>
         df.select(expr(renderSql).as("node"), col("rank"))
           .orderBy(col("rank").desc, col("node")).limit(k)
@@ -113,9 +109,7 @@ object Graph {
   private def pageRankImpl(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, scale: Long, maxVectorNodes: Long, dedupEdges: Boolean,
       hubDegreeThreshold: Long, hubSalts: Int, adjPartitions: Int)
-      : Either[(org.apache.spark.sql.SparkSession,
-          org.apache.spark.sql.types.StructType,
-          Array[org.apache.spark.sql.Row]), DataFrame] = {
+      : Either[(SparkSession, StructType, Array[Row]), DataFrame] = {
     require(iterations >= 1, "need at least one iteration")
     require(hubSalts >= 1, "hubSalts must be >= 1")
     // Edges with a NULL endpoint are EXCLUDED: a null node has no identity
@@ -151,14 +145,10 @@ object Graph {
         val e = e0.persist(level); transients += e; e
       }
     }
-    // one-pass symmetrization (explode of both orientations) instead of a
-    // union of two projections: the union form evaluated `directed` twice —
+    // one-pass symmetrization: the union form evaluated `directed` twice —
     // a second cache scan on the persisted branch, a second full scan of
     // the caller's edge expression on the dedupEdges branch
-    val sym = directed.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    val sym = symmetric(directed)
     val adjPlan =
       if (hubSalts == 1) {
         if (dedupEdges)
@@ -221,16 +211,13 @@ object Graph {
     val initNodes = if (hubSalts == 1) adj.select(col("src").as("node"))
       else adj.select(col("src").as("node")).distinct()
     val init = initNodes.select(col("node"), lit(base).as("rank"))
-    val rankSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", adj.schema("src").dataType),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.LongType, nullable = false)))
+    val rankSchema = StructType(Seq(
+      StructField("node", adj.schema("src").dataType),
+      StructField("rank", LongType, nullable = false)))
     if (n <= graft.ScaleGates.cap(maxVectorNodes)) {
-      def local(rows: Array[org.apache.spark.sql.Row]) = spark.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), rankSchema)
       var rows = step(init, bcast = true).collect()
       for (_ <- 2 to iterations)
-        rows = step(local(rows), bcast = true).collect()
+        rows = step(localFrame(spark, rows, rankSchema), bcast = true).collect()
       adj.unpersist()
       Left((spark, rankSchema, rows)) // nothing left persisted
     } else {
@@ -272,21 +259,13 @@ object Graph {
       maxDriverEdges: Long = 5000000L): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Size-adaptive driver path (the commonNeighborScores / connected-
-    // Components pattern): under the edge gate the whole census — guards
-    // included — replays locally on the collected edge list; the wedge
-    // pipeline below is the 100 TB fallback. One cache-filling count is
-    // the only job the gate adds; it doubles as the null-id detector (a
-    // null endpoint falls through to the distributed guard, which throws
-    // the canonical error).
-    val gateCounts = e.agg(count(lit(1)).as("n"),
-      count(when(col("src").isNull || col("dst").isNull, 1)).as("nBad")).head()
-    if (gateCounts.getLong(1) == 0L &&
-        gateCounts.getLong(0) <= graft.ScaleGates.cap(maxDriverEdges)) {
-      localTriangleStats(e) match {
-        case Some(out) => e.unpersist(); return out
-        case None => () // oriented-wedge budget exceeded — distributed below
-      }
+    // Under the edge gate the whole census — guards included — replays
+    // locally on the collected edge list; the wedge pipeline below is the
+    // 100 TB fallback. A null endpoint falls through to the distributed
+    // guard, which throws the canonical error.
+    driverLocal(e, maxDriverEdges)(localTriangleStats(_)) match {
+      case Some(out) => return out
+      case None => () // over budget, null ids or too many oriented wedges
     }
     val deg = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
@@ -314,14 +293,11 @@ object Graph {
         lim.getLong(2) < Int.MaxValue.toLong)
     if (nullIds || !packed) {
       e.unpersist(); deg.unpersist()
-      throw new IllegalArgumentException(
-        if (nullIds)
+      throw (
+        if (nullIds) new IllegalArgumentException(
           "triangleStats: some node ids are null after cast to long (null " +
-            "or non-numeric ids) — supply integral ids in [0, 2^32)"
-        else
-          s"triangleStats packs (degree,id) into one long: node ids must " +
-            s"be in [0, 2^32) and degrees < 2^31; got id range " +
-            s"[${lim.get(0)}, ${lim.get(1)}], max degree ${lim.get(2)}")
+            "or non-numeric ids) — supply integral ids in [0, 2^32)")
+        else packingError(lim.get(0), lim.get(1), lim.get(2)))
     }
     val nNodes = lim.getLong(3)
     // deg is |nodes| rows — broadcast it (gated like kCore's alive set) so
@@ -373,69 +349,45 @@ object Graph {
     Dedup.materializeAndRelease(out, e, deg, oriented)
   }
 
+  /** triangleStats' packing-guard failure, shared by both paths so they
+    * throw the same text. */
+  private def packingError(mn: Any, mx: Any, md: Any) = new IllegalArgumentException(
+    s"triangleStats packs (degree,id) into one long: node ids must be in " +
+      s"[0, 2^32) and degrees < 2^31; got id range [$mn, $mx], max degree $md")
+
   /** Driver-local exact replica of the triangle census for edge lists under
     * the gate: same multiset degrees, same (degree, id) packing guard (and
-    * its exact error text, with the edge cache released before the throw),
+    * its exact error text; the gate releases the edge cache on the throw),
     * same degree-ordered orientation, same strict `p.vkey < q.vkey` wedge
     * expansion and set-membership closure check. Returns None when the
     * oriented wedge-pair count exceeds `maxWedges` (hub-heavy graphs keep
     * the distributed plan, whose orientation bound is the point).
     */
-  private def localTriangleStats(e: DataFrame,
+  private def localTriangleStats(g: LocalEdges,
       maxWedges: Long = 20000000L): Option[DataFrame] = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val pairs = e.as[(Long, Long)].collect()
-    val nEdges = pairs.length.toLong
-    // node index: sorted distinct endpoints
-    val endpoints = new Array[Long](pairs.length * 2)
-    var i = 0
-    while (i < pairs.length) {
-      endpoints(2 * i) = pairs(i)._1; endpoints(2 * i + 1) = pairs(i)._2; i += 1
-    }
-    java.util.Arrays.parallelSort(endpoints)
-    var nNodes = 0
-    i = 0
-    while (i < endpoints.length) {
-      if (i == 0 || endpoints(i) != endpoints(i - 1)) nNodes += 1
-      i += 1
-    }
-    val nodes = new Array[Long](nNodes)
-    var j = 0; i = 0
-    while (i < endpoints.length) {
-      if (i == 0 || endpoints(i) != endpoints(i - 1)) { nodes(j) = endpoints(i); j += 1 }
-      i += 1
-    }
-    def idx(x: Long): Int = java.util.Arrays.binarySearch(nodes, x)
-    val degA = new Array[Long](nNodes)
-    i = 0
-    while (i < pairs.length) {
-      degA(idx(pairs(i)._1)) += 1; degA(idx(pairs(i)._2)) += 1; i += 1
-    }
+    val nodes = g.nodes
+    val degA = g.deg
+    val nNodes = nodes.length
+    val nEdges = g.src.length
     // the packing guard, locally (null ids cannot reach here — the gate
     // sends them to the distributed guard): same precondition, same error
     if (nNodes > 0) {
-      val mn = nodes(0); val mx = nodes(nNodes - 1)
       val md = degA.max
-      if (!(mn >= 0L && mx < 4294967296L && md < Int.MaxValue.toLong)) {
-        e.unpersist()
-        throw new IllegalArgumentException(
-          s"triangleStats packs (degree,id) into one long: node ids must " +
-            s"be in [0, 2^32) and degrees < 2^31; got id range " +
-            s"[$mn, $mx], max degree $md")
-      }
+      if (!(g.packable && md < Int.MaxValue.toLong))
+        throw packingError(nodes(0), nodes(nNodes - 1), md)
     }
     var nWedgesL = 0L
-    i = 0
+    var i = 0
     while (i < nNodes) { nWedgesL += degA(i) * (degA(i) - 1) / 2; i += 1 }
     // degree-ordered orientation: out-adjacency of (v, vkey) per u
-    val outDeg = new Array[Int](nNodes)
-    def skeyOf(node: Long): Long = degA(idx(node)) * 4294967296L + node
+    val skey = new Array[Long](nNodes)
     i = 0
-    while (i < pairs.length) {
-      val (s, d) = pairs(i)
-      val u = if (skeyOf(s) < skeyOf(d)) s else d
-      outDeg(idx(u)) += 1
+    while (i < nNodes) { skey(i) = degA(i) * 4294967296L + nodes(i); i += 1 }
+    val outDeg = new Array[Int](nNodes)
+    i = 0
+    while (i < nEdges) {
+      val s = g.src(i); val d = g.dst(i)
+      outDeg(if (skey(s) < skey(d)) s else d) += 1
       i += 1
     }
     var orientedWedges = 0L
@@ -446,18 +398,17 @@ object Graph {
     i = 0
     while (i < nNodes) { off(i + 1) = off(i) + outDeg(i); i += 1 }
     val fill = java.util.Arrays.copyOf(off, nNodes)
-    val outV = new Array[Long](pairs.length)    // v per oriented edge
-    val outVk = new Array[Long](pairs.length)   // its vkey (sort key)
-    val member = new Array[Long](pairs.length)  // packed (u, v) set
+    val outV = new Array[Long](nEdges)    // v per oriented edge
+    val outVk = new Array[Long](nEdges)   // its vkey (sort key)
+    val member = new Array[Long](nEdges)  // packed (u, v) set
     i = 0
-    while (i < pairs.length) {
-      val (s, d) = pairs(i)
-      val sk = skeyOf(s); val dk = skeyOf(d)
-      val u = if (sk < dk) s else d
-      val v = if (sk < dk) d else s
-      val ui = idx(u)
-      outV(fill(ui)) = v; outVk(fill(ui)) = math.max(sk, dk); fill(ui) += 1
-      member(i) = (u << 32) | v
+    while (i < nEdges) {
+      val s = g.src(i); val d = g.dst(i)
+      val fwd = skey(s) < skey(d)
+      val u = if (fwd) s else d
+      val v = if (fwd) d else s
+      outV(fill(u)) = nodes(v); outVk(fill(u)) = skey(v); fill(u) += 1
+      member(i) = (nodes(u) << 32) | nodes(v)
       i += 1
     }
     java.util.Arrays.parallelSort(member)
@@ -501,8 +452,8 @@ object Graph {
     val clustering =
       if (nWedges == null || nWedges.longValue == 0L) lit(null).cast("double")
       else lit(nTriangles).cast("double") * 3.0 / lit(nWedges.longValue)
-    Some(spark.range(1).select(
-      lit(nNodes.toLong).as("n_nodes"), lit(nEdges).as("n_edges"),
+    Some(g.spark.range(1).select(
+      lit(nNodes.toLong).as("n_nodes"), lit(nEdges.toLong).as("n_edges"),
       lit(nWedges).cast("long").as("n_wedges"), lit(nTriangles).as("n_triangles"),
       clustering.as("global_clustering")))
   }
@@ -536,26 +487,16 @@ object Graph {
     val esel = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .persist(level)
-    // symmetrize in ONE pass over the cache: the union-of-two-projections
-    // form scanned it twice per consumer (r15 optimization round)
-    val sym = esel.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst"))))
-        .as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    // Size-adaptive driver path (the commonNeighborScores pattern): peeling
-    // is a per-node counting loop — under the edge gate it runs locally in
-    // O(edges · peels) with zero per-iteration Spark jobs (each peel was a
-    // full count + aggregate job over a KB-scale graph). Null endpoints
-    // fall back to the distributed loop, where a null node is a regular
-    // group (unchanged semantics).
-    val gateCounts = esel.agg(count(lit(1)).as("n"),
-      count(when(col("src").isNull || col("dst").isNull, 1)).as("nBad")).head()
-    if (gateCounts.getLong(1) == 0L &&
-        gateCounts.getLong(0) <= graft.ScaleGates.cap(maxDriverEdges)) {
-      val out = localKCore(esel, k, maxIter, sym.schema("src").nullable)
-      esel.unpersist()
-      return out
+    val sym = symmetric(esel)
+    // Peeling is a per-node counting loop — under the edge gate it runs
+    // locally in O(edges · peels) with zero per-iteration Spark jobs (each
+    // peel was a full count + aggregate job over a KB-scale graph). Null
+    // endpoints fall back to the distributed loop, where a null node is a
+    // regular group (unchanged semantics).
+    val nodeNullable = sym.schema("src").nullable
+    driverLocal(esel, maxDriverEdges)(g => Some(localKCore(g, k, maxIter, nodeNullable))) match {
+      case Some(out) => return out
+      case None => () // over budget or null endpoints
     }
     // broadcast the alive set, NOT the edges — the pageRank vector pattern
     // (lesson 22: a frame behind an aggregate has no planner stats, so
@@ -620,52 +561,27 @@ object Graph {
     * non-converged run (maxIter) emits the degrees of whatever set the
     * last peel left, sub-k rows included.
     */
-  private def localKCore(e: DataFrame, k: Int, maxIter: Int,
+  private def localKCore(g: LocalEdges, k: Int, maxIter: Int,
       nodeNullable: Boolean): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val pairs = e.as[(Long, Long)].collect()
-    val endpoints = new Array[Long](pairs.length * 2)
-    var i = 0
-    while (i < pairs.length) {
-      endpoints(2 * i) = pairs(i)._1; endpoints(2 * i + 1) = pairs(i)._2; i += 1
-    }
-    java.util.Arrays.parallelSort(endpoints)
-    var nNodes = 0
-    i = 0
-    while (i < endpoints.length) {
-      if (i == 0 || endpoints(i) != endpoints(i - 1)) nNodes += 1
-      i += 1
-    }
-    val nodes = new Array[Long](nNodes)
-    var j = 0; i = 0
-    while (i < endpoints.length) {
-      if (i == 0 || endpoints(i) != endpoints(i - 1)) { nodes(j) = endpoints(i); j += 1 }
-      i += 1
-    }
-    def idx(x: Long): Int = java.util.Arrays.binarySearch(nodes, x)
-    val srcI = new Array[Int](pairs.length)
-    val dstI = new Array[Int](pairs.length)
-    val deg0 = new Array[Long](nNodes)
-    i = 0
-    while (i < pairs.length) {
-      srcI(i) = idx(pairs(i)._1); dstI(i) = idx(pairs(i)._2)
-      deg0(srcI(i)) += 1; deg0(dstI(i)) += 1
-      i += 1
-    }
+    val nNodes = g.nodes.length
     val alive = new Array[Boolean](nNodes)
     var aliveCount = 0L
-    i = 0
-    while (i < nNodes) { alive(i) = deg0(i) >= k; if (alive(i)) aliveCount += 1; i += 1 }
+    var i = 0
+    while (i < nNodes) { alive(i) = g.deg(i) >= k; if (alive(i)) aliveCount += 1; i += 1 }
+    // degree of every node over the edges whose both ends are alive
+    def degAmongAlive(): Array[Long] = {
+      val d = new Array[Long](nNodes)
+      var j = 0
+      while (j < g.src.length) {
+        if (alive(g.src(j)) && alive(g.dst(j))) { d(g.src(j)) += 1; d(g.dst(j)) += 1 }
+        j += 1
+      }
+      d
+    }
     var converged = aliveCount == nNodes.toLong
     var iter = 1
     while (!converged && iter < maxIter) {
-      val d = new Array[Long](nNodes)
-      i = 0
-      while (i < pairs.length) {
-        if (alive(srcI(i)) && alive(dstI(i))) { d(srcI(i)) += 1; d(dstI(i)) += 1 }
-        i += 1
-      }
+      val d = degAmongAlive()
       var c = 0L
       i = 0
       while (i < nNodes) {
@@ -680,36 +596,21 @@ object Graph {
     }
     if (!converged)
       System.err.println(s"[graft] WARN kCore: not converged after maxIter=$maxIter peels")
-    // output: iter == 1 short-circuit returns the full-degree aggregate
-    // filtered at k; otherwise the degree-among-final-alive map, where a
-    // node only appears if it still has an alive edge
-    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    if (converged && iter == 1) {
-      i = 0
-      while (i < nNodes) {
-        if (deg0(i) >= k) rows += org.apache.spark.sql.Row(nodes(i), deg0(i))
-        i += 1
-      }
-    } else {
-      val d = new Array[Long](nNodes)
-      i = 0
-      while (i < pairs.length) {
-        if (alive(srcI(i)) && alive(dstI(i))) { d(srcI(i)) += 1; d(dstI(i)) += 1 }
-        i += 1
-      }
-      i = 0
-      while (i < nNodes) {
-        if (alive(i) && d(i) > 0L) rows += org.apache.spark.sql.Row(nodes(i), d(i))
-        i += 1
-      }
+    // output: the degree-among-final-alive map, where a node only appears
+    // if it still has an alive edge. Zero nodes peeled → every node is
+    // alive with its full degree (≥ k ≥ 1), so the full-degree array IS
+    // that map, as in the distributed short-circuit
+    val d = if (converged && iter == 1) g.deg else degAmongAlive()
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    i = 0
+    while (i < nNodes) {
+      if (alive(i) && d(i) > 0L) rows += Row(g.nodes(i), d(i))
+      i += 1
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, nullable = nodeNullable),
-      org.apache.spark.sql.types.StructField("core_deg",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    spark.createDataFrame(
-      new java.util.ArrayList(java.util.Arrays.asList(rows.toSeq: _*)), schema)
+    val schema = StructType(Seq(
+      StructField("node", LongType, nullable = nodeNullable),
+      StructField("core_deg", LongType, nullable = false)))
+    localFrame(g.spark, rows.toArray, schema)
   }
 
   /** Link prediction by common-neighbour count: top-`topK` NON-adjacent
@@ -726,14 +627,7 @@ object Graph {
     import org.apache.spark.sql.expressions.Window
     val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one-pass symmetrization (explode of both orientations) instead of a
-    // union of two projections — the union form scanned the cached edge
-    // list twice per consumer and doubled the task count of every stage
-    // over `sym` (r15 optimization round, same change as kCore/pageRank)
-    val sym = e.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("ed"))
-      .select(col("ed.src").as("src"), col("ed.dst").as("dst"))
+    val sym = symmetric(e)
     val deg = sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     val w = Window.orderBy(col("jaccard").desc, col("u"), col("v"))
     val scored = sym.select(col("src").as("u"), col("dst").as("w"))
@@ -770,87 +664,48 @@ object Graph {
     // distributed wedge pipeline pays ~10 shuffle/broadcast stage launches
     // whose FIXED cost dwarfs the data at that size (r15 verdict item 2:
     // 32-core time 2.3× the 8-core time on a 23k-edge graph — per-stage
-    // overhead scales with cores, the work does not). The same one-row
-    // aggregate that fills the cache also guards the gate: null endpoints
-    // or ids outside [0, 2^32) (the packed-key precondition, as in
-    // triangleStats) fall back to the distributed plan, as does a wedge
-    // count past the budget (hub-heavy graphs, checked from the collected
-    // degrees before any quadratic work). Semantics are replicated on the
-    // multiset exactly — duplicate edges multiply wedge counts and degrees
-    // just as the join/aggregate pipeline does.
-    val lim = e.agg(count(lit(1)).as("n"),
-      count(when(col("src").isNull || col("dst").isNull, 1)).as("nBad"),
-      min(least(col("src"), col("dst"))).as("mn"),
-      max(greatest(col("src"), col("dst"))).as("mx")).head()
-    val nEdges = lim.getLong(0)
-    val nBad = lim.getLong(1)
-    val packable = nEdges == 0L ||
-      (!lim.isNullAt(2) && lim.getLong(2) >= 0L && lim.getLong(3) < 4294967296L)
-    if (nBad == 0L && packable && nEdges <= graft.ScaleGates.cap(maxDriverEdges)) {
-      localCommonNeighborScores(e, minCommon, topK, scored.schema) match {
-        case Some(out) => e.unpersist(); return out
-        case None => () // wedge budget exceeded — distributed fallback below
-      }
-    }
-    Dedup.materializeAndRelease(scored, e)
+    // overhead scales with cores, the work does not). Null endpoints, ids
+    // outside [0, 2^32) (the packed-key precondition, as in triangleStats)
+    // and a wedge count past the budget (hub-heavy graphs, checked from the
+    // collected degrees before any quadratic work) fall back to the
+    // distributed plan. Semantics are replicated on the multiset exactly —
+    // duplicate edges multiply wedge counts and degrees just as the
+    // join/aggregate pipeline does.
+    driverLocal(e, maxDriverEdges)(localCommonNeighborScores(_, minCommon, topK, scored.schema))
+      .getOrElse(Dedup.materializeAndRelease(scored, e))
   }
 
   /** Driver-local exact replica of the wedge/anti-join/Jaccard pipeline in
     * [[commonNeighborScores]], for edge lists under the gate. Packs each
-    * unordered pair into one long (ids < 2^32, pre-checked), enumerates
-    * wedge pairs per center, sorts and run-counts them — O(wedges log
-    * wedges) with zero boxing. Returns None when Σ deg·(deg−1)/2 exceeds
-    * `maxWedges` (the quadratic blow-up budget: 20M packed longs = 160 MB,
-    * checked from the degree array BEFORE any allocation of that size).
+    * unordered pair into one long, enumerates wedge pairs per center,
+    * sorts and run-counts them — O(wedges log wedges) with zero boxing.
+    * Returns None when an id falls outside [0, 2^32) (no packed key) or
+    * when Σ deg·(deg−1)/2 exceeds `maxWedges` (the quadratic blow-up
+    * budget: 20M packed longs = 160 MB, checked from the degree array
+    * BEFORE any allocation of that size).
     */
-  private def localCommonNeighborScores(e: DataFrame, minCommon: Int, topK: Int,
-      schema: org.apache.spark.sql.types.StructType,
-      maxWedges: Long = 20000000L): Option[DataFrame] = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val pairs = e.as[(Long, Long)].collect()
-    // node index: sorted distinct endpoint array + binary search (no boxing)
-    val endpoints = new Array[Long](pairs.length * 2)
-    var i = 0
-    while (i < pairs.length) {
-      endpoints(2 * i) = pairs(i)._1; endpoints(2 * i + 1) = pairs(i)._2; i += 1
-    }
-    java.util.Arrays.parallelSort(endpoints)
-    var nNodes = 0
-    i = 0
-    while (i < endpoints.length) {
-      if (i == 0 || endpoints(i) != endpoints(i - 1)) nNodes += 1
-      i += 1
-    }
-    val nodes = new Array[Long](nNodes)
-    var j = 0; i = 0
-    while (i < endpoints.length) {
-      if (i == 0 || endpoints(i) != endpoints(i - 1)) { nodes(j) = endpoints(i); j += 1 }
-      i += 1
-    }
+  private def localCommonNeighborScores(g: LocalEdges, minCommon: Int, topK: Int,
+      schema: StructType, maxWedges: Long = 20000000L): Option[DataFrame] = {
+    val nodes = g.nodes
+    val nNodes = nodes.length
+    val nEdges = g.src.length
     def idx(x: Long): Int = java.util.Arrays.binarySearch(nodes, x)
-    // symmetric multiset degrees (self-loops count twice, exactly like the
-    // sym groupBy)
-    val degA = new Array[Int](nNodes)
-    i = 0
-    while (i < pairs.length) {
-      degA(idx(pairs(i)._1)) += 1; degA(idx(pairs(i)._2)) += 1; i += 1
-    }
+    val degA = g.deg
     var wedges = 0L
-    i = 0
-    while (i < nNodes) { wedges += degA(i).toLong * (degA(i) - 1) / 2; i += 1 }
-    if (wedges > maxWedges) return None
+    var i = 0
+    while (i < nNodes) { wedges += degA(i) * (degA(i) - 1) / 2; i += 1 }
+    if (!g.packable || wedges > maxWedges) return None
     // CSR adjacency over the symmetric multiset
     val off = new Array[Int](nNodes + 1)
     i = 0
-    while (i < nNodes) { off(i + 1) = off(i) + degA(i); i += 1 }
+    while (i < nNodes) { off(i + 1) = off(i) + degA(i).toInt; i += 1 }
     val fill = java.util.Arrays.copyOf(off, nNodes)
-    val nbr = new Array[Long](pairs.length * 2)
+    val nbr = new Array[Long](nEdges * 2)
     i = 0
-    while (i < pairs.length) {
-      val s = idx(pairs(i)._1); val d = idx(pairs(i)._2)
-      nbr(fill(s)) = pairs(i)._2; fill(s) += 1
-      nbr(fill(d)) = pairs(i)._1; fill(d) += 1
+    while (i < nEdges) {
+      val s = g.src(i); val d = g.dst(i)
+      nbr(fill(s)) = nodes(d); fill(s) += 1
+      nbr(fill(d)) = nodes(s); fill(d) += 1
       i += 1
     }
     // packed unordered wedge pairs: one entry per (center, i<j) combination
@@ -877,11 +732,11 @@ object Graph {
     }
     java.util.Arrays.parallelSort(wp, 0, k)
     // packed normalized edge set for the non-adjacency check
-    val es = new Array[Long](pairs.length)
+    val es = new Array[Long](nEdges)
     i = 0
-    while (i < pairs.length) {
-      val lo = math.min(pairs(i)._1, pairs(i)._2)
-      val hi = math.max(pairs(i)._1, pairs(i)._2)
+    while (i < nEdges) {
+      val lo = nodes(math.min(g.src(i), g.dst(i)))
+      val hi = nodes(math.max(g.src(i), g.dst(i)))
       es(i) = (lo << 32) | hi; i += 1
     }
     java.util.Arrays.parallelSort(es)
@@ -905,9 +760,93 @@ object Graph {
       .sortBy { case (u, v, _, jac) => (-jac, u, v) }
       .take(topK)
     val rows = top.iterator.zipWithIndex.map { case ((u, v, c, jac), r) =>
-      org.apache.spark.sql.Row((r + 1).toLong, u, v, c, jac)
+      Row((r + 1).toLong, u, v, c, jac)
     }.toArray
-    Some(spark.createDataFrame(
-      new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), schema))
+    Some(localFrame(g.spark, rows, schema))
   }
+
+  /** Driver-local copy of a collected `(src: long, dst: long)` edge list,
+    * indexed once for every local kernel: `nodes` is the sorted distinct
+    * endpoint set, `src`/`dst` are per-edge positions in it, and `deg` is
+    * the symmetric multiset degree (self-loops count twice, duplicate
+    * edges multiply — exactly like a groupBy over the symmetrized list).
+    * Because `nodes` is sorted, index order is id order.
+    */
+  private final class LocalEdges(val spark: SparkSession, val nodes: Array[Long],
+      val src: Array[Int], val dst: Array[Int], val deg: Array[Long]) {
+    /** All ids fit a 32-bit half of a packed pair key: [0, 2^32). */
+    def packable: Boolean =
+      nodes.isEmpty || (nodes(0) >= 0L && nodes(nodes.length - 1) < 4294967296L)
+  }
+
+  /** The one size gate of the driver-local graph paths (triangleStats,
+    * kCore, commonNeighborScores). A single eager job over the persisted
+    * edge frame `e` counts the edges and the null endpoints — it also fills
+    * the cache every later consumer reads. With no null endpoint and at
+    * most `ScaleGates.cap(budget)` edges, the list is collected, indexed
+    * and handed to `kernel`. `e` is released when the kernel answers or
+    * throws; on None (gate closed, or the kernel declines — e.g. a wedge
+    * budget) it stays cached for the caller's distributed plan.
+    */
+  private def driverLocal(e: DataFrame, budget: Long)(
+      kernel: LocalEdges => Option[DataFrame]): Option[DataFrame] = {
+    val gate = e.agg(count(lit(1)).as("n"),
+      count(when(col("src").isNull || col("dst").isNull, 1)).as("nBad")).head()
+    if (gate.getLong(1) != 0L || gate.getLong(0) > graft.ScaleGates.cap(budget)) return None
+    val out =
+      try kernel(indexEdges(e))
+      catch { case t: Throwable => e.unpersist(); throw t }
+    if (out.isDefined) e.unpersist()
+    out
+  }
+
+  /** Collects `e` as primitive pairs and builds its [[LocalEdges]] index:
+    * sorted distinct endpoints, binary-searched positions, degrees. */
+  private def indexEdges(e: DataFrame): LocalEdges = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    val pairs = e.as[(Long, Long)].collect()
+    val endpoints = new Array[Long](pairs.length * 2)
+    var i = 0
+    while (i < pairs.length) {
+      endpoints(2 * i) = pairs(i)._1; endpoints(2 * i + 1) = pairs(i)._2; i += 1
+    }
+    java.util.Arrays.parallelSort(endpoints)
+    // compact the distinct values into the sorted array's prefix
+    var nNodes = 0
+    i = 0
+    while (i < endpoints.length) {
+      if (nNodes == 0 || endpoints(i) != endpoints(nNodes - 1)) {
+        endpoints(nNodes) = endpoints(i); nNodes += 1
+      }
+      i += 1
+    }
+    val nodes = java.util.Arrays.copyOf(endpoints, nNodes)
+    val src = new Array[Int](pairs.length)
+    val dst = new Array[Int](pairs.length)
+    val deg = new Array[Long](nNodes)
+    i = 0
+    while (i < pairs.length) {
+      src(i) = java.util.Arrays.binarySearch(nodes, pairs(i)._1)
+      dst(i) = java.util.Arrays.binarySearch(nodes, pairs(i)._2)
+      deg(src(i)) += 1; deg(dst(i)) += 1
+      i += 1
+    }
+    new LocalEdges(spark, nodes, src, dst, deg)
+  }
+
+  /** Both orientations of every `(src, dst)` edge in ONE pass (explode of a
+    * two-element array): the union-of-two-projections form scanned its
+    * input twice per consumer and doubled the task count of every stage
+    * over the result.
+    */
+  private def symmetric(e: DataFrame): DataFrame =
+    e.select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
+  /** A driver-side result as a local relation. */
+  private def localFrame(spark: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), schema)
 }

@@ -53,9 +53,7 @@ class GraphPlanShapeSpec extends SparkSpec {
   test("triangle_count: gated degree broadcast + packed orientation + semi-join wedge check") {
     // pin the DISTRIBUTED branch — the r16 driver gate short-circuits it at
     // test scale (equivalence of the branches is AnalyticsOpsSpec's job)
-    sys.props("graft.forceDistributed") = "true"
-    val plans = try executedPlans("triangle_count", "sf0.01")
-      finally sys.props -= "graft.forceDistributed"
+    val plans = forcedDistributed(executedPlans("triangle_count", "sf0.01"))
     val all = plans.mkString("\n===\n")
     // the two degree joins must be broadcasts (gated at 10M nodes), never
     // an edge-list shuffle
@@ -69,11 +67,9 @@ class GraphPlanShapeSpec extends SparkSpec {
     // pin the DISTRIBUTED branch: at test scale the r16 driver gate would
     // short-circuit the wedge pipeline this test exists to shape-check
     // (equivalence of the two branches is AnalyticsOpsSpec's job)
-    sys.props("graft.forceDistributed") = "true"
     // sf0.01: the sf0.001 co-activity graph is EMPTY and AQE folds the
     // whole pipeline to an EmptyRelation — nothing left to shape-check
-    val plans = try executedPlans("link_prediction", "sf0.01")
-      finally sys.props -= "graft.forceDistributed"
+    val plans = forcedDistributed(executedPlans("link_prediction", "sf0.01"))
     val all = plans.mkString("\n===\n")
     // top-k via TakeOrderedAndProject (k-heaps), NOT a global sort
     assert(all.contains("TakeOrderedAndProject"), all.take(4000))
@@ -131,9 +127,7 @@ class GraphPlanShapeSpec extends SparkSpec {
 
   test("kcore_decomposition: alive-set joins broadcast under the gate") {
     // distributed branch pinned, as in triangle_count above (r16 gate)
-    sys.props("graft.forceDistributed") = "true"
-    val plans = try executedPlans("kcore_decomposition", "sf0.01")
-      finally sys.props -= "graft.forceDistributed"
+    val plans = forcedDistributed(executedPlans("kcore_decomposition", "sf0.01"))
     val all = plans.mkString("\n===\n")
     assert(all.contains("BroadcastHashJoin"), all.take(4000))
   }

@@ -108,13 +108,12 @@ class PlanShapeSpec extends SparkSpec {
     // sf0.01 for link_prediction: the sf0.001 co-activity graph is EMPTY,
     // and a zero-edge input satisfies even the zeroed gate (0 <= 0), so
     // only a non-empty graph exercises the distributed shape
-    sys.props("graft.forceDistributed") = "true"
-    try {
+    forcedDistributed {
       for (q <- Seq("link_prediction", "collocation_pmi")) {
         val p = planOf(q, "sf0.01")
         assert(p.contains("TakeOrderedAndProject"), s"$q: ${p.take(3000)}")
       }
-    } finally sys.props -= "graft.forceDistributed"
+    }
   }
 
   test("equidepth_deciles derives buckets from boundary selections, no global sort") {

@@ -7,6 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Runs `body` with every ScaleGates budget zeroed
+    * (`graft.forceDistributed=true`), so gated operators take their
+    * distributed branch; the property is removed again afterwards. */
+  def forcedDistributed[T](body: => T): T = {
+    sys.props("graft.forceDistributed") = "true"
+    try body finally sys.props -= "graft.forceDistributed"
+  }
 }
 
 object SparkSpec {

@@ -85,10 +85,9 @@ class AnalyticsOpsSpec extends SparkSpec {
     }
     val triLocal = run(Graph.triangleStats(edges))
     val coreLocal = run(Graph.kCore(edges, k = 2))
-    sys.props("graft.forceDistributed") = "true"
-    val (triDist, coreDist) = try {
+    val (triDist, coreDist) = forcedDistributed {
       (run(Graph.triangleStats(edges)), run(Graph.kCore(edges, k = 2)))
-    } finally sys.props -= "graft.forceDistributed"
+    }
     assert(triLocal === triDist)
     assert(coreLocal === coreDist)
   }
@@ -103,13 +102,12 @@ class AnalyticsOpsSpec extends SparkSpec {
       .toDF("src", "dst")
     val local = Graph.commonNeighborScores(edges, minCommon = 1, topK = 50)
       .collect().map(_.toString).toSeq
-    sys.props("graft.forceDistributed") = "true"
-    val dist = try {
+    val dist = forcedDistributed {
       val d = Graph.commonNeighborScores(edges, minCommon = 1, topK = 50)
       val rows = d.collect().map(_.toString).toSeq
       d.unpersist()
       rows
-    } finally sys.props -= "graft.forceDistributed"
+    }
     assert(local === dist)
   }
 

@@ -148,24 +148,22 @@ class CacheContractSpec extends SparkSpec {
     val (heldLocal, releasedLocal) = deltaAround(Graph.triangleStats(triEdges))
     assert(heldLocal === 0)
     assert(releasedLocal === 0)
-    sys.props("graft.forceDistributed") = "true"
-    try {
+    forcedDistributed {
       val (held, released) = deltaAround(Graph.triangleStats(triEdges))
       assert(held === 1) // edge/degree/oriented caches released
       assert(released === 0)
-    } finally sys.props -= "graft.forceDistributed"
+    }
   }
 
   test("kCore leaks exactly one handle; unpersist clears all") {
     val (heldLocal, releasedLocal) = deltaAround(Graph.kCore(triEdges, k = 2))
     assert(heldLocal === 0)
     assert(releasedLocal === 0)
-    sys.props("graft.forceDistributed") = "true"
-    try {
+    forcedDistributed {
       val (held, released) = deltaAround(Graph.kCore(triEdges, k = 2))
       assert(held === 1) // edge cache + alive/deg0 released
       assert(released === 0)
-    } finally sys.props -= "graft.forceDistributed"
+    }
   }
 
   test("commonNeighborScores leaks exactly one handle; unpersist clears all") {
@@ -176,11 +174,10 @@ class CacheContractSpec extends SparkSpec {
       deltaAround(Graph.commonNeighborScores(triEdges, minCommon = 1))
     assert(heldLocal === 0)
     assert(releasedLocal === 0)
-    sys.props("graft.forceDistributed") = "true"
-    try {
+    forcedDistributed {
       val (held, released) = deltaAround(Graph.commonNeighborScores(triEdges, minCommon = 1))
       assert(held === 1)
       assert(released === 0)
-    } finally sys.props -= "graft.forceDistributed"
+    }
   }
 }

@@ -66,12 +66,11 @@ class IVFRecallSpec extends SparkSpec {
   }
 
   test("IVF recall >= 0.9 vs brute force at 8x forced-distributed, probing <= 50%") {
-    sys.props("graft.forceDistributed") = "true"
-    try {
+    forcedDistributed {
       val (recall, probedFrac) = recallAt(8)
       assert(recall >= 0.9, s"recall=$recall")
       assert(probedFrac <= 0.5, s"probed fraction $probedFrac — pruning collapsed, recall is vacuous")
-    } finally sys.props.remove("graft.forceDistributed")
+    }
   }
 
   test("LSH annTopK recall >= 0.5 vs brute force at 2x (recall < 1 by construction)") {

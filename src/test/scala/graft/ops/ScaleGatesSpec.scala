@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.{ScaleGates, SparkSpec}
 
@@ -23,20 +24,17 @@ class ScaleGatesSpec extends SparkSpec {
   private def bothPaths(label: String)(body: => DataFrame): Unit = {
     assert(!ScaleGates.forceDistributed, "flag leaked from a previous test")
     val primary = sorted(body)
-    val forced =
-      try { sys.props("graft.forceDistributed") = "true"; sorted(body) }
-      finally sys.props.remove("graft.forceDistributed")
+    val forced = forcedDistributed(sorted(body))
     assert(forced == primary, s"$label: forced-distributed branch diverged")
     assert(primary.nonEmpty, s"$label: vacuous comparison (no rows)")
   }
 
   test("cap() zeroes budgets only under the flag") {
     assert(ScaleGates.cap(42L) == 42L)
-    try {
-      sys.props("graft.forceDistributed") = "true"
+    forcedDistributed {
       assert(ScaleGates.cap(42L) == 0L)
       assert(ScaleGates.forceDistributed)
-    } finally sys.props.remove("graft.forceDistributed")
+    }
     assert(!ScaleGates.forceDistributed)
   }
 
@@ -90,5 +88,74 @@ class ScaleGatesSpec extends SparkSpec {
   test("groupedMedianMad: two-pass persist fallback matches the collect path") {
     bothPaths("groupedMedianMad")(
       Distribution.groupedMedianMad(facts, "g", col("v"), Seq(col("id"))))
+  }
+
+  // Adversarial ids for the shared edge gate of the driver-local graph
+  // kernels. Those kernels pack ids into 32-bit halves of one long, so the
+  // packed-key range [0, 2^32) decides which path may run. A local result
+  // is an unpersisted local relation; a distributed one is the persisted
+  // handle of the one-handle cache contract — storageLevel tells them apart.
+  private val twoTo32 = 4294967296L
+
+  private def idEdges(pairs: (Long, Long)*): DataFrame = {
+    import spark.implicits._
+    pairs.toDF("src", "dst")
+  }
+
+  private def ranLocally(df: DataFrame): Boolean = df.storageLevel == StorageLevel.NONE
+
+  test("commonNeighborScores: ids outside [0, 2^32) fall through to the distributed plan") {
+    val e = idEdges((-1L, 1L), (1L, twoTo32), (-1L, 2L), (2L, twoTo32),
+      (3L, -1L), (3L, twoTo32))
+    val primary = Graph.commonNeighborScores(e, minCommon = 1)
+    assert(!ranLocally(primary), "driver-local path ran on unpackable ids")
+    primary.unpersist()
+    bothPaths("commonNeighborScores[-1, 2^32]")(Graph.commonNeighborScores(e, minCommon = 1))
+  }
+
+  test("ids 2^32 - 2 and 2^32 - 1 stay on the driver-local paths and match the distributed plans") {
+    val (a, b) = (twoTo32 - 2, twoTo32 - 1)
+    // two triangles sharing the (a, b) edge, plus a pendant node
+    val e = idEdges((0L, a), (a, b), (0L, b), (5L, b), (5L, a), (5L, 7L))
+    val ops = Seq[(String, () => DataFrame)](
+      "commonNeighborScores" -> (() => Graph.commonNeighborScores(e, minCommon = 1)),
+      "triangleStats" -> (() => Graph.triangleStats(e)),
+      "kCore" -> (() => Graph.kCore(e, k = 2)))
+    for ((label, op) <- ops) {
+      assert(ranLocally(op()), s"$label: driver-local path declined ids below 2^32")
+      bothPaths(s"$label[2^32 - 1]")(op())
+    }
+  }
+
+  test("triangleStats: an id of 2^32 fails identically on both paths and leaks no cache") {
+    val e = idEdges((1L, 2L), (2L, twoTo32), (1L, twoTo32))
+    def failure(): String = {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val msg = intercept[IllegalArgumentException](Graph.triangleStats(e)).getMessage
+      assert(spark.sparkContext.getPersistentRDDs.size == before, s"cache leaked: $msg")
+      msg
+    }
+    val local = failure()
+    assert(local == forcedDistributed(failure()))
+    assert(local.contains(s"got id range [1, $twoTo32], max degree 2"), local)
+  }
+
+  test("empty edge list: kCore and commonNeighborScores agree across both paths") {
+    // the zeroed gate still admits zero edges (0 <= 0), so a negative edge
+    // budget is what sends an empty list down the distributed plan
+    val e = idEdges()
+    val ops = Seq[(String, Long => DataFrame)](
+      "kCore" -> (budget => Graph.kCore(e, k = 2, maxDriverEdges = budget)),
+      "commonNeighborScores" ->
+        (budget => Graph.commonNeighborScores(e, minCommon = 1, maxDriverEdges = budget)))
+    for ((label, op) <- ops) {
+      val local = op(5000000L)
+      val dist = op(-1L)
+      // non-vacuity without rows: each path really ran, with one schema
+      assert(ranLocally(local) && !ranLocally(dist), s"$label: path selection")
+      assert(local.schema == dist.schema, s"$label: schemas diverged")
+      assert(sorted(local) == sorted(dist), s"$label: results diverged")
+      dist.unpersist()
+    }
   }
 }
