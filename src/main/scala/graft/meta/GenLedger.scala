@@ -3,20 +3,21 @@ package graft.meta
 import java.util.concurrent.{Executors, ScheduledExecutorService, ScheduledFuture, TimeUnit}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, max}
+import org.apache.spark.sql.types.StructType
 
 import graft.meta.{LedgerControl => LC}
 
 /** The generation-ledger protocol shared by the persisted stores
   * ([[graft.ops.IncrementalDedup.SignatureStore]] and
-  * [[graft.ops.IVFStore.Store]]): commit markers written LAST, kind
-  * markers (tombstone/compaction) written just before them, latest
-  * committed compaction superseding everything below it, and idempotency
-  * keys stored INSIDE the commit marker. Extracted so the crash-safety
-  * dance is single-sourced — before this, the two stores carried
-  * byte-identical copies of six ledger methods, and a fix landing in one
-  * (the empty-write guard, the marker-atomicity fix below) could silently
-  * miss the other.
+  * [[graft.ops.IVFStore.Store]]): their data layout and read path (see
+  * Read path below), and their write protocol — commit markers written
+  * LAST, kind markers (tombstone/compaction) written just before them,
+  * latest committed compaction superseding everything below it, and
+  * idempotency keys stored INSIDE the commit marker. Single-sourced so a
+  * fix landing in one store (the empty-write guard, the marker-atomicity
+  * fix below) cannot silently miss the other.
   *
   * == Marker atomicity ==
   *
@@ -79,8 +80,17 @@ import graft.meta.{LedgerControl => LC}
   * lifecycles that way; the DATA plane (parquet generations, `_config`)
   * stays on the Hadoop FileSystem in both worlds.
   *
+  * == Read path ==
+  *
+  * The ledger also owns the data layout ([[genPath]]: `gen=N/<part>`) and
+  * how both stores read it back: [[readPart]] through one part-schema
+  * cache, [[tagged]] for per-row generation tags, [[live]] for the
+  * tombstone mask.
+  *
   * Layout under `root`:
   * {{{
+  *   gen=N/<part>/        data: one directory per part (parquet)
+  *   gen=N/deletes/       tombstone generations: the deleted keys
   *   _commits/gen=N       committed generations (content: idempotency keys)
   *   _tombstones/gen=N    kind marker: gen N is a DELETE
   *   _compactions/gen=N   kind marker: gen N is a compaction fold
@@ -266,9 +276,9 @@ private[graft] final class GenLedger(spark: SparkSession, root: String) {
     *
     * ONE-EPOCH READER GRACE: generations this fold supersedes are retained
     * until the NEXT fold (or an explicit [[vacuum]]). Store reads bind
-    * concrete `gen=N/` paths at DataFrame-construction time
-    * ([[graft.ops.IncrementalDedup.SignatureStore]] lists committed
-    * generations on the driver, then `spark.read.parquet(paths)`), so a
+    * concrete `gen=N/` paths at DataFrame-construction time (the stores
+    * list committed generations on the driver, then [[tagged]] reads
+    * their paths), so a
     * long-running read planned before this fold still has executors opening
     * those files AFTER it — an immediate sweep fails that job mid-flight
     * with FileNotFoundException, or silently drops its rows under
@@ -298,7 +308,7 @@ private[graft] final class GenLedger(spark: SparkSession, root: String) {
     val gs = (control.listGens(LC.Commit) ++ control.listGens(LC.Tombstone) ++
       control.listGens(LC.Compaction)).distinct.filter(_ < floor)
     gs.foreach { g =>
-      fs.delete(new Path(root, s"gen=$g"), true)
+      fs.delete(new Path(genPath(g)), true)
       control.dropMarker(LC.Commit, g)
       control.dropMarker(LC.Tombstone, g)
       control.dropMarker(LC.Compaction, g)
@@ -347,7 +357,7 @@ private[graft] final class GenLedger(spark: SparkSession, root: String) {
     def census(gs: Seq[Int]): (Long, Long) = {
       var files = 0L; var bytes = 0L
       gs.foreach { g =>
-        val dir = new Path(root, s"gen=$g")
+        val dir = new Path(genPath(g))
         if (fs.exists(dir)) {
           val it = fs.listFiles(dir, true)
           while (it.hasNext) {
@@ -374,6 +384,105 @@ private[graft] final class GenLedger(spark: SparkSession, root: String) {
       appliedKeys = appliedKeys().size,
       retainedGens = retained.size,
       retainedBytes = retainedBytes)
+  }
+
+  /** The compaction POLICY over [[stats]] (r14 verdict item 4), for both
+    * stores: run `fold` when the committed-generation count or the live
+    * file census crosses its threshold, and return whether it ran.
+    * Thresholds are "read amplification a query tolerates": every
+    * generation is one more unioned scan, every file one more open+footer
+    * per read.
+    */
+  def compactIfNeeded(maxGens: Int, maxFiles: Long)(fold: => Unit): Boolean = {
+    require(maxGens >= 1 && maxFiles >= 1, "thresholds must be >= 1")
+    val s = stats()
+    val trip = (s.generations > maxGens || s.dataFiles > maxFiles) &&
+      s.generations > 1 // a single generation has nothing to fold
+    if (trip) fold
+    trip
+  }
+
+  // ---- read path -----------------------------------------------------------
+
+  /** `root/gen=g/part`, or the generation directory itself when `part` is
+    * empty — the one spelling of the data layout, for writers and readers.
+    */
+  def genPath(g: Int, part: String = ""): String =
+    new Path(root, s"gen=$g/$part").toString
+
+  /** One generation's `part` as its own relation: the part's own partition
+    * layout (`bkt=`, `cell=`) is discovered, `gen` is not.
+    */
+  def readPart(part: String, g: Int): DataFrame =
+    read(part, Seq(genPath(g, part)), discoverGen = false)
+
+  /** Reads through the part-schema cache: a bare `spark.read.parquet`
+    * re-infers the schema (footer listing + a tiny Spark job) on EVERY
+    * relation construction — profiled at ~0.1 s per relation, pure driver
+    * overhead (guide §7.3). Part schemas are fixed per root (sketch
+    * parameters and layout are pinned by the store's `_config`, and the
+    * empty-fold fallbacks keep `bkt`/`cell` in the schema), so the first
+    * read's inferred schema serves every later one; only the footer round
+    * trip is skipped. The discovered `gen` is left out of the cached
+    * schema, so per-root reads (which discover none) can share the entry.
+    */
+  private def read(part: String, paths: Seq[String], discoverGen: Boolean): DataFrame = {
+    val reader = if (discoverGen) spark.read.option("basePath", root) else spark.read
+    val key = (root, part)
+    val cached = GenLedger.partSchemaCache.get(key)
+    if (cached != null) reader.schema(cached).parquet(paths: _*)
+    else {
+      val df = reader.parquet(paths: _*)
+      GenLedger.partSchemaCache.put(key, StructType(df.schema.filterNot(_.name == "gen")))
+      df
+    }
+  }
+
+  /** `part` over `gens`, every row tagged with its generation in an int
+    * column `gen`; `pre` runs on each scan before tagging, so a pruning
+    * filter (`bkt isin`) lands on the file index it prunes.
+    *
+    *  - plain parts (`perRoot = false`): ONE multi-path relation with
+    *    `basePath = root`, `gen` discovered as a partition column — free
+    *    per row, prunable, and blind to `gen=` in the root's own path. The
+    *    cast matters: with `spark.sql.sources.partitionColumnTypeInference.enabled`
+    *    off it arrives as a string, and "10" < "9".
+    *  - parts with their own `bkt=`/`cell=` layout (`perRoot = true`): one
+    *    relation per generation root, tagged with a literal — discovery
+    *    across such roots fails with conflicting directory structures as
+    *    soon as one generation (an empty fold) is unpartitioned.
+    */
+  def tagged(part: String, gens: Seq[Int], perRoot: Boolean,
+      pre: DataFrame => DataFrame = identity): DataFrame = {
+    require(gens.nonEmpty, s"store at $root has no committed generation yet")
+    if (perRoot)
+      gens.map(g => pre(readPart(part, g)).withColumn("gen", lit(g))).reduce(_ unionByName _)
+    else
+      pre(read(part, gens.map(genPath(_, part)), discoverGen = true))
+        .withColumn("gen", col("gen").cast("int"))
+  }
+
+  /** The LIVE rows of `part`: the append generations of `gens` (tombstone
+    * generations carry no data parts), minus what the tombstones in `dels`
+    * mask. A row from generation g is live unless some tombstone at
+    * dg >= g covers its `key` (a re-append at g > dg resurrects the key).
+    * With no tombstones this is the join-free read — the append-only path
+    * pays nothing for the delete feature, and a compaction restores it
+    * after takedowns. Returns the part's own columns (`gen` dropped).
+    */
+  def live(part: String, key: String, gens: Seq[Int], dels: Seq[Int],
+      perRoot: Boolean, pre: DataFrame => DataFrame = identity): DataFrame = {
+    val rows = tagged(part, gens.filterNot(dels.toSet), perRoot, pre)
+    if (dels.isEmpty) rows.drop("gen")
+    else {
+      // tombstones are takedown-scale, not corpus-scale — AQE broadcasts
+      // this join when it measures small
+      val dg = tagged("deletes", dels, perRoot = false)
+        .groupBy(key).agg(max("gen").as("dg"))
+      rows.join(dg, Seq(key), "left")
+        .filter(col("dg").isNull || col("gen") > col("dg"))
+        .drop("gen", "dg")
+    }
   }
 
   // ---- sealing -------------------------------------------------------------
@@ -443,6 +552,21 @@ private[graft] object GenLedger {
     * healthy writer can be poached.
     */
   val DefaultLockStaleMs: Long = 10 * 60 * 1000L
+
+  /** The part-schema cache behind [[GenLedger.readPart]], keyed by (store
+    * root, part name). JVM-wide: the streaming ingest opens a fresh store
+    * per micro-batch. Schemas only, never data.
+    */
+  private val partSchemaCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), StructType]()
+
+  /** Drop the part schemas cached for `root` — called when a FRESH store
+    * is created there, since a previous store at the same path (a test
+    * reusing a directory, a re-created swap target) may have had another
+    * layout.
+    */
+  def forgetPartSchemas(root: String): Unit =
+    partSchemaCache.keySet.removeIf(_._1 == root)
 
   // ---- control-plane backend registry (r15) --------------------------------
 

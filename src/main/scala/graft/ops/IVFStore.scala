@@ -30,7 +30,8 @@ import org.apache.spark.sql.functions._
   *
   * == Layout / crash safety ==
   *
-  * Same generation-delta + commit-marker dance as [[IncrementalDedup]]:
+  * Same generation-delta + commit-marker dance as [[IncrementalDedup]],
+  * and the same read path ([[graft.meta.GenLedger.live]]):
   * `gen=N/cells/cell=C/` part files written first, `_commits/gen=N` last;
   * readers union committed generations only; a crashed append's orphan
   * directory is overwritten by the retry. Centroids persist once at
@@ -44,7 +45,7 @@ import org.apache.spark.sql.functions._
   * the commit marker): no cell data moves — the doc is masked at read
   * time, with a tombstone at generation dg hiding rows from every
   * generation g <= dg (a later re-append resurrects the id). With no
-  * tombstones the read path is the join-free multi-path union; while they
+  * tombstones the read path is the join-free per-root union; while they
   * exist, reads pay a per-vector latest-event join (takedown sets are
   * tiny — AQE broadcasts), and the probe's cell filter still pushes below
   * the join so partition pruning is preserved. [[Store.compact]] folds
@@ -54,12 +55,6 @@ import org.apache.spark.sql.functions._
   * [[IncrementalDedup.SignatureStore.compact]]).
   */
 object IVFStore {
-
-  /** JVM-wide part-schema cache for [[Store.readParquetPart]], keyed by
-    * (store root, part name). Schemas only — never data.
-    */
-  private val partSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.types.StructType]()
 
   /** Create a new store at `path` with frozen `index` centroids.
     *
@@ -92,7 +87,7 @@ object IVFStore {
     // a FRESH store at this path: drop part schemas cached for a previous
     // store that lived at the same root (e.g. retrainAndSwap wiping and
     // re-creating a crashed vNext, or a test reusing a directory)
-    partSchemaCache.keySet.removeIf(_._1 == path)
+    graft.meta.GenLedger.forgetPartSchemas(path)
     new Store(spark, path, index, defaultNprobe)
   }
 
@@ -334,12 +329,10 @@ object IVFStore {
         if (oldLedger.compactionGens().exists(g => !seen(g))) return None
         gens.filterNot(seen).sorted.foreach { g =>
           val keys = oldLedger.keysOf(g)
-          if (dels(g))
-            st.deleteCarrying(spark.read.parquet(s"$oldRoot/gen=$g/deletes"), keys)
+          if (dels(g)) st.deleteCarrying(oldLedger.readPart("deletes", g), keys)
           else
             st.appendCarrying(
-              spark.read.parquet(s"$oldRoot/gen=$g/cells").select("vec_id", "embedding"),
-              keys)
+              oldLedger.readPart("cells", g).select("vec_id", "embedding"), keys)
         }
         Some(seen ++ gens)
       }
@@ -392,28 +385,11 @@ object IVFStore {
   final class Store(spark: SparkSession, root: String, val index: IVF.Index,
       val defaultNprobe: Int = 2) {
 
-    // marker protocol single-sourced with IncrementalDedup.SignatureStore
+    // marker protocol, `gen=N/<part>` layout and masked read path
+    // single-sourced with IncrementalDedup.SignatureStore
     private val ledger = new graft.meta.GenLedger(spark, root)
     private def fs = ledger.fs
-
-    /** Per-part schema cache, mirroring
-      * [[IncrementalDedup.SignatureStore]]'s: part schemas are fixed per
-      * root, so re-inferring them (footer listing + a tiny job, ~0.1 s)
-      * on every per-generation relation construction is pure driver
-      * overhead (guide §7.3). Only the inference round trip is skipped.
-      * JVM-wide and keyed by (root, part) — the streaming ingest opens a
-      * fresh Store per micro-batch.
-      */
-    private def readParquetPart(part: String, path: String*): DataFrame = {
-      val key = (root, part)
-      val cached = IVFStore.partSchemaCache.get(key)
-      if (cached != null) spark.read.schema(cached).parquet(path: _*)
-      else {
-        val df = spark.read.parquet(path: _*)
-        IVFStore.partSchemaCache.put(key, df.schema)
-        df
-      }
-    }
+    import ledger.genPath
 
     /** Committed generations, ascending; a committed compaction supersedes
       * everything below it (see [[graft.meta.GenLedger.committedGens]]).
@@ -443,19 +419,12 @@ object IVFStore {
       */
     def vacuum(): Int = ledger.withWriterLock { ledger.vacuum() }
 
-    /** Threshold-triggered fold over [[stats]] (r14 verdict item 4) — same
-      * policy as [[IncrementalDedup.SignatureStore.compactIfNeeded]].
-      * Returns whether a fold ran.
+    /** Threshold-triggered [[compact]] over [[stats]] — the shared policy,
+      * [[graft.meta.GenLedger.compactIfNeeded]]. Returns whether a fold ran.
       */
     def compactIfNeeded(maxGens: Int = 16, maxFiles: Long = 4096,
-        keyRetention: Int = 128): Boolean = {
-      require(maxGens >= 1 && maxFiles >= 1, "thresholds must be >= 1")
-      val s = stats()
-      val trip = (s.generations > maxGens || s.dataFiles > maxFiles) &&
-        s.generations > 1
-      if (trip) compact(keyRetention)
-      trip
-    }
+        keyRetention: Int = 128): Boolean =
+      ledger.compactIfNeeded(maxGens, maxFiles)(compact(keyRetention))
 
     /** Assign ONLY the batch's vectors to cells and commit them as a new
       * generation of cell-partitioned parquet. Null vectors drop (the
@@ -508,17 +477,17 @@ object IVFStore {
         // a generation is batch-scale: a few files per cell partition
         .repartition(col("cell"))
         .write.mode(SaveMode.Overwrite).partitionBy("cell")
-        .parquet(s"$root/gen=$gen/cells")
+        .parquet(genPath(gen, "cells"))
       // a batch with zero assignable vectors (empty micro-batch, all-null
       // embeddings) leaves a ZERO-FILE dynamic-partition dir — committing
       // it would poison every later read with schema-inference failure.
       // An empty append is a no-op: union with ∅ changes nothing (the
       // shared GenLedger empty-mutation policy; detector single-sourced)
-      if (!ledger.hasDataFiles(new org.apache.hadoop.fs.Path(s"$root/gen=$gen/cells"))) {
+      if (!ledger.hasDataFiles(new org.apache.hadoop.fs.Path(genPath(gen, "cells")))) {
         // NOTE: the idempotency key is deliberately NOT recorded — with no
         // generation there is nothing a replay could duplicate, and the
         // replayed empty batch lands here again as the same no-op
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"gen=$gen"), true)
+        fs.delete(new org.apache.hadoop.fs.Path(genPath(gen)), true)
         return
       }
       if (crashBeforeCommit) return
@@ -548,7 +517,7 @@ object IVFStore {
         // generation would switch every later read onto the mask-join
         // path while masking nothing — no-op, no key recorded
         if (del.count() == 0L) return
-        del.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/gen=$gen/deletes")
+        del.coalesce(1).write.mode(SaveMode.Overwrite).parquet(genPath(gen, "deletes"))
         if (crashBeforeCommit) return
         ledger.commitDelete(gen, idempotencyKeys)
       } finally del.unpersist()
@@ -568,36 +537,10 @@ object IVFStore {
       * two internal listings can never be both bulk-loaded and drained by
       * the catch-up pass (= duplicated).
       */
-    private[graft] def cellsAt(gens: Seq[Int], dels: Seq[Int]): DataFrame = {
-      require(gens.nonEmpty, s"IVF store at $root has no committed generation yet")
-      val dataGens = gens.filterNot(dels.toSet)
-      // one read per generation root, unioned: multi-path partition
-      // discovery rejects sibling gen=N roots as conflicting structures,
-      // and per-root reads keep cell-partition pruning intact
-      if (dels.isEmpty)
-        dataGens.map(g => readParquetPart("cells", s"$root/gen=$g/cells"))
-          .reduce(_ unionByName _)
-      else {
-        val rows = dataGens.map(g =>
-          readParquetPart("cells", s"$root/gen=$g/cells").withColumn("g", lit(g)))
-          .reduce(_ unionByName _)
-        // per-vector latest tombstone: a row from generation g is live
-        // unless some tombstone at dg >= g covers it (re-append at
-        // g > dg resurrects). Tombstones are takedown-scale — AQE
-        // broadcasts; compact() restores the join-free path. ONE multi-path
-        // read, the generation tag recovered from the row's file path (it
-        // is a physical path component) — a per-generation union of
-        // relations paid planning latency per tombstone generation.
-        val ts = readParquetPart("deletes", dels.map(g => s"$root/gen=$g/deletes"): _*)
-          .withColumn("dg",
-            element_at(regexp_extract_all(input_file_name(), lit("gen=(\\d+)/"), lit(1)), -1)
-              .cast("int"))
-          .groupBy("vec_id").agg(max("dg").as("dg"))
-        rows.join(ts, Seq("vec_id"), "left")
-          .filter(col("dg").isNull || col("g") > col("dg"))
-          .drop("g", "dg")
-      }
-    }
+    private[graft] def cellsAt(gens: Seq[Int], dels: Seq[Int]): DataFrame =
+      // per-root reads: the cells' own `cell=` directories rule out one
+      // multi-path relation, and they keep cell-partition pruning intact
+      ledger.live("cells", "vec_id", gens, dels, perRoot = true)
 
     /** Fold all generations into one, applying tombstones for real, and
       * commit via the compaction kind marker (readers then ignore lower
@@ -623,7 +566,7 @@ object IVFStore {
         live
           .repartition(col("cell"))
           .write.mode(SaveMode.Overwrite).partitionBy("cell")
-          .parquet(s"$root/gen=$gen/cells")
+          .parquet(genPath(gen, "cells"))
         // a store whose every vector was deleted folds to ZERO rows, and a
         // dynamic-partition write of an empty frame creates a dir with no
         // part files — committing that would poison every later read with
@@ -634,7 +577,7 @@ object IVFStore {
         // reads and (vacuous) pruning unaffected.
         if (live.isEmpty) {
           live.coalesce(1).write.mode(SaveMode.Overwrite)
-            .parquet(s"$root/gen=$gen/cells")
+            .parquet(genPath(gen, "cells"))
         }
         ledger.commitCompaction(gen, keys)
       } finally live.unpersist()

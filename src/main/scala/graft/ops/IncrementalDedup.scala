@@ -226,12 +226,12 @@ object IncrementalDedup {
   final class SignatureStore(spark: SparkSession, root: String, val cfg: Config) {
 
     // marker protocol (commit/tombstone/compaction markers, applied-key
-    // record, atomic publication, superseded-generation sweep) lives in
-    // the shared ledger — single-sourced with IVFStore
+    // record, atomic publication, superseded-generation sweep), the
+    // `gen=N/<part>` layout and the masked read path live in the shared
+    // ledger — single-sourced with IVFStore
     private val ledger = new graft.meta.GenLedger(spark, root)
     private def fs = ledger.fs
-    private def genPath(gen: Int, part: String) =
-      new org.apache.hadoop.fs.Path(root, s"gen=$gen/$part").toString
+    import ledger.genPath
 
     private def configPath = new org.apache.hadoop.fs.Path(root, "_config")
     // bandBuckets is part of the persisted identity: generations with
@@ -259,7 +259,7 @@ object IncrementalDedup {
         // a FRESH store at this root (first append): drop any part schemas
         // cached for a previous store that lived at the same path — e.g. a
         // test recreating a root with a different withGrams/layout
-        IncrementalDedup.partSchemaCache.keySet.removeIf(_._1 == root)
+        graft.meta.GenLedger.forgetPartSchemas(root)
       }
     }
 
@@ -273,48 +273,6 @@ object IncrementalDedup {
     /** Committed TOMBSTONE generations, ascending. */
     def deleteGens(): Seq[Int] = ledger.deleteGens()
 
-    /** Per-part schema cache: a bare `spark.read.parquet` re-infers the
-      * schema (footer listing + a tiny Spark job) on EVERY relation
-      * construction, and the read paths below build one relation per
-      * generation per part — profiled at ~0.1 s per relation, pure driver
-      * overhead (guide §7.3). Part schemas are fixed per root (sketch
-      * parameters and layout are pinned by `_config`, and the empty-fold
-      * fallback keeps `bkt` in the schema), so the first read's inferred
-      * schema serves every later construction. Only the footer round trip
-      * is skipped — the data plane is untouched. JVM-wide and keyed by
-      * (root, part), because the streaming ingest constructs a fresh
-      * Store per micro-batch (one store() call per foreachBatch).
-      */
-    private def readParquetPart(part: String, paths: Seq[String]): DataFrame = {
-      val key = (root, part)
-      val cached = IncrementalDedup.partSchemaCache.get(key)
-      if (cached != null) spark.read.schema(cached).parquet(paths: _*)
-      else {
-        val df = spark.read.parquet(paths: _*)
-        IncrementalDedup.partSchemaCache.put(key, df.schema)
-        df
-      }
-    }
-
-    private def readPart(gens: Seq[Int], part: String): DataFrame = {
-      require(gens.nonEmpty, s"signature store at $root has no committed generation yet")
-      readParquetPart(part, gens.map(g => genPath(g, part)))
-    }
-
-    /** Generation number recovered from the row's file path (`gen=N` is a
-      * physical path component of every part file). Lets a read that needs
-      * per-row generation tags stay ONE multi-path relation instead of one
-      * relation per generation unioned — the per-generation trees paid AQE
-      * planning latency per generation per part on every store read (the
-      * r15 wall-vs-job gap; guide §7.3 driver-side work). Values are
-      * identical to the `lit(g)` tags they replace: the path IS the
-      * generation. Last match wins so a store root containing `gen=` in
-      * its own path cannot alias the tag.
-      */
-    private def genFromPath: org.apache.spark.sql.Column =
-      element_at(regexp_extract_all(input_file_name(), lit("gen=(\\d+)/"), lit(1)), -1)
-        .cast("int")
-
     /** The bands part's layout column: hash bucket of the LSH bucket key.
       * Must be byte-stable between write and read — Murmur3 `hash` is.
       */
@@ -324,67 +282,21 @@ object IncrementalDedup {
     private def dropBkt(df: DataFrame): DataFrame =
       if (df.columns.contains("bkt")) df.drop("bkt") else df
 
-    /** Bands read, one scan PER generation root unioned (a multi-path read
-      * over bucketed `bkt=` layouts trips partition discovery when any
-      * generation — e.g. an empty compaction fold — is unpartitioned;
-      * per-root reads also keep `pre`'s pruning filter ON the scan it
-      * prunes). `pre` runs against each generation scan before the union,
-      * so a `bkt isin (...)` filter reaches the file index directly.
+    /** Live rows of `part` over an EXPLICIT (generations, tombstones) pair
+      * ([[graft.meta.GenLedger.live]] keyed by doc_id) — the [[Snapshot]]
+      * read primitive, like [[IVFStore.Store.cellsAt]]. Bucketed bands are
+      * read per generation root, `pre` (the `bkt isin` pruning filter) on
+      * each scan before the union, so it reaches the file index directly.
       */
-    private def readBandGens(gens: Seq[Int], pre: DataFrame => DataFrame): DataFrame = {
-      require(gens.nonEmpty, s"signature store at $root has no committed generation yet")
-      gens.map(g => pre(readParquetPart("bands", Seq(genPath(g, "bands")))))
-        .reduce(_ unionByName _)
-    }
+    private def liveAt(part: String, gens: Seq[Int], dels: Seq[Int],
+        pre: DataFrame => DataFrame = identity): DataFrame =
+      ledger.live(part, "doc_id", gens, dels,
+        perRoot = part == "bands" && cfg.bandBuckets > 0, pre)
 
-    /** Per-doc latest tombstone: (doc_id, dg) — one multi-path read, the
-      * generation tag recovered from the file path ([[genFromPath]]).
-      */
-    private def tombstones(dels: Seq[Int]): DataFrame =
-      readPart(dels, "deletes").withColumn("dg", genFromPath)
-        .groupBy("doc_id").agg(max("dg").as("dg"))
-
-    /** Union of a part across committed generations, masked by tombstones:
-      * a row from generation g is live unless some tombstone at dg >= g
-      * covers its doc (a re-append at g > dg resurrects the id). With no
-      * tombstones this is the join-free read — the common append-only path
-      * pays nothing for the delete feature, and compact() restores it after
-      * takedowns. Tombstone generations carry no sigs/bands (they are
-      * pairs-and-deletes-only deltas), so this reads APPEND generations
-      * only — same shape as [[IVFStore.Store.cells]]. `pre` is applied to
-      * each generation scan BEFORE union/mask, so pruning filters (the
-      * bucketed layout's `bkt isin`) land on the scans themselves.
-      */
+    /** [[liveAt]] over the currently committed state. */
     private def liveRows(part: String,
         pre: DataFrame => DataFrame = identity): DataFrame =
-      liveRowsAt(committedGens(), deleteGens(), part, pre)
-
-    /** [[liveRows]] over an EXPLICIT (generations, tombstones) pair — the
-      * [[Snapshot]] read primitive (same shape as
-      * [[IVFStore.Store.cellsAt]], the swap path's pinning primitive).
-      */
-    private def liveRowsAt(gens: Seq[Int], dels: Seq[Int], part: String,
-        pre: DataFrame => DataFrame): DataFrame = {
-      val dataGens = gens.filterNot(dels.toSet)
-      val bucketed = part == "bands" && cfg.bandBuckets > 0
-      def readGens(gs: Seq[Int], f: DataFrame => DataFrame) =
-        if (bucketed) readBandGens(gs, f)
-        else f(readPart(gs, part))
-      if (dels.isEmpty) readGens(dataGens, pre)
-      else {
-        // per-row generation tags come off the file path (genFromPath), so
-        // the masked read is still ONE relation over all generations (one
-        // per root on the bucketed-bands branch, where partition discovery
-        // forces per-root scans) — the per-generation union-of-relations
-        // tree it replaces paid planning latency per generation per read
-        val rows = readGens(dataGens, df => pre(df).withColumn("g", genFromPath))
-        // tombstones are takedown-scale, not corpus-scale — AQE broadcasts
-        // this join when it measures small, and compact() removes it
-        rows.join(tombstones(dels), Seq("doc_id"), "left")
-          .filter(col("dg").isNull || col("g") > col("dg"))
-          .drop("g", "dg")
-      }
-    }
+      liveAt(part, committedGens(), deleteGens(), pre)
 
     /** All LIVE sketches (committed generation deltas minus tombstones). */
     def sigs(): DataFrame = liveRows("sigs")
@@ -392,58 +304,39 @@ object IncrementalDedup {
     /** All LIVE bands (layout columns stripped). */
     def bands(): DataFrame = dropBkt(liveRows("bands"))
 
-    /** One generation's bucket-keyed part (touched/pairs/bands), with a
-      * pruning filter applied ON the scan when the generation carries the
-      * `bkt=` layout, and the layout column stripped before unioning.
-      * Detection is per generation (schema, read driver-side from the
-      * footer): a store written by the r14 code has bucketed bands but
-      * plain pairs/touched, and an empty fold is unpartitioned-with-bkt —
-      * both degrade gracefully to an unpruned scan of that root.
-      */
-    private def readKeyedPart(g: Int, part: String,
-        pre: DataFrame => DataFrame = identity): DataFrame = {
-      val df = readParquetPart(part, Seq(genPath(g, part)))
-      if (df.columns.contains("bkt")) dropBkt(pre(df)) else df
-    }
-
     /** The CURRENT provenance pair set: per bucket, the pairs from the
       * latest generation that touched it. Buckets are resolved by joining
       * each generation's pairs against the max touching generation —
       * `touched` rows are tiny (one per recomputed bucket), so the
       * max-aggregate and the join broadcast.
       */
-    def pairs(): DataFrame = pairsPruned(identity)
+    def pairs(): DataFrame = pairsPrunedAt(committedGens(), identity)
 
-    /** [[pairs]] with a layout-pruning filter pushed onto every touched/
-      * pairs scan — the batch-scoped read path ([[candidatesForGen]])
-      * passes `bkt isin (batch's buckets)` so the whole latest-wins
-      * resolution reads O(touched/bandBuckets) of the corpus, not all of
-      * it (r14 verdict item 3 / ROUNDLOG open thread 1).
+    /** [[pairs]] over `gens`, with a layout-pruning filter pushed onto
+      * every touched/pairs scan — the batch-scoped read path
+      * ([[candidatesForGen]]) passes `bkt isin (batch's buckets)` so the
+      * whole latest-wins resolution reads O(touched/bandBuckets) of the
+      * corpus, not all of it (r14 verdict item 3 / ROUNDLOG open thread 1).
       */
-    private def pairsPruned(pre: DataFrame => DataFrame): DataFrame =
-      pairsPrunedAt(committedGens(), pre)
-
     private def pairsPrunedAt(gens: Seq[Int],
         pre: DataFrame => DataFrame): DataFrame = {
-      require(gens.nonEmpty, s"signature store at $root has no committed generation yet")
-      // plain layout: ONE multi-path relation per part, generation tags off
-      // the file path — the per-generation relations this replaces paid AQE
-      // planning latency per generation per part on every pairs() read.
-      // Bucketed layout keeps the per-generation reads: partition discovery
-      // over mixed bkt= roots (an empty fold is unpartitioned) needs the
-      // per-root schema check, and `pre`'s bkt pruning must sit on the scan.
+      // generation-tagged reads (GenLedger.tagged): plain layout is ONE
+      // multi-path relation per part; bucketed layout is one per generation
+      // root with `pre`'s bkt pruning on the scan. The layout is detected
+      // per root (schema, from the footer): a store written by the r14
+      // code has bucketed bands but plain pairs/touched, and an empty fold
+      // is unpartitioned-with-bkt — both degrade to an unpruned scan
       def keyed(part: String): DataFrame =
-        if (cfg.bandBuckets == 0) readPart(gens, part).withColumn("g", genFromPath)
-        else gens.map(g => readKeyedPart(g, part, pre).withColumn("g", lit(g)))
-          .reduce(_ unionByName _)
+        ledger.tagged(part, gens, perRoot = cfg.bandBuckets > 0,
+          df => if (df.columns.contains("bkt")) dropBkt(pre(df)) else df)
       val touched = keyed("touched")
-      val latest = touched.groupBy("band_idx", "band_key").agg(max("g").as("g"))
+      val latest = touched.groupBy("band_idx", "band_key").agg(max("gen").as("gen"))
       val allPairs = keyed("pairs")
       // latest is one row per bucket ever touched — CORPUS-scale, so no
       // broadcast hint (AQE broadcasts it when it measures small; at
       // 100 TB this join co-partitions two bucket-keyed sides)
-      allPairs.join(latest, Seq("band_idx", "band_key", "g"))
-        .drop("g")
+      allPairs.join(latest, Seq("band_idx", "band_key", "gen"))
+        .drop("gen")
     }
 
     /** Keys of every idempotent mutation already committed (stored as the
@@ -647,16 +540,17 @@ object IncrementalDedup {
         // while masking nothing — no-op, no key recorded
         if (del.count() == 0L) return
         // every bucket that EVER held a deleted doc is recomputed. RAW
-        // (unmasked) bands are deliberate: refreshing a bucket from live
-        // membership is idempotent, so over-touching an already-masked
-        // doc's buckets is correct and skips a mask join. Prior TOMBSTONE
+        // bands (no tombstones passed, so unmasked) are deliberate:
+        // refreshing a bucket from live membership is idempotent, so
+        // over-touching an already-masked doc's buckets is correct and
+        // skips a mask join. Prior TOMBSTONE
         // generations carry no bands part — read append gens only. `del`
         // and `touched` are takedown-scale — batch-like — so the hints
         // hold (r13 lesson: justify a broadcast by what the frame scales
         // WITH). No bkt pruning here: this scan is keyed by doc_id, which
         // the layout does not partition on.
         val touched = touchedOf(
-          dropBkt(readBandGens(prior.filterNot(deleteGens().toSet), identity))
+          dropBkt(liveAt("bands", prior.filterNot(deleteGens().toSet), dels = Nil))
             .join(broadcast(del), Seq("doc_id"), "left_semi"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         touchedHandle = Some(touched)
@@ -717,7 +611,7 @@ object IncrementalDedup {
         s"gen=$gen is not a committed generation of the store at $root")
       require(!deleteGens().contains(gen),
         s"gen=$gen is a tombstone generation — batch-scoped candidates target appends")
-      val touchedG = readKeyedPart(gen, "touched")
+      val touchedG = dropBkt(ledger.readPart("touched", gen))
       val pre: DataFrame => DataFrame =
         if (cfg.bandBuckets == 0) identity
         else {
@@ -728,7 +622,7 @@ object IncrementalDedup {
       // bkt pruning is coarse (hash buckets); the exact bucket filter is
       // the semi-join against the generation's own touched set — both
       // sides of it are batch-scale, hence the broadcast
-      val scoped = pairsPruned(pre)
+      val scoped = pairsPrunedAt(committedGens(), pre)
         .join(broadcast(touchedG), Seq("band_idx", "band_key"), "left_semi")
       // "involving" = a side in the batch, decided in ONE pass over
       // `scoped`: the previous union-of-two-semi-joins evaluated the whole
@@ -738,7 +632,7 @@ object IncrementalDedup {
       // generation, so no row multiplication) mark each side's membership,
       // and the OR filter replaces the union; dropDuplicates keeps its
       // multi-bucket dedup role exactly as before.
-      val bd = readKeyedPart(gen, "sigs").select(col("doc_id"), lit(true).as("hit"))
+      val bd = ledger.readPart("sigs", gen).select(col("doc_id"), lit(true).as("hit"))
       val involving = scoped
         .join(broadcast(bd), col("doc_a") === col("doc_id"), "left")
         .drop("doc_id").withColumnRenamed("hit", "hit_a")
@@ -823,11 +717,11 @@ object IncrementalDedup {
         val generations: Seq[Int], val tombstoneGens: Seq[Int]) {
 
       /** The snapshot's sketches (its generations minus its tombstones). */
-      def sigs(): DataFrame = liveRowsAt(generations, tombstoneGens, "sigs", identity)
+      def sigs(): DataFrame = liveAt("sigs", generations, tombstoneGens)
 
       /** The snapshot's bands (layout columns stripped). */
       def bands(): DataFrame =
-        dropBkt(liveRowsAt(generations, tombstoneGens, "bands", identity))
+        dropBkt(liveAt("bands", generations, tombstoneGens))
 
       /** The snapshot's provenance pair set (latest-wins resolved within
         * the snapshot's generations only).
@@ -909,31 +803,15 @@ object IncrementalDedup {
       */
     def vacuum(): Int = ledger.withWriterLock { ledger.vacuum() }
 
-    /** The compaction POLICY the numbers above exist for (r14 verdict item
-      * 4): fold when the committed-generation count or the live file census
-      * crosses its threshold. Returns whether a fold ran — a deployment
-      * calls this after every append/delete (or on a cadence) instead of
-      * writing its own trigger over [[stats]]. Thresholds are "read
-      * amplification a query tolerates": every generation is one more
-      * unioned scan, every file one more open+footer per read.
+    /** [[compact]] when [[stats]] crosses a threshold — the shared policy,
+      * [[graft.meta.GenLedger.compactIfNeeded]]. Returns whether a fold
+      * ran; a deployment calls this after every append/delete (or on a
+      * cadence) instead of writing its own trigger over [[stats]].
       */
     def compactIfNeeded(maxGens: Int = 16, maxFiles: Long = 4096,
-        keyRetention: Int = 128): Boolean = {
-      require(maxGens >= 1 && maxFiles >= 1, "thresholds must be >= 1")
-      val s = stats()
-      val trip = (s.generations > maxGens || s.dataFiles > maxFiles) &&
-        s.generations > 1 // a single generation has nothing to fold
-      if (trip) compact(keyRetention)
-      trip
-    }
+        keyRetention: Int = 128): Boolean =
+      ledger.compactIfNeeded(maxGens, maxFiles)(compact(keyRetention))
   }
-
-  /** JVM-wide part-schema cache for [[SignatureStore.readParquetPart]],
-    * keyed by (store root, part name). Schemas only — never data or row
-    * counts; entries are a few hundred bytes each.
-    */
-  private val partSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.types.StructType]()
 
   /** Run independent store-delta write jobs concurrently on a transient
     * daemon pool (Spark job submission is thread-safe; the writes read

@@ -5,13 +5,14 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ops.{IVF, IVFStore, IncrementalDedup}
+import graft.ops.{IVF, IVFStore, IncrementalDedup, Replay}
 
 /** The generation-ledger contracts that r14 promoted from scaladoc to
   * enforcement: the exclusive writer lease (second writer fails loudly,
   * crashed writer's stale lock is reclaimed, lock always released), the
   * shared empty-mutation no-op policy on BOTH stores, the idempotency-key
-  * retention horizon at compaction, and the stats() observability snapshot.
+  * retention horizon at compaction, the stats() observability snapshot,
+  * and the shared read path's generation tags.
   */
 class GenLedgerSpec extends SparkSpec {
 
@@ -221,5 +222,63 @@ class GenLedgerSpec extends SparkSpec {
     assert(s2.appliedKeys === 2, "keys survive the fold (within retention)")
     assert(s2.dataFiles > 0 && s2.dataFiles <= s1.dataFiles + 8,
       s"post-compact census must not exceed the pre-fold ledger (${s1.dataFiles} -> ${s2.dataFiles})")
+  }
+
+  // ---- read path --------------------------------------------------------------
+
+  test("a root whose own path spells gen= and v= reads like a plain root, with or without partition type inference") {
+    // gens 0-8 append id % 9 == g; gen 9 deletes part of gen 1; gen 10
+    // deletes all of gen 2 plus ids gen 9 already deleted; gen 11
+    // re-appends half of gen 2. Tombstones at gen >= 10 pin the int tag:
+    // as strings "2" > "10" (gen 2 rows escape the mask) and
+    // max("9", "10") = "9"
+    def mutations(id: org.apache.spark.sql.Column) = (
+      pmod(id, lit(9)) === 1 && pmod(id, lit(2)) === 0,
+      pmod(id, lit(9)) === 2 || (pmod(id, lit(9)) === 1 && pmod(id, lit(4)) === 0),
+      pmod(id, lit(9)) === 2 && pmod(id, lit(2)) === 0)
+    def dedupRun(root: String) = {
+      val st = IncrementalDedup.store(spark, root)
+      val (d9, d10, r11) = mutations(col("doc_id"))
+      (0 until 9).foreach(g => st.append(slice(9, g)))
+      st.delete(docs.filter(d9).select("doc_id"))
+      st.delete(docs.filter(d10).select("doc_id"))
+      st.append(docs.filter(r11))
+      assert(st.committedGens() === (0 to 11) && st.deleteGens() === Seq(9, 10))
+      (st.sigs().select("doc_id").collect().map(_.getLong(0)).toSet,
+        st.candidates(0.25).collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    }
+    def ivfRun(root: String) = {
+      val e = graft.QueryCatalog.embs(spark, sf())
+      val st = IVFStore.create(spark, root, IVF.train(e, c = 4, iters = 0))
+      val (d9, d10, r11) = mutations(col("vec_id"))
+      (0 until 9).foreach(g => st.append(e.filter(pmod(col("vec_id"), lit(9)) === g)))
+      st.delete(e.filter(d9).select("vec_id"))
+      st.delete(e.filter(d10).select("vec_id"))
+      st.append(e.filter(r11))
+      assert(st.committedGens() === (0 to 11) && st.deleteGens() === Seq(9, 10))
+      // `cell` is a discovered partition column too: a string when
+      // inference is off, so compare it as one
+      st.cells().collect().map(r => (r.getLong(0), String.valueOf(r.getAs[Any]("cell")))).toSet
+    }
+    val (d9, d10, r11) = mutations(col("doc_id"))
+    val survivors = docs.filter((!d9 && !d10) || r11)
+    val expected = Replay.minhashCandidates(survivors, minEstJaccard = 0.25)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val inference = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    Seq(true, false).foreach { infer =>
+      if (!infer) spark.conf.set(inference, "false")
+      try {
+        val (sigIds, cands) = dedupRun(tempRoot())
+        assert(dedupRun(s"${tempRoot()}/gen=7/v=1/store") === ((sigIds, cands)), s"inference=$infer")
+        assert(!sigIds.exists(d => d % 9 == 2 && d % 2 == 1), "gen 2 rows are masked by gen 10")
+        assert(sigIds.exists(d => d % 9 == 2), "gen 11 resurrects half of gen 2")
+        assert(cands === expected, "candidates == full recompute over the survivors")
+
+        val cells = ivfRun(tempRoot())
+        assert(ivfRun(s"${tempRoot()}/gen=7/v=1/store") === cells, s"inference=$infer")
+        assert(!cells.exists { case (v, _) => v % 9 == 2 && v % 2 == 1 } &&
+          cells.exists { case (v, _) => v % 9 == 2 })
+      } finally spark.conf.unset(inference)
+    }
   }
 }
