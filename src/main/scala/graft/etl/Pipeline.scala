@@ -2,7 +2,9 @@ package graft.etl
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.storage.StorageLevel
 
 import graft.io.{FileLifecycle, Sinks}
 import graft.meta.Staging
@@ -63,31 +65,45 @@ object Pipeline {
 
     // probe results from validation feed the union (no second header pass);
     // the cached fact is read once from CSV (incl. the inferSchema pass) and
-    // reused by the count + all three sinks
+    // reused by the count and the enrichment; the cached enriched frame runs
+    // the three broadcast joins once for all three sinks
     val fact = Validation
       .readConformedUnion(spark, split.correct, knownColumns = split.columns)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val factRows = fact.count()
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val enriched = SalesEnrichment.enrich(fact, customerDim, storeDim, salesTeamDim)
-
-    val customerMart = SalesEnrichment.customerMart(enriched)
-    val salesMart = SalesEnrichment.salesMart(enriched)
-
-    Sinks.parquet(customerMart, s"${layout.outputDir}/customers_data_mart")
-    Sinks.parquet(salesMart, s"${layout.outputDir}/sales_team_data_mart")
-    Sinks.partitionedParquet(
-      enriched, s"${layout.outputDir}/sales_partitioned",
-      Seq("sales_month", "store_id"))
-    fact.unpersist()
-
-    // mart row counts from the materialized sinks, not a re-run of the DAG
-    val cmRows = spark.read.parquet(s"${layout.outputDir}/customers_data_mart").count()
-    val smRows = spark.read.parquet(s"${layout.outputDir}/sales_team_data_mart").count()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (factRows, cmRows, smRows) =
+      try {
+        val factRows = fact.count()
+        // mart row counts observed on the mart writes themselves, not a
+        // second listing + count job over the parquet just written
+        val cmRows = writeCounted(SalesEnrichment.customerMart(enriched),
+          s"${layout.outputDir}/customers_data_mart")
+        val smRows = writeCounted(SalesEnrichment.salesMart(enriched),
+          s"${layout.outputDir}/sales_team_data_mart")
+        Sinks.partitionedParquet(
+          enriched, s"${layout.outputDir}/sales_partitioned",
+          Seq("sales_month", "store_id"))
+        (factRows, cmRows, smRows)
+      } finally {
+        // dependent cache first: a non-cascading uncache of fact would
+        // rebuild the enriched cache before dropping it
+        enriched.unpersist()
+        fact.unpersist()
+      }
 
     FileLifecycle.moveTo(split.correct, layout.archiveDir)
     staging.markInactive(batchId, split.correct.map(fileName), now)
 
     RunReport(batchId, split.correct, quarantined, factRows, cmRows, smRows)
+  }
+
+  /** Write `df` as parquet and return its row count, taken by an
+    * Observation on the write itself (no job beyond the write). */
+  private def writeCounted(df: DataFrame, path: String): Long = {
+    val rows = Observation()
+    Sinks.parquet(df.observe(rows, count(lit(1)).as("rows")), path)
+    rows.get("rows").asInstanceOf[Long]
   }
 
   private def fileName(path: String): String =

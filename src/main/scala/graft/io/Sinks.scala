@@ -3,6 +3,7 @@ package graft.io
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.col
 
 /** Sink operators (SURVEY.md §2.2).
   *
@@ -19,12 +20,18 @@ object Sinks {
   /** K2: partitioned parquet (reference: main.py:363-368). Partition columns
     * choose the read-side pruning keys; (sales_month, store_id) lets monthly
     * per-store queries touch 1/(months×stores) of the data. At 100 TB keep
-    * partition cardinality bounded (months × stores, not e.g. customer_id)
-    * and let AQE coalesce small output files.
+    * partition cardinality bounded (months × stores, not e.g. customer_id).
+    *
+    * A REBALANCE on the partition columns sends each partition directory's
+    * rows to one writer task, so a small directory gets one file instead of
+    * one per input task. AQE then sizes the writers: it splits a skewed
+    * directory's rows across several tasks and coalesces small directories
+    * into one task — unlike a plain `repartition`, which fixes the count.
     */
   def partitionedParquet(df: DataFrame, path: String, partitionCols: Seq[String],
       mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.partitionBy(partitionCols: _*).mode(mode).parquet(path)
+    df.hint("rebalance", partitionCols.map(col): _*)
+      .write.partitionBy(partitionCols: _*).mode(mode).parquet(path)
 
   /** Dynamic partition overwrite: replace ONLY the partitions present in
     * `df`, leaving sibling partitions untouched — the idempotent daily-
@@ -37,7 +44,7 @@ object Sinks {
     val key = "spark.sql.sources.partitionOverwriteMode"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "dynamic")
-    try df.write.partitionBy(partitionCols: _*).mode(SaveMode.Overwrite).parquet(path)
+    try partitionedParquet(df, path, partitionCols)
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)

@@ -24,6 +24,16 @@ class PipelineSpec extends SparkSpec {
   private def write(dir: String, name: String, lines: Seq[String]): Unit =
     Files.write(Paths.get(dir, name), String.join("\n", lines: _*).getBytes)
 
+  /** The names in `dir` that start with `prefix`. */
+  private def ls(dir: String, prefix: String): Seq[String] =
+    new java.io.File(dir).list().toSeq.filter(_.startsWith(prefix))
+
+  private def okCsv(dir: String): Unit =
+    write(dir, "sales_ok.csv", Seq(
+      "customer_id,store_id,product_name,sales_date,sales_person_id,price,quantity,total_cost",
+      "1,121,quaker oats,2023-03-03,1,212.0,2,424.0",
+      "2,122,sugar,2023-03-04,4,50.0,1,50.0"))
+
   private lazy val customerDim = Seq(
     (1, "Ava", "Ng", "12 Elm St", "560001", "555-0101", Date.valueOf("2021-01-01")),
     (2, "Ben", "Ray", "9 Oak Ave", "560002", "555-0102", Date.valueOf("2021-02-01")))
@@ -79,6 +89,15 @@ class PipelineSpec extends SparkSpec {
     // partitioned sink has month/store partition dirs (read-side pruning keys)
     assert(Files.exists(Paths.get(
       s"${layout.outputDir}/sales_partitioned/sales_month=2023-03/store_id=121")))
+    // one part file per partition directory (the rebalance in front of the write)
+    val sink = s"${layout.outputDir}/sales_partitioned"
+    val partDirs = for (m <- ls(sink, "sales_month="); st <- ls(s"$sink/$m", "store_id="))
+      yield s"$sink/$m/$st"
+    assert(partDirs.size === 3)
+    partDirs.foreach(d => assert(ls(d, "part-").count(_.endsWith(".parquet")) === 1, d))
+    // mart row counts observed on the writes equal the written marts
+    assert(report.customerMartRows === cm.count())
+    assert(report.salesMartRows === sm.count())
     // inbox drained: correct files archived, bad file quarantined
     assert(graft.io.FileLifecycle.list(layout.inboxDir, ".csv").isEmpty)
     assert(graft.io.FileLifecycle.list(layout.archiveDir, ".csv").size === 2)
@@ -94,10 +113,7 @@ class PipelineSpec extends SparkSpec {
     // Hadoop FileSystem API (same code path an s3a:// or hdfs:// URI takes)
     val layout = Pipeline.Layout(s"file://$root/inbox", s"file://$root/error",
       s"file://$root/archive", s"file://$root/out", s"file://$root/ledger")
-    write(s"$root/inbox", "sales_ok.csv", Seq(
-      "customer_id,store_id,product_name,sales_date,sales_person_id,price,quantity,total_cost",
-      "1,121,quaker oats,2023-03-03,1,212.0,2,424.0",
-      "2,122,sugar,2023-03-04,4,50.0,1,50.0"))
+    okCsv(s"$root/inbox")
     write(s"$root/inbox", "sales_bad.csv", Seq(
       "customer_id,product_name,sales_date,sales_person_id,price,quantity,total_cost",
       "9,besan,2023-03-06,2,52.0,1,52.0"))
@@ -131,5 +147,42 @@ class PipelineSpec extends SparkSpec {
         customerDim, storeDim, teamDim)
     }
     assert(e.getMessage.contains("pre-flight"))
+  }
+
+  test("a failed sink releases both batch caches") {
+    val layout = mkLayout()
+    okCsv(layout.inboxDir)
+    // the output dir is a regular file: the first mart write cannot create under it
+    val out = Paths.get(layout.outputDir)
+    Files.delete(out)
+    Files.write(out, "not a directory".getBytes)
+    spark.catalog.clearCache()
+    val base = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception] {
+      Pipeline.run(spark, layout, "b-fail", Timestamp.valueOf("2026-08-12 00:00:00"),
+        customerDim, storeDim, teamDim)
+    }
+    // the batch got past staging (files ACTIVE) before the sink threw
+    assert(new graft.meta.Staging(spark, layout.ledgerPath).activeFiles() === Seq("sales_ok.csv"))
+    assert(spark.sparkContext.getPersistentRDDs.size === base)
+  }
+
+  test("a batch matching no dimension row completes with empty marts") {
+    val layout = mkLayout()
+    // customer 9, store 999 and seller 7 are in no dimension: the inner joins drop every row
+    write(layout.inboxDir, "sales_orphan.csv", Seq(
+      "customer_id,store_id,product_name,sales_date,sales_person_id,price,quantity,total_cost",
+      "9,999,sugar,2023-03-04,7,50.0,1,50.0",
+      "9,999,besan,2023-03-05,7,52.0,2,104.0"))
+
+    val report = Pipeline.run(spark, layout, "b-orphan", Timestamp.valueOf("2026-08-12 00:00:00"),
+      customerDim, storeDim, teamDim)
+
+    assert(report.factRows === 2)
+    assert(report.customerMartRows === 0)
+    assert(report.salesMartRows === 0)
+    assert(spark.read.parquet(s"${layout.outputDir}/customers_data_mart").count() === 0)
+    assert(spark.read.parquet(s"${layout.outputDir}/sales_team_data_mart").count() === 0)
+    assert(new graft.meta.Staging(spark, layout.ledgerPath).activeFiles().isEmpty)
   }
 }

@@ -31,6 +31,10 @@ class SourcesSpec extends SparkSpec {
     assert(df.filter(col("_bad").isNull && col("quantity").isNotNull).count() === 2)
   }
 
+  private def partFiles(dir: String): Seq[String] =
+    new java.io.File(dir).list().toSeq
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+
   test("dynamicPartitionOverwrite replaces only the written partitions") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-dyn").toString
@@ -46,6 +50,20 @@ class SourcesSpec extends SparkSpec {
     assert(back.filter(col("month") === "2024-02").select("id").head().getLong(0) === 3L)
     // the conf is restored afterwards (scoped override)
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode") !== "dynamic")
+    // both partitioned writes rebalance: one part file per month= directory
+    Seq("2024-01", "2024-02").foreach(m => assert(partFiles(s"$dir/month=$m").size === 1, m))
+  }
+
+  test("partitioned writes put one part file in each partition directory") {
+    val dir = Files.createTempDirectory("graft-rebalance").toString
+    // four input partitions, each holding rows of both months
+    val df = spark.range(0, 100, 1, 4).select(
+      when(col("id") % 2 === 0, "2024-01").otherwise("2024-02").as("month"), col("id"))
+    Sinks.partitionedParquet(df, s"$dir/static", Seq("month"))
+    Sinks.dynamicPartitionOverwrite(df, s"$dir/dynamic", Seq("month"))
+    for (w <- Seq("static", "dynamic"); m <- Seq("2024-01", "2024-02"))
+      assert(partFiles(s"$dir/$w/month=$m").size === 1, s"$w $m")
+    assert(spark.read.parquet(s"$dir/dynamic").count() === 100)
   }
 
   test("mergeSchema unions drifted parquet batch schemas") {
