@@ -1,6 +1,10 @@
 package graft.etl
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -18,22 +22,35 @@ import graft.model.Schemas
   *    that keeps only the LAST file (main.py:267 vs loop at :248) — we
   *    implement the documented intent (union all; main.py:138-140).
   *
-  * Scale notes: the header probe reads one line per file; at 100 TB /
-  * millions of files the probes are driver-side metadata work, so we probe
-  * with a `limit(0)` CSV read per file (cheap) and batch the full reads by
-  * *column-set group* — all files sharing a header are read in ONE
-  * multi-path `spark.read.csv` call, so Spark builds one scan per shape
-  * instead of one per file, and the union is a handful of branches, not
-  * thousands.
+  * Scale notes: the header probe reads one line per file on the driver,
+  * with Spark's own CSV header machinery (no file index, plan or job per
+  * file), and the full reads are batched by *column-set group* — all files
+  * sharing a header are read in ONE multi-path `spark.read.csv` call, so
+  * Spark builds one scan per shape instead of one per file, and the union
+  * is a handful of branches, not thousands.
   */
 object Validation {
 
   case class FileSplit(correct: Seq[String], error: Seq[String],
       missing: Map[String, Set[String]], columns: Map[String, Seq[String]] = Map.empty)
 
-  /** Header-only probe: the columns a CSV file declares (S1). */
-  def probeColumns(spark: SparkSession, path: String): Seq[String] =
-    spark.read.option("header", "true").csv(path).limit(0).columns.toSeq
+  /** Header-only probe: the columns a CSV file declares (S1), exactly as
+    * `spark.read.option("header", "true").csv(path).columns` names them.
+    * It reads the header on the driver the way Spark's schema inference
+    * does: the first non-blank line, tokenized by the univocity parser with
+    * Spark's CSV settings, then de-duplicated and blank-filled by
+    * `makeSafeHeader`. No Spark job runs; an empty file has no columns.
+    */
+  def probeColumns(spark: SparkSession, path: String): Seq[String] = {
+    val conf = spark.sessionState.conf
+    val opts = new CSVOptions(Map("header" -> "true"), conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    CSVUtils.readHeaderLine(new Path(path), opts, spark.sessionState.newHadoopConf())
+      .fold(Seq.empty[String]) { line =>
+        val tokens = new CsvParser(opts.asParserSettings).parseLine(line)
+        CSVUtils.makeSafeHeader(tokens, conf.caseSensitiveAnalysis, opts).toSeq
+      }
+  }
 
   /** Partition files into correct (all mandatory columns present) vs error. */
   def partitionFiles(spark: SparkSession, paths: Seq[String],

@@ -2,8 +2,10 @@ package graft.meta
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Run-state bookkeeping: the reference's MySQL staging table
   * (product_staging_table, status 'A' active → 'I' inactive;
@@ -14,13 +16,20 @@ import org.apache.spark.sql.functions._
   * after success; the *latest* status per file wins. Append-only makes the
   * state machine idempotent and cluster-safe (no in-place UPDATE, which
   * object stores can't do transactionally) — re-running a failed batch
-  * appends a fresh ACTIVE generation instead of mutating rows, and the
-  * pre-flight check is a one-partition aggregate over a tiny table.
+  * appends a fresh ACTIVE generation instead of mutating rows. The
+  * pre-flight check is a window over a shuffle by file name; the same scan
+  * observes the ledger's max(seq), so a batch reads its ledger once.
   *
   * CONCURRENCY CONTRACT (ADVICE r8): concurrent writers are safe as long
   * as their FILE SETS don't overlap — appends never corrupt (append-only),
   * and the writer nonce keeps latest-wins deterministic under any
-  * interleaving. Two writers racing on the SAME file are out of contract:
+  * interleaving. Mints continue from the batch's one read: the pre-flight
+  * records the ledger's max(seq), `markActive` mints the next seq and
+  * `markInactive` the one after its own ACTIVE seq; an instance that has
+  * neither read nor minted runs that same read first. Another writer's
+  * appends after that read can therefore carry the same seqs, which on
+  * disjoint files changes no file's latest row. Two writers racing on the
+  * SAME file are out of contract:
   * the pre-flight `activeFiles` guard is a read-then-act check with no
   * cross-writer lock, so one writer's in-flight ACTIVE generation can be
   * shadowed by the other's INACTIVE on the nonce tie-break and both may
@@ -33,44 +42,31 @@ import org.apache.spark.sql.functions._
 class Staging(spark: SparkSession, ledgerPath: String) {
   import Staging._
 
-  // collision disambiguator: nextSeq is a read-modify-write, so two
-  // concurrent writers can mint the SAME seq (ADVICE r7). Appends are still
-  // safe (append-only ledger), and latest-wins stays deterministic because
-  // the writer nonce breaks (updatedAt, seq) ties totally — no two rows from
-  // different writers ever compare equal on the full ordering key.
-  private val writerId = java.util.UUID.randomUUID().toString
-
-  private def ledger: DataFrame = {
+  private def ledger: Option[DataFrame] = {
     // only a missing ledger means "no prior runs"; any other failure
     // (corruption, permissions, schema drift) must propagate — treating it
     // as empty would silently defeat the pre-flight double-processing guard
     val path = new org.apache.hadoop.fs.Path(ledgerPath)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) spark.createDataFrame(Seq.empty[StagingRow])
-    else spark.read.schema(spark.createDataFrame(Seq.empty[StagingRow]).schema).parquet(ledgerPath)
+    if (!fs.exists(path)) None
+    else Some(spark.read.schema(schema).parquet(ledgerPath))
   }
 
-  private def append(rows: Seq[StagingRow]): Unit =
-    spark.createDataFrame(rows).write.mode(SaveMode.Append).parquet(ledgerPath)
-
-  private def nextSeq(): Long = Staging.nextSeq(ledger)
+  private val book = new Book(() => ledger,
+    rows => spark.createDataFrame(rows).write.mode(SaveMode.Append).parquet(ledgerPath))
 
   /** Stage files ACTIVE before processing (reference main.py:196-219). */
-  def markActive(batchId: String, files: Seq[String], now: Timestamp): Unit = {
-    val s = nextSeq()
-    append(files.map(f => StagingRow(batchId, f, Active, now, s, writerId)))
-  }
+  def markActive(batchId: String, files: Seq[String], now: Timestamp): Unit =
+    book.mark(batchId, files, Active, now)
 
   /** Flip to INACTIVE after success (reference main.py:428-448). */
-  def markInactive(batchId: String, files: Seq[String], now: Timestamp): Unit = {
-    val s = nextSeq()
-    append(files.map(f => StagingRow(batchId, f, Inactive, now, s, writerId)))
-  }
+  def markInactive(batchId: String, files: Seq[String], now: Timestamp): Unit =
+    book.mark(batchId, files, Inactive, now)
 
   /** Pre-flight: files whose most recent status is still ACTIVE — evidence of
     * a prior failed run (reference main.py:56-75).
     */
-  def activeFiles(): Seq[String] = Staging.activeFiles(ledger)
+  def activeFiles(): Seq[String] = book.activeFiles()
 }
 
 object Staging {
@@ -80,13 +76,13 @@ object Staging {
   /** `seq` is a per-append monotonic ordinal: wall clocks can be coarse or
     * caller-supplied, so latest-wins ordering is (updatedAt, seq) — a fresh
     * ACTIVE generation beats an older INACTIVE row even at the exact same
-    * timestamp. `writer` is a per-Staging-instance nonce: nextSeq is a
-    * read-modify-write, so two CONCURRENT writers can mint the same seq;
-    * the nonce makes the ordering key total, so latest-wins stays
-    * deterministic under interleaving (each writer's own A→I flow is
-    * correctly ordered by seq because its INACTIVE mint reads its own
-    * ACTIVE append). `status` desc remains only as a final tie-break WITHIN
-    * one append generation (activation + completion recorded in one
+    * timestamp. `writer` is a per-Staging-instance nonce: a mint continues
+    * from the instance's last ledger read, so two CONCURRENT writers can
+    * mint the same seq; the nonce makes the ordering key total, so
+    * latest-wins stays deterministic under interleaving (each writer's own
+    * A→I flow is correctly ordered by seq because its INACTIVE mint follows
+    * its own ACTIVE one). `status` desc remains only as a final tie-break
+    * WITHIN one append generation (activation + completion recorded in one
     * instant). Ledgers written before the nonce existed read back with a
     * null writer — ordered after nonced rows at the same (updatedAt, seq),
     * which can only matter for ties that were already ambiguous.
@@ -94,19 +90,68 @@ object Staging {
   case class StagingRow(batchId: String, fileName: String, status: String,
       updatedAt: Timestamp, seq: Long, writer: String = "")
 
-  private[meta] def nextSeq(ledger: DataFrame): Long =
-    ledger.agg(coalesce(max(col("seq")), lit(0L))).collect()(0).getLong(0) + 1L
+  private[meta] val schema: StructType = Encoders.product[StagingRow].schema
 
-  private[meta] def activeFiles(ledger: DataFrame): Seq[String] = {
-    val w = org.apache.spark.sql.expressions.Window
+  /** The latest-wins reads and seq mints of one ledger store; the parquet
+    * and the JDBC ledger differ only in how they `read` (None: no ledger
+    * yet) and `append`. The instance keeps the highest seq it has read or
+    * minted (see the concurrency contract on [[Staging]]).
+    */
+  private[meta] final class Book(read: () => Option[DataFrame],
+      append: Seq[StagingRow] => Unit) {
+    // collision disambiguator: concurrent writers can mint the SAME seq
+    // (ADVICE r7). Appends are still safe (append-only ledger), and
+    // latest-wins stays deterministic because the writer nonce breaks
+    // (updatedAt, seq) ties totally — no two rows from different writers
+    // ever compare equal on the full ordering key.
+    private val writerId = java.util.UUID.randomUUID().toString
+    private var lastSeq: Option[Long] = None
+
+    def activeFiles(): Seq[String] = {
+      val (active, seen) = read().fold((Seq.empty[String], 0L))(scan)
+      lastSeq = Some(lastSeq.fold(seen)(math.max(_, seen)))
+      active
+    }
+
+    /** Append one generation of `files` at `status`; no files, no append.
+      * An instance that has neither read nor minted runs the pre-flight
+      * read first, so max(seq) has one read path.
+      */
+    def mark(batchId: String, files: Seq[String], status: String, now: Timestamp): Unit =
+      if (files.nonEmpty) {
+        val s = lastSeq.getOrElse { activeFiles(); lastSeq.get } + 1L
+        lastSeq = Some(s)
+        append(files.map(f => StagingRow(batchId, f, status, now, s, writerId)))
+      }
+  }
+
+  /** The latest-wins ACTIVE files, sorted, and the ledger's max(seq) (0
+    * when empty), from one scan: the max is an Observation on the scan
+    * that feeds the window.
+    */
+  private[meta] def scan(ledger: DataFrame): (Seq[String], Long) = {
+    val seqs = Observation()
+    val w = Window
       .partitionBy(col("fileName"))
       .orderBy(col("updatedAt").desc, col("seq").desc,
         col("writer").desc_nulls_last, col("status").desc)
-    ledger
+    val active = ledger
+      .observe(seqs, max(col("seq")).as("seq"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1 && col("status") === Active)
       .select("fileName")
       .collect().map(_.getString(0)).toSeq.sorted
+    // an empty ledger observes a null max, or no value at all when Spark
+    // folds the empty scan away. A JDBC ledger reads with the table's own
+    // schema, so an integral seq column may come back as Int or Decimal;
+    // anything that is not a number is a broken ledger, not "no runs yet"
+    val seen = seqs.get.get("seq") match {
+      case None | Some(null) => 0L
+      case Some(n: java.lang.Number) => n.longValue
+      case Some(other) => throw new IllegalStateException(
+        s"staging ledger seq is not a number: $other (${other.getClass.getName})")
+    }
+    (active, seen)
   }
 }
 
@@ -118,9 +163,6 @@ object Staging {
 class JdbcStaging(spark: SparkSession, url: String, table: String,
     props: java.util.Properties) {
   import Staging._
-
-  // same concurrent-writer disambiguator as the parquet ledger
-  private val writerId = java.util.UUID.randomUUID().toString
 
   // Missing-table detection across dialects (review r9): MySQL — the
   // reference's actual database — says "Table 'x.y' doesn't exist"
@@ -160,13 +202,12 @@ class JdbcStaging(spark: SparkSession, url: String, table: String,
     byMessage
   }
 
-  private def ledger: DataFrame = {
-    val df =
-      try graft.io.Sources.jdbc(spark, url, table, props)
+  private def ledger: Option[DataFrame] = {
+    val read =
+      try Some(graft.io.Sources.jdbc(spark, url, table, props))
       catch {
-        // first run: the table doesn't exist yet → empty ledger
-        case e: Exception if missingTable(e) =>
-          spark.createDataFrame(Seq.empty[StagingRow])
+        // first run: the table doesn't exist yet → no ledger
+        case e: Exception if missingTable(e) => None
       }
     // a JDBC ledger reads with the TABLE's schema (unlike the parquet path's
     // explicit one): pre-nonce tables lack the writer column, which would
@@ -177,8 +218,9 @@ class JdbcStaging(spark: SparkSession, url: String, table: String,
     // migrated column reads back as WRITER — match case-insensitively or
     // withColumn (which resolves case-insensitively) would null the real
     // nonce values out of every read.
-    if (df.columns.exists(_.equalsIgnoreCase("writer"))) df
-    else df.withColumn("writer", lit(null).cast("string"))
+    read.map(df =>
+      if (df.columns.exists(_.equalsIgnoreCase("writer"))) df
+      else df.withColumn("writer", lit(null).cast("string")))
   }
 
   // Legacy (pre-nonce) tables lack the writer column, so jdbcAppend would
@@ -213,22 +255,16 @@ class JdbcStaging(spark: SparkSession, url: String, table: String,
     schemaEnsured = true
   }
 
-  private def append(rows: Seq[StagingRow]): Unit = {
+  private val book = new Book(() => ledger, { rows =>
     ensureWriterColumn()
     graft.io.Sinks.jdbcAppend(spark.createDataFrame(rows), url, table, props)
-  }
+  })
 
-  private def nextSeq(): Long = Staging.nextSeq(ledger)
+  def markActive(batchId: String, files: Seq[String], now: Timestamp): Unit =
+    book.mark(batchId, files, Active, now)
 
-  def markActive(batchId: String, files: Seq[String], now: Timestamp): Unit = {
-    val s = nextSeq()
-    append(files.map(f => StagingRow(batchId, f, Active, now, s, writerId)))
-  }
+  def markInactive(batchId: String, files: Seq[String], now: Timestamp): Unit =
+    book.mark(batchId, files, Inactive, now)
 
-  def markInactive(batchId: String, files: Seq[String], now: Timestamp): Unit = {
-    val s = nextSeq()
-    append(files.map(f => StagingRow(batchId, f, Inactive, now, s, writerId)))
-  }
-
-  def activeFiles(): Seq[String] = Staging.activeFiles(ledger)
+  def activeFiles(): Seq[String] = book.activeFiles()
 }

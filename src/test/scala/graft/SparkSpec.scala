@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +18,24 @@ trait SparkSpec extends AnyFunSuite {
   def forcedDistributed[T](body: => T): T = {
     sys.props("graft.forceDistributed") = "true"
     try body finally sys.props -= "graft.forceDistributed"
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. The listener
+    * bus is drained before and after, so jobs of earlier work are not
+    * counted and every job of `body` is. */
+  def jobsRun[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      TestBus.drain(sc)
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 }
 

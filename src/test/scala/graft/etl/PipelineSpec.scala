@@ -149,6 +149,21 @@ class PipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("pre-flight"))
   }
 
+  test("an all-quarantined batch fails without touching the ledger") {
+    val layout = mkLayout()
+    write(layout.inboxDir, "sales_bad.csv", Seq(
+      "customer_id,product_name,sales_date,sales_person_id,price,quantity,total_cost",
+      "9,besan,2023-03-06,2,52.0,1,52.0"))
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, layout, "b-bad", Timestamp.valueOf("2026-08-12 00:00:00"),
+        customerDim, storeDim, teamDim)
+    }
+    assert(e.getMessage.contains("no correct files to ingest"))
+    assert(graft.io.FileLifecycle.list(layout.errorDir, ".csv").size === 1)
+    // no generation was minted for the empty correct-file list: no ledger file
+    assert(!Files.exists(Paths.get(layout.ledgerPath)))
+  }
+
   test("a failed sink releases both batch caches") {
     val layout = mkLayout()
     okCsv(layout.inboxDir)

@@ -39,6 +39,36 @@ class ValidationSpec extends SparkSpec {
     assert(split.missing(missing) === Set("store_id"))
   }
 
+  test("partitionFiles probes headers without running a Spark job") {
+    val (split, jobs) = jobsRun(Validation.partitionFiles(spark, Seq(happy, extra, missing)))
+    assert(split.error === Seq(missing))
+    assert(jobs === 0)
+  }
+
+  test("probeColumns names columns exactly as Spark's CSV header read does") {
+    val headers = Seq(
+      "plain" -> "customer_id,store_id,price\n1,121,2.0\n",
+      "case_dups" -> "a,a,B,b\n1,2,3,4\n",
+      "empty_name" -> "a,,c\n1,2,3\n",
+      "quoted_comma" -> "\"x,y\",z\n1,2\n",
+      "blank_lines" -> "\n\n  \ncustomer_id,store_id\n1,2\n",
+      "crlf" -> "a,b\r\n1,2\r\n",
+      "bom" -> "\uFEFFa,b\n1,2\n",
+      "header_only" -> "a,b",
+      "zero_byte" -> "",
+      "padded" -> " a , b ,c \n1,2,3\n")
+    val probeDir = Files.createTempDirectory("graft-probe")
+    val expected = Map("case_dups" -> Seq("a0", "a1", "B2", "b3"),
+      "empty_name" -> Seq("a", "_c1", "c"))
+    headers.foreach { case (name, text) =>
+      val p = probeDir.resolve(s"$name.csv")
+      Files.write(p, text.getBytes("UTF-8"))
+      val bySpark = spark.read.option("header", "true").csv(p.toString).columns.toSeq
+      assert(Validation.probeColumns(spark, p.toString) === bySpark, name)
+      expected.get(name).foreach(cols => assert(bySpark === cols, name))
+    }
+  }
+
   test("conformed union: fixed 9-column schema, extras folded, null fill") {
     val df = Validation.readConformedUnion(spark, Seq(happy, extra))
     assert(df.schema === Schemas.salesFact)

@@ -7,6 +7,116 @@ import graft.SparkSpec
 
 class StagingSpec extends SparkSpec {
 
+  test("first run on a missing parquet ledger: seqs 1 and 2, one job per mark") {
+    val ledger = Files.createTempDirectory("graft-staging").toString + "/ledger"
+    val st = new Staging(spark, ledger)
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    assert(jobsRun(st.activeFiles())._1.isEmpty)
+    // the pre-flight read is the batch's only one: each mark is its append
+    assert(jobsRun(st.markActive("b1", Seq("x.csv", "y.csv"), t0))._2 === 1)
+    assert(jobsRun(st.markInactive("b1", Seq("x.csv", "y.csv"), t0))._2 === 1)
+    assert(st.activeFiles().isEmpty)
+    val seqs = spark.read.parquet(ledger).select("status", "seq").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSet
+    assert(seqs === Set(Staging.Active -> 1L, Staging.Inactive -> 2L))
+    assert(spark.createDataFrame(Seq.empty[Staging.StagingRow]).schema === Staging.schema)
+  }
+
+  test("first run on a missing Derby ledger: seqs 1 and 2") {
+    val url = "jdbc:derby:memory:graftfirstrun;create=true"
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
+    val st = new JdbcStaging(spark, url, "first_staging", props)
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    assert(st.activeFiles().isEmpty)
+    st.markActive("b1", Seq("x.csv", "y.csv"), t0)
+    st.markInactive("b1", Seq("x.csv", "y.csv"), t0)
+    assert(st.activeFiles().isEmpty)
+    val seqs = graft.io.Sources.jdbc(spark, url, "first_staging", props)
+      .select("status", "seq").collect().map(r => r.getString(0) -> r.getLong(1)).toSet
+    assert(seqs === Set(Staging.Active -> 1L, Staging.Inactive -> 2L))
+  }
+
+  test("a mark with no files appends nothing") {
+    val ledger = Files.createTempDirectory("graft-staging").toString + "/ledger"
+    val st = new Staging(spark, ledger)
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    assert(jobsRun(st.markActive("b1", Seq.empty, t0))._2 === 0)
+    assert(!Files.exists(java.nio.file.Paths.get(ledger)))
+    st.markActive("b1", Seq("a.csv"), t0)
+    assert(jobsRun(st.markInactive("b1", Seq.empty, t0))._2 === 0)
+    assert(st.activeFiles() === Seq("a.csv"))
+  }
+
+  test("a pre-flight read made stale by another writer still resolves latest-wins") {
+    val ledger = Files.createTempDirectory("graft-staging").toString + "/ledger"
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    val seed = new Staging(spark, ledger)
+    seed.markActive("b0", Seq("old.csv"), t0)
+    seed.markInactive("b0", Seq("old.csv"), t0)
+    // writer A reads the ledger (max seq 2) ...
+    val a = new Staging(spark, ledger)
+    assert(a.activeFiles().isEmpty)
+    // ... then writer B completes A → I on a disjoint file (seqs 3, 4)
+    val b = new Staging(spark, ledger)
+    b.markActive("bb", Seq("b.csv"), t0)
+    b.markInactive("bb", Seq("b.csv"), t0)
+    // A mints from its stale read (3, 4): the seqs collide with B's, the files do not
+    a.markActive("ba", Seq("a.csv"), t0)
+    a.markInactive("ba", Seq("a.csv"), t0)
+    val aSeqs = spark.read.parquet(ledger).filter("batchId = 'ba'")
+      .select("status", "seq").collect().map(r => r.getString(0) -> r.getLong(1)).toSet
+    assert(aSeqs === Set(Staging.Active -> 3L, Staging.Inactive -> 4L))
+    assert(new Staging(spark, ledger).activeFiles().isEmpty)
+    // a third writer's same-timestamp re-activation of A's file wins
+    new Staging(spark, ledger).markActive("bc", Seq("a.csv"), t0)
+    assert(new Staging(spark, ledger).activeFiles() === Seq("a.csv"))
+  }
+
+  test("a fresh writer mints past a seeded ledger's max seq and wins at the same timestamp") {
+    val ledger = Files.createTempDirectory("graft-staging").toString + "/ledger"
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    val seed = new Staging(spark, ledger)
+    seed.markActive("b0", Seq("a.csv"), t0)
+    seed.markInactive("b0", Seq("a.csv"), t0)
+    val st = new Staging(spark, ledger)
+    assert(st.activeFiles().isEmpty)
+    // the mint comes from the pre-flight's observed max(seq) = 2: no read
+    assert(jobsRun(st.markActive("b1", Seq("a.csv"), t0))._2 === 1)
+    val seqs = spark.read.parquet(ledger).filter("batchId = 'b1'")
+      .select("seq").collect().map(_.getLong(0)).toSeq
+    assert(seqs === Seq(3L))
+    assert(st.activeFiles() === Seq("a.csv"))
+  }
+
+  test("a JDBC ledger whose seq column reads back as Int still mints past its max") {
+    val url = "jdbc:derby:memory:graftintseq;create=true"
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try {
+      val st0 = conn.createStatement()
+      st0.executeUpdate(
+        """CREATE TABLE int_staging (
+          |  batchId VARCHAR(64), fileName VARCHAR(256), status VARCHAR(1),
+          |  updatedAt TIMESTAMP, seq INTEGER, writer VARCHAR(36))""".stripMargin)
+      st0.executeUpdate("INSERT INTO int_staging VALUES " +
+        "('b0', 'a.csv', 'A', '2026-01-01 00:00:00', 1, 'seed-writer')")
+      st0.executeUpdate("INSERT INTO int_staging VALUES " +
+        "('b0', 'a.csv', 'I', '2026-01-01 00:00:00', 2, 'seed-writer')")
+      st0.close()
+    } finally conn.close()
+    val st = new JdbcStaging(spark, url, "int_staging", props)
+    assert(st.activeFiles().isEmpty)
+    // a max(seq) read as 0 would mint 1, and the new ACTIVE row would lose
+    // latest-wins to the older INACTIVE one at the same timestamp
+    st.markActive("b1", Seq("a.csv"), Timestamp.valueOf("2026-01-01 00:00:00"))
+    assert(st.activeFiles() === Seq("a.csv"))
+    val seqs = graft.io.Sources.jdbc(spark, url, "int_staging", props)
+      .filter("batchId = 'b1'").select("seq").collect().map(_.getInt(0)).toSeq
+    assert(seqs === Seq(3))
+  }
+
   test("JDBC-backed ledger has identical A/I semantics (embedded Derby)") {
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
@@ -123,12 +233,12 @@ class StagingSpec extends SparkSpec {
       Staging.StagingRow("b1", "f.csv", Staging.Active, t0, 1L, "aaaa-writer"),
       Staging.StagingRow("b2", "f.csv", Staging.Inactive, t0, 1L, "zzzz-writer")))
     // writer desc_nulls_last → "zzzz-writer" wins → file is INACTIVE
-    assert(Staging.activeFiles(df).isEmpty)
+    assert(Staging.scan(df)._1.isEmpty)
     // and the mirror-image ledger flips the outcome the same way every time
     val df2 = spark.createDataFrame(Seq(
       Staging.StagingRow("b1", "f.csv", Staging.Inactive, t0, 1L, "aaaa-writer"),
       Staging.StagingRow("b2", "f.csv", Staging.Active, t0, 1L, "zzzz-writer")))
-    assert(Staging.activeFiles(df2) === Seq("f.csv"))
+    assert(Staging.scan(df2)._1 === Seq("f.csv"))
   }
 
   test("same-timestamp re-activation wins over a prior INACTIVE (seq ordinal)") {
