@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Run a graft main class directly on the compiled classes (no sbt lock):
-#   scripts/run_main.sh graft.tools.ExplainAll [args...]
+#   scripts/run_main.sh graft.tools.PlanDump <outDir> <query>...
 # Mirrors build.sbt's forked-JVM options (JDK17 add-opens, UTC, codegen
 # cache). Compile first with `sbt Test/compile` (NOT bare `compile` — see
 # the guard below).

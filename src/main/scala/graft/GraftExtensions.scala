@@ -22,8 +22,7 @@ import graft.functions.CosineSimilarity
   *
   * One class registers ALL of it on purpose (review r9): two half
   * registrations under the same simple name meant following either file's
-  * doc silently lost the other half. `graft.plans.GraftExtensions` remains
-  * as a delegating alias for configs that name it.
+  * doc silently lost the other half.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -3699,7 +3699,7 @@ object QueryCatalog {
   )
 
   def all: Seq[CatalogEntry] = parity ++ extensions ++ QueryCatalogR7.entries ++
-    QueryCatalogR13.entries ++ QueryCatalogR14.entries ++ QueryCatalogR15.entries
+    QueryCatalogStores.entries
 
   /** Entries that execute a Structured Streaming query (micro-batches +
     * state stores), as opposed to batch plans. The bench isolates these in
@@ -3726,13 +3726,10 @@ object QueryCatalog {
     * ~1.16× calib-normalized with no code diff — store-entry JVM litter
     * (tempdir write jobs, persisted frames, GC pressure) is the prime
     * suspect the r13 verdict ordered adjudicated (item 2). Membership is
-    * spec-pinned (QueryCatalogSpec).
+    * [[QueryCatalogStores]] less its streaming entries, checked against the
+    * name pattern by QueryCatalogSpec. Lazy: those entries read this
+    * object's oracle SQL, so neither object may need the other to be built.
     */
-  val storeBuildNames: Set[String] = Set(
-    "dedup_incremental", "dedup_incremental_multi", "dedup_incremental_verified",
-    "dedup_incremental_corpus", "dedup_incremental_delete",
-    "dedup_incremental_takedowns", "dedup_incremental_bucketed",
-    "dedup_incremental_batch_scoped", "dedup_incremental_snapshot",
-    "knn_ivf_incremental", "knn_ivf_incremental_delete",
-    "knn_ivf_incremental_takedowns", "knn_ivf_retrain_swap")
+  lazy val storeBuildNames: Set[String] =
+    QueryCatalogStores.entries.map(_.name).toSet -- streamingNames
 }

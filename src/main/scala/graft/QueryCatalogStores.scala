@@ -3,21 +3,28 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.IncrementalDedup
+import graft.ops.{IVF, IVFStore, IncrementalDedup}
 
-/** Round-13 catalog additions: incremental dedup against a persisted
-  * signature store ([[graft.ops.IncrementalDedup]] — r12 verdict item 1,
-  * the daily-ingest shape at 100 TB).
+/** The persisted-store family: incremental dedup against a signature store
+  * ([[graft.ops.IncrementalDedup]]) and the incremental IVF index
+  * ([[graft.ops.IVFStore]]) — appends, tombstone generations, the bucketed
+  * band layout, batch-scoped and snapshot reads, streaming ingest, and the
+  * IVF retrain-and-swap.
   *
-  * Oracle design: the store's contract is EXACT equivalence with the full
-  * recompute over base ∪ batches, so each entry's DuckDB oracle is the
-  * existing full-recompute SQL over the whole `documents` table
-  * ([[QueryCatalog.minhashCandidatesSql]] / the verified-pairs CTEs) — the
-  * gate thereby pins the incremental machinery (generation deltas,
-  * touched-bucket recompute, latest-wins supersession) against an
-  * independent engine that never sees the store at all.
+  * Oracle design: the stores' contract is EXACT equivalence with the full
+  * recompute, so each entry's DuckDB oracle is the existing full-recompute
+  * SQL ([[QueryCatalog.minhashCandidatesSql]], the verified-pairs CTEs,
+  * [[QueryCatalog.knnIvfSql]]) over the documents or embeddings the store
+  * should hold. The gate thereby pins the incremental machinery (generation
+  * deltas, touched-bucket recompute, latest-wins supersession) against an
+  * independent engine that never sees the store at all; layout, versioning
+  * and read scoping must be invisible to results.
+  *
+  * Every entry builds its store under [[withTempStore]]. The batch entries
+  * are [[QueryCatalog.storeBuildNames]]; the two `*_stream` ones are in
+  * [[QueryCatalog.streamingNames]].
   */
-object QueryCatalogR13 {
+object QueryCatalogStores {
 
   private def docs(s: SparkSession, d: String): DataFrame = Tables(s, d, "documents")
 
@@ -31,7 +38,7 @@ object QueryCatalogR13 {
     * because catalog entries must be self-contained per invocation.
     */
   private def withTempStore(f: String => DataFrame): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-incstore-")
+    val dir = java.nio.file.Files.createTempDirectory("graft-store-")
     def deleteRec(): Unit = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
@@ -194,7 +201,7 @@ object QueryCatalogR13 {
         val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
         val t = (maxId + 1L) * 4L / 5L
         val index = IncrementalAnnIndex.trainBase(e, t)
-        val st = ops.IVFStore.create(s, root, index)
+        val st = IVFStore.create(s, root, index)
         st.append(e.filter(col("vec_id") < t))
         st.append(e.filter(col("vec_id") >= t))
         st.topK(QueryCatalog.queryVec(s, d), k = 20, nprobe = 4)
@@ -214,7 +221,7 @@ object QueryCatalogR13 {
         val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
         val t = (maxId + 1L) * 4L / 5L
         val index = IncrementalAnnIndex.trainBase(e, t)
-        val st = ops.IVFStore.create(s, root, index)
+        val st = IVFStore.create(s, root, index)
         st.append(e.filter(col("vec_id") < t))
         st.append(e.filter(col("vec_id") >= t))
         st.delete(e.filter(pmod(col("vec_id"), lit(10)) === 7 && col("vec_id") >= 16)
@@ -237,7 +244,7 @@ object QueryCatalogR13 {
         val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
         val t = (maxId + 1L) * 4L / 5L
         val index = IncrementalAnnIndex.trainBase(e, t)
-        val st = ops.IVFStore.create(s, root, index)
+        val st = IVFStore.create(s, root, index)
         st.append(e.filter(col("vec_id") < t))
         st.append(e.filter(col("vec_id") >= t))
         def slice(m: Int, r: Int) =
@@ -265,8 +272,8 @@ object QueryCatalogR13 {
     CatalogEntry("knn_ivf_incremental_stream",
       (s, d) => withTempStore { root =>
         val e = QueryCatalog.embs(s, d)
-        val index = ops.IVF.train(e, c = 16, iters = 0)
-        ops.IVFStore.create(s, s"$root/store", index, defaultNprobe = 4)
+        val index = IVF.train(e, c = 16, iters = 0)
+        IVFStore.create(s, s"$root/store", index, defaultNprobe = 4)
         val inbox = s"$root/inbox"
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inbox))
         (0 to 2).foreach { i =>
@@ -282,17 +289,103 @@ object QueryCatalogR13 {
         }
         streaming.IvfIngestStream.runOnce(s, inbox, e.schema,
           s"$root/store", s"$root/ckpt")
-        ops.IVFStore.open(s, s"$root/store")
+        IVFStore.open(s, s"$root/store")
           .topK(QueryCatalog.queryVec(s, d), k = 20)
           .withColumn("score", round(col("score"), 9))
       },
-      Some(QueryCatalog.knnIvfSql)))
+      Some(QueryCatalog.knnIvfSql)),
+
+    // dedup_incremental's shape on the BUCKETED band layout (bandBuckets=8
+    // — bands live under bkt= hash-partition dirs, and each append's
+    // touched-bucket read partition-prunes to the batch's buckets instead
+    // of scanning every stored band; plan pinned by BucketedBandsSpec).
+    // The takedown-traffic mutation mix (append, two interleaved tombstone
+    // gens, resurrect append) exercises every pruned read path. Oracle:
+    // the full-recompute SQL over the survivors — layout must be invisible
+    // to results, including cap transitions crossing bucket boundaries.
+    CatalogEntry("dedup_incremental_bucketed",
+      (s, d) => withTempStore { root =>
+        val dd = docs(s, d)
+        val st = IncrementalDedup.store(s, root,
+          IncrementalDedup.Config(bandBuckets = 8))
+        st.append(dd.filter(pmod(col("doc_id"), lit(5)) =!= 0))
+        st.append(dd.filter(pmod(col("doc_id"), lit(5)) === 0))
+        st.delete(dd.filter(pmod(col("doc_id"), lit(9)) === 1).select("doc_id"))
+        st.delete(dd.filter(pmod(col("doc_id"), lit(11)) === 7).select("doc_id"))
+        st.append(dd.filter(
+          pmod(col("doc_id"), lit(9)) === 1 && pmod(col("doc_id"), lit(2)) === 0))
+        st.candidates(minEstJaccard = 0.25)
+      },
+      Some(QueryCatalog.minhashCandidatesSqlOver(
+        "NOT ((doc_id % 9 = 1 OR doc_id % 11 = 7)" +
+          " AND NOT (doc_id % 9 = 1 AND doc_id % 2 = 0))"))),
+
+    // Offline retrain + atomic swap (IVFStore.retrainAndSwap): a versioned
+    // store is loaded, takes a takedown, then rebuilds its centroids on
+    // the SURVIVORS and swaps the version pointer. IVF.train is
+    // deterministic (first-16-by-id init; iters=0 keeps it closed-form),
+    // so the retrained centroids are exactly the oracle's c CTE over the
+    // filtered embeddings — the swap must equal a from-scratch build on
+    // the survivors, which is knn_ivf's SQL over them. The delete slice
+    // (vec_id % 6 = 5) never hits vec_id 0, keeping the oracle's query
+    // vector defined.
+    CatalogEntry("knn_ivf_retrain_swap",
+      (s, d) => withTempStore { root =>
+        val e = QueryCatalog.embs(s, d)
+        val st = IVFStore.createVersioned(s, root,
+          IVF.train(e, c = 16, iters = 0), defaultNprobe = 4)
+        st.append(e)
+        st.delete(e.filter(pmod(col("vec_id"), lit(6)) === 5).select("vec_id"))
+        IVFStore.retrainAndSwap(s, root, c = 16, iters = 0)
+          .topK(QueryCatalog.queryVec(s, d), k = 20, nprobe = 4)
+          .withColumn("score", round(col("score"), 9))
+      },
+      Some(QueryCatalog.knnIvfSqlOver("vec_id % 6 <> 5"))),
+
+    // Batch-scoped candidates on the bucketed layout, under a takedown so
+    // the live-sig masking path is exercised too: base append (gen 0),
+    // batch append (gen 1), tombstone (gen 2), then "candidates involving
+    // gen 1's docs". Equals the full-recompute candidates over the
+    // SURVIVORS filtered to pairs with a side in the batch — the pruned
+    // read (plan-pinned by BucketedBandsSpec) must lose no involving pair.
+    CatalogEntry("dedup_incremental_batch_scoped",
+      (s, d) => withTempStore { root =>
+        val dd = docs(s, d)
+        val st = IncrementalDedup.store(s, root,
+          IncrementalDedup.Config(bandBuckets = 8))
+        st.append(dd.filter(pmod(col("doc_id"), lit(5)) =!= 0))
+        st.append(dd.filter(pmod(col("doc_id"), lit(5)) === 0))
+        st.delete(dd.filter(pmod(col("doc_id"), lit(9)) === 1).select("doc_id"))
+        st.candidatesForGen(1, minEstJaccard = 0.25)
+      },
+      Some(QueryCatalog.minhashCandidatesSqlOver("doc_id % 9 <> 1") +
+        "\n  AND (doc_a % 5 = 0 OR doc_b % 5 = 0)")),
+
+    // Snapshot-isolated reads: pin the store after two appends, then
+    // MUTATE the live store (a third append and a takedown) — the
+    // snapshot's candidates must equal the full recompute over exactly
+    // the two pinned batches, blind to everything committed after it
+    // ([[IncrementalDedup.SignatureStore.snapshot]]; one-epoch validity
+    // by the compaction reader grace). The live read sees all three
+    // batches minus the takedown — same store, two consistent answers.
+    CatalogEntry("dedup_incremental_snapshot",
+      (s, d) => withTempStore { root =>
+        val dd = docs(s, d)
+        val st = IncrementalDedup.store(s, root)
+        st.append(dd.filter(pmod(col("doc_id"), lit(5)).isin(1, 2)))
+        st.append(dd.filter(pmod(col("doc_id"), lit(5)).isin(3, 4)))
+        val snap = st.snapshot()
+        st.append(dd.filter(pmod(col("doc_id"), lit(5)) === 0))
+        st.delete(dd.filter(pmod(col("doc_id"), lit(9)) === 2).select("doc_id"))
+        snap.candidates(minEstJaccard = 0.25)
+      },
+      Some(QueryCatalog.minhashCandidatesSqlOver("doc_id % 5 <> 0"))))
 
   /** Tiny indirection so the entry reads declaratively: static-centroid
     * training (iters = 0 → first-16-by-id init) on the base split only.
     */
   private object IncrementalAnnIndex {
-    def trainBase(e: DataFrame, t: Long): ops.IVF.Index =
-      ops.IVF.train(e.filter(col("vec_id") < t), c = 16, iters = 0)
+    def trainBase(e: DataFrame, t: Long): IVF.Index =
+      IVF.train(e.filter(col("vec_id") < t), c = 16, iters = 0)
   }
 }

@@ -64,9 +64,10 @@ object Pipeline {
     staging.markActive(batchId, split.correct.map(fileName), now)
 
     // probe results from validation feed the union (no second header pass);
-    // the cached fact is read once from CSV (incl. the inferSchema pass) and
-    // reused by the count and the enrichment; the cached enriched frame runs
-    // the three broadcast joins once for all three sinks
+    // the cached fact is read once from CSV (an all-string schema from the
+    // probed headers, no inferSchema pass) and reused by the count and the
+    // enrichment; the cached enriched frame runs the three broadcast joins
+    // once for all three sinks
     val fact = Validation
       .readConformedUnion(spark, split.correct, knownColumns = split.columns)
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -1,9 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 import graft.functions.Cols
 
@@ -64,7 +62,8 @@ object SalesEnrichment {
     * salesperson, month) total; rank-1 seller per (store, month) earns 1%
     * incentive, rest 0 (rank ties share the incentive — reference
     * sales_mart_sql_transformation_file.py:24-30; code semantics, not the
-    * "top 1%" comment — SURVEY.md §2.8).
+    * "top 1%" comment — SURVEY.md §2.8). The rank-1 rule is
+    * [[SalesMart.withIncentive]]'s, shared with the catalog's mart.
     */
   def salesMart(enriched: DataFrame): DataFrame = {
     val totals = enriched
@@ -75,12 +74,6 @@ object SalesEnrichment {
           .as("full_name"),
         col("sales_month"))
       .agg(Cols.moneySum(col("total_cost")).as("total_sales"))
-    val w = Window.partitionBy(col("store_id"), col("sales_month"))
-      .orderBy(col("total_sales").desc)
-    totals
-      .withColumn("rnk", rank().over(w).cast(LongType))
-      .withColumn("incentive",
-        when(col("rnk") === 1, col("total_sales") * lit(0.01)).otherwise(lit(0.0)))
-      .drop("rnk")
+    SalesMart.withIncentive(totals).drop("rnk")
   }
 }

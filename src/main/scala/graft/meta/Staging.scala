@@ -52,8 +52,8 @@ class Staging(spark: SparkSession, ledgerPath: String) {
     else Some(spark.read.schema(schema).parquet(ledgerPath))
   }
 
-  private val book = new Book(() => ledger,
-    rows => spark.createDataFrame(rows).write.mode(SaveMode.Append).parquet(ledgerPath))
+  private val book = new Book(spark, () => ledger,
+    _.write.mode(SaveMode.Append).parquet(ledgerPath))
 
   /** Stage files ACTIVE before processing (reference main.py:196-219). */
   def markActive(batchId: String, files: Seq[String], now: Timestamp): Unit =
@@ -94,11 +94,11 @@ object Staging {
 
   /** The latest-wins reads and seq mints of one ledger store; the parquet
     * and the JDBC ledger differ only in how they `read` (None: no ledger
-    * yet) and `append`. The instance keeps the highest seq it has read or
-    * minted (see the concurrency contract on [[Staging]]).
+    * yet) and `append` a mark's frame. The instance keeps the highest seq
+    * it has read or minted (see the concurrency contract on [[Staging]]).
     */
-  private[meta] final class Book(read: () => Option[DataFrame],
-      append: Seq[StagingRow] => Unit) {
+  private[meta] final class Book(spark: SparkSession, read: () => Option[DataFrame],
+      append: DataFrame => Unit) {
     // collision disambiguator: concurrent writers can mint the SAME seq
     // (ADVICE r7). Appends are still safe (append-only ledger), and
     // latest-wins stays deterministic because the writer nonce breaks
@@ -121,7 +121,9 @@ object Staging {
       if (files.nonEmpty) {
         val s = lastSeq.getOrElse { activeFiles(); lastSeq.get } + 1L
         lastSeq = Some(s)
-        append(files.map(f => StagingRow(batchId, f, status, now, s, writerId)))
+        // one partition: a mark is a few rows, and one task writes one file
+        append(spark.createDataFrame(
+          files.map(f => StagingRow(batchId, f, status, now, s, writerId))).coalesce(1))
       }
   }
 
@@ -255,9 +257,9 @@ class JdbcStaging(spark: SparkSession, url: String, table: String,
     schemaEnsured = true
   }
 
-  private val book = new Book(() => ledger, { rows =>
+  private val book = new Book(spark, () => ledger, { mark =>
     ensureWriterColumn()
-    graft.io.Sinks.jdbcAppend(spark.createDataFrame(rows), url, table, props)
+    graft.io.Sinks.jdbcAppend(mark, url, table, props)
   })
 
   def markActive(batchId: String, files: Seq[String], now: Timestamp): Unit =

@@ -84,7 +84,7 @@ object Replay {
           // array is EXACTLY injective on the slice, so buckets (and the
           // [2, maxBucket] cap) match the oracle's comma-joined-string key
           // by construction — and profiling showed the long→string cast +
-          // concat burned ~0.7 s at sf0.1 (MinhashProfile)
+          // concat burned ~0.7 s at sf0.1
           slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)
             .as("band_key"))): _*)).as("band"))
       .select(col("doc_id"), col("band.band_idx"), col("band.band_key"))

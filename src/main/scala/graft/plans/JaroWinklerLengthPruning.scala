@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -30,8 +29,8 @@ import graft.functions.JaroWinkler
   * is, so the result is unchanged (spec'd against an un-optimized run).
   *
   * Registration: `spark.experimental.extraOptimizations` for a live
-  * session, or [[GraftExtensions]] via
-  * `spark.sql.extensions=graft.plans.GraftExtensions` at session build.
+  * session, or [[graft.GraftExtensions]] via
+  * `spark.sql.extensions=graft.GraftExtensions` at session build.
   */
 object JaroWinklerLengthPruning extends Rule[LogicalPlan] {
 
@@ -68,15 +67,4 @@ object JaroWinklerLengthPruning extends Rule[LogicalPlan] {
       GreaterThan(Least(Seq(la, lb)),
         Multiply(Literal(5.0 * t - 4.0, DoubleType), Greatest(Seq(la, lb)))))
   }
-}
-
-/** Delegating alias kept for configs naming `graft.plans.GraftExtensions`
-  * — [[graft.GraftExtensions]] is the one real entry point registering
-  * ALL graft extensions (functions + rule + strategy); two half
-  * registrations under one simple name silently lost whichever half the
-  * user didn't configure (review r9).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    new graft.GraftExtensions().apply(ext)
 }

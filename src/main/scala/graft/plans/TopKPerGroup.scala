@@ -170,7 +170,7 @@ object TopKPerGroup {
 
   /** Idempotently register the planner strategy on a live session
     * (`spark.experimental.extraStrategies`, the runtime twin of
-    * `spark.sql.extensions=graft.plans.GraftExtensions`).
+    * `spark.sql.extensions=graft.GraftExtensions`).
     */
   def register(spark: SparkSession): Unit = {
     val exp = spark.experimental

@@ -125,7 +125,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   // The round-10 null-contract filters were verified to prune AT THE SCAN
-  // by a hand-run ExplainAll audit; this pins that audit as a regression
+  // by a hand-run plan audit; this pins that audit as a regression
   // spec (round-11 verdict item 2). At 100 TB a contract that slips to a
   // post-scan Filter stage is the difference between free row-group
   // pruning and a full-table pass. pagerank_bipartite's src/dst contract

@@ -22,6 +22,17 @@ class StagingSpec extends SparkSpec {
     assert(spark.createDataFrame(Seq.empty[Staging.StagingRow]).schema === Staging.schema)
   }
 
+  test("each mark appends one parquet file") {
+    val ledger = Files.createTempDirectory("graft-staging").toString + "/ledger"
+    val st = new Staging(spark, ledger)
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    st.markActive("b1", Seq("x.csv", "y.csv", "z.csv"), t0)
+    st.markInactive("b1", Seq("x.csv", "y.csv", "z.csv"), t0)
+    val parts = new java.io.File(ledger).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(parts.length === 2, parts.map(_.getName).mkString(", "))
+  }
+
   test("first run on a missing Derby ledger: seqs 1 and 2") {
     val url = "jdbc:derby:memory:graftfirstrun;create=true"
     val props = new java.util.Properties()

@@ -97,6 +97,6 @@ class JaroWinklerLengthPruningSpec extends SparkSpec {
     // the injector runs against a fresh extensions object; we only verify
     // registration executes (session-build wiring is config-level)
     val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
+    new graft.GraftExtensions().apply(ext)
   }
 }
