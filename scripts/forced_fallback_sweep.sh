@@ -1,13 +1,13 @@
 #!/usr/bin/env bash
 # Forced-fallback oracle sweep (round-11 verdict item 1): run the FULL
 # query catalog with every driver-side size gate forced to its distributed
-# branch (graft.ScaleGates — the pageRank vector path; the shared edge gate
-# Graph.driverLocal in front of the triangleStats / kCore /
-# commonNeighborScores driver-local kernels; connectedComponents
-# union-find; the groupedMedianMad collect; and the kCore / triangleStats /
-# Distribution broadcast gates all take the 100 TB code path), then
-# oracle-check the dump against DuckDB exactly like the driver's gate.
-# An empty edge list still passes the zeroed edge gate (0 <= 0).
+# branch, then oracle-check the dump against DuckDB exactly like the
+# driver's gate. Every gate lives in graft.ScaleGates (its scaladoc is the
+# gate table: the pageRank vector path; the edge gate ScaleGates.driverLocal
+# in front of the triangleStats / kCore / commonNeighborScores kernels and
+# connectedComponents' union-find; the groupedMedianMad collect; and the
+# kCore / triangleStats / Distribution broadcast gates). Under the flag
+# every gate closes, at any measured size including zero.
 #
 # Usage: scripts/forced_fallback_sweep.sh [SF_DIR] [OUT_DIR]
 set -euo pipefail

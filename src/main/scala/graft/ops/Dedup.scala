@@ -4,6 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.reflect.runtime.universe.TypeTag
+
+import graft.ScaleGates
+
 /** Document deduplication at pipeline scale: exact, MinHash+LSH, SimHash,
   * and n-gram Jaccard.
   *
@@ -243,23 +247,22 @@ object Dedup {
     * -pair graph after Jaccard thresholding is orders of magnitude smaller
     * than the corpus (edges exist only between near-duplicates), so it
     * usually fits on the driver — a single-pass union-find there replaces
-    * O(cluster diameter) shuffle rounds. Graphs above `driverEdgeLimit`
-    * (collected as primitive tuples, ~40 bytes/edge with object headers ⇒
-    * the default caps the collect at ~200 MB — comfortably inside a driver
+    * O(cluster diameter) shuffle rounds. Graphs above the
+    * `ScaleGates.DriverEdges` budget (collected as primitive tuples, ~40
+    * bytes/edge with object headers ⇒ ~200 MB — comfortably inside a driver
     * sized for broadcast joins) fall back to distributed min-label
     * propagation, one join + one min-aggregate per round over (id, label)
     * pairs only — never the documents.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
     import org.apache.spark.sql.types._
     // ids keep their own type end-to-end (review r9: an unconditional long
     // cast nulled string doc ids — NPE on the driver path, every doc
     // joining component null on the distributed one). Integral ids still
     // normalize to long so the primitive-tuple collect estimate holds;
-    // string ids get their own union-find at a quarter of the edge budget
-    // (boxed strings, not 16-byte tuples); any other type goes distributed,
-    // where min-label propagation only needs an ordering.
+    // string ids get the union-find at a quarter of the edge budget (boxed
+    // strings, not 16-byte tuples); any other type goes distributed, where
+    // min-label propagation only needs an ordering.
     val idType = pairs.schema("doc_a").dataType
     val integral = idType match {
       case ByteType | ShortType | IntegerType | LongType => true
@@ -270,54 +273,46 @@ object Dedup {
           col("doc_b").cast("long").as("dst"))
       else pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Null ids ride the SAME one-row aggregate as the edge count (no extra
-    // job): a null id would NPE the string union-find (find(null) →
-    // null.compareTo on the driver) and silently merge as a phantom label
-    // distributed — reject loudly instead, mirroring triangleStats' guard
-    // (ADVICE r9).
-    val counts = edges.agg(count(lit(1)).as("n"),
-      count(when(col("src").isNull || col("dst").isNull, 1)).as("nBad")).head()
-    val nEdges = counts.getLong(0)
-    val nBad = counts.getLong(1)
-    if (nBad > 0) {
-      edges.unpersist()
-      // count the bad EDGES directly: deriving it from per-column non-null
-      // counts undercounted when src and dst carried nulls in different
-      // rows (round-10 review) — the user acts on this number
-      throw new IllegalArgumentException(
-        s"connectedComponents: $nBad edge(s) carry a null doc id — " +
-          "filter or repair ids before clustering")
-    }
-    val budget = if (integral) driverEdgeLimit else driverEdgeLimit / 4
-    if (nEdges <= graft.ScaleGates.cap(budget) && (integral || idType == StringType)) {
-      val out =
-        if (integral) unionFindComponents(edges)
-        else unionFindStringComponents(edges)
-      edges.unpersist()
-      return out
-    }
-    distributedComponents(edges, maxIter)
+    // Null ids are counted by the edge gate's one job: a null id would NPE
+    // the string union-find (find(null) → null.compareTo on the driver) and
+    // silently merge as a phantom label distributed — reject loudly instead,
+    // before either branch, mirroring triangleStats' guard (ADVICE r9). The
+    // gate counts the bad EDGES directly: deriving it from per-column
+    // non-null counts undercounted when src and dst carried nulls in
+    // different rows (round-10 review) — the user acts on this number.
+    val budget = if (integral) ScaleGates.DriverEdges else ScaleGates.DriverEdges / 4
+    ScaleGates.driverLocal(edges, budget, onNullIds = nBad =>
+        throw new IllegalArgumentException(
+          s"connectedComponents: $nBad edge(s) carry a null doc id — " +
+            "filter or repair ids before clustering")) { e =>
+      if (integral) Some(unionFind[Long](e))
+      else if (idType == StringType) Some(unionFind[String](e))
+      else None
+    }.getOrElse(distributedComponents(edges, maxIter))
   }
 
   /** Driver-side union-find (path compression + union-by-min-id, so the
-    * root IS the component's minimum id). One pass over the collected edge
-    * array; result re-parallelized for downstream joins.
+    * root IS the component's minimum id under `Ordering[T]` — for strings
+    * the LEXICOGRAPHIC order, matching what the distributed path's
+    * `min("component")` yields, so the survivor rule is identical whichever
+    * path runs). One pass over the collected edge array; result
+    * re-parallelized for downstream joins.
     *
-    * Edges collect as PRIMITIVE (Long, Long) tuples, not Rows — boxed
+    * Long ids collect as PRIMITIVE (Long, Long) tuples, not Rows — boxed
     * GenericRows cost ~100+ bytes/edge and would put the real driver
-    * footprint of `driverEdgeLimit` edges at 5-10× the estimate (ADVICE
-    * r3). Labels go back through sparkContext.parallelize → createDataset
-    * (an ExternalRDDScan leaf: the array is shipped as RDD partitions) —
-    * NOT Seq.toDF or createDataset(Seq), both of which embed a
-    * multi-million-row LocalRelation inside the logical plan itself, where
+    * footprint of `ScaleGates.DriverEdges` edges at 5-10× the estimate
+    * (ADVICE r3). Labels go back through sparkContext.parallelize →
+    * createDataset (an ExternalRDDScan leaf: the array is shipped as RDD
+    * partitions) — NOT Seq.toDF or createDataset(Seq), both of which embed
+    * a multi-million-row LocalRelation inside the logical plan itself, where
     * every plan copy/stringification drags the data along.
     */
-  private def unionFindComponents(edges: DataFrame): DataFrame = {
+  private def unionFind[T: Ordering : TypeTag](edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val pairs = edges.as[(Long, Long)].collect()
-    val parent = new java.util.HashMap[Long, Long](pairs.length * 2)
-    def find(x: Long): Long = {
+    val pairs = edges.as[(T, T)].collect()
+    val parent = new java.util.HashMap[T, T](pairs.length * 2)
+    def find(x: T): T = {
       var r = x
       while (parent.getOrDefault(r, r) != r) r = parent.get(r)
       var c = x // path-compress the walked chain
@@ -326,36 +321,7 @@ object Dedup {
     }
     pairs.foreach { case (a, b) =>
       val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
-    }
-    val labels = pairs.iterator
-      .flatMap(p => Iterator(p._1, p._2))
-      .distinct.map(id => (id, find(id))).toArray
-    spark.createDataset(spark.sparkContext.parallelize(labels))
-      .toDF("id", "component")
-  }
-
-  /** String-id twin of [[unionFindComponents]]: same union-by-min walk with
-    * the LEXICOGRAPHIC order (matching what the distributed path's
-    * `min("component")` yields on strings, so the survivor rule is
-    * identical whichever path runs). Kept separate from the long path so
-    * that one keeps its specialized primitive-tuple memory estimate.
-    */
-  private def unionFindStringComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val pairs = edges.as[(String, String)].collect()
-    val parent = new java.util.HashMap[String, String](pairs.length * 2)
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-      var c = x
-      while (parent.getOrDefault(c, c) != c) { val n = parent.get(c); parent.put(c, r); c = n }
-      r
-    }
-    pairs.foreach { case (a, b) =>
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra.compareTo(rb) < 0) parent.put(rb, ra) else parent.put(ra, rb) }
+      if (ra != rb) { if (Ordering[T].lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
     }
     val labels = pairs.iterator
       .flatMap(p => Iterator(p._1, p._2))
@@ -413,9 +379,8 @@ object Dedup {
     * cluster, all singleton docs kept. `pairs` comes from any of the
     * candidate generators above after verification/thresholding.
     */
-  def dedupCorpus(docs: DataFrame, pairs: DataFrame, idCol: String = "doc_id",
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
-    val comps = connectedComponents(pairs, driverEdgeLimit = driverEdgeLimit)
+  def dedupCorpus(docs: DataFrame, pairs: DataFrame, idCol: String = "doc_id"): DataFrame = {
+    val comps = connectedComponents(pairs)
     val out = docs
       .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left_outer")
       .filter(col("component").isNull || col("component") === col(idCol))

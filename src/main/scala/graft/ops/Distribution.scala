@@ -2,6 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
+
+import graft.ScaleGates
 
 /** Distribution analytics: exact equi-depth bucketing and largest-remainder
   * quota allocation — the two workhorses behind dataset sharding and
@@ -86,13 +89,12 @@ object Distribution {
     * `value IS NOT NULL`). Returns (g, v, ties..., rank).
     */
   def groupedRanks(df: DataFrame, groupCol: String, valueCol: Column,
-      orderCols: Seq[Column], buckets: Int = 1024,
-      broadcastRowCap: Long = 1000000L): DataFrame = {
+      orderCols: Seq[Column], buckets: Int = 1024): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val vb = valueBuckets(df, groupCol, valueCol, orderCols, buckets, broadcastRowCap)
+    val vb = valueBuckets(df, groupCol, valueCol, orderCols, buckets)
     val (bucketed, approxGroups) = (vb.bucketed, vb.approxGroups)
     // bucket start offsets within each group: cumulative counts over the
-    // (group x bucket) frame — ≤ approxGroups × bEff ≈ broadcastRowCap rows
+    // (group x bucket) frame — ≤ approxGroups × bEff ≈ BroadcastRows rows
     val wb = Window.partitionBy(col("g")).orderBy(col("__b"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val boffsets = bucketed.groupBy(col("g"), col("__b"))
@@ -102,13 +104,12 @@ object Distribution {
     // Broadcast is only safe while the offsets frame stays driver-sized; a
     // high-cardinality group column (per-customer, say) would blow the
     // driver with no warning (ADVICE r7). valueBuckets already shrank bEff
-    // so |groups|×bEff ≲ broadcastRowCap; only past cap-many GROUPS (where
+    // so |groups|×bEff ≲ BroadcastRows; only past that many GROUPS (where
     // the offsets frame is inherently |groups| rows) does this fall back
     // to a shuffle join — slower, never fatal. No persist/count pass: the
     // operator stays single-consumption and leaks no cache handle
     // (CacheContractSpec discipline).
-    val offsetsSide =
-      if (approxGroups <= graft.ScaleGates.cap(broadcastRowCap)) broadcast(boffsets) else boffsets
+    val offsetsSide = ScaleGates.broadcastIf(boffsets, approxGroups, ScaleGates.BroadcastRows)
     // in-bucket rank: the window partitions by (group, bucket), so a heavy
     // group fans out over `buckets` tasks instead of one
     val wr = Window.partitionBy(col("g"), col("__b"))
@@ -159,21 +160,20 @@ object Distribution {
     */
   def groupedSelect(df: DataFrame, groupCol: String, valueCol: Column,
       orderCols: Seq[Column], ranksOf: Column, buckets: Int = 1024,
-      maxCuts: Int = 8, broadcastRowCap: Long = 1000000L): DataFrame = {
-    val b = valueBuckets(df, groupCol, valueCol, orderCols, buckets, broadcastRowCap)
-    selectAtRanks(b.bucketed, orderCols.size, ranksOf, b.approxGroups, maxCuts,
-      broadcastRowCap)
+      maxCuts: Int = 8): DataFrame = {
+    val b = valueBuckets(df, groupCol, valueCol, orderCols, buckets)
+    selectAtRanks(b.bucketed, orderCols.size, ranksOf, b.approxGroups, maxCuts)
   }
 
   /** Selection body of [[groupedSelect]] over an already-bucketed frame
     * (g, v, t0..., __b) — split out so [[groupedMedianMad]] can run a second
     * selection on re-derived buckets without re-probing the fact's extrema. */
   private def selectAtRanks(bucketed: DataFrame, tieCount: Int, ranksOf: Column,
-      approxGroups: Long, maxCuts: Int, broadcastRowCap: Long): DataFrame = {
+      approxGroups: Long, maxCuts: Int): DataFrame = {
     require(maxCuts >= 1, s"maxCuts=$maxCuts must be positive")
     import org.apache.spark.sql.expressions.Window
     // per-(group, bucket) counts: the ONLY full-width shuffle is of this
-    // count frame (≈ broadcastRowCap rows max), never the fact itself
+    // count frame (≈ BroadcastRows rows max), never the fact itself
     val wg = Window.partitionBy(col("g"))
     val wb = wg.orderBy(col("__b")).rowsBetween(Window.unboundedPreceding, -1)
     val targets = bucketed.groupBy(col("g"), col("__b"))
@@ -190,10 +190,9 @@ object Distribution {
     // the auto threshold, so the gate must bound BOTH factors: the caller
     // declares its cut multiplicity via `maxCuts` (a gate hint only —
     // understating it risks a fat broadcast, never wrong results). Past
-    // the cap, a shuffle join — slower, never driver-fatal.
+    // the budget, a shuffle join — slower, never driver-fatal.
     val targetsSide =
-      if (approxGroups * maxCuts <= graft.ScaleGates.cap(broadcastRowCap)) broadcast(targets)
-      else targets
+      ScaleGates.broadcastIf(targets, approxGroups * maxCuts, ScaleGates.BroadcastRows)
     // inner join prunes the fact to hit buckets map-side AND replicates a
     // bucket once per target it contains; the window partitions by
     // (g, __b, rank) so each target ranks its own replica independently
@@ -224,8 +223,8 @@ object Distribution {
     * Net: one extrema job, one median selection, one deviation selection —
     * no fact subplan executes twice.
     *
-    * The collect is gated on the HLL group count (≤ `maxLocalGroups` rows,
-    * the groupedRanks gate discipline); past the cap it falls back to a
+    * The collect is gated on the HLL group count (≤ `ScaleGates.DriverGroups`
+    * rows, the groupedRanks gate discipline); past it it falls back to a
     * two-pass broadcast-join shape with the median frame persisted,
     * materialized once, and released before return — slower, never
     * driver-fatal, and neither path leaks a cache handle (CacheContractSpec
@@ -235,21 +234,18 @@ object Distribution {
     * order, `valueCol` numeric, NULL group/value rows excluded from n.
     */
   def groupedMedianMad(df: DataFrame, groupCol: String, valueCol: Column,
-      orderCols: Seq[Column], buckets: Int = 1024,
-      broadcastRowCap: Long = 1000000L, maxLocalGroups: Long = 1000000L): DataFrame = {
-    val spark = df.sparkSession
+      orderCols: Seq[Column], buckets: Int = 1024): DataFrame = {
     val medianRank = array(expr("(n + 1) div 2"))
-    val b = valueBuckets(df, groupCol, valueCol, orderCols, buckets, broadcastRowCap)
+    val b = valueBuckets(df, groupCol, valueCol, orderCols, buckets)
     val med = selectAtRanks(b.bucketed, orderCols.size, medianRank,
-      b.approxGroups, maxCuts = 1, broadcastRowCap)
+      b.approxGroups, maxCuts = 1)
       .select(col("g"), col("v").as("med"))
-    if (b.approxGroups <= graft.ScaleGates.cap(maxLocalGroups)) {
+    if (ScaleGates.fits(b.approxGroups, ScaleGates.DriverGroups)) {
       val medRows = med.collect()
-      val medSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("g", b.bucketed.schema("g").dataType),
-        org.apache.spark.sql.types.StructField("med", b.bucketed.schema("v").dataType)))
-      val medLocal = spark.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(medRows: _*)), medSchema)
+      val medSchema = StructType(Seq(
+        StructField("g", b.bucketed.schema("g").dataType),
+        StructField("med", b.bucketed.schema("v").dataType)))
+      val medLocal = ScaleGates.localFrame(df.sparkSession, medRows, medSchema)
       // deviation bucket bounds WITHOUT a second extrema probe: dev ≥ 0,
       // and every group's deviations sit below max(med − global_mn,
       // global_mx − med) — an over-approximation vs the true per-group
@@ -268,7 +264,7 @@ object Distribution {
           orderCols.indices.map(i => col(s"t$i"))): _*)
         .withColumn("__b", bucketExprFor(0.0, hiDev, b.bEff))
       selectAtRanks(devBucketed, orderCols.size, medianRank,
-        b.approxGroups, maxCuts = 1, broadcastRowCap)
+        b.approxGroups, maxCuts = 1)
         .select(col("g"), col("v").as("mad"))
         .join(broadcast(medLocal), "g")
         .select(col("g"), col("med").as("median"), col("mad"))
@@ -285,9 +281,8 @@ object Distribution {
           orderCols.indices.map(i => col(s"t$i"))): _*)
       val out = selectAtRanks(
         valueBuckets(dev, "g", col("v"),
-          orderCols.indices.map(i => col(s"t$i")), buckets,
-          broadcastRowCap).bucketed,
-        orderCols.size, medianRank, b.approxGroups, maxCuts = 1, broadcastRowCap)
+          orderCols.indices.map(i => col(s"t$i")), buckets).bucketed,
+        orderCols.size, medianRank, b.approxGroups, maxCuts = 1)
         .select(col("g"), col("v").as("mad"))
         .join(medP, "g")
         .select(col("g"), col("med").as("median"), col("mad"))
@@ -320,8 +315,8 @@ object Distribution {
     *
     * Effective bucket count adapts to group cardinality: with many groups,
     * parallelism comes from the groups themselves, so per-group fan-out
-    * shrinks as `min(buckets, broadcastRowCap / approxGroups)` and the
-    * offsets/count frames stay broadcast-sized without the caller knowing
+    * shrinks as `min(buckets, ScaleGates.BroadcastRows / approxGroups)` and
+    * the offsets/count frames stay broadcast-sized without the caller knowing
     * its cardinality (review r8 — the fixed worst-case product gate dropped
     * the broadcast for mid-cardinality callers).
     */
@@ -347,16 +342,16 @@ object Distribution {
   // (the ≤2×-either-pure-scheme balance claim above is otherwise only
   // pinned indirectly through StressRanks timings)
   private[ops] def valueBuckets(df: DataFrame, groupCol: String, valueCol: Column,
-      orderCols: Seq[Column], buckets: Int, broadcastRowCap: Long): Bucketed = {
+      orderCols: Seq[Column], buckets: Int): Bucketed = {
     require(buckets >= 1, s"buckets=$buckets must be positive")
-    require(broadcastRowCap >= 1, s"broadcastRowCap=$broadcastRowCap must be positive")
     val projected = df.select((col(groupCol).as("g") +: valueCol.as("v") +:
       orderCols.zipWithIndex.map { case (c, i) => c.as(s"t$i") }): _*)
       .filter(col("g").isNotNull && col("v").isNotNull)
     val ex = projected.agg(min(col("v")).as("mn"), max(col("v")).as("mx"),
       approx_count_distinct(col("g")).as("ng")).head()
     val approxGroups = math.max(1L, ex.getAs[Long]("ng"))
-    val bEff = math.max(1L, math.min(buckets.toLong, broadcastRowCap / approxGroups)).toInt
+    val bEff = math.max(1L,
+      math.min(buckets.toLong, ScaleGates.BroadcastRows / approxGroups)).toInt
     // numeric contract: min/max of a numeric column come back as Number
     // (Long/Int/Double/java BigDecimal...); doubles only steer bucket
     // PLACEMENT, never values, so the cast is loss-tolerant

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.ScaleGates
+import graft.ScaleGates.localFrame
+
 /** Iterative graph analytics as repeated shuffle joins — PageRank here, the
   * same skeleton serves label propagation / hubs-authorities.
   *
@@ -38,8 +41,8 @@ object Graph {
     * whole in every broadcast of the previous shape) is COLLECTED between
     * iterations and re-joined as a local relation: that removes the
     * per-iteration persist+count job and the re-planned broadcast-exchange
-    * subtree, which dominated the r8 profile. Past `maxVectorNodes` the
-    * loop falls back to shuffle joins with per-iteration persist
+    * subtree, which dominated the r8 profile. Past `ScaleGates.DriverNodes`
+    * nodes the loop falls back to shuffle joins with per-iteration persist
     * checkpointing — slower, never driver-fatal (the Distribution gate
     * discipline).
     *
@@ -57,23 +60,23 @@ object Graph {
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 5, scale: Long = 1000000000000L,
-      maxVectorNodes: Long = 10000000L, dedupEdges: Boolean = false,
-      hubDegreeThreshold: Long = Long.MaxValue, hubSalts: Int = 1,
-      adjPartitions: Int = 0): DataFrame =
-    pageRankImpl(edges, srcCol, dstCol, iterations, scale, maxVectorNodes,
+      dedupEdges: Boolean = false, hubDegreeThreshold: Long = Long.MaxValue,
+      hubSalts: Int = 1, adjPartitions: Int = 0): DataFrame =
+    pageRankImpl(edges, srcCol, dstCol, iterations, scale,
       dedupEdges, hubDegreeThreshold, hubSalts, adjPartitions) match {
       case Left((spark, schema, rows)) => localFrame(spark, rows, schema)
       case Right(df) => df // the one leaked handle (Dedup cache contract)
     }
 
-  /** PageRank's top-k, rendered: on the vector path (n ≤ `maxVectorNodes`)
-    * the final rank vector is ALREADY driver-local, so the top-k selection
-    * and display-label render happen in plain Scala — no extra Spark job
-    * for a sort the driver can do on an in-memory array (r9 verdict item
-    * 5). Past the gate it degrades to the distributed orderBy/limit with
-    * `renderSql` applied to the node column. Ordering is (rank DESC, label
-    * ASC); labels must be ASCII for the driver/SQL tie-break to agree
-    * (String and UTF8String compare identically on ASCII).
+  /** PageRank's top-k, rendered: on the vector path (n within
+    * `ScaleGates.DriverNodes`) the final rank vector is ALREADY
+    * driver-local, so the top-k selection and display-label render happen
+    * in plain Scala — no extra Spark job for a sort the driver can do on an
+    * in-memory array (r9 verdict item 5). Past the gate it degrades to the
+    * distributed orderBy/limit with `renderSql` applied to the node column.
+    * Ordering is (rank DESC, label ASC); labels must be ASCII for the
+    * driver/SQL tie-break to agree (String and UTF8String compare
+    * identically on ASCII).
     *
     * @param renderLocal label render on the driver (vector path)
     * @param renderSql   same render as a SQL expression over column name
@@ -82,10 +85,10 @@ object Graph {
     */
   def pageRankTopK(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, k: Int, renderLocal: Any => String, renderSql: String,
-      scale: Long = 1000000000000L, maxVectorNodes: Long = 10000000L,
-      dedupEdges: Boolean = false, hubDegreeThreshold: Long = Long.MaxValue,
-      hubSalts: Int = 1, adjPartitions: Int = 0): DataFrame =
-    pageRankImpl(edges, srcCol, dstCol, iterations, scale, maxVectorNodes,
+      scale: Long = 1000000000000L, dedupEdges: Boolean = false,
+      hubDegreeThreshold: Long = Long.MaxValue, hubSalts: Int = 1,
+      adjPartitions: Int = 0): DataFrame =
+    pageRankImpl(edges, srcCol, dstCol, iterations, scale,
       dedupEdges, hubDegreeThreshold, hubSalts, adjPartitions) match {
       case Left((spark, _, rows)) =>
         val top = rows.iterator
@@ -107,7 +110,7 @@ object Graph {
     * ranks) past the gate — one persisted handle leaks by contract.
     */
   private def pageRankImpl(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, scale: Long, maxVectorNodes: Long, dedupEdges: Boolean,
+      iterations: Int, scale: Long, dedupEdges: Boolean,
       hubDegreeThreshold: Long, hubSalts: Int, adjPartitions: Int)
       : Either[(SparkSession, StructType, Array[Row]), DataFrame] = {
     require(iterations >= 1, "need at least one iteration")
@@ -214,7 +217,7 @@ object Graph {
     val rankSchema = StructType(Seq(
       StructField("node", adj.schema("src").dataType),
       StructField("rank", LongType, nullable = false)))
-    if (n <= graft.ScaleGates.cap(maxVectorNodes)) {
+    if (ScaleGates.fits(n, ScaleGates.DriverNodes)) {
       var rows = step(init, bcast = true).collect()
       for (_ <- 2 to iterations)
         rows = step(localFrame(spark, rows, rankSchema), bcast = true).collect()
@@ -255,15 +258,16 @@ object Graph {
     * final clustering ratio (one division). The ordering key packs
     * (degree, id) into one long — valid while ids < 2^32.
     */
-  def triangleStats(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
-      maxDriverEdges: Long = 5000000L): DataFrame = {
+  def triangleStats(edges: DataFrame, srcCol: String = "src",
+      dstCol: String = "dst"): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Under the edge gate the whole census — guards included — replays
     // locally on the collected edge list; the wedge pipeline below is the
     // 100 TB fallback. A null endpoint falls through to the distributed
     // guard, which throws the canonical error.
-    driverLocal(e, maxDriverEdges)(localTriangleStats(_)) match {
+    ScaleGates.driverLocal(e, ScaleGates.DriverEdges)(
+        edges => localTriangleStats(indexEdges(edges))) match {
       case Some(out) => return out
       case None => () // over budget, null ids or too many oriented wedges
     }
@@ -304,7 +308,7 @@ object Graph {
     // the two degree joins never shuffle the edge list; the SAME un-projected
     // frame feeds both joins, so the second is served by ReuseExchange from
     // the first's broadcast. Past the gate: shuffle joins, never driver-fatal.
-    val degB = if (nNodes <= graft.ScaleGates.cap(10000000L)) broadcast(deg) else deg
+    val degB = ScaleGates.broadcastIf(deg, nNodes, ScaleGates.DriverNodes)
     // (degree, id) packed into one orderable long
     val keyed = e
       .join(degB, col("src") === col("node"))
@@ -360,11 +364,11 @@ object Graph {
     * its exact error text; the gate releases the edge cache on the throw),
     * same degree-ordered orientation, same strict `p.vkey < q.vkey` wedge
     * expansion and set-membership closure check. Returns None when the
-    * oriented wedge-pair count exceeds `maxWedges` (hub-heavy graphs keep
-    * the distributed plan, whose orientation bound is the point).
+    * oriented wedge-pair count exceeds `ScaleGates.DriverWedges` (hub-heavy
+    * graphs keep the distributed plan, whose orientation bound is the
+    * point).
     */
-  private def localTriangleStats(g: LocalEdges,
-      maxWedges: Long = 20000000L): Option[DataFrame] = {
+  private def localTriangleStats(g: LocalEdges): Option[DataFrame] = {
     val nodes = g.nodes
     val degA = g.deg
     val nNodes = nodes.length
@@ -393,7 +397,7 @@ object Graph {
     var orientedWedges = 0L
     i = 0
     while (i < nNodes) { orientedWedges += outDeg(i).toLong * (outDeg(i) - 1) / 2; i += 1 }
-    if (orientedWedges > maxWedges) return None
+    if (orientedWedges > ScaleGates.DriverWedges) return None
     val off = new Array[Int](nNodes + 1)
     i = 0
     while (i < nNodes) { off(i + 1) = off(i) + outDeg(i); i += 1 }
@@ -477,8 +481,7 @@ object Graph {
     * to cut lineage, exactly like the PageRank loop above.
     */
   def kCore(edges: DataFrame, k: Int = 2, maxIter: Int = 20,
-      srcCol: String = "src", dstCol: String = "dst",
-      maxDriverEdges: Long = 5000000L): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(k >= 1, s"k=$k must be positive")
     val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the caller's (possibly expensive) edge expression is evaluated ONCE
@@ -494,7 +497,8 @@ object Graph {
     // endpoints fall back to the distributed loop, where a null node is a
     // regular group (unchanged semantics).
     val nodeNullable = sym.schema("src").nullable
-    driverLocal(esel, maxDriverEdges)(g => Some(localKCore(g, k, maxIter, nodeNullable))) match {
+    ScaleGates.driverLocal(esel, ScaleGates.DriverEdges)(
+        edges => Some(localKCore(indexEdges(edges), k, maxIter, nodeNullable))) match {
       case Some(out) => return out
       case None => () // over budget or null endpoints
     }
@@ -514,7 +518,7 @@ object Graph {
     // plans, so ReuseExchange serves the second join from the first's
     // broadcast by construction
     def degAmong(alive: DataFrame, nAlive: Long): DataFrame = {
-      val gate = if (nAlive <= graft.ScaleGates.cap(10000000L)) broadcast(alive) else alive
+      val gate = ScaleGates.broadcastIf(alive, nAlive, ScaleGates.DriverNodes)
       sym.join(gate, col("src") === col("node")).drop("node")
         .join(gate, col("dst") === col("node")).drop("node")
         .groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -622,8 +626,7 @@ object Graph {
     * Jaccard is a single division.
     */
   def commonNeighborScores(edges: DataFrame, minCommon: Int = 2, topK: Int = 20,
-      srcCol: String = "src", dstCol: String = "dst",
-      maxDriverEdges: Long = 5000000L): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -659,8 +662,8 @@ object Graph {
       .select(col("rank"), col("u"), col("v"), col("common"), col("jaccard"))
     // Size-adaptive driver path (the connectedComponents / pageRank-vector
     // pattern, gated through ScaleGates): the candidate-pair graph behind
-    // link prediction is driver-bounded whenever the edge list is (5M edges
-    // ≈ 160 MB as primitive tuples — connectedComponents' budget), and the
+    // link prediction is driver-bounded whenever the edge list is (the
+    // `ScaleGates.DriverEdges` budget connectedComponents shares), and the
     // distributed wedge pipeline pays ~10 shuffle/broadcast stage launches
     // whose FIXED cost dwarfs the data at that size (r15 verdict item 2:
     // 32-core time 2.3× the 8-core time on a 23k-edge graph — per-stage
@@ -671,7 +674,8 @@ object Graph {
     // distributed plan. Semantics are replicated on the multiset exactly —
     // duplicate edges multiply wedge counts and degrees just as the
     // join/aggregate pipeline does.
-    driverLocal(e, maxDriverEdges)(localCommonNeighborScores(_, minCommon, topK, scored.schema))
+    ScaleGates.driverLocal(e, ScaleGates.DriverEdges)(
+        edges => localCommonNeighborScores(indexEdges(edges), minCommon, topK, scored.schema))
       .getOrElse(Dedup.materializeAndRelease(scored, e))
   }
 
@@ -680,12 +684,12 @@ object Graph {
     * unordered pair into one long, enumerates wedge pairs per center,
     * sorts and run-counts them — O(wedges log wedges) with zero boxing.
     * Returns None when an id falls outside [0, 2^32) (no packed key) or
-    * when Σ deg·(deg−1)/2 exceeds `maxWedges` (the quadratic blow-up
-    * budget: 20M packed longs = 160 MB, checked from the degree array
-    * BEFORE any allocation of that size).
+    * when Σ deg·(deg−1)/2 exceeds `ScaleGates.DriverWedges` (the quadratic
+    * blow-up budget, checked from the degree array BEFORE any allocation of
+    * that size).
     */
   private def localCommonNeighborScores(g: LocalEdges, minCommon: Int, topK: Int,
-      schema: StructType, maxWedges: Long = 20000000L): Option[DataFrame] = {
+      schema: StructType): Option[DataFrame] = {
     val nodes = g.nodes
     val nNodes = nodes.length
     val nEdges = g.src.length
@@ -694,7 +698,7 @@ object Graph {
     var wedges = 0L
     var i = 0
     while (i < nNodes) { wedges += degA(i) * (degA(i) - 1) / 2; i += 1 }
-    if (!g.packable || wedges > maxWedges) return None
+    if (!g.packable || wedges > ScaleGates.DriverWedges) return None
     // CSR adjacency over the symmetric multiset
     val off = new Array[Int](nNodes + 1)
     i = 0
@@ -779,27 +783,6 @@ object Graph {
       nodes.isEmpty || (nodes(0) >= 0L && nodes(nodes.length - 1) < 4294967296L)
   }
 
-  /** The one size gate of the driver-local graph paths (triangleStats,
-    * kCore, commonNeighborScores). A single eager job over the persisted
-    * edge frame `e` counts the edges and the null endpoints — it also fills
-    * the cache every later consumer reads. With no null endpoint and at
-    * most `ScaleGates.cap(budget)` edges, the list is collected, indexed
-    * and handed to `kernel`. `e` is released when the kernel answers or
-    * throws; on None (gate closed, or the kernel declines — e.g. a wedge
-    * budget) it stays cached for the caller's distributed plan.
-    */
-  private def driverLocal(e: DataFrame, budget: Long)(
-      kernel: LocalEdges => Option[DataFrame]): Option[DataFrame] = {
-    val gate = e.agg(count(lit(1)).as("n"),
-      count(when(col("src").isNull || col("dst").isNull, 1)).as("nBad")).head()
-    if (gate.getLong(1) != 0L || gate.getLong(0) > graft.ScaleGates.cap(budget)) return None
-    val out =
-      try kernel(indexEdges(e))
-      catch { case t: Throwable => e.unpersist(); throw t }
-    if (out.isDefined) e.unpersist()
-    out
-  }
-
   /** Collects `e` as primitive pairs and builds its [[LocalEdges]] index:
     * sorted distinct endpoints, binary-searched positions, degrees. */
   private def indexEdges(e: DataFrame): LocalEdges = {
@@ -845,8 +828,4 @@ object Graph {
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-
-  /** A driver-side result as a local relation. */
-  private def localFrame(spark: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), schema)
 }

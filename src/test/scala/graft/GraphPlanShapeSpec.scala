@@ -89,7 +89,7 @@ class GraphPlanShapeSpec extends SparkSpec {
     // collect_set in ONE ObjectHashAggregate pass, no separate distinct
     assert(anyPlan(plans)(p =>
       p.contains("ObjectHashAggregate") && p.contains("collect_set")), all.take(4000))
-    // rank-vector joins broadcast under the ScaleGates cap (driver path):
+    // rank-vector joins broadcast under the ScaleGates budget (driver path):
     // an SMJ here would shuffle the adjacency once per iteration
     assert(anyPlan(plans)(p =>
       p.contains("BroadcastHashJoin") && p.contains("dsts")), all.take(4000))

@@ -12,7 +12,7 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
-  /** Runs `body` with every ScaleGates budget zeroed
+  /** Runs `body` with every ScaleGates gate closed
     * (`graft.forceDistributed=true`), so gated operators take their
     * distributed branch; the property is removed again afterwards. */
   def forcedDistributed[T](body: => T): T = {

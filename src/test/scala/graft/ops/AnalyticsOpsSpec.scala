@@ -146,19 +146,19 @@ class AnalyticsOpsSpec extends SparkSpec {
     val edges = ((1 to 40).map(i => (0L, i.toLong)) ++
       (1 to 39).map(i => (i.toLong, (i + 1).toLong))).toDF("src", "dst")
     val renderSql = "'n:' || CAST(node AS STRING)"
-    def viaSort(maxVec: Long) =
-      Graph.pageRank(edges, "src", "dst", iterations = 3, maxVectorNodes = maxVec)
+    def viaSort() =
+      Graph.pageRank(edges, "src", "dst", iterations = 3)
         .select(expr(renderSql).as("node"), col("rank"))
         .orderBy(col("rank").desc, col("node")).limit(7)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    def viaTopK(maxVec: Long) =
+    def viaTopK() =
       Graph.pageRankTopK(edges, "src", "dst", iterations = 3, k = 7,
-        renderLocal = n => "n:" + n, renderSql = renderSql, maxVectorNodes = maxVec)
+        renderLocal = n => "n:" + n, renderSql = renderSql)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(viaTopK(10000000L) === viaSort(10000000L)) // driver-local path
-    val viaFallback = viaTopK(1L) // distributed fallback path
+    assert(viaTopK() === viaSort()) // driver-local path
+    val viaFallback = forcedDistributed(viaTopK()) // distributed fallback path
     spark.sharedState.cacheManager.clearCache() // fallback leaks by contract
-    assert(viaFallback === viaSort(10000000L))
+    assert(viaFallback === viaSort())
   }
 
   test("dailyOccupancy: two overlapping 3-day intervals") {
@@ -322,10 +322,10 @@ class AnalyticsOpsSpec extends SparkSpec {
     assert(fused.exceptAll(want).isEmpty && want.exceptAll(fused).isEmpty)
     // the fused path leaks no cache handle
     assert(spark.sparkContext.getPersistentRDDs.size === base)
-    // maxLocalGroups = 0 forces the persist-and-broadcast fallback path; its
+    // the forced flag takes the persist-and-broadcast fallback path; its
     // result is the one persisted handle (Dedup cache contract)
-    val fallback = Distribution.groupedMedianMad(df, "grp", col("v"),
-      Seq(col("id")), maxLocalGroups = 0L)
+    val fallback = forcedDistributed(
+      Distribution.groupedMedianMad(df, "grp", col("v"), Seq(col("id"))))
     assert(fallback.exceptAll(want).isEmpty && want.exceptAll(fallback).isEmpty)
     assert(spark.sparkContext.getPersistentRDDs.size === base + 1)
     fallback.unpersist(blocking = true)
@@ -349,20 +349,20 @@ class AnalyticsOpsSpec extends SparkSpec {
     assert(sel.filter(col("rank") =!= 1L || col("n") =!= 1L).isEmpty)
   }
 
-  test("a tiny broadcastRowCap forces the shuffle-join fallback, same results") {
+  test("the forced flag takes the shuffle-join fallback, same results") {
     import org.apache.spark.sql.expressions.Window
     val df = Seq(("a", 3.0, 1L), ("a", 1.0, 2L), ("b", 2.0, 3L), ("b", 5.0, 4L),
       ("c", 0.5, 5L)).toDF("grp", "v", "id")
-    // cap 1 < |groups|: both operators must take the non-broadcast join
-    val got = Distribution.groupedRanks(df, "grp", col("v"), Seq(col("id")),
-        broadcastRowCap = 1L)
+    // both operators must take the non-broadcast join
+    val got = forcedDistributed(
+        Distribution.groupedRanks(df, "grp", col("v"), Seq(col("id"))))
       .select(col("g"), col("t0").as("id"), col("rank"))
     val want = df.withColumn("rank", row_number().over(
         Window.partitionBy(col("grp")).orderBy(col("v"), col("id"))))
       .select(col("grp").as("g"), col("id"), col("rank").cast("long").as("rank"))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-    val sel = Distribution.groupedSelect(df, "grp", col("v"), Seq(col("id")),
-        array(expr("(n + 1) div 2")), broadcastRowCap = 1L)
+    val sel = forcedDistributed(Distribution.groupedSelect(df, "grp", col("v"),
+        Seq(col("id")), array(expr("(n + 1) div 2"))))
       .select("g", "rank", "v").as[(String, Long, Double)].collect().sorted
     assert(sel.toSeq === Seq(("a", 1L, 1.0), ("b", 1L, 2.0), ("c", 1L, 0.5)))
   }
@@ -401,7 +401,7 @@ class AnalyticsOpsSpec extends SparkSpec {
     val df = (base ++ whales).zipWithIndex
       .map { case (v, i) => (i.toLong, v, "all") }.toDF("id", "v", "grp")
     val b = Distribution.valueBuckets(df, "grp", col("v"), Seq(col("id")),
-      buckets = 256, broadcastRowCap = 1000000L)
+      buckets = 256)
     assert(b.bEff === 256)
     val counts = b.bucketed.groupBy(col("__b")).count()
       .as[(Long, Long)].collect().toMap

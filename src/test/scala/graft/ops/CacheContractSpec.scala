@@ -79,7 +79,7 @@ class CacheContractSpec extends SparkSpec {
   test("Graph.pageRank (shuffle fallback) leaks exactly one handle") {
     val edges = Seq((2L, 3L), (2L, 5L), (4L, 3L), (6L, 7L)).toDF("src", "dst")
     val (held, released) = deltaAround(
-      Graph.pageRank(edges, "src", "dst", iterations = 3, maxVectorNodes = 1L))
+      forcedDistributed(Graph.pageRank(edges, "src", "dst", iterations = 3)))
     assert(held === 1) // the final rank vector — adj/intermediates released
     assert(released === 0)
   }
@@ -124,10 +124,10 @@ class CacheContractSpec extends SparkSpec {
     // driver path: fully lazy, nothing persisted
     val (heldDrv, releasedDrv) = deltaAround(Dedup.dedupCorpus(corpus, pairs))
     assert(heldDrv === 0 && releasedDrv === 0)
-    // distributed path (edge budget zero): the labels handle must fold into
-    // the returned frame instead of dangling unreachable
+    // distributed path (forced): the labels handle must fold into the
+    // returned frame instead of dangling unreachable
     val (held, released) = deltaAround(
-      Dedup.dedupCorpus(corpus, pairs, driverEdgeLimit = 0L))
+      forcedDistributed(Dedup.dedupCorpus(corpus, pairs)))
     assert(held === 1 && released === 0)
   }
 

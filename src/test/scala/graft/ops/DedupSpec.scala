@@ -74,8 +74,8 @@ class DedupSpec extends SparkSpec {
     // driver union-find path: lexicographic min is the component label
     val kept = Dedup.dedupCorpus(corpus, pairs).collect().map(_.getString(0)).toSet
     assert(kept === Set("web-1", "web-4", "web-5", "web-6", "web-7", "web-8"))
-    // distributed path (edge budget forced to zero) agrees exactly
-    val comps = Dedup.connectedComponents(pairs, driverEdgeLimit = 0L)
+    // distributed path (forced) agrees exactly
+    val comps = forcedDistributed(Dedup.connectedComponents(pairs))
     val m = comps.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     comps.unpersist()
     assert(m === Map("web-1" -> "web-1", "web-2" -> "web-1", "web-3" -> "web-1",
@@ -96,7 +96,7 @@ class DedupSpec extends SparkSpec {
     assert(e2.getMessage.contains("null doc id"), e2.getMessage)
     // the distributed path is guarded by the same probe
     val e3 = intercept[IllegalArgumentException](
-      Dedup.connectedComponents(strPairs, driverEdgeLimit = 0L))
+      forcedDistributed(Dedup.connectedComponents(strPairs)))
     assert(e3.getMessage.contains("null doc id"), e3.getMessage)
   }
 

@@ -29,11 +29,13 @@ class ScaleGatesSpec extends SparkSpec {
     assert(primary.nonEmpty, s"$label: vacuous comparison (no rows)")
   }
 
-  test("cap() zeroes budgets only under the flag") {
-    assert(ScaleGates.cap(42L) == 42L)
+  test("fits closes every gate under the flag, including at 0") {
+    assert(ScaleGates.fits(42L, 42L) && ScaleGates.fits(0L, 42L))
+    assert(!ScaleGates.fits(43L, 42L))
     forcedDistributed {
-      assert(ScaleGates.cap(42L) == 0L)
       assert(ScaleGates.forceDistributed)
+      assert(!ScaleGates.fits(42L, 42L))
+      assert(!ScaleGates.fits(0L, 42L))
     }
     assert(!ScaleGates.forceDistributed)
   }
@@ -83,6 +85,11 @@ class ScaleGatesSpec extends SparkSpec {
   test("groupedRanks: shuffle-join offsets match the broadcast path") {
     bothPaths("groupedRanks")(
       Distribution.groupedRanks(facts, "g", col("v"), Seq(col("id"))))
+  }
+
+  test("groupedSelect: shuffle-join targets match the broadcast path") {
+    bothPaths("groupedSelect")(Distribution.groupedSelect(facts, "g", col("v"),
+      Seq(col("id")), array(expr("(n + 1) div 2"), expr("n"))))
   }
 
   test("groupedMedianMad: two-pass persist fallback matches the collect path") {
@@ -141,21 +148,47 @@ class ScaleGatesSpec extends SparkSpec {
   }
 
   test("empty edge list: kCore and commonNeighborScores agree across both paths") {
-    // the zeroed gate still admits zero edges (0 <= 0), so a negative edge
-    // budget is what sends an empty list down the distributed plan
     val e = idEdges()
-    val ops = Seq[(String, Long => DataFrame)](
-      "kCore" -> (budget => Graph.kCore(e, k = 2, maxDriverEdges = budget)),
-      "commonNeighborScores" ->
-        (budget => Graph.commonNeighborScores(e, minCommon = 1, maxDriverEdges = budget)))
+    val ops = Seq[(String, () => DataFrame)](
+      "kCore" -> (() => Graph.kCore(e, k = 2)),
+      "commonNeighborScores" -> (() => Graph.commonNeighborScores(e, minCommon = 1)))
     for ((label, op) <- ops) {
-      val local = op(5000000L)
-      val dist = op(-1L)
+      val local = op()
+      val dist = forcedDistributed(op())
       // non-vacuity without rows: each path really ran, with one schema
       assert(ranLocally(local) && !ranLocally(dist), s"$label: path selection")
       assert(local.schema == dist.schema, s"$label: schemas diverged")
       assert(sorted(local) == sorted(dist), s"$label: results diverged")
       dist.unpersist()
     }
+  }
+
+  // Every gate site, pinned per file. A new site fails here until it gets
+  // a bothPaths case above and its count is raised; a budget literal in
+  // ops/ means a gate whose budget is not in ScaleGates' table.
+  private val gateSites = Map(
+    "ops/Dedup.scala" -> 1,
+    "ops/Distribution.scala" -> 3,
+    "ops/Graph.scala" -> 6)
+
+  test("gate sites: every call and budget goes through ScaleGates") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val sources = scala.util.Using.resource(Files.walk(root))(
+      _.iterator.asScala.filter(_.toString.endsWith(".scala")).toList)
+    def text(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
+    def rel(p: Path) = root.relativize(p).toString
+    val call = """(ScaleGates\.fits|broadcastIf|driverLocal)\(""".r
+    val counts = sources.filterNot(_.endsWith("ScaleGates.scala"))
+      .map(p => rel(p) -> call.findAllIn(text(p)).size)
+      .filter(_._2 > 0).toMap
+    assert(counts == gateSites)
+    val literal = """\b(1|5|10|20)000000L\b""".r
+    val stray = sources.filter(rel(_).startsWith("ops/"))
+      .flatMap(p => literal.findAllIn(text(p)).map(rel(p) + ": " + _))
+    assert(stray.isEmpty, stray)
+    assert(literal.findFirstIn("scale: Long = 1000000000000L").isEmpty)
   }
 }
