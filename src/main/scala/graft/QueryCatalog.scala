@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType}
 
-import graft.etl.{CustomerMart, Enrichment, SalesMart, Validation}
+import graft.etl.{Enrichment, Marts, Validation}
 import graft.functions.Cols
 import graft.io.Sources
 
@@ -359,6 +359,26 @@ object QueryCatalog {
       |    RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW) AS DOUBLE) AS trailing_30d
       |FROM orders""".stripMargin
 
+  /** The marts' TPC-H transplant: orders ⋈ customer, with customer →
+    * c_custkey/c_name, store → c_nationkey, salesperson → o_custkey and
+    * money → o_totalprice. Customer is ~1% the size of orders, so Catalyst
+    * broadcast-joins it at any sf (past autoBroadcastJoinThreshold AQE
+    * converts to a shuffled hash join on the same plan). */
+  private def ordersByCustomer(s: SparkSession, d: String): DataFrame = {
+    val (orders, customer) = (T(s, d, "orders"), T(s, d, "customer"))
+    orders.join(customer, orders("o_custkey") === customer("c_custkey"), "inner")
+  }
+  private val martMonth = Cols.monthBucket(col("o_orderdate")).as("sales_month")
+  private val customerMartKeys =
+    Seq(col("c_custkey").as("customer_id"), col("c_name").as("full_name"), martMonth)
+  private val salesMartKeys =
+    Seq(col("c_nationkey").as("store_id"), col("o_custkey").as("sales_person_id"), martMonth)
+  private val martMoney = col("o_totalprice")
+
+  /** `customer_mart`: per customer per month total purchases. */
+  def customerMart(s: SparkSession, d: String): DataFrame =
+    Marts.monthlyTotals(ordersByCustomer(s, d), customerMartKeys, martMoney)
+
   private val customerMartSql =
     """SELECT c_custkey AS customer_id, c_name AS full_name,
       |  substr(CAST(o_orderdate AS VARCHAR), 1, 7) AS sales_month,
@@ -371,17 +391,17 @@ object QueryCatalog {
 
     // A1/W1-idiomatic + J-family + C3 month bucket (customer mart)
     CatalogEntry("customer_mart",
-      (s, d) => CustomerMart.monthlyPurchases(T(s, d, "orders"), T(s, d, "customer")),
-      Some(customerMartSql)),
+      customerMart, Some(customerMartSql)),
 
     // W1 + A3: the reference's window-sum + distinct idiom, same oracle
     CatalogEntry("customer_mart_window",
-      (s, d) => CustomerMart.monthlyPurchasesWindowIdiom(T(s, d, "orders"), T(s, d, "customer")),
+      (s, d) => Marts.monthlyTotalsWindowIdiom(ordersByCustomer(s, d), customerMartKeys, martMoney),
       Some(customerMartSql)),
 
     // A2 + W2 rank + F2/C6/C7 incentive (sales mart)
     CatalogEntry("sales_mart_incentive",
-      (s, d) => SalesMart.build(T(s, d, "orders"), T(s, d, "customer")),
+      (s, d) => Marts.withIncentive(
+        Marts.monthlyTotals(ordersByCustomer(s, d), salesMartKeys, martMoney)),
       Some("""WITH t AS (
         |  SELECT c_nationkey AS store_id, o_custkey AS sales_person_id,
         |    substr(CAST(o_orderdate AS VARCHAR), 1, 7) AS sales_month,

@@ -2,19 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.etl.CustomerMart
-
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   * Query definitions live in [[QueryCatalog]]; this object just adapts them
   * to the driver's Map-shaped contract.
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query: the catalog's `customer_mart` (the customer mart's
+    * [[graft.etl.Marts.monthlyTotals]] over the TPC-H transplant) on the
+    * sf0.001 tables; its smoke check expects rows > 0. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    CustomerMart.monthlyPurchases(
-      Tables(spark, dir, "orders"), Tables(spark, dir, "customer"))
+    QueryCatalog.customerMart(spark, dir)
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

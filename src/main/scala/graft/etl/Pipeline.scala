@@ -78,9 +78,12 @@ object Pipeline {
         val factRows = fact.count()
         // mart row counts observed on the mart writes themselves, not a
         // second listing + count job over the parquet just written
-        val cmRows = writeCounted(SalesEnrichment.customerMart(enriched),
+        val cmRows = writeCounted(
+          Marts.monthlyTotals(enriched, SalesEnrichment.customerMartKeys, SalesEnrichment.money),
           s"${layout.outputDir}/customers_data_mart")
-        val smRows = writeCounted(SalesEnrichment.salesMart(enriched),
+        val salesTotals =
+          Marts.monthlyTotals(enriched, SalesEnrichment.salesMartKeys, SalesEnrichment.money)
+        val smRows = writeCounted(Marts.withIncentive(salesTotals).drop("rnk"),
           s"${layout.outputDir}/sales_team_data_mart")
         Sinks.partitionedParquet(
           enriched, s"${layout.outputDir}/sales_partitioned",

@@ -1,15 +1,14 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Cols
 
-/** Reference-schema enrichment + marts: the three-way dimension join
-  * (src/main/transformations/dimension_tables_join.py:4-55) and both marts
-  * (customer_mart_sql_tranform_write.py:10-27,
-  * sales_mart_sql_transformation_file.py:11-39) over the reference's own
-  * star schema (FIXTURES.md §§1-3).
+/** Reference-schema enrichment: the three-way dimension join
+  * (src/main/transformations/dimension_tables_join.py:4-55) over the
+  * reference's own star schema (FIXTURES.md §§1-3), and the column mapping
+  * of both [[Marts]] over its output.
   *
   * The reference's qualified `drop("s3_data.customer_id")` calls are silent
   * no-ops (SURVEY.md §2.3 P2), leaving duplicate columns it later
@@ -44,36 +43,24 @@ object SalesEnrichment {
         Cols.monthBucket(col("f.sales_date")).as("sales_month"),
         col("f.total_cost"))
 
-  /** customers_data_mart (table_scripts.sql:148-155): per customer per month
-    * total purchases. groupBy form — identical results to the reference's
-    * window+distinct, one shuffle (SURVEY.md §4).
-    */
-  def customerMart(enriched: DataFrame): DataFrame =
-    enriched
-      .groupBy(
-        col("customer_id"),
-        concat(col("customer_first_name"), lit(" "), col("customer_last_name")).as("full_name"),
-        col("customer_address").as("address"),
-        col("phone_number"),
-        col("sales_month").as("sales_date_month"))
-      .agg(Cols.moneySum(col("total_cost")).as("total_sales"))
+  /** customers_data_mart's keys (table_scripts.sql:148-155) over
+    * [[enrich]]'s output: per customer per month. */
+  val customerMartKeys: Seq[Column] = Seq(
+    col("customer_id"),
+    concat(col("customer_first_name"), lit(" "), col("customer_last_name")).as("full_name"),
+    col("customer_address").as("address"),
+    col("phone_number"),
+    col("sales_month").as("sales_date_month"))
 
-  /** sales_team_data_mart (table_scripts.sql:160-167): per (store,
-    * salesperson, month) total; rank-1 seller per (store, month) earns 1%
-    * incentive, rest 0 (rank ties share the incentive — reference
-    * sales_mart_sql_transformation_file.py:24-30; code semantics, not the
-    * "top 1%" comment — SURVEY.md §2.8). The rank-1 rule is
-    * [[SalesMart.withIncentive]]'s, shared with the catalog's mart.
-    */
-  def salesMart(enriched: DataFrame): DataFrame = {
-    val totals = enriched
-      .groupBy(
-        col("store_id"),
-        col("sales_person_id"),
-        concat(col("sales_person_first_name"), lit(" "), col("sales_person_last_name"))
-          .as("full_name"),
-        col("sales_month"))
-      .agg(Cols.moneySum(col("total_cost")).as("total_sales"))
-    SalesMart.withIncentive(totals).drop("rnk")
-  }
+  /** sales_team_data_mart's keys (table_scripts.sql:160-167) over
+    * [[enrich]]'s output: per (store, salesperson, month). */
+  val salesMartKeys: Seq[Column] = Seq(
+    col("store_id"),
+    col("sales_person_id"),
+    concat(col("sales_person_first_name"), lit(" "), col("sales_person_last_name"))
+      .as("full_name"),
+    col("sales_month"))
+
+  /** Both marts' money column. */
+  val money: Column = col("total_cost")
 }

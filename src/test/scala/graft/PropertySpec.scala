@@ -117,18 +117,32 @@ class PropertySpec extends SparkSpec {
   }
 
   test("∀ data: rank-1 incentive = 1% of the group max, others zero") {
-    samples(5).foreach { rows =>
-      val totals = rows.toDF("store_id", "sales_month", "x")
-        .groupBy($"store_id", $"sales_month")
-        .agg(functions.Cols.moneySum($"x").as("total_sales"))
-        .withColumn("sales_person_id", $"store_id") // degenerate but valid
-      val ranked = etl.SalesMart.withIncentive(totals)
-      val bad = ranked
+    // several sellers per (store, month) and whole-ten amounts, so equal
+    // totals are common; each sample also forces a tied top pair (sellers 5
+    // and 6 in store 1, 2023-01) — every seller at the max must rank 1
+    val saleGen = for {
+      store <- Gen.choose(1, 3)
+      month <- Gen.oneOf("2023-01", "2023-02")
+      seller <- Gen.choose(1, 4)
+      tens <- Gen.choose(1, 3)
+    } yield (store, seller, month, tens * 10.0)
+    (1 to 5).foreach { i =>
+      val rows = Gen.listOfN(40, saleGen).apply(Gen.Parameters.default, Seed(300L + i)).get ++
+        Seq((1, 5, "2023-01", 1000.0), (1, 6, "2023-01", 1000.0))
+      val totals = etl.Marts.monthlyTotals(
+        rows.toDF("store_id", "sales_person_id", "sales_month", "x"),
+        Seq($"store_id", $"sales_person_id", $"sales_month"), $"x")
+      val ranked = etl.Marts.withIncentive(totals)
         .withColumn("mx", max($"total_sales")
           .over(Window.partitionBy($"store_id", $"sales_month")))
-        .filter(
-          ($"rnk" === 1 && abs($"incentive" - $"mx" * 0.01) > 1e-9) ||
-          ($"rnk" =!= 1 && $"incentive" =!= 0.0))
+        .withColumn("top", $"total_sales" === $"mx")
+      val tiedGroups = ranked.filter($"top")
+        .groupBy($"store_id", $"sales_month").count().filter($"count" > 1)
+      assert(!tiedGroups.isEmpty, "no tied top sellers in the sample")
+      val bad = ranked.filter(
+        (($"rnk" === 1) =!= $"top") ||
+        ($"top" && abs($"incentive" - $"mx" * 0.01) > 1e-9) ||
+        (!$"top" && $"incentive" =!= 0.0))
       assert(bad.isEmpty)
     }
   }

@@ -3,6 +3,7 @@ package graft.etl
 import java.nio.file.{Files, Paths}
 import java.sql.{Date, Timestamp}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -34,31 +35,11 @@ class PipelineSpec extends SparkSpec {
       "1,121,quaker oats,2023-03-03,1,212.0,2,424.0",
       "2,122,sugar,2023-03-04,4,50.0,1,50.0"))
 
-  private lazy val customerDim = Seq(
-    (1, "Ava", "Ng", "12 Elm St", "560001", "555-0101", Date.valueOf("2021-01-01")),
-    (2, "Ben", "Ray", "9 Oak Ave", "560002", "555-0102", Date.valueOf("2021-02-01")))
-    .toDF("customer_id", "first_name", "last_name", "address", "pincode",
-      "phone_number", "customer_joining_date")
-
-  private lazy val storeDim = Seq(
-    (121, "MG Road", "560001", "Dana Kim", Date.valueOf("2020-01-01"), "good"),
-    (122, "Hill St", "560004", "Eli Ward", Date.valueOf("2020-06-01"), "ok"))
-    .toDF("id", "address", "store_pincode", "store_manager_name",
-      "store_opening_date", "reviews")
-
-  private lazy val teamDim = Seq(
-    (1, "Sam", "Lee", 10, "N", "3 Pine Rd", "560003", Date.valueOf("2022-01-01")),
-    (4, "Kit", "Doe", 10, "N", "7 Fir Ln", "560005", Date.valueOf("2022-03-01")))
-    .toDF("id", "first_name", "last_name", "manager_id", "is_manager",
-      "address", "pincode", "joining_date")
+  private lazy val (customerDim, storeDim, teamDim) = PipelineSpec.dims(spark)
 
   test("full batch: ingest, quarantine, marts, archive, ledger") {
     val layout = mkLayout()
-    write(layout.inboxDir, "sales_ok.csv", Seq(
-      "customer_id,store_id,product_name,sales_date,sales_person_id,price,quantity,total_cost",
-      "1,121,quaker oats,2023-03-03,1,212.0,2,424.0",
-      "2,122,sugar,2023-03-04,4,50.0,1,50.0",
-      "1,121,sugar,2023-04-10,1,50.0,2,100.0"))
+    write(layout.inboxDir, "sales_ok.csv", PipelineSpec.header +: PipelineSpec.batchRows.init)
     write(layout.inboxDir, "sales_extra.csv", Seq(
       "customer_id,store_id,product_name,sales_date,sales_person_id,price,quantity,total_cost,payment_mode",
       "2,122,maida,2023-03-05,4,20.0,3,60.0,UPI"))
@@ -86,6 +67,15 @@ class PipelineSpec extends SparkSpec {
     assert(top.getAs[Long]("sales_person_id") === 4L)
     assert(math.abs(top.getAs[Double]("incentive") - 1.10) < 1e-9)
 
+    // mart schemas: names, column order and types
+    def fields(df: DataFrame) = df.schema.map(f => f.name -> f.dataType.simpleString)
+    assert(fields(cm) === Seq("customer_id" -> "int", "full_name" -> "string",
+      "address" -> "string", "phone_number" -> "string", "sales_date_month" -> "string",
+      "total_sales" -> "double"))
+    assert(fields(sm) === Seq("store_id" -> "int", "sales_person_id" -> "int",
+      "full_name" -> "string", "sales_month" -> "string", "total_sales" -> "double",
+      "incentive" -> "double"))
+
     // partitioned sink has month/store partition dirs (read-side pruning keys)
     assert(Files.exists(Paths.get(
       s"${layout.outputDir}/sales_partitioned/sales_month=2023-03/store_id=121")))
@@ -104,6 +94,21 @@ class PipelineSpec extends SparkSpec {
     assert(graft.io.FileLifecycle.list(layout.errorDir, ".csv").size === 1)
     // ledger: nothing left ACTIVE
     assert(new graft.meta.Staging(spark, layout.ledgerPath).activeFiles().isEmpty)
+  }
+
+  test("tied top sellers in one store-month both earn the 1% incentive") {
+    val layout = mkLayout()
+    write(layout.inboxDir, "sales_tied.csv", PipelineSpec.header +: PipelineSpec.tiedRows)
+
+    Pipeline.run(spark, layout, "b-tied", Timestamp.valueOf("2026-08-12 00:00:00"),
+      customerDim, storeDim, teamDim)
+
+    val sm = spark.read.parquet(s"${layout.outputDir}/sales_team_data_mart")
+    val got = sm.filter(col("store_id") === 121 && col("sales_month") === "2023-05")
+      .select("sales_person_id", "total_sales", "incentive").as[(Int, Double, Double)]
+      .collect().sortBy(_._1).toSeq
+    assert(got.map(r => (r._1, r._2)) === Seq((1, 100.0), (4, 100.0)))
+    got.foreach(r => assert(math.abs(r._3 - 1.0) < 1e-9, s"seller ${r._1}"))
   }
 
   test("file:// scheme-qualified layout runs through the Hadoop FS path") {
@@ -199,5 +204,52 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"${layout.outputDir}/customers_data_mart").count() === 0)
     assert(spark.read.parquet(s"${layout.outputDir}/sales_team_data_mart").count() === 0)
     assert(new graft.meta.Staging(spark, layout.ledgerPath).activeFiles().isEmpty)
+  }
+}
+
+object PipelineSpec {
+
+  val header = "customer_id,store_id,product_name,sales_date,sales_person_id,price,quantity,total_cost"
+
+  /** The correct rows of the full batch: three from `sales_ok.csv`, then
+    * `sales_extra.csv`'s row without its extra column. */
+  val batchRows = Seq(
+    "1,121,quaker oats,2023-03-03,1,212.0,2,424.0",
+    "2,122,sugar,2023-03-04,4,50.0,1,50.0",
+    "1,121,sugar,2023-04-10,1,50.0,2,100.0",
+    "2,122,maida,2023-03-05,4,20.0,3,60.0")
+
+  /** Sellers 1 and 4 both total 100.0 in store 121, 2023-05. */
+  val tiedRows = Seq(
+    "1,121,sugar,2023-05-02,1,50.0,1,50.0",
+    "2,121,oats,2023-05-09,1,25.0,2,50.0",
+    "2,121,maida,2023-05-03,4,20.0,5,100.0")
+
+  /** `rows` under [[header]] as the typed fact `Pipeline.run` reads from CSV. */
+  def fact(spark: SparkSession, rows: Seq[String]): DataFrame = {
+    import spark.implicits._
+    Validation.conformTyped(
+      spark.read.option("header", "true").csv((header +: rows).toDS()))
+  }
+
+  /** The reference-schema customer, store and sales-team dimensions. */
+  def dims(spark: SparkSession): (DataFrame, DataFrame, DataFrame) = {
+    import spark.implicits._
+    val customer = Seq(
+      (1, "Ava", "Ng", "12 Elm St", "560001", "555-0101", Date.valueOf("2021-01-01")),
+      (2, "Ben", "Ray", "9 Oak Ave", "560002", "555-0102", Date.valueOf("2021-02-01")))
+      .toDF("customer_id", "first_name", "last_name", "address", "pincode",
+        "phone_number", "customer_joining_date")
+    val store = Seq(
+      (121, "MG Road", "560001", "Dana Kim", Date.valueOf("2020-01-01"), "good"),
+      (122, "Hill St", "560004", "Eli Ward", Date.valueOf("2020-06-01"), "ok"))
+      .toDF("id", "address", "store_pincode", "store_manager_name",
+        "store_opening_date", "reviews")
+    val team = Seq(
+      (1, "Sam", "Lee", 10, "N", "3 Pine Rd", "560003", Date.valueOf("2022-01-01")),
+      (4, "Kit", "Doe", 10, "N", "7 Fir Ln", "560005", Date.valueOf("2022-03-01")))
+      .toDF("id", "first_name", "last_name", "manager_id", "is_manager",
+        "address", "pincode", "joining_date")
+    (customer, store, team)
   }
 }
