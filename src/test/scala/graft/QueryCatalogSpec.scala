@@ -36,6 +36,22 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(QueryCatalog.storeBuildNames.intersect(QueryCatalog.streamingNames).isEmpty)
   }
 
+  test("catalog size is pinned at 215 entries") {
+    assert(QueryCatalog.all.size === 215)
+  }
+
+  // Catalog files may be reorganized freely, but every oracle string must
+  // come out byte-identical: SHA-256 over the name-sorted
+  // `name \u0000 sql` pairs, newline-joined.
+  test("oracle SQL is byte-identical to the pinned digest") {
+    val text = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+      .map { case (n, sql) => n + "\u0000" + sql }.mkString("\n")
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+    assert(digest === "86e5174a0187ca8b9a5c3a1ab296cf793fd87bd0e5cb99786c40b5a8ac9ba29d")
+  }
+
   test("driver maps cover the catalog exactly") {
     assert(SparkEntry.queries.keySet === QueryCatalog.all.map(_.name).toSet)
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
