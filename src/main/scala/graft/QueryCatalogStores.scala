@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.{TextQueries, VectorQueries}
+import graft.catalog.CatalogInputs._
 import graft.ops.{IVF, IVFStore, IncrementalDedup}
 
 /** The persisted-store family: incremental dedup against a signature store
@@ -13,8 +15,8 @@ import graft.ops.{IVF, IVFStore, IncrementalDedup}
   *
   * Oracle design: the stores' contract is EXACT equivalence with the full
   * recompute, so each entry's DuckDB oracle is the existing full-recompute
-  * SQL ([[QueryCatalog.minhashCandidatesSql]], the verified-pairs CTEs,
-  * [[QueryCatalog.knnIvfSql]]) over the documents or embeddings the store
+  * SQL ([[TextQueries.minhashCandidatesSql]], the verified-pairs CTEs,
+  * [[VectorQueries.knnIvfSql]]) over the documents or embeddings the store
   * should hold. The gate thereby pins the incremental machinery (generation
   * deltas, touched-bucket recompute, latest-wins supersession) against an
   * independent engine that never sees the store at all; layout, versioning
@@ -25,8 +27,6 @@ import graft.ops.{IVF, IVFStore, IncrementalDedup}
   * [[QueryCatalog.streamingNames]].
   */
 object QueryCatalogStores {
-
-  private def docs(s: SparkSession, d: String): DataFrame = Tables(s, d, "documents")
 
   /** Build a store under a fresh temp directory, materialize the result
     * frame (persist + count — the returned frame is the one persisted
@@ -67,7 +67,7 @@ object QueryCatalogStores {
         st.append(dd.filter(pmod(col("doc_id"), lit(7)) === 0))
         st.candidates(minEstJaccard = 0.25)
       },
-      Some(QueryCatalog.minhashCandidatesSql)),
+      Some(TextQueries.minhashCandidatesSql)),
 
     // Three sequential appends (doc_id % 3 = 0 / 1 / 2) — multi-generation
     // supersession: a bucket touched by gens 0 and 2 must resolve to gen
@@ -80,7 +80,7 @@ object QueryCatalogStores {
         (0 to 2).foreach(r => st.append(dd.filter(pmod(col("doc_id"), lit(3)) === r)))
         st.candidates(minEstJaccard = 0.25)
       },
-      Some(QueryCatalog.minhashCandidatesSql)),
+      Some(TextQueries.minhashCandidatesSql)),
 
     // Incremental VERIFIED pairs: the store persists gram-hash sets
     // alongside signatures (withGrams), so the exact-Jaccard verify runs
@@ -96,7 +96,7 @@ object QueryCatalogStores {
         st.append(dd.filter(pmod(col("doc_id"), lit(5)) === 0))
         st.verifiedPairs(threshold = 0.31, minMatches = 10)
       },
-      Some(s"""WITH ${QueryCatalog.verifiedPairsCtes}
+      Some(s"""WITH ${TextQueries.verifiedPairsCtes}
         |SELECT doc_a, doc_b, shared / (na + nb - shared) AS jaccard
         |FROM vj WHERE shared / (na + nb - shared) >= 3.1e-1""".stripMargin)),
 
@@ -115,7 +115,7 @@ object QueryCatalogStores {
         val pairs = st.verifiedPairs(threshold = 0.31, minMatches = 10)
         ops.Dedup.dedupCorpus(dd, pairs).select(col("doc_id"), col("lang"), col("source"))
       },
-      Some(QueryCatalog.dedupCorpusSql)),
+      Some(TextQueries.dedupCorpusSql)),
 
     // Deletion (takedown / opt-out): base + batch appended, then every
     // doc_id ≡ 3 (mod 7) deleted — a TOMBSTONE generation that masks the
@@ -132,7 +132,7 @@ object QueryCatalogStores {
         st.delete(dd.filter(pmod(col("doc_id"), lit(7)) === 3).select("doc_id"))
         st.candidates(minEstJaccard = 0.25)
       },
-      Some(QueryCatalog.minhashCandidatesSqlOver("doc_id % 7 <> 3"))),
+      Some(TextQueries.minhashCandidatesSqlOver("doc_id % 7 <> 3"))),
 
     // Takedown TRAFFIC, not a takedown: two interleaved tombstone
     // generations followed by a resurrect append (latest event wins), no
@@ -154,7 +154,7 @@ object QueryCatalogStores {
           pmod(col("doc_id"), lit(9)) === 1 && pmod(col("doc_id"), lit(2)) === 0))
         st.candidates(minEstJaccard = 0.25)
       },
-      Some(QueryCatalog.minhashCandidatesSqlOver(
+      Some(TextQueries.minhashCandidatesSqlOver(
         "NOT ((doc_id % 9 = 1 OR doc_id % 11 = 7)" +
           " AND NOT (doc_id % 9 = 1 AND doc_id % 2 = 0))"))),
 
@@ -185,7 +185,7 @@ object QueryCatalogStores {
           s"$root/store", s"$root/ckpt")
         IncrementalDedup.store(s, s"$root/store").candidates(minEstJaccard = 0.25)
       },
-      Some(QueryCatalog.minhashCandidatesSql)),
+      Some(TextQueries.minhashCandidatesSql)),
 
     // Persisted IVF index + incremental append (ops.IVFStore): index
     // trained once on the BASE (frozen centroids), the batch — the
@@ -197,17 +197,17 @@ object QueryCatalogStores {
     // one-shot full-corpus assignment).
     CatalogEntry("knn_ivf_incremental",
       (s, d) => withTempStore { root =>
-        val e = QueryCatalog.embs(s, d)
+        val e = embs(s, d)
         val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
         val t = (maxId + 1L) * 4L / 5L
         val index = IncrementalAnnIndex.trainBase(e, t)
         val st = IVFStore.create(s, root, index)
         st.append(e.filter(col("vec_id") < t))
         st.append(e.filter(col("vec_id") >= t))
-        st.topK(QueryCatalog.queryVec(s, d), k = 20, nprobe = 4)
+        st.topK(queryVec(s, d), k = 20, nprobe = 4)
           .withColumn("score", round(col("score"), 9))
       },
-      Some(QueryCatalog.knnIvfSql)),
+      Some(VectorQueries.knnIvfSql)),
 
     // IVF takedown: after both appends, every vec_id ≡ 7 (mod 10) at or
     // above 16 is deleted — a tombstone generation that masks the vectors
@@ -217,7 +217,7 @@ object QueryCatalogStores {
     // SURVIVING embeddings — equivalence with a from-scratch index build.
     CatalogEntry("knn_ivf_incremental_delete",
       (s, d) => withTempStore { root =>
-        val e = QueryCatalog.embs(s, d)
+        val e = embs(s, d)
         val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
         val t = (maxId + 1L) * 4L / 5L
         val index = IncrementalAnnIndex.trainBase(e, t)
@@ -226,10 +226,10 @@ object QueryCatalogStores {
         st.append(e.filter(col("vec_id") >= t))
         st.delete(e.filter(pmod(col("vec_id"), lit(10)) === 7 && col("vec_id") >= 16)
           .select("vec_id"))
-        st.topK(QueryCatalog.queryVec(s, d), k = 20, nprobe = 4)
+        st.topK(queryVec(s, d), k = 20, nprobe = 4)
           .withColumn("score", round(col("score"), 9))
       },
-      Some(QueryCatalog.knnIvfSqlOver("NOT (vec_id % 10 = 7 AND vec_id >= 16)"))),
+      Some(VectorQueries.knnIvfSqlOver("NOT (vec_id % 10 = 7 AND vec_id >= 16)"))),
 
     // The ANN takedown-traffic twin: two tombstone generations then a
     // resurrect append, no compact — the probe must mask with
@@ -240,7 +240,7 @@ object QueryCatalogStores {
     // survivors (dead = deleted by either slice and not re-appended).
     CatalogEntry("knn_ivf_incremental_takedowns",
       (s, d) => withTempStore { root =>
-        val e = QueryCatalog.embs(s, d)
+        val e = embs(s, d)
         val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
         val t = (maxId + 1L) * 4L / 5L
         val index = IncrementalAnnIndex.trainBase(e, t)
@@ -252,10 +252,10 @@ object QueryCatalogStores {
         st.delete(e.filter(slice(9, 2)).select("vec_id"))
         st.delete(e.filter(slice(10, 7)).select("vec_id"))
         st.append(e.filter(slice(9, 2) && pmod(col("vec_id"), lit(2)) === 0))
-        st.topK(QueryCatalog.queryVec(s, d), k = 20, nprobe = 4)
+        st.topK(queryVec(s, d), k = 20, nprobe = 4)
           .withColumn("score", round(col("score"), 9))
       },
-      Some(QueryCatalog.knnIvfSqlOver(
+      Some(VectorQueries.knnIvfSqlOver(
         "NOT (vec_id >= 16 AND (vec_id % 9 = 2 OR vec_id % 10 = 7)" +
           " AND NOT (vec_id % 9 = 2 AND vec_id % 2 = 0))"))),
 
@@ -271,7 +271,7 @@ object QueryCatalogStores {
     // whose base-split training needed the 80/20 id trick).
     CatalogEntry("knn_ivf_incremental_stream",
       (s, d) => withTempStore { root =>
-        val e = QueryCatalog.embs(s, d)
+        val e = embs(s, d)
         val index = IVF.train(e, c = 16, iters = 0)
         IVFStore.create(s, s"$root/store", index, defaultNprobe = 4)
         val inbox = s"$root/inbox"
@@ -290,10 +290,10 @@ object QueryCatalogStores {
         streaming.IvfIngestStream.runOnce(s, inbox, e.schema,
           s"$root/store", s"$root/ckpt")
         IVFStore.open(s, s"$root/store")
-          .topK(QueryCatalog.queryVec(s, d), k = 20)
+          .topK(queryVec(s, d), k = 20)
           .withColumn("score", round(col("score"), 9))
       },
-      Some(QueryCatalog.knnIvfSql)),
+      Some(VectorQueries.knnIvfSql)),
 
     // dedup_incremental's shape on the BUCKETED band layout (bandBuckets=8
     // — bands live under bkt= hash-partition dirs, and each append's
@@ -316,7 +316,7 @@ object QueryCatalogStores {
           pmod(col("doc_id"), lit(9)) === 1 && pmod(col("doc_id"), lit(2)) === 0))
         st.candidates(minEstJaccard = 0.25)
       },
-      Some(QueryCatalog.minhashCandidatesSqlOver(
+      Some(TextQueries.minhashCandidatesSqlOver(
         "NOT ((doc_id % 9 = 1 OR doc_id % 11 = 7)" +
           " AND NOT (doc_id % 9 = 1 AND doc_id % 2 = 0))"))),
 
@@ -331,16 +331,16 @@ object QueryCatalogStores {
     // vector defined.
     CatalogEntry("knn_ivf_retrain_swap",
       (s, d) => withTempStore { root =>
-        val e = QueryCatalog.embs(s, d)
+        val e = embs(s, d)
         val st = IVFStore.createVersioned(s, root,
           IVF.train(e, c = 16, iters = 0), defaultNprobe = 4)
         st.append(e)
         st.delete(e.filter(pmod(col("vec_id"), lit(6)) === 5).select("vec_id"))
         IVFStore.retrainAndSwap(s, root, c = 16, iters = 0)
-          .topK(QueryCatalog.queryVec(s, d), k = 20, nprobe = 4)
+          .topK(queryVec(s, d), k = 20, nprobe = 4)
           .withColumn("score", round(col("score"), 9))
       },
-      Some(QueryCatalog.knnIvfSqlOver("vec_id % 6 <> 5"))),
+      Some(VectorQueries.knnIvfSqlOver("vec_id % 6 <> 5"))),
 
     // Batch-scoped candidates on the bucketed layout, under a takedown so
     // the live-sig masking path is exercised too: base append (gen 0),
@@ -358,7 +358,7 @@ object QueryCatalogStores {
         st.delete(dd.filter(pmod(col("doc_id"), lit(9)) === 1).select("doc_id"))
         st.candidatesForGen(1, minEstJaccard = 0.25)
       },
-      Some(QueryCatalog.minhashCandidatesSqlOver("doc_id % 9 <> 1") +
+      Some(TextQueries.minhashCandidatesSqlOver("doc_id % 9 <> 1") +
         "\n  AND (doc_a % 5 = 0 OR doc_b % 5 = 0)")),
 
     // Snapshot-isolated reads: pin the store after two appends, then
@@ -379,7 +379,7 @@ object QueryCatalogStores {
         st.delete(dd.filter(pmod(col("doc_id"), lit(9)) === 2).select("doc_id"))
         snap.candidates(minEstJaccard = 0.25)
       },
-      Some(QueryCatalog.minhashCandidatesSqlOver("doc_id % 5 <> 0"))))
+      Some(TextQueries.minhashCandidatesSqlOver("doc_id % 5 <> 0"))))
 
   /** Tiny indirection so the entry reads declaratively: static-centroid
     * training (iters = 0 → first-16-by-id init) on the base split only.

@@ -1,131 +1,82 @@
 package graft
+package catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** Round-7 catalog additions: graph triangle statistics, collocation
-  * mining, interval occupancy, exact equi-depth bucketing, largest-remainder
-  * allocation, per-group mode, Pareto skyline, time-weighted averaging,
-  * z-score anomaly flags, and Zipf vocabulary ranks. Registered after
-  * [[QueryCatalog.extensions]] via [[QueryCatalog.all]].
+import CatalogInputs._
+
+/** Statistics: moments, regression and correlation, order statistics and
+  * robust scale, distribution tests (chi-square, KS, PSI, AUC), inequality
+  * measures (Gini, Lorenz, HHI), normalization, equi-depth bucketing and
+  * largest-remainder allocation.
   *
-  * Oracle-parity notes follow the established rules (QueryCatalog scaladoc):
-  * exact-integer or exact-decimal aggregation everywhere a sum crosses a
+  * Exact-integer or exact-decimal aggregation everywhere a sum crosses a
   * group; doubles only in final single-expression arithmetic with the op
   * order mirrored verbatim in the DuckDB SQL; ranks totally ordered with
   * explicit tie-breakers.
   */
-object QueryCatalogR7 {
-
-  private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
-  private def docs(s: SparkSession, d: String): DataFrame = T(s, d, "documents")
-
-  /** User co-activity edge list shared by the three graph entries
-    * (triangle_count / kcore_decomposition / link_prediction): users active
-    * in the same MINUTE for the same event type — minute, not hour: hour
-    * buckets make the graph near-complete at sf0.1 (a dense graph has
-    * Θ(n³) triangles no matter the algorithm); minute buckets keep average
-    * degree ~30, the realistic sparse regime the operators target. One
-    * helper so the bucketing can never drift between the three Spark
-    * builders and their three matching oracle CTEs (review r9).
-    */
-  private def coActivityEdges(s: SparkSession, d: String): DataFrame = {
-    val b = QueryCatalog.eventsRaw(s, d)
-      // FLOOR bucket, not `div`: the oracles replay this as
-      // date_trunc('minute', ts), which floors — a truncating div would
-      // silently shift pre-epoch events one minute late (QueryCatalog
-      // .usBucket scaladoc)
-      .select(QueryCatalog.usBucket("ts_us", 60000000L).as("h"),
-        col("event_type"), col("user_id"))
-      .distinct()
-    // IDENTICAL subtree on both sides of the self-join (aliases; the
-    // src/dst renames live in the projection ABOVE the join): per-side
-    // renamed projections are not `sameResult`, so the distinct's shuffle
-    // ran twice — one shared subtree lets ReuseExchange serve the second
-    // side from the first's exchange (r15 optimization round)
-    b.as("a")
-      .join(b.as("b"),
-        col("a.h") === col("b.h") && col("a.event_type") === col("b.event_type"))
-      .filter(col("a.user_id") < col("b.user_id"))
-      .select(col("a.user_id").as("src"), col("b.user_id").as("dst")).distinct()
-  }
+private[graft] object StatisticsQueries {
 
   val entries: Seq[CatalogEntry] = Seq(
 
-    // Whole-graph triangle census over the co-activity graph (see
-    // coActivityEdges for the minute-bucket rationale). Spark side runs the
-    // degree-ordered-orientation count (Graph.triangleStats — no hub
-    // blowup); the oracle recomputes naively with a 3-way self-join,
-    // exactly the shape the operator avoids.
-    CatalogEntry("triangle_count",
-      (s, d) => ops.Graph.triangleStats(coActivityEdges(s, d)),
-      Some("""WITH b AS (
-        |  SELECT DISTINCT date_trunc('minute', ts) AS h, event_type, user_id FROM events
-        |), e AS (
-        |  SELECT DISTINCT a.user_id AS src, c.user_id AS dst
-        |  FROM b a JOIN b c ON a.h = c.h AND a.event_type = c.event_type
-        |    AND a.user_id < c.user_id
-        |), deg AS (
-        |  SELECT node, COUNT(*) AS deg FROM (
-        |    SELECT src AS node FROM e UNION ALL SELECT dst FROM e) u GROUP BY 1
-        |), tri AS (
-        |  SELECT COUNT(*) AS n_triangles
-        |  FROM e e1 JOIN e e2 ON e1.dst = e2.src
-        |    JOIN e e3 ON e1.src = e3.src AND e2.dst = e3.dst
-        |), nw AS (
-        |  SELECT COUNT(*) AS n_nodes,
-        |    CAST(SUM((deg * (deg - 1)) // 2) AS BIGINT) AS n_wedges FROM deg
-        |), ec AS (SELECT COUNT(*) AS n_edges FROM e)
-        |SELECT n_nodes, n_edges, n_wedges, n_triangles,
-        |  CAST(n_triangles AS DOUBLE) * 3e0 / n_wedges AS global_clustering
-        |FROM nw, ec, tri""".stripMargin)),
+    // Statistical aggregates: corr/covar/stddev/var match DuckDB's sample
+    // definitions; skewness/kurtosis are population moments in Spark, so the
+    // oracle derives them from two-pass central moments. All rounded 6dp —
+    // the streaming-update algorithms differ in low bits.
+    CatalogEntry("stats_suite",
+      (s, d) => {
+        // degenerate moments (single-row group, zero variance) are NaN in
+        // Spark but NULL in SQL engines — the stated contract is the SQL
+        // one, so NaN maps to NULL (identity on any 2+-row group)
+        def nn(c: org.apache.spark.sql.Column) = when(c.isNaN, lit(null)).otherwise(c)
+        T(s, d, "lineitem")
+          .groupBy(col("l_returnflag"))
+          .agg(
+            round(nn(corr(col("l_quantity"), col("l_extendedprice"))), 6).as("qty_price_corr"),
+            round(nn(covar_samp(col("l_quantity"), col("l_extendedprice"))), 6).as("qty_price_covar"),
+            round(nn(stddev_samp(col("l_quantity"))), 6).as("qty_stddev"),
+            round(nn(var_samp(col("l_quantity"))), 6).as("qty_var"),
+            round(nn(skewness(col("l_quantity"))), 6).as("qty_skew"),
+            round(nn(kurtosis(col("l_quantity"))), 6).as("qty_kurt"))
+      },
+      Some("""WITH mu AS (
+        |  SELECT l_returnflag AS flag, AVG(l_quantity) AS mu FROM lineitem GROUP BY 1),
+        |c AS (
+        |  SELECT l_returnflag, l_quantity, l_extendedprice, l_quantity - mu AS dq
+        |  FROM lineitem JOIN mu ON l_returnflag IS NOT DISTINCT FROM flag)
+        |SELECT l_returnflag,
+        |  round(corr(l_quantity, l_extendedprice), 6) AS qty_price_corr,
+        |  round(covar_samp(l_quantity, l_extendedprice), 6) AS qty_price_covar,
+        |  round(stddev_samp(l_quantity), 6) AS qty_stddev,
+        |  round(var_samp(l_quantity), 6) AS qty_var,
+        |  round(AVG(dq*dq*dq) / POW(AVG(dq*dq), 1.5e0), 6) AS qty_skew,
+        |  round(AVG(dq*dq*dq*dq) / (AVG(dq*dq) * AVG(dq*dq)) - 3e0, 6) AS qty_kurt
+        |FROM c GROUP BY l_returnflag""".stripMargin)),
 
-    // Collocation mining: association lift (PMI sans log — same ranking,
-    // no libm) of bigrams vs their unigram frequencies
-    CatalogEntry("collocation_pmi",
-      (s, d) => ops.TextAnalysis.collocations(docs(s, d), minCount = 5, topK = 20)
-        .withColumn("rank", col("rank").cast("long")),
-      Some(raw"""WITH t AS (
-        |  SELECT string_split(trim(regexp_replace(${QueryCatalog.lowerTextSql}, '\s+', ' ', 'g')), ' ') AS toks
-        |  FROM documents
-        |), uni AS (
-        |  SELECT w, COUNT(*) AS wc FROM (SELECT unnest(toks) AS w FROM t) u
-        |  WHERE length(w) > 0 GROUP BY 1
-        |), n AS (SELECT CAST(SUM(wc) AS BIGINT) AS n_uni FROM uni
-        |), bg AS (
-        |  SELECT unnest(toks[1:len(toks)-1]) AS w1, unnest(toks[2:len(toks)]) AS w2
-        |  FROM t WHERE len(toks) >= 2
-        |), c AS (
-        |  SELECT w1, w2, COUNT(*) AS c_ab FROM bg
-        |  WHERE length(w1) > 0 AND length(w2) > 0 GROUP BY 1, 2
-        |  HAVING COUNT(*) >= 5
-        |), sc AS (
-        |  SELECT c.w1, c.w2, c.c_ab,
-        |    (CAST(c.c_ab AS DOUBLE) * (SELECT n_uni FROM n))
-        |      / (CAST(ua.wc AS DOUBLE) * ub.wc) AS lift
-        |  FROM c JOIN uni ua ON c.w1 = ua.w JOIN uni ub ON c.w2 = ub.w
-        |)
-        |SELECT CAST(row_number() OVER (ORDER BY lift DESC, w1, w2) AS BIGINT) AS rank,
-        |  w1, w2, c_ab, lift
-        |FROM sc QUALIFY rank <= 20""".stripMargin)),
-
-    // Interval occupancy: how many 7-day order-handling windows are active
-    // per day, rolled up to per-month peak. Bounded explode (≤7 rows per
-    // interval) + hash aggregate — the distributed replacement for a
-    // global-order sweep line (Intervals scaladoc).
-    CatalogEntry("interval_occupancy",
-      (s, d) => ops.Intervals.monthlyPeak(T(s, d, "orders"), col("o_orderdate"), 7),
-      Some("""WITH days AS (
-        |  SELECT CAST(unnest(generate_series(CAST(o_orderdate AS DATE),
-        |    CAST(o_orderdate AS DATE) + INTERVAL 6 DAY, INTERVAL 1 DAY)) AS DATE) AS day
-        |  FROM orders
-        |), occ AS (SELECT day, COUNT(*) AS n_active FROM days GROUP BY 1)
-        |SELECT strftime(day, '%Y-%m') AS month,
-        |  CAST(MAX(n_active) AS BIGINT) AS peak_active,
-        |  COUNT(*) AS active_days
-        |FROM occ GROUP BY 1""".stripMargin)),
+    // Linear-regression aggregate family (regr_slope/intercept/r2/count/
+    // avgx/avgy): one partial+final aggregate pass; both engines accumulate
+    // in doubles with different partition orders, so float outputs use the
+    // stats_suite round(...,6) parity convention (exact count stays exact).
+    CatalogEntry("regr_aggs",
+      (s, d) => T(s, d, "lineitem").groupBy(col("l_returnflag"))
+        .agg(
+          round(regr_slope(col("l_extendedprice"), col("l_quantity")), 6).as("slope"),
+          round(regr_intercept(col("l_extendedprice"), col("l_quantity")), 6).as("intercept"),
+          round(regr_r2(col("l_extendedprice"), col("l_quantity")), 6).as("r2"),
+          regr_count(col("l_extendedprice"), col("l_quantity")).as("n"),
+          round(regr_avgx(col("l_extendedprice"), col("l_quantity")), 6).as("avgx"),
+          round(regr_avgy(col("l_extendedprice"), col("l_quantity")), 6).as("avgy")),
+      Some("""SELECT l_returnflag,
+        |  round(regr_slope(l_extendedprice, l_quantity), 6) AS slope,
+        |  round(regr_intercept(l_extendedprice, l_quantity), 6) AS intercept,
+        |  round(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
+        |  regr_count(l_extendedprice, l_quantity) AS n,
+        |  round(regr_avgx(l_extendedprice, l_quantity), 6) AS avgx,
+        |  round(regr_avgy(l_extendedprice, l_quantity), 6) AS avgy
+        |FROM lineitem GROUP BY 1""".stripMargin)),
 
     // Exact equi-depth deciles of extended price: each decile's stats are
     // its two boundary order statistics, fetched via groupedSelect (NOT a
@@ -183,29 +134,6 @@ object QueryCatalogR7 {
         |  CAST(base_seats + extra AS BIGINT) AS seats
         |FROM r""".stripMargin)),
 
-    // Per-group mode with a stated tie policy (count desc, then value asc,
-    // NULLS FIRST — Spark's ascending default, pinned in the oracle per
-    // the r10 null-ordering convention; fuzz seed 6 hit a NULL-vs-value
-    // count tie) — the deterministic argmax-of-counts, NOT engine-native
-    // mode() whose tie-breaking is unspecified
-    CatalogEntry("mode_per_group",
-      (s, d) => {
-        val counts = T(s, d, "orders")
-          .groupBy(col("o_custkey"), col("o_orderpriority"))
-          .agg(count(lit(1)).as("cnt"))
-        val w = Window.partitionBy(col("o_custkey"))
-          .orderBy(col("cnt").desc, col("o_orderpriority"))
-        counts.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("o_custkey"), col("o_orderpriority").as("mode_priority"), col("cnt"))
-      },
-      Some("""SELECT o_custkey, o_orderpriority AS mode_priority, cnt FROM (
-        |  SELECT o_custkey, o_orderpriority, COUNT(*) AS cnt,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY COUNT(*) DESC, o_orderpriority NULLS FIRST) AS rn
-        |  FROM orders GROUP BY 1, 2) t
-        |WHERE rn = 1""".stripMargin)),
-
     // 2-D Pareto skyline of parts (cheapest price for each quality tier):
     // Spark runs the per-cost-group + prefix-max shape (Skyline scaladoc),
     // the oracle re-derives the same set with the naive NOT EXISTS
@@ -222,38 +150,6 @@ object QueryCatalogR7 {
         |  WHERE q.p_retailprice <= p.p_retailprice AND q.p_size >= p.p_size
         |    AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))""".stripMargin)),
 
-    // Time-weighted average event value per user: each value weighted by
-    // the whole seconds until the user's next event. Decimal×integer
-    // products keep every aggregate exact; the only double op is the final
-    // division, mirrored verbatim.
-    CatalogEntry("time_weighted_avg",
-      (s, d) => {
-        val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-        QueryCatalog.eventsRaw(s, d)
-          .filter(col("ts_us").isNotNull) // no event time -> no timeline segment
-          .withColumn("next_us", lead(col("ts_us"), 1).over(w))
-          .filter(col("next_us").isNotNull)
-          .withColumn("gap_s", expr("(next_us - ts_us) div 1000000"))
-          .withColumn("v2", col("value").cast(DecimalType(18, 2)))
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_segments"),
-            sum(col("v2") * col("gap_s")).as("sp"),
-            sum(col("gap_s")).as("sw"))
-          .filter(col("sw") > 0)
-          .select(col("user_id"), col("n_segments"),
-            (col("sp").cast("double") / col("sw").cast("double")).as("twa"))
-      },
-      Some("""WITH seg AS (
-        |  SELECT user_id, event_id, CAST(value AS DECIMAL(18,2)) AS v2,
-        |    (epoch_us(lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
-        |      - epoch_us(ts)) // 1000000 AS gap_s
-        |  FROM events WHERE ts IS NOT NULL
-        |)
-        |SELECT user_id, COUNT(*) AS n_segments,
-        |  CAST(SUM(v2 * gap_s) AS DOUBLE) / CAST(SUM(gap_s) AS DOUBLE) AS twa
-        |FROM seg WHERE gap_s IS NOT NULL
-        |GROUP BY 1 HAVING SUM(gap_s) > 0""".stripMargin)),
-
     // Z-score anomaly flags per event type: the group moments aggregate in
     // exact DECIMAL (2-dp data, so sums and sum-of-squares are integers at
     // scale ≤4 — every unscaled value stays far below 2^53, making the
@@ -264,14 +160,14 @@ object QueryCatalogR7 {
     CatalogEntry("anomaly_zscore",
       (s, d) => {
         val v2 = col("value").cast(DecimalType(18, 2))
-        val st = QueryCatalog.eventsRaw(s, d)
+        val st = eventsRaw(s, d)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), sum(v2).as("s"), sum(v2 * v2).as("sq"))
         val mean = col("s").cast("double") / col("n")
         val variance = ((col("sq").cast("double")
           - col("s").cast("double") * col("s").cast("double") / col("n"))
           / (col("n") - 1))
-        QueryCatalog.eventsRaw(s, d)
+        eventsRaw(s, d)
           .join(broadcast(st), "event_type")
           .withColumn("z", (col("value") - mean) / sqrt(variance))
           .filter(abs(col("z")) > 3.0)
@@ -293,56 +189,6 @@ object QueryCatalogR7 {
         |SELECT event_id, event_type, value, round(z, 9) AS z
         |FROM j WHERE abs(z) > 3e0""".stripMargin)),
 
-    // Vocabulary head with the Zipf invariant rank·freq (exact integer) —
-    // corpus distribution sanity check for curation pipelines
-    CatalogEntry("zipf_ranks",
-      (s, d) => ops.TextAnalysis.zipfRanks(docs(s, d), topK = 50),
-      Some(raw"""WITH uni AS (
-        |  SELECT w, COUNT(*) AS freq FROM (
-        |    SELECT unnest(string_split(trim(regexp_replace(${QueryCatalog.lowerTextSql}, '\s+', ' ', 'g')), ' ')) AS w
-        |    FROM documents) u
-        |  WHERE length(w) > 0 GROUP BY 1
-        |), top AS (
-        |  SELECT w, freq, row_number() OVER (ORDER BY freq DESC, w) AS rank FROM uni
-        |  QUALIFY rank <= 50
-        |)
-        |SELECT CAST(rank AS BIGINT) AS rank, w AS word, freq,
-        |  CAST(rank * freq AS BIGINT) AS rank_freq,
-        |  CAST(freq AS DOUBLE) / (SELECT MAX(freq) FROM top) AS ratio_to_top
-        |FROM top""".stripMargin)),
-
-    // 2-core of the minute-grain co-activity graph via iterative peeling
-    // (Graph.kCore). The fixpoint is unique, so the oracle can unroll the
-    // same peels as SQL CTEs: sf0.01 converges in 2 rounds (measured), the
-    // oracle unrolls 4 — two spare rounds of margin.
-    CatalogEntry("kcore_decomposition",
-      (s, d) => ops.Graph.kCore(coActivityEdges(s, d), k = 2)
-        .select(col("node").as("user_id"), col("core_deg")),
-      Some("""WITH b AS (
-        |  SELECT DISTINCT date_trunc('minute', ts) AS h, event_type, user_id FROM events
-        |), e0 AS (
-        |  SELECT DISTINCT a.user_id AS src, c.user_id AS dst
-        |  FROM b a JOIN b c ON a.h = c.h AND a.event_type = c.event_type
-        |    AND a.user_id < c.user_id
-        |), sym AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0
-        |), a0 AS (SELECT DISTINCT src AS node FROM sym
-        |), a1 AS (
-        |  SELECT s.src AS node FROM sym s JOIN a0 x ON s.src = x.node
-        |    JOIN a0 y ON s.dst = y.node GROUP BY 1 HAVING COUNT(*) >= 2
-        |), a2 AS (
-        |  SELECT s.src AS node FROM sym s JOIN a1 x ON s.src = x.node
-        |    JOIN a1 y ON s.dst = y.node GROUP BY 1 HAVING COUNT(*) >= 2
-        |), a3 AS (
-        |  SELECT s.src AS node FROM sym s JOIN a2 x ON s.src = x.node
-        |    JOIN a2 y ON s.dst = y.node GROUP BY 1 HAVING COUNT(*) >= 2
-        |), a4 AS (
-        |  SELECT s.src AS node FROM sym s JOIN a3 x ON s.src = x.node
-        |    JOIN a3 y ON s.dst = y.node GROUP BY 1 HAVING COUNT(*) >= 2
-        |)
-        |SELECT s.src AS user_id, COUNT(*) AS core_deg
-        |FROM sym s JOIN a4 x ON s.src = x.node JOIN a4 y ON s.dst = y.node
-        |GROUP BY 1""".stripMargin)),
-
     // Winsorize (clip at exact p05/p95 order statistics) per event type.
     // The two cuts come from Distribution.groupedSelect — bucket counts
     // shuffle, only the cut-holding buckets rank; the fact is never
@@ -351,7 +197,7 @@ object QueryCatalogR7 {
     // engines pick identical bound rows.
     CatalogEntry("winsorize_clip",
       (s, d) => {
-        val ev = QueryCatalog.eventsRaw(s, d)
+        val ev = eventsRaw(s, d)
           .select(col("event_id"), col("event_type"), col("value"))
         // each cut expression bound ONCE — the selection array and the
         // matchers must agree or the bound silently goes null (review r8)
@@ -392,9 +238,9 @@ object QueryCatalogR7 {
     // subtraction/division order is identical in both engines)
     CatalogEntry("minmax_scale",
       (s, d) => {
-        val st = QueryCatalog.eventsRaw(s, d).groupBy(col("event_type"))
+        val st = eventsRaw(s, d).groupBy(col("event_type"))
           .agg(min(col("value")).as("mn"), max(col("value")).as("mx"))
-        QueryCatalog.eventsRaw(s, d)
+        eventsRaw(s, d)
           .join(broadcast(st), "event_type")
           .select(col("event_id"), col("event_type"), col("value"),
             when(col("mx") === col("mn"), 0.5)
@@ -410,107 +256,6 @@ object QueryCatalogR7 {
         |       ELSE (e.value - st.mn) / (st.mx - st.mn) END AS scaled
         |FROM events e JOIN st USING (event_type)""".stripMargin)),
 
-    // First-order Markov transition matrix over per-user event sequences:
-    // lead() within user (distributed by user), then a (prev, next) count
-    // aggregate; the conditional probability normalizes per prev state
-    // over the tiny state×state frame
-    CatalogEntry("event_transitions",
-      (s, d) => {
-        val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-        val wp = Window.partitionBy(col("prev_type"))
-        QueryCatalog.eventsRaw(s, d)
-          .filter(col("ts_us").isNotNull) // no event time -> no sequence position
-          .withColumn("next_type", lead(col("event_type"), 1).over(w))
-          .filter(col("next_type").isNotNull)
-          .groupBy(col("event_type").as("prev_type"), col("next_type"))
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("p", col("cnt").cast("double")
-            / sum(col("cnt")).over(wp).cast("double"))
-      },
-      Some("""WITH seq AS (
-        |  SELECT event_type AS prev_type,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-        |  FROM events WHERE ts IS NOT NULL
-        |), c AS (
-        |  SELECT prev_type, next_type, COUNT(*) AS cnt FROM seq
-        |  WHERE next_type IS NOT NULL GROUP BY 1, 2
-        |)
-        |SELECT prev_type, next_type, cnt,
-        |  CAST(cnt AS DOUBLE) / CAST(SUM(cnt) OVER (PARTITION BY prev_type) AS DOUBLE) AS p
-        |FROM c""".stripMargin)),
-
-    // Native ntile() window over the nation dim — the one place an
-    // unpartitioned window is the RIGHT call (25 rows; dims stay dim-sized
-    // at any corpus scale). Total order via (revenue desc, name). The
-    // name tie-break needs NULLS FIRST in the oracle (Spark ascending
-    // default vs DuckDB's NULLS LAST): a null-named nation whose revenue
-    // exactly ties a named one would otherwise ntile differently — the
-    // quotaAllocation seed-12 class, pinned here before a seed finds it.
-    CatalogEntry("ntile_nations",
-      (s, d) => {
-        val rev = T(s, d, "orders")
-          .join(T(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-          .join(T(s, d, "nation"), col("c_nationkey") === col("n_nationkey"))
-          .groupBy(col("n_name"))
-          .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-            .cast("double").as("revenue"))
-        val w = Window.orderBy(col("revenue").desc, col("n_name"))
-        rev.withColumn("quartile", ntile(4).over(w).cast("long"))
-      },
-      Some("""WITH rev AS (
-        |  SELECT n_name,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |    JOIN nation ON c_nationkey = n_nationkey
-        |  GROUP BY 1
-        |)
-        |SELECT n_name, revenue,
-        |  CAST(ntile(4) OVER (ORDER BY revenue DESC, n_name NULLS FIRST) AS BIGINT) AS quartile
-        |FROM rev""".stripMargin)),
-
-    // Bloom-prefilter join: the fact side is pruned MAP-SIDE against a
-    // 4 KB broadcast bitmap (3 md5-derived bit positions per key, all
-    // codegen Column bit math — no explode, no UDF) before the exact join
-    // removes the ~2-3% false positives. The oracle is the PLAIN join:
-    // the bloom only prunes, so the result is identical by construction —
-    // this pins the optimization as semantics-preserving. Bitmap build is
-    // a dim-sized driver-side fold (the IVF static-init pattern).
-    CatalogEntry("bloom_join",
-      (s, d) => {
-        // xxhash64, not the md5 replay kernel: the bloom is pure pruning
-        // (the exact join removes FPs), so nothing needs cross-engine
-        // replay and the fact-side probe stays a cheap codegen'd hash
-        val m = 32768
-        def posCol(i: Int, c: org.apache.spark.sql.Column) =
-          pmod(xxhash64(lit(i), c), lit(m)).cast("int")
-        val dim = T(s, d, "orders")
-          .filter(col("o_orderpriority") === "1-URGENT")
-          .select(col("o_orderkey"))
-        val words = new Array[Long](m / 64)
-        dim.select(explode(array((0 until 3).map(i =>
-            posCol(i, col("o_orderkey"))): _*)).as("p"))
-          .distinct().collect()
-          .foreach { r => val p = r.getInt(0); words(p / 64) |= (1L << (p % 64)) }
-        val hit = (0 until 3).map(i =>
-          expr(s"(shiftright(element_at(bmp, CAST(p$i div 64 AS INT) + 1), " +
-            s"CAST(p$i % 64 AS INT)) & 1) = 1")).reduce(_ && _)
-        (0 until 3).foldLeft(
-            T(s, d, "lineitem").withColumn("bmp", typedLit(words.toSeq))) {
-            (df, i) => df.withColumn(s"p$i", posCol(i, col("l_orderkey")))
-          }
-          .filter(hit)
-          .join(dim, col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("l_returnflag"))
-          .agg(count(lit(1)).as("cnt"),
-            sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-              .cast(DecimalType(18, 4))).cast("double").as("revenue"))
-      },
-      Some("""SELECT l_returnflag, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY 1""".stripMargin)),
-
     // Chi-square independence test (event_type × user bucket) with
     // Cramér's V. Observed/marginal counts are exact integers; each cell's
     // (o−e)²/e is one mirrored double expression ROUNDED TO 9 DP AND SUMMED
@@ -518,7 +263,7 @@ object QueryCatalogR7 {
     // disagree across engines, the one place naive stats translations die
     CatalogEntry("chisq_independence",
       (s, d) => {
-        val o = QueryCatalog.eventsRaw(s, d)
+        val o = eventsRaw(s, d)
           .groupBy(col("event_type"), expr("user_id % 4").as("bucket"))
           .agg(count(lit(1)).as("o"))
         val rowt = o.groupBy(col("event_type")).agg(sum(col("o")).as("row_tot"))
@@ -601,87 +346,6 @@ object QueryCatalogR7 {
         |  round(log10(1e0 + 1e0 / digit), 9) AS exp_p
         |FROM c""".stripMargin)),
 
-    // unionByName with missing columns — schema-evolution union (the
-    // append that survives a column added to one source but not another)
-    CatalogEntry("union_by_name",
-      (s, d) => {
-        val a = T(s, d, "orders").filter(col("o_orderstatus") === "F")
-          .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-        val b = T(s, d, "orders").filter(col("o_orderstatus") === "P")
-          .select(col("o_orderkey"), col("o_orderpriority"))
-        a.unionByName(b, allowMissingColumns = true)
-      },
-      Some("""SELECT o_orderkey, o_totalprice, o_orderstatus,
-        |  NULL AS o_orderpriority
-        |FROM orders WHERE o_orderstatus = 'F'
-        |UNION ALL
-        |SELECT o_orderkey, NULL, NULL, o_orderpriority
-        |FROM orders WHERE o_orderstatus = 'P'""".stripMargin)),
-
-    // Link prediction by common-neighbour count / Jaccard over the minute
-    // co-activity graph: wedge expansion through the shared neighbour
-    // (same shuffle shape as the triangle census), anti-joined against the
-    // existing edges, degree-normalized. Counts are exact integers; the
-    // Jaccard is one mirrored division.
-    CatalogEntry("link_prediction",
-      (s, d) => ops.Graph.commonNeighborScores(coActivityEdges(s, d),
-        minCommon = 2, topK = 20),
-      Some("""WITH b AS (
-        |  SELECT DISTINCT date_trunc('minute', ts) AS h, event_type, user_id FROM events
-        |), e AS (
-        |  SELECT DISTINCT a.user_id AS src, c.user_id AS dst
-        |  FROM b a JOIN b c ON a.h = c.h AND a.event_type = c.event_type
-        |    AND a.user_id < c.user_id
-        |), sym AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e
-        |), deg AS (SELECT src AS node, COUNT(*) AS deg FROM sym GROUP BY 1
-        |), cn AS (
-        |  SELECT a.src AS u, c.dst AS v, COUNT(*) AS common
-        |  FROM sym a JOIN sym c ON a.dst = c.src
-        |  WHERE a.src < c.dst GROUP BY 1, 2 HAVING COUNT(*) >= 2
-        |), nonadj AS (
-        |  SELECT cn.* FROM cn
-        |  WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.src = cn.u AND e.dst = cn.v)
-        |), scored AS (
-        |  SELECT u, v, common,
-        |    CAST(common AS DOUBLE) / (du.deg + dv.deg - common) AS jaccard
-        |  FROM nonadj JOIN deg du ON du.node = u JOIN deg dv ON dv.node = v
-        |)
-        |SELECT CAST(row_number() OVER (ORDER BY jaccard DESC, u, v) AS BIGINT) AS rank,
-        |  u, v, common, jaccard
-        |FROM scored QUALIFY rank <= 20""".stripMargin)),
-
-    // Seasonal-naive forecast baseline: hourly event counts vs the count
-    // 24 hours earlier, joined on the INTEGER hour index (a lag() over a
-    // dense-ified series would misalign across gap hours). MAE is exact
-    // integers until one final division.
-    CatalogEntry("forecast_baseline_mae",
-      (s, d) => {
-        val hourly = QueryCatalog.eventsRaw(s, d)
-          .groupBy(col("event_type"),
-            QueryCatalog.usBucket("ts_us", 3600000000L).as("h"))
-          .agg(count(lit(1)).as("cnt"))
-        hourly.join(
-            hourly.select(col("event_type"), (col("h") + 24).as("h"),
-              col("cnt").as("prev_cnt")),
-            Seq("event_type", "h"))
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_hours"),
-            sum(abs(col("cnt") - col("prev_cnt"))).as("abs_err"))
-          .select(col("event_type"), col("n_hours"),
-            (col("abs_err").cast("double") / col("n_hours")).as("mae"))
-      },
-      Some("""WITH hourly AS (
-        |  SELECT event_type, epoch_us(date_trunc('hour', ts)) // 3600000000 AS h, COUNT(*) AS cnt
-        |  FROM events GROUP BY 1, 2
-        |), j AS (
-        |  SELECT a.event_type, a.cnt, p.cnt AS prev_cnt
-        |  FROM hourly a JOIN hourly p
-        |    ON a.event_type = p.event_type AND a.h = p.h + 24
-        |)
-        |SELECT event_type, COUNT(*) AS n_hours,
-        |  CAST(CAST(SUM(abs(cnt - prev_cnt)) AS BIGINT) AS DOUBLE) / COUNT(*) AS mae
-        |FROM j GROUP BY 1""".stripMargin)),
-
     // Pearson correlation from EXACT decimal moments (quantity is
     // integer-valued, price 2-dp, so all five sums are exact decimals);
     // the final expression is mirrored doubles rounded to 9 dp — the
@@ -722,133 +386,6 @@ object QueryCatalogR7 {
         |      * sqrt(n * CAST(spp AS DOUBLE) - CAST(sp AS DOUBLE) * CAST(sp AS DOUBLE))), 9)
         |    AS corr_qp
         |FROM m""".stripMargin)),
-
-    // Exact stratified holdout: the validation set gets EXACTLY 50 docs,
-    // apportioned across sources by largest remainder (integer-only), and
-    // each source contributes its `seats` lowest-(md5-rank) docs — a
-    // replayable hash order, so the oracle re-derives the identical split.
-    // This is the mixture-exact split a training pipeline needs when
-    // "10%-ish per shard" isn't acceptable.
-    CatalogEntry("stratified_split_exact",
-      (s, d) => {
-        val w = Window.partitionBy(col("source"))
-          .orderBy(col("hkey"), col("doc_id"))
-        val weights = docs(s, d).groupBy(col("source"))
-          .agg(count(lit(1)).as("n_docs"))
-        val quotas = ops.Distribution.quotaAllocation(
-            weights, "source", "n_docs", seats = 50L)
-          .select(col("key").as("source"), col("seats"))
-        docs(s, d)
-          .withColumn("hkey", ops.Replay.hash60(concat(lit("split:"),
-            col("doc_id").cast("string"))))
-          .withColumn("rnk", row_number().over(w).cast("long"))
-          .join(broadcast(quotas), "source")
-          .select(col("doc_id"), col("source"),
-            when(col("rnk") <= col("seats"), "val").otherwise("train").as("split"))
-      },
-      Some(s"""WITH w AS (
-        |  SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY 1
-        |), tot AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS tw FROM w
-        |), b AS (
-        |  SELECT source, (50 * n_docs) // (SELECT tw FROM tot) AS base_seats,
-        |    50 * n_docs - ((50 * n_docs) // (SELECT tw FROM tot)) * (SELECT tw FROM tot) AS rem
-        |  FROM w
-        |), l AS (SELECT CAST(50 - SUM(base_seats) AS BIGINT) AS leftover FROM b
-        |), q AS (
-        |  SELECT source, CAST(base_seats
-        |    + (CASE WHEN row_number() OVER (ORDER BY rem DESC, source NULLS FIRST)
-        |              <= (SELECT leftover FROM l) THEN 1 ELSE 0 END) AS BIGINT) AS seats
-        |  FROM b
-        |), r AS (
-        |  SELECT doc_id, source,
-        |    CAST(row_number() OVER (PARTITION BY source
-        |      ORDER BY ${ops.Replay.hash60Sql("'split:' || CAST(doc_id AS VARCHAR)")}, doc_id)
-        |      AS BIGINT) AS rnk
-        |  FROM documents
-        |)
-        |SELECT r.doc_id, r.source,
-        |  CASE WHEN r.rnk <= q.seats THEN 'val' ELSE 'train' END AS split
-        |FROM r JOIN q USING (source)""".stripMargin)),
-
-    // Nucleus (top-p) filtering over the event-transition matrix: per prev
-    // state, keep the minimal probability-desc prefix whose cumulative mass
-    // reaches 0.9 (the row that CROSSES the threshold is kept). The cumsum
-    // and the cut run on INTEGER counts (p desc ≡ cnt desc under one
-    // denominator; threshold as cross-multiplication) — a windowed SUM of
-    // doubles is NOT portable even in a pinned order, because engines are
-    // free to accumulate frames tree-wise rather than sequentially.
-    CatalogEntry("topp_nucleus",
-      (s, d) => {
-        val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-        val wp = Window.partitionBy(col("prev_type"))
-        val wcum = Window.partitionBy(col("prev_type"))
-          .orderBy(col("cnt").desc, col("next_type"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        QueryCatalog.eventsRaw(s, d)
-          .filter(col("ts_us").isNotNull) // no event time -> no sequence position
-          .withColumn("next_type", lead(col("event_type"), 1).over(w))
-          .filter(col("next_type").isNotNull)
-          .groupBy(col("event_type").as("prev_type"), col("next_type"))
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("tot", sum(col("cnt")).over(wp))
-          .withColumn("cum_cnt", sum(col("cnt")).over(wcum))
-          .filter((col("cum_cnt") - col("cnt")) * 10 < col("tot") * 9)
-          .select(col("prev_type"), col("next_type"), col("cnt"),
-            (col("cnt").cast("double") / col("tot").cast("double")).as("p"),
-            (col("cum_cnt").cast("double") / col("tot").cast("double")).as("cum_p"))
-      },
-      Some("""WITH seq AS (
-        |  SELECT event_type AS prev_type,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-        |  FROM events WHERE ts IS NOT NULL
-        |), c AS (
-        |  SELECT prev_type, next_type, COUNT(*) AS cnt FROM seq
-        |  WHERE next_type IS NOT NULL GROUP BY 1, 2
-        |), cm AS (
-        |  SELECT prev_type, next_type, cnt,
-        |    CAST(SUM(cnt) OVER (PARTITION BY prev_type) AS BIGINT) AS tot,
-        |    CAST(SUM(cnt) OVER (PARTITION BY prev_type ORDER BY cnt DESC, next_type
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_cnt
-        |  FROM c
-        |)
-        |SELECT prev_type, next_type, cnt,
-        |  CAST(cnt AS DOUBLE) / CAST(tot AS DOUBLE) AS p,
-        |  CAST(cum_cnt AS DOUBLE) / CAST(tot AS DOUBLE) AS cum_p
-        |FROM cm WHERE (cum_cnt - cnt) * 10 < tot * 9""".stripMargin)),
-
-    // Inverted index profile: per term, document frequency, total term
-    // frequency, and an order-stable digest of the sorted posting list —
-    // the shuffle shape of index building (explode -> one aggregate), with
-    // the posting list pinned cross-engine via the md5-60bit digest instead
-    // of shipping arrays through the compare (whose sort pandas can't do)
-    CatalogEntry("inverted_index",
-      (s, d) => {
-        val withToks = docs(s, d)
-          .repartition(col("doc_id"))
-          .withColumn("norm", ops.Shingles.normalize(col("text")))
-          .withColumn("toks", ops.Shingles.tokensOfNorm(col("norm")))
-        withToks
-          .select(col("doc_id"), explode(col("toks")).as("term"))
-          .filter(length(col("term")) > 0)
-          .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
-          .groupBy(col("term"))
-          .agg(count(lit(1)).as("df"), sum(col("tf")).as("total_tf"),
-            ops.Replay.hash60(concat_ws(",",
-              sort_array(collect_list(col("doc_id"))).cast("array<string>")))
-              .as("postings_digest"))
-          .filter(col("df") >= 5)
-      },
-      Some(raw"""WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(trim(regexp_replace(${QueryCatalog.lowerTextSql}, '\s+', ' ', 'g')), ' ')) AS term
-        |  FROM documents
-        |), tf AS (
-        |  SELECT term, doc_id, COUNT(*) AS tf FROM toks
-        |  WHERE length(term) > 0 GROUP BY 1, 2
-        |)
-        |SELECT term, COUNT(*) AS df, CAST(SUM(tf) AS BIGINT) AS total_tf,
-        |  ${ops.Replay.hash60Sql("array_to_string(list_sort(list(doc_id)), ',')")} AS postings_digest
-        |FROM tf GROUP BY 1 HAVING COUNT(*) >= 5""".stripMargin)),
 
     // Gini coefficient of customer spend — G = 2·Σ(i·xᵢ)/(n·Σx) − (n+1)/n
     // over ascending-sorted integer cents. Σ(i·xᵢ) stays exact in longs
@@ -924,114 +461,6 @@ object QueryCatalogR7 {
         |    / (CAST(SUM(w) AS DOUBLE) * CAST(SUM(w) AS DOUBLE)), 9) AS hhi
         |FROM rev GROUP BY 1""".stripMargin)),
 
-    // Blocklist screening (the policy-filter mechanism of a curation
-    // pipeline): per-doc hit count against a word blocklist via the same
-    // marker-intersect machinery as lang_id; 'spamword' exercises the
-    // zero-hit path
-    CatalogEntry("blocklist_hits",
-      (s, d) => {
-        val blocklist = Seq("slow", "dup", "spamword")
-        docs(s, d)
-          .withColumn("norm", ops.Shingles.normalize(col("text")))
-          .withColumn("toks", ops.Shingles.tokensOfNorm(col("norm")))
-          .select(col("doc_id"),
-            size(array_intersect(col("toks"), lit(blocklist.toArray)))
-              .cast("long").as("n_distinct_hits"),
-            size(filter(col("toks"), t => t.isin(blocklist.map(lit(_)): _*)))
-              .cast("long").as("n_total_hits"))
-          .withColumn("flagged", col("n_distinct_hits") > 0)
-      },
-      Some(raw"""WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(trim(regexp_replace(${QueryCatalog.lowerTextSql}, '\s+', ' ', 'g')), ' ') AS toks
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(len(list_intersect(toks, ['slow','dup','spamword'])) AS BIGINT) AS n_distinct_hits,
-        |  CAST(len(list_filter(toks, x -> x IN ('slow','dup','spamword'))) AS BIGINT) AS n_total_hits,
-        |  len(list_intersect(toks, ['slow','dup','spamword'])) > 0 AS flagged
-        |FROM t""".stripMargin)),
-
-    // The custom DataSource V2 (sources.GeneratedTableProvider) under a
-    // filtered aggregate: the id-range predicate pushes into the SOURCE
-    // (the scan plans only the surviving generated interval — source-side
-    // partition pruning, asserted in GeneratedSourceSpec) and the
-    // projection prunes the produced columns. The generator is a pure
-    // integer function of id, so DuckDB replays it from range().
-    CatalogEntry("dsv2_generated_scan",
-      (s, d) => s.read.format("graft-gen")
-        .option("rows", "100000").option("parts", "8").load()
-        .filter(col("id") >= 25000L && col("id") < 75000L)
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("val").cast(DecimalType(18, 0))).cast("double").as("sum_val"),
-          min(col("id")).as("min_id"), max(col("id")).as("max_id")),
-      Some("""WITH g AS (SELECT range AS id FROM range(0, 100000)),
-        |v AS (
-        |  SELECT id, CAST((id * 2654435761) % 1000003 AS DOUBLE) AS val,
-        |    CAST(id % 16 AS INT) AS bucket
-        |  FROM g WHERE id >= 25000 AND id < 75000
-        |)
-        |SELECT bucket, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(val AS DECIMAL(18,0))) AS DOUBLE) AS sum_val,
-        |  CAST(MIN(id) AS BIGINT) AS min_id, CAST(MAX(id) AS BIGINT) AS max_id
-        |FROM v GROUP BY 1""".stripMargin)),
-
-    // The custom MICRO-BATCH source under the oracle gate: the stream is
-    // driven through ~3 rate-limited batches to completion and the final
-    // complete-mode aggregate must equal DuckDB's replay of the generator
-    // — stream/batch parity for a custom connector, same contract the
-    // events_hourly_stream twin pins for the file source. 3 batches (not
-    // more) because the contract is "multi-batch with rate-limit cuts",
-    // and every extra complete-mode batch re-emits full state (~0.7 s of
-    // pure trigger overhead on the local harness).
-    CatalogEntry("dsv2_stream_agg",
-      (s, d) => graft.streaming.StreamingConf.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingConf.withStateBackend(s) {
-        // 4 state stores, not the session-wide 32 (ROUNDLOG lesson 8 —
-        // the last harness streaming entry still paying 32 stores'
-        // open/commit × 3 batches for a 16-group state)
-        import org.apache.spark.sql.streaming.Trigger
-        val sink = "dsv2_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory(
-          graft.streaming.StreamingConf.scratchBase, "graft_dsv2_ckpt_").toFile
-        val q = s.readStream.format("graft-gen")
-          .option("rows", "20000").option("parts", "4").option("batchRows", "8192")
-          .load()
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("id")).as("sum_id"),
-            sum(col("val").cast(DecimalType(18, 0))).cast("double").as("sum_val"))
-          .writeStream.outputMode("complete").format("memory").queryName(sink)
-          // throwaway checkpoint on tmpfs scratch (round-11 item 5): the
-          // default disk-backed checkpoint pays per-batch WAL fsyncs —
-          // pure fixed cost × 3 batches for a single-shot harness query;
-          // deleted eagerly (tmpfs is RAM — leaks would outlive the JVM)
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.ProcessingTime(0)).start()
-        try q.processAllAvailable() finally {
-          // the delete must run even when stop() itself throws — a leaked
-          // checkpoint on tmpfs is RAM held past the JVM
-          try q.stop()
-          finally org.apache.hadoop.fs.FileUtil.fullyDelete(ckpt)
-        }
-        val out = s.table(sink)
-        val copied = s.createDataFrame(
-          new java.util.ArrayList(java.util.Arrays.asList(out.collect(): _*)), out.schema)
-        s.catalog.dropTempView(sink)
-        copied
-        }
-      },
-      Some("""WITH g AS (SELECT range AS id FROM range(0, 20000)),
-        |v AS (
-        |  SELECT id, CAST((id * 2654435761) % 1000003 AS DOUBLE) AS val,
-        |    CAST(id % 16 AS INT) AS bucket
-        |  FROM g
-        |)
-        |SELECT bucket, COUNT(*) AS cnt, CAST(SUM(id) AS BIGINT) AS sum_id,
-        |  CAST(SUM(CAST(val AS DECIMAL(18,0))) AS DOUBLE) AS sum_val
-        |FROM v GROUP BY 1""".stripMargin)),
-
     // Mann-Whitney AUC between two event classes by rank sum: ranks are
     // integers under the (value, event_id) total order, so
     // U = R1 − n1(n1+1)/2 is exact and AUC is one division. The global
@@ -1041,7 +470,7 @@ object QueryCatalogR7 {
     // behind the already-unique event_id.
     CatalogEntry("auc_rank",
       (s, d) => {
-        val base = QueryCatalog.eventsRaw(s, d)
+        val base = eventsRaw(s, d)
           .filter(col("event_type").isin("purchase", "click")
             && col("value").isNotNull) // totals share the ranks' null contract
           .select(lit("all").as("one"), col("event_type"), col("value"), col("event_id"))
@@ -1079,7 +508,7 @@ object QueryCatalogR7 {
     // c_other = global rank − c_own. No global-order window anywhere.
     CatalogEntry("ks_test",
       (s, d) => {
-        val base = QueryCatalog.eventsRaw(s, d)
+        val base = eventsRaw(s, d)
           .filter(col("event_type").isin("purchase", "click")
             && col("value").isNotNull) // totals share the ranks' null contract
           .select(lit("all").as("one"), col("event_type"), col("value"), col("event_id"))
@@ -1132,7 +561,7 @@ object QueryCatalogR7 {
     // cut-holding buckets rank, integer-ceil cut indices
     CatalogEntry("exact_percentile_profile",
       (s, d) => {
-        val ev = QueryCatalog.eventsRaw(s, d)
+        val ev = eventsRaw(s, d)
           .select(col("event_id"), col("event_type"), col("value"))
           // explicit statement of the groupedSelect contract (NULL group/
           // value rows are excluded), mirrored in the oracle's WHERE —
@@ -1166,18 +595,6 @@ object QueryCatalogR7 {
         |   OR rank = (99 * n + 99) // 100
         |GROUP BY 1""".stripMargin)),
 
-    // Join-fanout histogram (count-of-counts): how many join keys have
-    // exactly k matching fact rows — THE pre-join skew diagnostic (a key
-    // with 10^6 rows means a hot partition; run this before debugging a
-    // slow join, not after)
-    CatalogEntry("fanout_histogram",
-      (s, d) => T(s, d, "lineitem")
-        .groupBy(col("l_orderkey")).agg(count(lit(1)).as("fanout"))
-        .groupBy(col("fanout")).agg(count(lit(1)).as("n_keys")),
-      Some("""SELECT fanout, COUNT(*) AS n_keys FROM (
-        |  SELECT l_orderkey, COUNT(*) AS fanout FROM lineitem GROUP BY 1) t
-        |GROUP BY 1""".stripMargin)),
-
     // Quantile normalization (batch-effect correction): every value maps
     // to the POOLED order statistic at its in-group quantile position —
     // index arithmetic is integer cross-multiplied ceil(rg·N/ng), the
@@ -1186,7 +603,7 @@ object QueryCatalogR7 {
     // the values themselves.
     CatalogEntry("quantile_normalize",
       (s, d) => {
-        val ev = QueryCatalog.eventsRaw(s, d)
+        val ev = eventsRaw(s, d)
           .select(col("event_id"), col("event_type"), col("value"))
           // sizes AND the pooled pass share the ranks' null contract: rows
           // with a NULL value or NULL group are excluded everywhere, so the
@@ -1226,24 +643,6 @@ object QueryCatalogR7 {
         |FROM ranked r JOIN pooled p
         |  ON p.idx = (r.rg * r.nn + r.ng - 1) // r.ng""".stripMargin)),
 
-    // Churn labeling for supervised training: a user is churned if silent
-    // for the last 7 days of the observation window — exact integer-µs
-    // timestamp compare, one aggregate per user plus a 1-row broadcast
-    CatalogEntry("churn_labels",
-      (s, d) => {
-        val ev = QueryCatalog.eventsRaw(s, d)
-        val horizon = ev.agg(max(col("ts_us")).as("max_ts"))
-        ev.groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_events"), max(col("ts_us")).as("last_ts"))
-          .crossJoin(broadcast(horizon))
-          .select(col("user_id"), col("n_events"),
-            (col("last_ts") < col("max_ts") - 604800000000L).as("churned"))
-      },
-      Some("""WITH h AS (SELECT MAX(epoch_us(ts)) AS max_ts FROM events)
-        |SELECT user_id, COUNT(*) AS n_events,
-        |  MAX(epoch_us(ts)) < (SELECT max_ts FROM h) - 604800000000 AS churned
-        |FROM events GROUP BY 1""".stripMargin)),
-
     // Population-stability index between the first and second half of the
     // event stream (distribution drift over time): 10 equal-width global
     // value bins, integer bin counts Laplace-smoothed by +1 (an empty bin
@@ -1253,7 +652,7 @@ object QueryCatalogR7 {
     // order-dependent across engines)
     CatalogEntry("psi_stability",
       (s, d) => {
-        val ev = QueryCatalog.eventsRaw(s, d)
+        val ev = eventsRaw(s, d)
         val st = ev.agg(min(col("value")).as("mn"), max(col("value")).as("mx"),
           min(col("ts_us")).as("t0"), max(col("ts_us")).as("t1"))
         val binned = ev.crossJoin(broadcast(st))
@@ -1356,49 +755,13 @@ object QueryCatalogR7 {
         |    / (SELECT total_cents FROM t) AS cum_share
         |FROM dec""".stripMargin)),
 
-    // Calendar dimension over the order-date span — the conformed date dim
-    // every mart joins; only fields with identical cross-engine semantics
-    // (ISO day-of-week via weekday()+1 / isodow; NOT dayofweek, whose week
-    // start differs between engines)
-    CatalogEntry("calendar_dim",
-      (s, d) => {
-        val span = T(s, d, "orders").agg(
-          min(col("o_orderdate").cast("date")).as("d0"),
-          max(col("o_orderdate").cast("date")).as("d1"))
-        span.select(explode(sequence(col("d0"), col("d1"),
-            expr("INTERVAL 1 DAY"))).as("cal_date"))
-          .select(col("cal_date"),
-            year(col("cal_date")).cast("long").as("cal_year"),
-            month(col("cal_date")).cast("long").as("cal_month"),
-            dayofmonth(col("cal_date")).cast("long").as("cal_day"),
-            quarter(col("cal_date")).cast("long").as("cal_quarter"),
-            (weekday(col("cal_date")) + 1).cast("long").as("isodow"),
-            (weekday(col("cal_date")) >= 5).as("is_weekend"))
-      },
-      Some("""WITH span AS (
-        |  SELECT MIN(CAST(o_orderdate AS DATE)) AS d0,
-        |    MAX(CAST(o_orderdate AS DATE)) AS d1
-        |  FROM orders
-        |), days AS (
-        |  SELECT CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS cal_date
-        |  FROM span
-        |)
-        |SELECT cal_date,
-        |  CAST(year(cal_date) AS BIGINT) AS cal_year,
-        |  CAST(month(cal_date) AS BIGINT) AS cal_month,
-        |  CAST(day(cal_date) AS BIGINT) AS cal_day,
-        |  CAST(quarter(cal_date) AS BIGINT) AS cal_quarter,
-        |  CAST(isodow(cal_date) AS BIGINT) AS isodow,
-        |  isodow(cal_date) >= 6 AS is_weekend
-        |FROM days""".stripMargin)),
-
     // Cohen's d effect size between the two event classes: pooled-variance
     // standardized mean difference from EXACT decimal moments (the
     // anomaly_zscore recipe), one mirrored double expression at the end
     CatalogEntry("cohens_d",
       (s, d) => {
         val v2 = col("value").cast(DecimalType(18, 2))
-        val st = QueryCatalog.eventsRaw(s, d)
+        val st = eventsRaw(s, d)
           // value IS NOT NULL mirrors the oracle: count(*) would include a
           // null-value row the sums skip, deflating mean and variance
           // (review r9 — the oracle guarded, the pipeline didn't)
@@ -1446,7 +809,7 @@ object QueryCatalogR7 {
     // (no averaging of middle pairs), so both engines pick identical rows.
     CatalogEntry("mad_robust",
       (s, d) => ops.Distribution.groupedMedianMad(
-        QueryCatalog.eventsRaw(s, d)
+        eventsRaw(s, d)
           .select(col("event_id"), col("event_type"), col("value")),
         "event_type", col("value"), Seq(col("event_id")))
         .select(col("g").as("event_type"), col("median"), col("mad")),

@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType}
   * addition is exact and associative, so the aggregate is deterministic under
   * any partitioning. Cast the final sum back to double for a stable,
   * engine-neutral output type. The DuckDB oracle uses the same
-  * `CAST(SUM(CAST(x AS DECIMAL(18,s))) AS DOUBLE)` shape.
+  * `CAST(SUM(CAST(x AS DECIMAL(18,s))) AS DOUBLE)` shape, rendered by
+  * [[moneySumSql]].
   */
 object Cols {
 
@@ -27,6 +28,11 @@ object Cols {
     */
   def moneySum(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
+
+  /** The oracle-SQL twin of [[moneySum]]: renders
+    * `CAST(SUM(CAST(<sqlExpr> AS DECIMAL(18,<scale>))) AS DOUBLE)`. */
+  def moneySumSql(sqlExpr: String, scale: Int = 2): String =
+    s"CAST(SUM(CAST($sqlExpr AS DECIMAL(18,$scale))) AS DOUBLE)"
 
   /** Deterministic average = decimal sum / non-null count (double / long). */
   def moneyAvg(c: Column, scale: Int = 2): Column =
