@@ -17,49 +17,6 @@ import CatalogInputs._
   */
 private[graft] object AggregateQueries {
 
-  /** Dialect-shared GROUPING SETS with grouping() markers. */
-  val groupingSetsSql: String =
-    s"""SELECT l_returnflag, l_linestatus,
-      |  GROUPING(l_returnflag) AS g_flag, GROUPING(l_linestatus) AS g_status,
-      |  COUNT(*) AS cnt,
-      |  ${moneySumSql("l_quantity")} AS sum_qty
-      |FROM lineitem
-      |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), (l_linestatus), ())""".stripMargin
-
-  /** Dialect-shared navigation window functions. */
-  val windowNavigationSql: String =
-    """SELECT o_orderkey, o_custkey,
-      |  first_value(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderkey
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS first_price,
-      |  nth_value(o_totalprice, 2) OVER (PARTITION BY o_custkey ORDER BY o_orderkey
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS second_price,
-      |  last_value(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderkey
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_price,
-      |  cume_dist() OVER (PARTITION BY o_custkey ORDER BY o_totalprice NULLS FIRST) AS price_cume
-      |FROM orders""".stripMargin
-
-  /** Dialect-shared GROUP BY ALL. */
-  val groupByAllSql: String =
-    s"""SELECT o_orderstatus, o_orderpriority, COUNT(*) AS cnt,
-      |  ${moneySumSql("o_totalprice")} AS total
-      |FROM orders GROUP BY ALL""".stripMargin
-
-  /** Dialect-shared ANSI FILTER (WHERE) aggregate clause. */
-  val filteredAggsSql: String =
-    """SELECT o_orderpriority,
-      |  CAST(COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS BIGINT) AS n_closed,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) AS sum_open,
-      |  CAST(COUNT(DISTINCT o_custkey) FILTER (WHERE o_orderstatus = 'P') AS BIGINT) AS n_pending_custs
-      |FROM orders GROUP BY 1""".stripMargin
-
-  /** Dialect-shared event-time RANGE frame with an INTERVAL bound. */
-  val intervalRangeSql: String =
-    """SELECT o_orderkey, o_custkey,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-      |    PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE)
-      |    RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW) AS DOUBLE) AS trailing_30d
-      |FROM orders""".stripMargin
-
   val entries: Seq[CatalogEntry] = Seq(
 
     // A-family beyond the reference: sum/avg/min/max/count/count-distinct.
@@ -243,12 +200,16 @@ private[graft] object AggregateQueries {
         |FROM orders GROUP BY 1""".stripMargin)),
 
     // first/nth/last_value + cume_dist — dialect-shared SQL
-    CatalogEntry("window_navigation",
-      (s, d) => {
-        T(s, d, "orders").createOrReplaceTempView("orders")
-        s.sql(windowNavigationSql)
-      },
-      Some(windowNavigationSql)),
+    sharedSqlEntry("window_navigation", Seq("orders"),
+      """SELECT o_orderkey, o_custkey,
+        |  first_value(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderkey
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS first_price,
+        |  nth_value(o_totalprice, 2) OVER (PARTITION BY o_custkey ORDER BY o_orderkey
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS second_price,
+        |  last_value(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderkey
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_price,
+        |  cume_dist() OVER (PARTITION BY o_custkey ORDER BY o_totalprice NULLS FIRST) AS price_cume
+        |FROM orders""".stripMargin),
 
     // RANGE frame over an integer day key: trailing-7-day running total per
     // customer (decimal-accumulated inside the frame, double on output)
@@ -272,12 +233,13 @@ private[graft] object AggregateQueries {
         |      FROM orders)""".stripMargin)),
 
     // GROUPING SETS with grouping() markers — dialect-shared SQL text
-    CatalogEntry("grouping_sets_agg",
-      (s, d) => {
-        T(s, d, "lineitem").createOrReplaceTempView("lineitem")
-        s.sql(groupingSetsSql)
-      },
-      Some(groupingSetsSql)),
+    sharedSqlEntry("grouping_sets_agg", Seq("lineitem"),
+      s"""SELECT l_returnflag, l_linestatus,
+        |  GROUPING(l_returnflag) AS g_flag, GROUPING(l_linestatus) AS g_status,
+        |  COUNT(*) AS cnt,
+        |  ${moneySumSql("l_quantity")} AS sum_qty
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), (l_linestatus), ())""".stripMargin),
 
     // Boolean / conditional aggregate family
     CatalogEntry("bool_aggs",
@@ -304,12 +266,10 @@ private[graft] object AggregateQueries {
         |FROM lineitem GROUP BY 1""".stripMargin)),
 
     // GROUP BY ALL (dialect-shared): every non-aggregate select item groups
-    CatalogEntry("group_by_all",
-      (s, d) => {
-        T(s, d, "orders").createOrReplaceTempView("orders")
-        s.sql(groupByAllSql)
-      },
-      Some(groupByAllSql)),
+    sharedSqlEntry("group_by_all", Seq("orders"),
+      s"""SELECT o_orderstatus, o_orderpriority, COUNT(*) AS cnt,
+        |  ${moneySumSql("o_totalprice")} AS total
+        |FROM orders GROUP BY ALL""".stripMargin),
 
     // Rolling exact median over a trailing 7-row frame: collect the frame,
     // sort it, and take the midpoint. Even-count interpolation is
@@ -377,12 +337,12 @@ private[graft] object AggregateQueries {
     // in one pass (the declarative twin of the when/otherwise conditional
     // sums in tpch_q12). Dialect-shared text; empty filtered SUM is NULL
     // in both engines.
-    CatalogEntry("filtered_aggs",
-      (s, d) => {
-        T(s, d, "orders").createOrReplaceTempView("orders")
-        s.sql(filteredAggsSql)
-      },
-      Some(filteredAggsSql)),
+    sharedSqlEntry("filtered_aggs", Seq("orders"),
+      """SELECT o_orderpriority,
+        |  CAST(COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS BIGINT) AS n_closed,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) AS sum_open,
+        |  CAST(COUNT(DISTINCT o_custkey) FILTER (WHERE o_orderstatus = 'P') AS BIGINT) AS n_pending_custs
+        |FROM orders GROUP BY 1""".stripMargin),
 
     // Distinct count over a sliding frame: Spark windows reject DISTINCT
     // aggregates, so the idiom is collect_list over the frame ->
@@ -611,12 +571,12 @@ private[graft] object AggregateQueries {
 
     // Event-time RANGE frame with an INTERVAL bound (trailing 30 calendar
     // days, not 30 rows) — dialect-shared text on both engines
-    CatalogEntry("window_interval_range",
-      (s, d) => {
-        T(s, d, "orders").createOrReplaceTempView("orders")
-        s.sql(intervalRangeSql)
-      },
-      Some(intervalRangeSql)),
+    sharedSqlEntry("window_interval_range", Seq("orders"),
+      """SELECT o_orderkey, o_custkey,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+        |    PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE)
+        |    RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW) AS DOUBLE) AS trailing_30d
+        |FROM orders""".stripMargin),
 
     // Forward fill (last non-null carried forward) via IGNORE NULLS window —
     // the gap-repair idiom for sparse sensor/feature series
@@ -670,8 +630,8 @@ private[graft] object AggregateQueries {
           .join(T(s, d, "customer"), col("o_custkey") === col("c_custkey"))
           .join(T(s, d, "nation"), col("c_nationkey") === col("n_nationkey"))
           .groupBy(col("n_name"))
-          .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-            .cast("double").as("revenue"))
+          .agg(Cols.moneySum(col("o_totalprice")).as("revenue"))
+        // unpartitioned on purpose: the frame is the 25 nation rows of the group-by
         val w = Window.orderBy(col("revenue").desc, col("n_name"))
         rev.withColumn("quartile", ntile(4).over(w).cast("long"))
       },

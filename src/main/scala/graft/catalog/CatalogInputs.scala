@@ -5,15 +5,23 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Inputs shared by every catalog family: the sf tables (read through
-  * [[graft.Tables]]), the documents and embeddings tables, and the two
-  * views of the events table. The one place the families read data from;
-  * it reads nothing else in the catalog.
+  * [[graft.Tables]]), the documents and embeddings tables, the two views
+  * of the events table, and the dialect-shared SQL entry. It reads
+  * nothing else in the catalog.
   */
 private[graft] object CatalogInputs {
 
   def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
   def docs(s: SparkSession, d: String): DataFrame = T(s, d, "documents")
   def embs(s: SparkSession, d: String): DataFrame = T(s, d, "embeddings")
+
+  /** An entry whose one SQL text runs verbatim on Spark's parser, over temp
+    * views of `tables`, and on DuckDB as its own oracle. */
+  def sharedSqlEntry(name: String, tables: Seq[String], sql: String): CatalogEntry =
+    CatalogEntry(name, (s, d) => {
+      tables.foreach(t => T(s, d, t).createOrReplaceTempView(t))
+      s.sql(sql)
+    }, Some(sql))
 
   /** events.parquet stores ts as TIMESTAMP(MICROS), no-tz → TIMESTAMP_NTZ
     * on read (the r9 driver corpus; earlier corpora wrote TIMESTAMP(NANOS),

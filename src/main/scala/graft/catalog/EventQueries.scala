@@ -4,8 +4,9 @@ package catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Cols
 import graft.functions.Cols.moneySumSql
 import CatalogInputs._
 
@@ -17,6 +18,8 @@ import CatalogInputs._
   */
 private[graft] object EventQueries {
 
+  /** Hourly event counts and value totals: the oracle of `events_hourly`
+    * and of its streaming twin `events_hourly_stream`. */
   private val eventsHourlySql =
     s"""SELECT date_trunc('hour', ts) AS hour_start, event_type,
       |  COUNT(*) AS cnt,
@@ -36,13 +39,10 @@ private[graft] object EventQueries {
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(
           count(lit(1)).as("cnt"),
-          sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType).as("total_value"))
+          Cols.moneySum(col("value"), 6).as("total_value"))
         .select(col("window.start").as("hour_start"), col("event_type"),
           col("cnt"), col("total_value")),
-      Some(s"""SELECT date_trunc('hour', ts) AS hour_start, event_type,
-        |  COUNT(*) AS cnt,
-        |  ${moneySumSql("value", 6)} AS total_value
-        |FROM events WHERE ts IS NOT NULL GROUP BY 1, 2""".stripMargin)),
+      Some(eventsHourlySql)),
 
     CatalogEntry("sessionize",
       (s, d) => ops.Sessions.sessionize(eventsRaw(s, d), gapMicros = 1800L * 1000 * 1000),
@@ -75,7 +75,7 @@ private[graft] object EventQueries {
         .where(col("ts").isNotNull) // the events_hourly no-event-time contract
         .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
         .agg(count(lit(1)).as("cnt"),
-          sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType).as("total_value"))
+          Cols.moneySum(col("value"), 6).as("total_value"))
         .select(col("window.start").as("win_start"), col("event_type"),
           col("cnt"), col("total_value")),
       Some(s"""WITH b AS (
@@ -248,7 +248,7 @@ private[graft] object EventQueries {
         .where(col("ts").isNotNull) // the events_hourly no-event-time contract
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType).as("total_value"))
+          Cols.moneySum(col("value"), 6).as("total_value"))
         .select(col("user_id"),
           expr("unix_micros(CAST(session_window.start AS TIMESTAMP))").as("session_start_us"),
           expr("unix_micros(CAST(session_window.end AS TIMESTAMP))").as("session_end_us"),
@@ -453,7 +453,7 @@ private[graft] object EventQueries {
           .groupBy(col("bucket"))
           .agg(count(lit(1)).as("cnt"),
             sum(col("id")).as("sum_id"),
-            sum(col("val").cast(DecimalType(18, 0))).cast("double").as("sum_val"))
+            Cols.moneySum(col("val"), 0).as("sum_val"))
           .writeStream.outputMode("complete").format("memory").queryName(sink)
           // throwaway checkpoint on tmpfs scratch (round-11 item 5): the
           // default disk-backed checkpoint pays per-batch WAL fsyncs —

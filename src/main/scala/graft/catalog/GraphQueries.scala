@@ -5,13 +5,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import CatalogInputs._
+import OracleSql._
 
 /** Graph operators: PageRank, triangle census, k-core and link
   * prediction ([[graft.ops.Graph]]). The oracles unroll the iterative
   * algorithms as SQL CTEs over the same edges.
   */
 private[graft] object GraphQueries {
-
 
   /** User co-activity edge list shared by the three graph entries
     * (triangle_count / kcore_decomposition / link_prediction): users active
@@ -20,13 +20,13 @@ private[graft] object GraphQueries {
     * Θ(n³) triangles no matter the algorithm); minute buckets keep average
     * degree ~30, the realistic sparse regime the operators target. One
     * helper so the bucketing can never drift between the three Spark
-    * builders and their three matching oracle CTEs (review r9).
+    * builders; their oracles share [[OracleSql.coActivityEdgesSql]].
     */
   private def coActivityEdges(s: SparkSession, d: String): DataFrame = {
     val b = eventsRaw(s, d)
       // FLOOR bucket, not `div`: the oracles replay this as
       // date_trunc('minute', ts), which floors — a truncating div would
-      // silently shift pre-epoch events one minute late (QueryCatalog
+      // silently shift pre-epoch events one minute late (CatalogInputs
       // .usBucket scaladoc)
       .select(usBucket("ts_us", 60000000L).as("h"),
         col("event_type"), col("user_id"))
@@ -42,6 +42,9 @@ private[graft] object GraphQueries {
       .filter(col("a.user_id") < col("b.user_id"))
       .select(col("a.user_id").as("src"), col("b.user_id").as("dst")).distinct()
   }
+
+  /** PageRank iterations: the Spark run and the oracle's unrolled CTEs. */
+  private val pageRankIterations = 5
 
   val entries: Seq[CatalogEntry] = Seq(
 
@@ -61,7 +64,7 @@ private[graft] object GraphQueries {
             (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
         // top-30 + label render happen on the driver (the rank vector is
         // already local on the vector path) — no extra Spark sort job
-        ops.Graph.pageRankTopK(edges, "src", "dst", iterations = 5, k = 30,
+        ops.Graph.pageRankTopK(edges, "src", "dst", iterations = pageRankIterations, k = 30,
           renderLocal = node => {
             val l = node.asInstanceOf[Long]
             if (l % 2 == 0) "p:" + (l / 2) else "s:" + (l / 2)
@@ -74,7 +77,7 @@ private[graft] object GraphQueries {
           // partitions are task-launch overhead × iterations
           adjPartitions = 8)
       },
-      Some("""WITH e0 AS (
+      Some(s"""WITH e0 AS (
         |  SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,
         |                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst FROM lineitem
         |  WHERE l_partkey IS NOT NULL AND l_suppkey IS NOT NULL
@@ -82,30 +85,11 @@ private[graft] object GraphQueries {
         |), deg AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1
         |), base AS (SELECT CAST(1000000000000 // COUNT(*) AS BIGINT) AS b FROM deg
         |), it0 AS (SELECT src AS node, (SELECT b FROM base) AS rank FROM deg
-        |), it1 AS (
-        |  SELECT e.dst AS node, CAST((15 * (SELECT b FROM base)) // 100
-        |    + (85 * SUM(r.rank // d.outdeg)) // 100 AS BIGINT) AS rank
-        |  FROM e JOIN it0 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY 1
-        |), it2 AS (
-        |  SELECT e.dst AS node, CAST((15 * (SELECT b FROM base)) // 100
-        |    + (85 * SUM(r.rank // d.outdeg)) // 100 AS BIGINT) AS rank
-        |  FROM e JOIN it1 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY 1
-        |), it3 AS (
-        |  SELECT e.dst AS node, CAST((15 * (SELECT b FROM base)) // 100
-        |    + (85 * SUM(r.rank // d.outdeg)) // 100 AS BIGINT) AS rank
-        |  FROM e JOIN it2 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY 1
-        |), it4 AS (
-        |  SELECT e.dst AS node, CAST((15 * (SELECT b FROM base)) // 100
-        |    + (85 * SUM(r.rank // d.outdeg)) // 100 AS BIGINT) AS rank
-        |  FROM e JOIN it3 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY 1
-        |), it5 AS (
-        |  SELECT e.dst AS node, CAST((15 * (SELECT b FROM base)) // 100
-        |    + (85 * SUM(r.rank // d.outdeg)) // 100 AS BIGINT) AS rank
-        |  FROM e JOIN it4 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY 1
+        |${pageRankStepsSql(pageRankIterations)}
         |)
         |SELECT CASE WHEN node % 2 = 0 THEN 'p:' || CAST(node // 2 AS VARCHAR)
         |            ELSE 's:' || CAST(node // 2 AS VARCHAR) END AS node, rank
-        |FROM it5 ORDER BY rank DESC, node LIMIT 30""".stripMargin)),
+        |FROM it$pageRankIterations ORDER BY rank DESC, node LIMIT 30""".stripMargin)),
 
     // Whole-graph triangle census over the co-activity graph (see
     // coActivityEdges for the minute-bucket rationale). Spark side runs the
@@ -114,13 +98,7 @@ private[graft] object GraphQueries {
     // exactly the shape the operator avoids.
     CatalogEntry("triangle_count",
       (s, d) => ops.Graph.triangleStats(coActivityEdges(s, d)),
-      Some("""WITH b AS (
-        |  SELECT DISTINCT date_trunc('minute', ts) AS h, event_type, user_id FROM events
-        |), e AS (
-        |  SELECT DISTINCT a.user_id AS src, c.user_id AS dst
-        |  FROM b a JOIN b c ON a.h = c.h AND a.event_type = c.event_type
-        |    AND a.user_id < c.user_id
-        |), deg AS (
+      Some(s"""WITH ${coActivityEdgesSql("e")}, deg AS (
         |  SELECT node, COUNT(*) AS deg FROM (
         |    SELECT src AS node FROM e UNION ALL SELECT dst FROM e) u GROUP BY 1
         |), tri AS (
@@ -142,13 +120,7 @@ private[graft] object GraphQueries {
     CatalogEntry("kcore_decomposition",
       (s, d) => ops.Graph.kCore(coActivityEdges(s, d), k = 2)
         .select(col("node").as("user_id"), col("core_deg")),
-      Some("""WITH b AS (
-        |  SELECT DISTINCT date_trunc('minute', ts) AS h, event_type, user_id FROM events
-        |), e0 AS (
-        |  SELECT DISTINCT a.user_id AS src, c.user_id AS dst
-        |  FROM b a JOIN b c ON a.h = c.h AND a.event_type = c.event_type
-        |    AND a.user_id < c.user_id
-        |), sym AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0
+      Some(s"""WITH ${coActivityEdgesSql("e0")}, sym AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0
         |), a0 AS (SELECT DISTINCT src AS node FROM sym
         |), a1 AS (
         |  SELECT s.src AS node FROM sym s JOIN a0 x ON s.src = x.node
@@ -175,13 +147,7 @@ private[graft] object GraphQueries {
     CatalogEntry("link_prediction",
       (s, d) => ops.Graph.commonNeighborScores(coActivityEdges(s, d),
         minCommon = 2, topK = 20),
-      Some("""WITH b AS (
-        |  SELECT DISTINCT date_trunc('minute', ts) AS h, event_type, user_id FROM events
-        |), e AS (
-        |  SELECT DISTINCT a.user_id AS src, c.user_id AS dst
-        |  FROM b a JOIN b c ON a.h = c.h AND a.event_type = c.event_type
-        |    AND a.user_id < c.user_id
-        |), sym AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e
+      Some(s"""WITH ${coActivityEdgesSql("e")}, sym AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e
         |), deg AS (SELECT src AS node, COUNT(*) AS deg FROM sym GROUP BY 1
         |), cn AS (
         |  SELECT a.src AS u, c.dst AS v, COUNT(*) AS common

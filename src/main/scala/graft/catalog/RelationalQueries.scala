@@ -3,7 +3,7 @@ package catalog
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 import graft.etl.{Enrichment, Marts, Validation}
 import graft.functions.Cols
@@ -18,69 +18,6 @@ import CatalogInputs._
   * and the DataSourceV2 batch scan.
   */
 private[graft] object RelationalQueries {
-
-  /** Dialect-shared SQL: runs verbatim on Spark SQL and DuckDB. */
-  val revenueBySegmentSql: String =
-    s"""SELECT c_mktsegment,
-      |  COUNT(DISTINCT o_orderkey) AS n_orders,
-      |  ${moneySumSql("l_extendedprice * (1 - l_discount)", 4)} AS revenue
-      |FROM lineitem
-      |JOIN orders ON l_orderkey = o_orderkey
-      |JOIN customer ON o_custkey = c_custkey
-      |GROUP BY c_mktsegment""".stripMargin
-
-  /** Dialect-shared EXISTS / NOT EXISTS correlated subqueries. */
-  val existsSubquerySql: String =
-    """SELECT c_custkey, c_name FROM customer
-      |WHERE EXISTS (SELECT 1 FROM orders
-      |              WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-      |  AND NOT EXISTS (SELECT 1 FROM orders
-      |                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')""".stripMargin
-
-  /** Dialect-shared correlated scalar subquery. */
-  val scalarSubquerySql: String =
-    """SELECT o_orderkey, o_totalprice,
-      |  (SELECT c_name FROM customer WHERE c_custkey = o_custkey) AS customer_name
-      |FROM orders
-      |WHERE o_orderstatus = 'P'""".stripMargin
-
-  /** Dialect-shared LIMIT/OFFSET page over a unique ordering. */
-  val limitOffsetSql: String =
-    """SELECT o_orderkey, o_custkey, o_totalprice
-      |FROM orders
-      |ORDER BY o_totalprice DESC, o_orderkey
-      |LIMIT 20 OFFSET 40""".stripMargin
-
-  /** Dialect-shared sequence-gap detection (gaps in the o_orderkey id
-    * space via lead). NOTE the global-order window is one partition — fine
-    * for the gate's id-space size; at 100 TB bucket ids by range first and
-    * find gaps within buckets + at bucket borders.
-    */
-  val sequenceGapsSql: String =
-    """SELECT k + 1 AS gap_start, next_k - 1 AS gap_end, next_k - k - 1 AS gap_len
-      |FROM (SELECT o_orderkey AS k,
-      |        lead(o_orderkey) OVER (ORDER BY o_orderkey) AS next_k
-      |      FROM orders WHERE o_orderstatus = 'F') t
-      |WHERE next_k > k + 1""".stripMargin
-
-  /** Dialect-shared recursive CTE: ancestor chain over the binary-heap
-    * parent function floor((k-1)/2), per nation key.
-    */
-  val recursiveAncestorsSql: String =
-    """WITH RECURSIVE anc AS (
-      |  SELECT n_nationkey AS node, n_nationkey AS anc, 0 AS depth FROM nation
-      |  UNION ALL
-      |  SELECT node, CAST(floor((anc - 1) / 2) AS INT) AS anc, depth + 1 AS depth
-      |  FROM anc WHERE anc > 0
-      |)
-      |SELECT node, anc, depth FROM anc""".stripMargin
-
-  /** Dialect-shared LATERAL correlated subquery (top-3 per nation). */
-  val lateralTopkSql: String =
-    """SELECT n_name, c.c_custkey, c.c_acctbal
-      |FROM nation, LATERAL (SELECT c_custkey, c_acctbal FROM customer
-      |  WHERE c_nationkey = n_nationkey
-      |  ORDER BY c_acctbal DESC, c_custkey LIMIT 3) c""".stripMargin
 
   /** The marts' TPC-H transplant: orders ⋈ customer, with customer →
     * c_custkey/c_name, store → c_nationkey, salesperson → o_custkey and
@@ -298,24 +235,22 @@ private[graft] object RelationalQueries {
 
     // Full SQL surface: the same dialect-shared SQL text runs on Spark's
     // parser (over temp views) AND as the DuckDB oracle
-    CatalogEntry("sql_revenue_by_segment",
-      (s, d) => {
-        T(s, d, "lineitem").createOrReplaceTempView("lineitem")
-        T(s, d, "orders").createOrReplaceTempView("orders")
-        T(s, d, "customer").createOrReplaceTempView("customer")
-        s.sql(revenueBySegmentSql)
-      },
-      Some(revenueBySegmentSql)),
+    sharedSqlEntry("sql_revenue_by_segment", Seq("lineitem", "orders", "customer"),
+      s"""SELECT c_mktsegment,
+        |  COUNT(DISTINCT o_orderkey) AS n_orders,
+        |  ${moneySumSql("l_extendedprice * (1 - l_discount)", 4)} AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_mktsegment""".stripMargin),
 
     // Correlated scalar subquery through the SQL parser (same text both
     // engines)
-    CatalogEntry("sql_scalar_subquery",
-      (s, d) => {
-        T(s, d, "orders").createOrReplaceTempView("orders")
-        T(s, d, "customer").createOrReplaceTempView("customer")
-        s.sql(scalarSubquerySql)
-      },
-      Some(scalarSubquerySql)),
+    sharedSqlEntry("sql_scalar_subquery", Seq("orders", "customer"),
+      """SELECT o_orderkey, o_totalprice,
+        |  (SELECT c_name FROM customer WHERE c_custkey = o_custkey) AS customer_name
+        |FROM orders
+        |WHERE o_orderstatus = 'P'""".stripMargin),
 
     // Calendar decomposition of order timestamps
     CatalogEntry("date_funcs",
@@ -417,13 +352,12 @@ private[graft] object RelationalQueries {
         |WHERE levenshtein(a.n_name, b.n_name) <= 1""".stripMargin)),
 
     // EXISTS / NOT EXISTS correlated subqueries — dialect-shared SQL
-    CatalogEntry("exists_subquery",
-      (s, d) => {
-        T(s, d, "customer").createOrReplaceTempView("customer")
-        T(s, d, "orders").createOrReplaceTempView("orders")
-        s.sql(existsSubquerySql)
-      },
-      Some(existsSubquerySql)),
+    sharedSqlEntry("exists_subquery", Seq("customer", "orders"),
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders
+        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
+        |  AND NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')""".stripMargin),
 
     // Interval join via bucketized equi-join (ops.RangeJoin scaladoc) — the
     // overlapping price bands make it a true range join, not a width_bucket
@@ -611,23 +545,24 @@ private[graft] object RelationalQueries {
         |FROM customer""".stripMargin)),
 
     // Gaps-and-islands over an id space (missing-key ranges) — dialect-
-    // shared lead() window
-    CatalogEntry("sequence_gaps",
-      (s, d) => {
-        T(s, d, "orders").createOrReplaceTempView("orders")
-        s.sql(sequenceGapsSql)
-      },
-      Some(sequenceGapsSql)),
+    // shared lead() window. NOTE the global-order window is one partition —
+    // fine for the gate's id-space size; at 100 TB bucket ids by range first
+    // and find gaps within buckets + at bucket borders.
+    sharedSqlEntry("sequence_gaps", Seq("orders"),
+      """SELECT k + 1 AS gap_start, next_k - 1 AS gap_end, next_k - k - 1 AS gap_len
+        |FROM (SELECT o_orderkey AS k,
+        |        lead(o_orderkey) OVER (ORDER BY o_orderkey) AS next_k
+        |      FROM orders WHERE o_orderstatus = 'F') t
+        |WHERE next_k > k + 1""".stripMargin),
 
     // Deterministic keyset-free pagination: ORDER BY unique key + LIMIT/
     // OFFSET (dialect-shared). At scale prefer keyset pagination (WHERE
     // key > last_seen) — OFFSET still sorts/skips the prefix.
-    CatalogEntry("limit_offset",
-      (s, d) => {
-        T(s, d, "orders").createOrReplaceTempView("orders")
-        s.sql(limitOffsetSql)
-      },
-      Some(limitOffsetSql)),
+    sharedSqlEntry("limit_offset", Seq("orders"),
+      """SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey
+        |LIMIT 20 OFFSET 40""".stripMargin),
 
     // Error-tolerant casts: TRY_CAST yields null instead of failing the job
     // — the ingest posture for dirty columns (a single bad value must not
@@ -856,23 +791,23 @@ private[graft] object RelationalQueries {
     // Recursive CTE: ancestor walk over the implicit binary-heap tree on
     // n_nationkey (parent = floor((k-1)/2)) — transitive closure in one
     // dialect-shared recursive query
-    CatalogEntry("recursive_cte",
-      (s, d) => {
-        T(s, d, "nation").createOrReplaceTempView("nation")
-        s.sql(recursiveAncestorsSql)
-      },
-      Some(recursiveAncestorsSql)),
+    sharedSqlEntry("recursive_cte", Seq("nation"),
+      """WITH RECURSIVE anc AS (
+        |  SELECT n_nationkey AS node, n_nationkey AS anc, 0 AS depth FROM nation
+        |  UNION ALL
+        |  SELECT node, CAST(floor((anc - 1) / 2) AS INT) AS anc, depth + 1 AS depth
+        |  FROM anc WHERE anc > 0
+        |)
+        |SELECT node, anc, depth FROM anc""".stripMargin),
 
     // LATERAL correlated subquery (top-3 customers per nation) — the same
     // dialect-shared text runs on Spark's parser and DuckDB; ties broken by
     // c_custkey for determinism
-    CatalogEntry("lateral_topk",
-      (s, d) => {
-        T(s, d, "nation").createOrReplaceTempView("nation")
-        T(s, d, "customer").createOrReplaceTempView("customer")
-        s.sql(lateralTopkSql)
-      },
-      Some(lateralTopkSql)),
+    sharedSqlEntry("lateral_topk", Seq("nation", "customer"),
+      """SELECT n_name, c.c_custkey, c.c_acctbal
+        |FROM nation, LATERAL (SELECT c_custkey, c_acctbal FROM customer
+        |  WHERE c_nationkey = n_nationkey
+        |  ORDER BY c_acctbal DESC, c_custkey LIMIT 3) c""".stripMargin),
 
     // Multiset set ops: INTERSECT ALL / EXCEPT ALL keep duplicate
     // multiplicity (the distinct forms are in set_ops)
@@ -928,8 +863,7 @@ private[graft] object RelationalQueries {
           .join(dim, col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("l_returnflag"))
           .agg(count(lit(1)).as("cnt"),
-            sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-              .cast(DecimalType(18, 4))).cast("double").as("revenue"))
+            Cols.moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"))
       },
       Some(s"""SELECT l_returnflag, COUNT(*) AS cnt,
         |  ${moneySumSql("l_extendedprice * (1 - l_discount)", 4)} AS revenue
@@ -966,7 +900,7 @@ private[graft] object RelationalQueries {
         .filter(col("id") >= 25000L && col("id") < 75000L)
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as("cnt"),
-          sum(col("val").cast(DecimalType(18, 0))).cast("double").as("sum_val"),
+          Cols.moneySum(col("val"), 0).as("sum_val"),
           min(col("id")).as("min_id"), max(col("id")).as("max_id")),
       Some(s"""WITH g AS (SELECT range AS id FROM range(0, 100000)),
         |v AS (

@@ -707,6 +707,7 @@ private[graft] object StatisticsQueries {
     // cumulative sums run over the 10-row decile frame.
     CatalogEntry("lorenz_deciles",
       (s, d) => {
+        // unpartitioned on purpose: the frame is the 10 decile rows
         val wc = Window.orderBy(col("decile"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         // a customer whose every order is null-priced has NO defined spend:

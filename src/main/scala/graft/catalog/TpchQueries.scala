@@ -15,224 +15,6 @@ import CatalogInputs._
   */
 private[graft] object TpchQueries {
 
-  /** Dialect-shared TPC-H Q3 shape (shipping-priority revenue; the schema
-    * has no o_shippriority, so o_orderpriority stands in). Ties at the
-    * LIMIT boundary broken by l_orderkey.
-    */
-  val tpchQ3Sql: String =
-    s"""SELECT l_orderkey, o_orderdate, o_orderpriority,
-      |  ${moneySumSql("l_extendedprice * (1 - l_discount)", 4)} AS revenue
-      |FROM customer
-      |JOIN orders ON c_custkey = o_custkey
-      |JOIN lineitem ON l_orderkey = o_orderkey
-      |WHERE c_mktsegment = 'BUILDING'
-      |  AND CAST(o_orderdate AS DATE) < DATE '1995-03-15'
-      |  AND CAST(l_shipdate AS DATE) > DATE '1995-03-15'
-      |GROUP BY 1, 2, 3
-      |ORDER BY revenue DESC, l_orderkey
-      |LIMIT 10""".stripMargin
-
-  /** Dialect-shared TPC-H Q5 shape (local-supplier volume). */
-  val tpchQ5Sql: String =
-    s"""SELECT n_name,
-      |  ${moneySumSql("l_extendedprice * (1 - l_discount)", 4)} AS revenue
-      |FROM customer
-      |JOIN orders ON c_custkey = o_custkey
-      |JOIN lineitem ON l_orderkey = o_orderkey
-      |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-      |JOIN nation ON s_nationkey = n_nationkey
-      |JOIN region ON n_regionkey = r_regionkey
-      |WHERE r_name = 'ASIA'
-      |  AND CAST(o_orderdate AS DATE) >= DATE '1995-01-01'
-      |  AND CAST(o_orderdate AS DATE) < DATE '1996-01-01'
-      |GROUP BY 1""".stripMargin
-
-  /** Dialect-shared TPC-H Q18 shape (large-volume customers): a large IN
-    * subquery over an aggregate HAVING — planned as a shuffle-free semi-join
-    * of orders against the re-aggregated lineitem. Group key includes
-    * o_orderkey, so the LIMIT tie-break on (total_price, o_orderkey) is
-    * deterministic.
-    */
-  val tpchQ18Sql: String =
-    s"""SELECT c_name, c_custkey, o_orderkey,
-      |  CAST(o_orderdate AS DATE) AS order_date,
-      |  CAST(o_totalprice AS DOUBLE) AS total_price,
-      |  ${moneySumSql("l_quantity")} AS sum_qty
-      |FROM customer
-      |JOIN orders ON c_custkey = o_custkey
-      |JOIN lineitem ON o_orderkey = l_orderkey
-      |WHERE o_orderkey IN (
-      |  SELECT l_orderkey FROM lineitem
-      |  GROUP BY l_orderkey
-      |  HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 250)
-      |GROUP BY 1, 2, 3, 4, 5
-      |ORDER BY total_price DESC, o_orderkey
-      |LIMIT 100""".stripMargin
-
-  /** Dialect-shared TPC-H Q20 shape (the correlated nested-aggregate
-    * subquery): suppliers who shipped > 40% of a small part's 1995 volume.
-    * The schema has no partsupp, so lineitem self-correlates on l_partkey —
-    * same plan shape as the original's availqty test: IN semi-join feeding
-    * a grouped HAVING whose bound is a correlated scalar aggregate.
-    */
-  val tpchQ20Sql: String =
-    """SELECT s_suppkey, s_name, n_name
-      |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-      |WHERE s_suppkey IN (
-      |  SELECT l1.l_suppkey FROM lineitem l1
-      |  WHERE l1.l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')
-      |    AND CAST(l1.l_shipdate AS DATE) >= DATE '1995-01-01'
-      |    AND CAST(l1.l_shipdate AS DATE) < DATE '1996-01-01'
-      |  GROUP BY l1.l_suppkey, l1.l_partkey
-      |  HAVING SUM(CAST(l1.l_quantity AS DECIMAL(18,2))) > 0.4 * (
-      |    SELECT SUM(CAST(l2.l_quantity AS DECIMAL(18,2))) FROM lineitem l2
-      |    WHERE l2.l_partkey = l1.l_partkey
-      |      AND CAST(l2.l_shipdate AS DATE) >= DATE '1995-01-01'
-      |      AND CAST(l2.l_shipdate AS DATE) < DATE '1996-01-01'))""".stripMargin
-
-  /** Dialect-shared TPC-H Q2 shape (minimum-cost supplier): the schema has
-    * no partsupp, so per-(part, supplier) unit cost derives from lineitem as
-    * MIN(extendedprice/quantity) — a pure-double division, IEEE-identical in
-    * both engines, so the correlated-MIN equality is exact. Plan shape is
-    * the original's: a derived supply table joined to dims, filtered by a
-    * correlated scalar MIN over the same derived table. A zero-quantity
-    * line has no unit cost: NULLIF makes the division NULL (skipped by
-    * MIN) in both engines — under ANSI Spark a bare /0 throws while
-    * DuckDB's double division yields inf, silently corrupting the MIN
-    * (fuzz sweep, round 11).
-    */
-  val tpchQ2Sql: String =
-    """WITH ps AS (
-      |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-      |         MIN(l_extendedprice / NULLIF(l_quantity, 0)) AS ps_supplycost
-      |  FROM lineitem GROUP BY 1, 2)
-      |SELECT s_acctbal, s_name, n_name, p_partkey, p_name, ps_supplycost
-      |FROM part JOIN ps ON p_partkey = ps_partkey
-      |JOIN supplier ON s_suppkey = ps_suppkey
-      |JOIN nation ON s_nationkey = n_nationkey
-      |JOIN region ON n_regionkey = r_regionkey
-      |WHERE p_size = 15 AND p_type = 'STANDARD' AND r_name = 'EUROPE'
-      |  AND ps_supplycost = (SELECT MIN(ps2.ps_supplycost) FROM ps ps2
-      |      JOIN supplier s2 ON s2.s_suppkey = ps2.ps_suppkey
-      |      JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
-      |      JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
-      |      WHERE ps2.ps_partkey = p_partkey AND r2.r_name = 'EUROPE')""".stripMargin
-
-  /** Dialect-shared TPC-H Q4 shape (order-priority checking): EXISTS
-    * semi-join against lineitem. The schema has no commit/receipt dates, so
-    * "late" is shipdate > orderdate + 30 days — same semi-join plan.
-    */
-  val tpchQ4Sql: String =
-    """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-      |FROM orders
-      |WHERE CAST(o_orderdate AS DATE) >= DATE '1996-07-01'
-      |  AND CAST(o_orderdate AS DATE) < DATE '1996-10-01'
-      |  AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey
-      |              AND CAST(l_shipdate AS DATE) > CAST(o_orderdate AS DATE) + INTERVAL 30 DAY)
-      |GROUP BY 1""".stripMargin
-
-  /** Dialect-shared TPC-H Q11 shape (important stock): grouped HAVING
-    * against an uncorrelated scalar aggregate over the same CTE (a
-    * global-fraction cut). Value per (part, supplier) derives from lineitem
-    * (no partsupp); both the group sums and the global sum accumulate as
-    * exact decimals, and the fraction compare happens on one deterministic
-    * double multiply each side.
-    */
-  val tpchQ11Sql: String =
-    """WITH ps AS (
-      |  SELECT l_partkey, l_suppkey, SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS val
-      |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-      |  JOIN nation ON s_nationkey = n_nationkey
-      |  WHERE n_name = 'NATION_7'
-      |  GROUP BY 1, 2)
-      |SELECT l_partkey AS ps_partkey, CAST(SUM(val) AS DOUBLE) AS part_value
-      |FROM ps GROUP BY 1
-      |HAVING CAST(SUM(val) AS DOUBLE) > (SELECT CAST(SUM(val) AS DOUBLE) * 0.001 FROM ps)""".stripMargin
-
-  /** Dialect-shared TPC-H Q15 shape (top supplier): CTE view + scalar MAX
-    * subquery over it. total_revenue is an exact-decimal sum cast to double
-    * on both sides, so the MAX equality is exact.
-    */
-  val tpchQ15Sql: String =
-    s"""WITH revenue AS (
-      |  SELECT l_suppkey AS supplier_no,
-      |    ${moneySumSql("l_extendedprice * (1 - l_discount)", 4)} AS total_revenue
-      |  FROM lineitem
-      |  WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
-      |    AND CAST(l_shipdate AS DATE) < DATE '1996-04-01'
-      |  GROUP BY 1)
-      |SELECT s_suppkey, s_name, total_revenue
-      |FROM supplier JOIN revenue ON s_suppkey = supplier_no
-      |WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)""".stripMargin
-
-  /** Dialect-shared TPC-H Q16 shape (parts/supplier relationship count):
-    * COUNT(DISTINCT) under a null-aware NOT IN anti-join (complaint
-    * suppliers → negative account balance stands in for the comment LIKE).
-    */
-  val tpchQ16Sql: String =
-    """SELECT p_brand, p_type, p_size, CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-      |FROM lineitem JOIN part ON p_partkey = l_partkey
-      |WHERE p_brand <> 'Brand#3' AND p_type NOT IN ('PROMO', 'ECONOMY')
-      |  AND p_size IN (1, 4, 7, 10, 13, 16, 19, 22)
-      |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-      |GROUP BY 1, 2, 3""".stripMargin
-
-  /** Dialect-shared TPC-H Q17 shape (small-quantity-order revenue): a
-    * correlated scalar AVG per part. l_quantity is whole-valued, so the
-    * double AVG is exact regardless of either engine's summation order, and
-    * the 0.2× cut is one deterministic multiply.
-    */
-  val tpchQ17Sql: String =
-    s"""SELECT CAST(${moneySumSql("l_extendedprice")} / 7.0 AS DOUBLE) AS avg_yearly
-      |FROM lineitem JOIN part ON p_partkey = l_partkey
-      |WHERE p_brand = 'Brand#5' AND p_type = 'SMALL'
-      |  AND l_quantity < (SELECT 0.2 * AVG(l2.l_quantity) FROM lineitem l2
-      |                    WHERE l2.l_partkey = p_partkey)""".stripMargin
-
-  /** Dialect-shared TPC-H Q21 shape (suppliers who kept orders waiting):
-    * the double-correlated EXISTS / NOT EXISTS pair on the same fact —
-    * "this supplier shipped late on a multi-supplier order where no other
-    * supplier was late". Late = shipdate > orderdate + 60 days (no
-    * commit/receipt dates in the schema).
-    */
-  val tpchQ21Sql: String =
-    """SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-      |FROM supplier
-      |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-      |JOIN orders ON o_orderkey = l1.l_orderkey
-      |JOIN nation ON s_nationkey = n_nationkey
-      |WHERE o_orderstatus = 'F' AND n_name IN ('NATION_3', 'NATION_4', 'NATION_5')
-      |  AND CAST(l1.l_shipdate AS DATE) > CAST(o_orderdate AS DATE) + INTERVAL 60 DAY
-      |  AND EXISTS (SELECT 1 FROM lineitem l2
-      |              WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-      |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-      |                  WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-      |                  AND CAST(l3.l_shipdate AS DATE) > CAST(o_orderdate AS DATE) + INTERVAL 60 DAY)
-      |GROUP BY 1""".stripMargin
-
-  /** Dialect-shared TPC-H Q22 shape (global sales opportunity): an
-    * uncorrelated scalar-AVG cut plus a NOT EXISTS anti-join. No c_phone in
-    * the schema, so country code = c_nationkey % 10; "no orders" becomes
-    * "no open ('O') orders" (every synthetic customer has some order). The
-    * AVG threshold is computed as exact-decimal SUM cast to double, divided
-    * by the count — one IEEE division, identical both engines (a native
-    * decimal AVG would round at engine-specific scales).
-    */
-  val tpchQ22Sql: String =
-    s"""SELECT cntrycode, CAST(COUNT(*) AS BIGINT) AS numcust,
-      |  ${moneySumSql("c_acctbal")} AS totacctbal
-      |FROM (
-      |  SELECT CAST(c_nationkey % 10 AS INT) AS cntrycode, c_acctbal, c_custkey
-      |  FROM customer
-      |  WHERE c_nationkey % 10 IN (1, 3, 5, 7, 9)
-      |    AND c_acctbal > (SELECT ${moneySumSql("c_acctbal")} / COUNT(*)
-      |                     FROM customer
-      |                     WHERE c_acctbal > 0.0 AND c_nationkey % 10 IN (1, 3, 5, 7, 9))
-      |) custsale
-      |WHERE NOT EXISTS (SELECT 1 FROM orders
-      |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
-      |GROUP BY 1""".stripMargin
-
   val entries: Seq[CatalogEntry] = Seq(
 
     // TPC-H Q1-shaped pricing summary: filter + wide aggregate, the classic
@@ -244,13 +26,14 @@ private[graft] object TpchQueries {
         .agg(
           Cols.moneySum(col("l_quantity")).as("sum_qty"),
           Cols.moneySum(col("l_extendedprice")).as("sum_base_price"),
-          sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-            .cast(DecimalType(18, 4))).cast(DoubleType).as("sum_disc_price"),
+          Cols.moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
+            .as("sum_disc_price"),
           // 3×2-dp factors ⇒ exactly 6 decimal digits: scale 6 is lossless;
           // scale 4 would round at a tie and Spark (shortest-string) vs
           // DuckDB (binary) disagree on ties
-          sum((col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax")))
-            .cast(DecimalType(18, 6))).cast(DoubleType).as("sum_charge"),
+          Cols.moneySum(
+            col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax")), 6)
+            .as("sum_charge"),
           Cols.moneyAvg(col("l_quantity")).as("avg_qty"),
           Cols.moneyAvg(col("l_extendedprice")).as("avg_price"),
           count(lit(1)).as("count_order")),
@@ -267,38 +50,78 @@ private[graft] object TpchQueries {
         |GROUP BY 1, 2""".stripMargin)),
 
     // TPC-H Q3/Q5 shapes as dialect-shared SQL — the canonical selective
-    // multi-join aggregates; filters push to every scan, dims broadcast
-    CatalogEntry("tpch_q3",
-      (s, d) => {
-        Seq("customer", "orders", "lineitem").foreach(t =>
-          T(s, d, t).createOrReplaceTempView(t))
-        s.sql(tpchQ3Sql)
-      },
-      Some(tpchQ3Sql)),
+    // multi-join aggregates; filters push to every scan, dims broadcast.
+    // Q3 is shipping-priority revenue: the schema has no o_shippriority, so
+    // o_orderpriority stands in. Ties at the LIMIT boundary broken by
+    // l_orderkey.
+    sharedSqlEntry("tpch_q3", Seq("customer", "orders", "lineitem"),
+      s"""SELECT l_orderkey, o_orderdate, o_orderpriority,
+        |  ${moneySumSql("l_extendedprice * (1 - l_discount)", 4)} AS revenue
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON l_orderkey = o_orderkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND CAST(o_orderdate AS DATE) < DATE '1995-03-15'
+        |  AND CAST(l_shipdate AS DATE) > DATE '1995-03-15'
+        |GROUP BY 1, 2, 3
+        |ORDER BY revenue DESC, l_orderkey
+        |LIMIT 10""".stripMargin),
 
-    CatalogEntry("tpch_q5",
-      (s, d) => {
-        Seq("customer", "orders", "lineitem", "supplier", "nation", "region")
-          .foreach(t => T(s, d, t).createOrReplaceTempView(t))
-        s.sql(tpchQ5Sql)
-      },
-      Some(tpchQ5Sql)),
+    // Dialect-shared TPC-H Q5 shape (local-supplier volume).
+    sharedSqlEntry("tpch_q5", Seq("customer", "orders", "lineitem", "supplier", "nation", "region"),
+      s"""SELECT n_name,
+        |  ${moneySumSql("l_extendedprice * (1 - l_discount)", 4)} AS revenue
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON l_orderkey = o_orderkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |  AND CAST(o_orderdate AS DATE) >= DATE '1995-01-01'
+        |  AND CAST(o_orderdate AS DATE) < DATE '1996-01-01'
+        |GROUP BY 1""".stripMargin),
 
-    CatalogEntry("tpch_q18",
-      (s, d) => {
-        Seq("customer", "orders", "lineitem").foreach(t =>
-          T(s, d, t).createOrReplaceTempView(t))
-        s.sql(tpchQ18Sql)
-      },
-      Some(tpchQ18Sql)),
+    // Dialect-shared TPC-H Q18 shape (large-volume customers): a large IN
+    // subquery over an aggregate HAVING — planned as a shuffle-free semi-join
+    // of orders against the re-aggregated lineitem. Group key includes
+    // o_orderkey, so the LIMIT tie-break on (total_price, o_orderkey) is
+    // deterministic.
+    sharedSqlEntry("tpch_q18", Seq("customer", "orders", "lineitem"),
+      s"""SELECT c_name, c_custkey, o_orderkey,
+        |  CAST(o_orderdate AS DATE) AS order_date,
+        |  CAST(o_totalprice AS DOUBLE) AS total_price,
+        |  ${moneySumSql("l_quantity")} AS sum_qty
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |WHERE o_orderkey IN (
+        |  SELECT l_orderkey FROM lineitem
+        |  GROUP BY l_orderkey
+        |  HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 250)
+        |GROUP BY 1, 2, 3, 4, 5
+        |ORDER BY total_price DESC, o_orderkey
+        |LIMIT 100""".stripMargin),
 
-    CatalogEntry("tpch_q20",
-      (s, d) => {
-        Seq("supplier", "nation", "lineitem", "part").foreach(t =>
-          T(s, d, t).createOrReplaceTempView(t))
-        s.sql(tpchQ20Sql)
-      },
-      Some(tpchQ20Sql)),
+    // Dialect-shared TPC-H Q20 shape (the correlated nested-aggregate
+    // subquery): suppliers who shipped > 40% of a small part's 1995 volume.
+    // The schema has no partsupp, so lineitem self-correlates on l_partkey —
+    // same plan shape as the original's availqty test: IN semi-join feeding
+    // a grouped HAVING whose bound is a correlated scalar aggregate.
+    sharedSqlEntry("tpch_q20", Seq("supplier", "nation", "lineitem", "part"),
+      """SELECT s_suppkey, s_name, n_name
+        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |WHERE s_suppkey IN (
+        |  SELECT l1.l_suppkey FROM lineitem l1
+        |  WHERE l1.l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')
+        |    AND CAST(l1.l_shipdate AS DATE) >= DATE '1995-01-01'
+        |    AND CAST(l1.l_shipdate AS DATE) < DATE '1996-01-01'
+        |  GROUP BY l1.l_suppkey, l1.l_partkey
+        |  HAVING SUM(CAST(l1.l_quantity AS DECIMAL(18,2))) > 0.4 * (
+        |    SELECT SUM(CAST(l2.l_quantity AS DECIMAL(18,2))) FROM lineitem l2
+        |    WHERE l2.l_partkey = l1.l_partkey
+        |      AND CAST(l2.l_shipdate AS DATE) >= DATE '1995-01-01'
+        |      AND CAST(l2.l_shipdate AS DATE) < DATE '1996-01-01'))""".stripMargin),
 
     // TPC-H Q7 shape (volume shipping between two nations), DataFrame API:
     // the big fact joins shuffle on their keys; the two nation dims are
@@ -446,25 +269,45 @@ private[graft] object TpchQueries {
         |WHERE CAST(l_shipdate AS DATE) >= DATE '1995-09-01'
         |  AND CAST(l_shipdate AS DATE) < DATE '1995-10-01'""".stripMargin)),
 
-    // TPC-H Q2 shape: correlated-MIN over a derived supply table. Both
-    // sides of the min-cost equality are the same double division, so the
-    // filter is exact. The ps CTE is tiny relative to lineitem (one row per
-    // (part, supplier) seen) — at 100 TB it aggregates map-side first.
-    CatalogEntry("tpch_q2",
-      (s, d) => {
-        Seq("part", "supplier", "nation", "region", "lineitem").foreach(t =>
-          T(s, d, t).createOrReplaceTempView(t))
-        s.sql(tpchQ2Sql)
-      },
-      Some(tpchQ2Sql)),
+    // Dialect-shared TPC-H Q2 shape (minimum-cost supplier): the schema has
+    // no partsupp, so per-(part, supplier) unit cost derives from lineitem as
+    // MIN(extendedprice/quantity) — a pure-double division, IEEE-identical in
+    // both engines, so the correlated-MIN equality is exact. Plan shape is
+    // the original's: a derived supply table joined to dims, filtered by a
+    // correlated scalar MIN over the same derived table. A zero-quantity
+    // line has no unit cost: NULLIF makes the division NULL (skipped by
+    // MIN) in both engines — under ANSI Spark a bare /0 throws while
+    // DuckDB's double division yields inf, silently corrupting the MIN
+    // (fuzz sweep, round 11). The ps CTE is tiny relative to lineitem (one
+    // row per (part, supplier) seen) — at 100 TB it aggregates map-side first.
+    sharedSqlEntry("tpch_q2", Seq("part", "supplier", "nation", "region", "lineitem"),
+      """WITH ps AS (
+        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+        |         MIN(l_extendedprice / NULLIF(l_quantity, 0)) AS ps_supplycost
+        |  FROM lineitem GROUP BY 1, 2)
+        |SELECT s_acctbal, s_name, n_name, p_partkey, p_name, ps_supplycost
+        |FROM part JOIN ps ON p_partkey = ps_partkey
+        |JOIN supplier ON s_suppkey = ps_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE p_size = 15 AND p_type = 'STANDARD' AND r_name = 'EUROPE'
+        |  AND ps_supplycost = (SELECT MIN(ps2.ps_supplycost) FROM ps ps2
+        |      JOIN supplier s2 ON s2.s_suppkey = ps2.ps_suppkey
+        |      JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
+        |      JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
+        |      WHERE ps2.ps_partkey = p_partkey AND r2.r_name = 'EUROPE')""".stripMargin),
 
-    CatalogEntry("tpch_q4",
-      (s, d) => {
-        Seq("orders", "lineitem").foreach(t =>
-          T(s, d, t).createOrReplaceTempView(t))
-        s.sql(tpchQ4Sql)
-      },
-      Some(tpchQ4Sql)),
+    // Dialect-shared TPC-H Q4 shape (order-priority checking): EXISTS
+    // semi-join against lineitem. The schema has no commit/receipt dates, so
+    // "late" is shipdate > orderdate + 30 days — same semi-join plan.
+    sharedSqlEntry("tpch_q4", Seq("orders", "lineitem"),
+      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
+        |FROM orders
+        |WHERE CAST(o_orderdate AS DATE) >= DATE '1996-07-01'
+        |  AND CAST(o_orderdate AS DATE) < DATE '1996-10-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey
+        |              AND CAST(l_shipdate AS DATE) > CAST(o_orderdate AS DATE) + INTERVAL 30 DAY)
+        |GROUP BY 1""".stripMargin),
 
     // TPC-H Q6 shape (forecast revenue), DataFrame API: the one-table
     // filter-and-aggregate. All three predicates reach the parquet scan
@@ -515,13 +358,22 @@ private[graft] object TpchQueries {
         |  WHERE p_name LIKE '%red%') profit
         |GROUP BY 1, 2""".stripMargin)),
 
-    CatalogEntry("tpch_q11",
-      (s, d) => {
-        Seq("lineitem", "supplier", "nation").foreach(t =>
-          T(s, d, t).createOrReplaceTempView(t))
-        s.sql(tpchQ11Sql)
-      },
-      Some(tpchQ11Sql)),
+    // Dialect-shared TPC-H Q11 shape (important stock): grouped HAVING
+    // against an uncorrelated scalar aggregate over the same CTE (a
+    // global-fraction cut). Value per (part, supplier) derives from lineitem
+    // (no partsupp); both the group sums and the global sum accumulate as
+    // exact decimals, and the fraction compare happens on one deterministic
+    // double multiply each side.
+    sharedSqlEntry("tpch_q11", Seq("lineitem", "supplier", "nation"),
+      """WITH ps AS (
+        |  SELECT l_partkey, l_suppkey, SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS val
+        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  WHERE n_name = 'NATION_7'
+        |  GROUP BY 1, 2)
+        |SELECT l_partkey AS ps_partkey, CAST(SUM(val) AS DOUBLE) AS part_value
+        |FROM ps GROUP BY 1
+        |HAVING CAST(SUM(val) AS DOUBLE) > (SELECT CAST(SUM(val) AS DOUBLE) * 0.001 FROM ps)""".stripMargin),
 
     // TPC-H Q12 shape (priority classes per flag), DataFrame API: one
     // shuffle join then conditional long sums. No l_shipmode in the schema,
@@ -568,29 +420,42 @@ private[graft] object TpchQueries {
         |      GROUP BY c_custkey) c_orders
         |GROUP BY 1""".stripMargin)),
 
-    CatalogEntry("tpch_q15",
-      (s, d) => {
-        Seq("supplier", "lineitem").foreach(t =>
-          T(s, d, t).createOrReplaceTempView(t))
-        s.sql(tpchQ15Sql)
-      },
-      Some(tpchQ15Sql)),
+    // Dialect-shared TPC-H Q15 shape (top supplier): CTE view + scalar MAX
+    // subquery over it. total_revenue is an exact-decimal sum cast to double
+    // on both sides, so the MAX equality is exact.
+    sharedSqlEntry("tpch_q15", Seq("supplier", "lineitem"),
+      s"""WITH revenue AS (
+        |  SELECT l_suppkey AS supplier_no,
+        |    ${moneySumSql("l_extendedprice * (1 - l_discount)", 4)} AS total_revenue
+        |  FROM lineitem
+        |  WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
+        |    AND CAST(l_shipdate AS DATE) < DATE '1996-04-01'
+        |  GROUP BY 1)
+        |SELECT s_suppkey, s_name, total_revenue
+        |FROM supplier JOIN revenue ON s_suppkey = supplier_no
+        |WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)""".stripMargin),
 
-    CatalogEntry("tpch_q16",
-      (s, d) => {
-        Seq("part", "supplier", "lineitem").foreach(t =>
-          T(s, d, t).createOrReplaceTempView(t))
-        s.sql(tpchQ16Sql)
-      },
-      Some(tpchQ16Sql)),
+    // Dialect-shared TPC-H Q16 shape (parts/supplier relationship count):
+    // COUNT(DISTINCT) under a null-aware NOT IN anti-join (complaint
+    // suppliers → negative account balance stands in for the comment LIKE).
+    sharedSqlEntry("tpch_q16", Seq("part", "supplier", "lineitem"),
+      """SELECT p_brand, p_type, p_size, CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
+        |FROM lineitem JOIN part ON p_partkey = l_partkey
+        |WHERE p_brand <> 'Brand#3' AND p_type NOT IN ('PROMO', 'ECONOMY')
+        |  AND p_size IN (1, 4, 7, 10, 13, 16, 19, 22)
+        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        |GROUP BY 1, 2, 3""".stripMargin),
 
-    CatalogEntry("tpch_q17",
-      (s, d) => {
-        Seq("part", "lineitem").foreach(t =>
-          T(s, d, t).createOrReplaceTempView(t))
-        s.sql(tpchQ17Sql)
-      },
-      Some(tpchQ17Sql)),
+    // Dialect-shared TPC-H Q17 shape (small-quantity-order revenue): a
+    // correlated scalar AVG per part. l_quantity is whole-valued, so the
+    // double AVG is exact regardless of either engine's summation order, and
+    // the 0.2× cut is one deterministic multiply.
+    sharedSqlEntry("tpch_q17", Seq("part", "lineitem"),
+      s"""SELECT CAST(${moneySumSql("l_extendedprice")} / 7.0 AS DOUBLE) AS avg_yearly
+        |FROM lineitem JOIN part ON p_partkey = l_partkey
+        |WHERE p_brand = 'Brand#5' AND p_type = 'SMALL'
+        |  AND l_quantity < (SELECT 0.2 * AVG(l2.l_quantity) FROM lineitem l2
+        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin),
 
     // TPC-H Q19 shape (disjunctive predicates), DataFrame API: the classic
     // OR-of-conjunctions. The equi key (partkey) is a shared conjunct, so
@@ -614,20 +479,46 @@ private[graft] object TpchQueries {
         |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
         |   OR (p_brand = 'Brand#4' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""".stripMargin)),
 
-    CatalogEntry("tpch_q21",
-      (s, d) => {
-        Seq("supplier", "lineitem", "orders", "nation").foreach(t =>
-          T(s, d, t).createOrReplaceTempView(t))
-        s.sql(tpchQ21Sql)
-      },
-      Some(tpchQ21Sql)),
+    // Dialect-shared TPC-H Q21 shape (suppliers who kept orders waiting):
+    // the double-correlated EXISTS / NOT EXISTS pair on the same fact —
+    // "this supplier shipped late on a multi-supplier order where no other
+    // supplier was late". Late = shipdate > orderdate + 60 days (no
+    // commit/receipt dates in the schema).
+    sharedSqlEntry("tpch_q21", Seq("supplier", "lineitem", "orders", "nation"),
+      """SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
+        |FROM supplier
+        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
+        |JOIN orders ON o_orderkey = l1.l_orderkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |WHERE o_orderstatus = 'F' AND n_name IN ('NATION_3', 'NATION_4', 'NATION_5')
+        |  AND CAST(l1.l_shipdate AS DATE) > CAST(o_orderdate AS DATE) + INTERVAL 60 DAY
+        |  AND EXISTS (SELECT 1 FROM lineitem l2
+        |              WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |                  WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
+        |                  AND CAST(l3.l_shipdate AS DATE) > CAST(o_orderdate AS DATE) + INTERVAL 60 DAY)
+        |GROUP BY 1""".stripMargin),
 
-    CatalogEntry("tpch_q22",
-      (s, d) => {
-        Seq("customer", "orders").foreach(t =>
-          T(s, d, t).createOrReplaceTempView(t))
-        s.sql(tpchQ22Sql)
-      },
-      Some(tpchQ22Sql)),
+    // Dialect-shared TPC-H Q22 shape (global sales opportunity): an
+    // uncorrelated scalar-AVG cut plus a NOT EXISTS anti-join. No c_phone in
+    // the schema, so country code = c_nationkey % 10; "no orders" becomes
+    // "no open ('O') orders" (every synthetic customer has some order). The
+    // AVG threshold is computed as exact-decimal SUM cast to double, divided
+    // by the count — one IEEE division, identical both engines (a native
+    // decimal AVG would round at engine-specific scales).
+    sharedSqlEntry("tpch_q22", Seq("customer", "orders"),
+      s"""SELECT cntrycode, CAST(COUNT(*) AS BIGINT) AS numcust,
+        |  ${moneySumSql("c_acctbal")} AS totacctbal
+        |FROM (
+        |  SELECT CAST(c_nationkey % 10 AS INT) AS cntrycode, c_acctbal, c_custkey
+        |  FROM customer
+        |  WHERE c_nationkey % 10 IN (1, 3, 5, 7, 9)
+        |    AND c_acctbal > (SELECT ${moneySumSql("c_acctbal")} / COUNT(*)
+        |                     FROM customer
+        |                     WHERE c_acctbal > 0.0 AND c_nationkey % 10 IN (1, 3, 5, 7, 9))
+        |) custsale
+        |WHERE NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
+        |GROUP BY 1""".stripMargin),
   )
 }
