@@ -12,8 +12,8 @@ import CatalogInputs._
 
 /** Aggregates and windows: grouping lattices (rollup, cube, grouping
   * sets), filtered, bit and boolean aggregates, exact and approximate
-  * percentiles, top-k per group, and the ranking, navigation and frame
-  * window family.
+  * percentiles, top-k per group, the ranking, navigation and frame window
+  * family, column profiling, data-quality checks and weighted sampling.
   */
 private[graft] object AggregateQueries {
 

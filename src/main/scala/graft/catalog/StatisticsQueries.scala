@@ -9,9 +9,10 @@ import org.apache.spark.sql.types.DecimalType
 import CatalogInputs._
 
 /** Statistics: moments, regression and correlation, order statistics and
-  * robust scale, distribution tests (chi-square, KS, PSI, AUC), inequality
-  * measures (Gini, Lorenz, HHI), normalization, equi-depth bucketing and
-  * largest-remainder allocation.
+  * robust scale, distribution tests (chi-square, KS, PSI, AUC), effect
+  * size, inequality measures (Gini, Lorenz, HHI), anomaly flags,
+  * normalization, Benford digits, seasonality, the Pareto frontier,
+  * equi-depth bucketing and largest-remainder allocation.
   *
   * Exact-integer or exact-decimal aggregation everywhere a sum crosses a
   * group; doubles only in final single-expression arithmetic with the op
