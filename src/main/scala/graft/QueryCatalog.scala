@@ -46,9 +46,9 @@ object QueryCatalog {
 
   /** Entries that execute a Structured Streaming query (micro-batches +
     * state stores), as opposed to batch plans: every entry whose name
-    * contains `stream`. The bench isolates these in
-    * their own chunk with state-store teardown between queries: a loaded
-    * provider's maintenance churn otherwise bleeds into NEIGHBOR timings
+    * contains `stream`. The bench isolates these in their own chunk with
+    * state-store teardown between queries: a loaded provider's
+    * maintenance churn otherwise bleeds into NEIGHBOR timings
     * (r9 verdict item 1 — dsv2_stream_agg swung 1.86 vs 4.47 s across
     * passes purely from chunk-mates). The stateless (foreachBatch) store
     * streams count too: they are still real StreamingQueries, so a future

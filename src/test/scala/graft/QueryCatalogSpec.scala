@@ -21,6 +21,12 @@ class QueryCatalogSpec extends AnyFunSuite {
     // declared streaming (a new streaming entry that skips the set would
     // silently lose its bench isolation)
     assert(names.filter(_.contains("stream")) === QueryCatalog.streamingNames)
+    // the rule is also how the set is derived, so pin its members too
+    assert(QueryCatalog.streamingNames === Set(
+      "events_hourly_stream", "events_stream_static_join",
+      "events_stream_stream_join", "events_stream_left_join",
+      "events_stream_dedup", "dsv2_stream_agg",
+      "dedup_incremental_stream", "knn_ivf_incremental_stream"))
   }
 
   test("storeBuildNames all exist and cover every persisted-store batch entry") {
