@@ -3,11 +3,11 @@
 # query catalog with every driver-side size gate forced to its distributed
 # branch, then oracle-check the dump against DuckDB exactly like the
 # driver's gate. Every gate lives in graft.ScaleGates (its scaladoc is the
-# gate table: the pageRank vector path; the edge gate ScaleGates.driverLocal
-# in front of the triangleStats / kCore / commonNeighborScores kernels and
+# gate table: the edge gate ScaleGates.driverLocal in front of the pageRank /
+# triangleStats / kCore / commonNeighborScores kernels and
 # connectedComponents' union-find; the groupedMedianMad collect; and the
-# kCore / triangleStats / Distribution broadcast gates). Under the flag
-# every gate closes, at any measured size including zero.
+# pageRank / kCore / triangleStats / Distribution broadcast gates). Under
+# the flag every gate closes, at any measured size including zero.
 #
 # Usage: scripts/forced_fallback_sweep.sh [SF_DIR] [OUT_DIR]
 set -euo pipefail

@@ -10,10 +10,10 @@ import org.apache.spark.sql.types.StructType
   *
   * | site | measured | budget | past the budget |
   * |---|---|---|---|
-  * | `Graph.pageRank`, `pageRankTopK`: rank vector on the driver | nodes | [[DriverNodes]] | shuffle-join iterations, each persisted |
+  * | `Graph.pageRank`, `pageRankTopK` past the edge gate: rank-vector broadcast, per iteration | nodes | [[DriverNodes]] | shuffle joins, each iteration persisted |
   * | `Graph.triangleStats`: degree broadcast | nodes | [[DriverNodes]] | shuffle degree joins |
   * | `Graph.kCore`: alive-set broadcast, per peel | alive nodes | [[DriverNodes]] | shuffle joins |
-  * | [[driverLocal]] in front of `Graph.triangleStats`, `kCore`, `commonNeighborScores` | edges; a null endpoint closes it | [[DriverEdges]] | the distributed plan |
+  * | [[driverLocal]] in front of `Graph.pageRank`, `pageRankTopK`, `triangleStats`, `kCore`, `commonNeighborScores` | edges; a null endpoint closes it | [[DriverEdges]] | the distributed plan |
   * | the two wedge kernels behind it (`triangleStats`, `commonNeighborScores`) | oriented wedges, wedges | [[DriverWedges]] | the kernel declines: the distributed plan |
   * | [[driverLocal]] in front of `Dedup.connectedComponents`' union-find | edges; a null id throws | [[DriverEdges]] (long ids), `DriverEdges / 4` (string ids) | min-label propagation |
   * | `Distribution.groupedRanks`: offsets broadcast | HLL groups | [[BroadcastRows]] | shuffle join |

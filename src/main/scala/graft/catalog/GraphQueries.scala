@@ -49,8 +49,9 @@ private[graft] object GraphQueries {
   val entries: Seq[CatalogEntry] = Seq(
 
     // Integer PageRank over the part↔supplier bipartite graph (ops.Graph):
-    // 5 iterations of shuffle-join + aggregate with scaled-integer ranks,
-    // so the oracle can unroll the SAME iterations in SQL and match
+    // 5 iterations with scaled-integer ranks (on the driver under the edge
+    // gate, shuffle-join + aggregate past it), so the oracle can unroll the
+    // SAME iterations in SQL and match
     // exactly (a double PageRank drifts by engine ulps per iteration).
     // Top-30 tie-break: (rank DESC, node).
     CatalogEntry("pagerank_bipartite",
@@ -58,24 +59,17 @@ private[graft] object GraphQueries {
         // long node ids (parts even, suppliers odd): distinct/shuffle on
         // longs, display labels rendered only on the final 30 rows
         // no pre-distinct: dedupEdges fuses the edge dedup into the
-        // adjacency collect_set, one shuffle instead of two
+        // adjacency (collect_set past the gate, one shuffle instead of two)
         val edges = T(s, d, "lineitem")
           .select((col("l_partkey") * 2).cast("long").as("src"),
             (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-        // top-30 + label render happen on the driver (the rank vector is
-        // already local on the vector path) — no extra Spark sort job
+        // top-30 + label render happen on the driver (the ranks are
+        // already local under the edge gate) — no extra Spark sort job
         ops.Graph.pageRankTopK(edges, "src", "dst", iterations = pageRankIterations, k = 30,
-          renderLocal = node => {
-            val l = node.asInstanceOf[Long]
-            if (l % 2 == 0) "p:" + (l / 2) else "s:" + (l / 2)
-          },
+          renderLocal = l => if (l % 2 == 0) "p:" + (l / 2) else "s:" + (l / 2),
           renderSql = "CASE WHEN node % 2 = 0 THEN 'p:' || CAST(node div 2 AS STRING) " +
             "ELSE 's:' || CAST(node div 2 AS STRING) END",
-          dedupEdges = true,
-          // ~21k adjacency rows at sf0.1: 8 cached partitions, not 32 —
-          // each of the 5 iterations scans the cache once, so near-empty
-          // partitions are task-launch overhead × iterations
-          adjPartitions = 8)
+          dedupEdges = true)
       },
       Some(s"""WITH e0 AS (
         |  SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,

@@ -35,8 +35,7 @@ object Cols {
     s"CAST(SUM(CAST($sqlExpr AS DECIMAL(18,$scale))) AS DOUBLE)"
 
   /** Deterministic average = decimal sum / non-null count (double / long). */
-  def moneyAvg(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast(DoubleType) / count(c)
+  def moneyAvg(c: Column, scale: Int = 2): Column = moneySum(c, scale) / count(c)
 
   /** `yyyy-MM` month bucket from a date/timestamp column, reproducing the
     * reference's `substring(col, 1, 7)`-over-implicit-string-cast idiom

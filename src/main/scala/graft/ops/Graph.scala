@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType,
+  StructField, StructType}
 
 import graft.ScaleGates
 import graft.ScaleGates.localFrame
@@ -17,142 +18,167 @@ import graft.ScaleGates.localFrame
   * SQL). A double-valued PageRank would differ across engines in the last
   * ulp per iteration and drift.
   *
-  * Scale shape: the adjacency (src, dst, outdeg) is built once and cached —
-  * each of the k iterations is one shuffle join + one aggregate against it.
-  * At 100 TB the adjacency would be a bucketed table on src (join without
-  * re-shuffle) and the loop would checkpoint every few iterations to cut
-  * lineage; k is fixed (no convergence count() per pass — the fixed-point
-  * delta check is the dedup_corpus lesson, one job per iteration is the
-  * cost floor).
+  * Scale shape: under the edge gate every kernel runs on the driver over
+  * one collected [[LocalEdges]] index. Past it, PageRank's adjacency is
+  * built once and cached — each of the k iterations is one join + one
+  * aggregate against it. At 100 TB the adjacency would be a bucketed table
+  * on src and the loop would checkpoint every few iterations to cut
+  * lineage; k is fixed (no convergence count() per pass — one job per
+  * iteration is the cost floor).
   */
 object Graph {
 
   /** Fixed-iteration PageRank over an undirected edge list. Returns
     * (node, rank) with rank on the integer scale: init scale/N, update
-    * teleport (15%·scale/N) + damped (85%) contribution sum.
+    * teleport (15%·scale/N) + damped (85%) sum of `rank div outdeg` over
+    * neighbours. Node ids must be integral and come back as longs; any
+    * other id type fails with an IllegalArgumentException (a cast would
+    * turn ids into nulls). `dedupEdges = true` ranks the simple graph (a
+    * pair once, a self-loop once); false keeps edge multiplicity.
     *
-    * Shape (r8 verdict item 2): the adjacency is PRE-GROUPED to one row
-    * per node — (src, outdeg, array&lt;dst&gt;) — in a single aggregation, so
-    * the cached frame is |nodes| rows (not |edges|), the degree join of
-    * the previous shape disappears, and each iteration is one shallow job:
-    * cached-adj scan → broadcast-hash join against the rank vector →
-    * explode → partial-agg map-side → one shuffle of partial sums. The
-    * rank vector (|nodes| rows — already driver-bounded, it was shipped
-    * whole in every broadcast of the previous shape) is COLLECTED between
-    * iterations and re-joined as a local relation: that removes the
-    * per-iteration persist+count job and the re-planned broadcast-exchange
-    * subtree, which dominated the r8 profile. Past `ScaleGates.DriverNodes`
-    * nodes the loop falls back to shuffle joins with per-iteration persist
-    * checkpointing — slower, never driver-fatal (the Distribution gate
-    * discipline).
+    * Within `ScaleGates.DriverEdges` edges the iterations run on the driver
+    * and the result is a local relation. Past the gate the adjacency is
+    * PRE-GROUPED to one row per node — (src, outdeg, array&lt;dst&gt;) — in one
+    * aggregation (collect_set fuses `dedupEdges`' distinct into it), and
+    * each iteration is one shallow job: cached-adj scan → join against the
+    * rank vector (broadcast within `ScaleGates.DriverNodes`) → explode →
+    * partial-agg map-side → one shuffle of partial sums, persisted.
     *
-    * 100 TB hubs: collect_list packs a celebrity node's neighbours into
-    * one row. Contributions are additive, so `hubSalts > 1` splits every
-    * node whose degree exceeds `hubDegreeThreshold` into (src, salt)
-    * sub-rows sharing the TRUE outdeg — each sub-row carries a
+    * 100 TB hubs (past the gate): collect_list packs a celebrity node's
+    * neighbours into one row. Contributions are additive, so `hubSalts > 1`
+    * splits every node whose degree exceeds `hubDegreeThreshold` into
+    * (src, salt) sub-rows sharing the TRUE outdeg — each sub-row carries a
     * deterministic slice of the neighbour list (salt = hash(dst) mod
     * salts), so per-row width is bounded by deg/salts while rank sums are
     * bit-identical to the unsalted plan (property-spec'd). Sub-grouping by
     * (src, salt) keeps the edge-scale shuffle at ONE pass; the true outdeg
-    * re-aggregates over sub-rows (|nodes|·salts scale, not |edges|), and
-    * non-hub sub-rows merge back so the cached adjacency stays |nodes|
-    * rows + ≤salts extra per hub.
+    * re-aggregates over sub-rows, and non-hub sub-rows merge back so the
+    * cached adjacency stays |nodes| rows + ≤salts extra per hub.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 5, scale: Long = 1000000000000L,
       dedupEdges: Boolean = false, hubDegreeThreshold: Long = Long.MaxValue,
-      hubSalts: Int = 1, adjPartitions: Int = 0): DataFrame =
-    pageRankImpl(edges, srcCol, dstCol, iterations, scale,
-      dedupEdges, hubDegreeThreshold, hubSalts, adjPartitions) match {
-      case Left((spark, schema, rows)) => localFrame(spark, rows, schema)
-      case Right(df) => df // the one leaked handle (Dedup cache contract)
-    }
+      hubSalts: Int = 1): DataFrame =
+    pageRankImpl(edges, srcCol, dstCol, iterations, scale, dedupEdges,
+        hubDegreeThreshold, hubSalts)((spark, nodes, ranks) =>
+      localFrame(spark, nodes.indices.map(i => Row(nodes(i), ranks(i))).toArray,
+        StructType(Seq(StructField("node", LongType),
+          StructField("rank", LongType, nullable = false)))),
+      ranks => ranks) // the one leaked handle (Dedup cache contract)
 
-  /** PageRank's top-k, rendered: on the vector path (n within
-    * `ScaleGates.DriverNodes`) the final rank vector is ALREADY
-    * driver-local, so the top-k selection and display-label render happen
-    * in plain Scala — no extra Spark job for a sort the driver can do on an
-    * in-memory array (r9 verdict item 5). Past the gate it degrades to the
-    * distributed orderBy/limit with `renderSql` applied to the node column.
-    * Ordering is (rank DESC, label ASC); labels must be ASCII for the
-    * driver/SQL tie-break to agree (String and UTF8String compare
-    * identically on ASCII).
+  /** PageRank's top-k, rendered. Under the gate the final ranks are
+    * ALREADY driver-local, so the top-k selection and label render happen
+    * in plain Scala — no Spark job for a sort of an in-memory array. Past
+    * the gate it degrades to the distributed orderBy/limit with `renderSql`
+    * applied to the node column. Ordering is (rank DESC, label ASC); labels
+    * must be ASCII for the driver/SQL tie-break to agree (String and
+    * UTF8String compare identically on ASCII).
     *
-    * @param renderLocal label render on the driver (vector path)
-    * @param renderSql   same render as a SQL expression over column name
-    *                    `node` (distributed fallback) — keep semantically
-    *                    identical to renderLocal
+    * @param renderLocal label render on the driver (under the gate)
+    * @param renderSql   same render as a SQL expression over the long column
+    *                    `node` (past the gate) — keep semantically identical
+    *                    to renderLocal
     */
   def pageRankTopK(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, k: Int, renderLocal: Any => String, renderSql: String,
+      iterations: Int, k: Int, renderLocal: Long => String, renderSql: String,
       scale: Long = 1000000000000L, dedupEdges: Boolean = false,
-      hubDegreeThreshold: Long = Long.MaxValue, hubSalts: Int = 1,
-      adjPartitions: Int = 0): DataFrame =
-    pageRankImpl(edges, srcCol, dstCol, iterations, scale,
-      dedupEdges, hubDegreeThreshold, hubSalts, adjPartitions) match {
-      case Left((spark, _, rows)) =>
-        val top = rows.iterator
-          .map(r => (renderLocal(r.get(0)), r.getLong(1)))
-          .toArray
-          .sortBy { case (label, rank) => (-rank, label) }
-          .take(k)
-        val schema = StructType(Seq(
-          StructField("node", StringType, nullable = false),
-          StructField("rank", LongType, nullable = false)))
-        localFrame(spark, top.map { case (l, r) => Row(l, r) }, schema)
-      case Right(df) =>
-        df.select(expr(renderSql).as("node"), col("rank"))
-          .orderBy(col("rank").desc, col("node")).limit(k)
-    }
+      hubDegreeThreshold: Long = Long.MaxValue, hubSalts: Int = 1): DataFrame =
+    pageRankImpl(edges, srcCol, dstCol, iterations, scale, dedupEdges,
+        hubDegreeThreshold, hubSalts)((spark, nodes, ranks) => {
+      val top = nodes.indices.map(i => (renderLocal(nodes(i)), ranks(i)))
+        .sortBy { case (label, rank) => (-rank, label) }.take(k)
+      localFrame(spark, top.map { case (l, r) => Row(l, r) }.toArray,
+        StructType(Seq(StructField("node", StringType, nullable = false),
+          StructField("rank", LongType, nullable = false))))
+    }, ranks => ranks.select(expr(renderSql).as("node"), col("rank"))
+      .orderBy(col("rank").desc, col("node")).limit(k))
 
-  /** Shared machinery: Left((session, schema, final driver-local rank
-    * rows)) on the vector path — nothing left persisted; Right(distributed
-    * ranks) past the gate — one persisted handle leaks by contract.
+  /** Shared machinery: the null-filtered long edge list, persisted once,
+    * through the edge gate. Under it `local` gets the sorted node ids and
+    * their final ranks, and nothing is left persisted; past it `distributed`
+    * gets the persisted rank frame — one handle leaks by contract.
     */
   private def pageRankImpl(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, scale: Long, dedupEdges: Boolean,
-      hubDegreeThreshold: Long, hubSalts: Int, adjPartitions: Int)
-      : Either[(SparkSession, StructType, Array[Row]), DataFrame] = {
+      hubDegreeThreshold: Long, hubSalts: Int)(
+      local: (SparkSession, Array[Long], Array[Long]) => DataFrame,
+      distributed: DataFrame => DataFrame): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
     require(hubSalts >= 1, "hubSalts must be >= 1")
-    // Edges with a NULL endpoint are EXCLUDED: a null node has no identity
-    // to accumulate rank under, and leaving it in diverges engines (one
-    // side's count(*) node census includes the null "node", shifting the
-    // base rank b = scale/|V| and with it EVERY rank value — round-10
-    // sweep). Unlike triangleStats' loud null-id guard (whose concern is
-    // silent count corruption inside a packed min/max), dropping the edge
-    // here is well-defined graph semantics: rank mass simply never flows
-    // through a nameless endpoint. Oracles mirror with src/dst IS NOT NULL.
-    val edgesNN = edges.filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-    val spark = edges.sparkSession
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Prefer INTEGER node ids in `edges`: shuffling/distincting longs is
-    // several times cheaper than strings — render display labels from the
-    // final (tiny) rank vector, not on the edge list.
-    //
-    // dedupEdges = true FUSES the caller's edge-distinct into the adjacency
-    // grouping (collect_set instead of a pre-distinct + collect_list): the
-    // raw directed list unions straight off the scan and pays ONE shuffle
-    // total instead of distinct's shuffle followed by the groupBy's. Leave
-    // it false when multi-edge multiplicity should weight contributions.
-    // (collect_set dedup stays exact under salting: dst determines its salt
-    // bucket, so duplicates always land in the same sub-group.)
-    val transients = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val directed = {
-      val e0 = edgesNN.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      if (dedupEdges) e0
-      else {
-        // the caller's edge expression usually embeds a distinct — cache the
-        // directed list ONCE so downstream consumers read the cache instead
-        // of re-running that shuffle
-        val e = e0.persist(level); transients += e; e
-      }
+    val idTypes = edges.select(col(srcCol), col(dstCol)).schema.map(_.dataType)
+    for ((name, t) <- Seq(srcCol, dstCol).zip(idTypes)) t match {
+      case ByteType | ShortType | IntegerType | LongType => ()
+      case _ => throw new IllegalArgumentException(
+        s"pageRank: node ids must be integral, got $name: ${t.simpleString}")
     }
-    // one-pass symmetrization: the union form evaluated `directed` twice —
-    // a second cache scan on the persisted branch, a second full scan of
-    // the caller's edge expression on the dedupEdges branch
-    val sym = symmetric(directed)
-    val adjPlan =
+    // Edges with a NULL endpoint are EXCLUDED: a null node has no identity
+    // to accumulate rank under, and counting it as a node would shift the
+    // base rank scale/|V| and with it EVERY rank value. Oracles mirror with
+    // src/dst IS NOT NULL.
+    val e = edges.filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
+      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    ScaleGates.driverLocal(e, ScaleGates.DriverEdges) { collected =>
+      val g = indexEdges(collected)
+      Some(local(g.spark, g.nodes, localPageRank(g, iterations, scale, dedupEdges)))
+    }.getOrElse(distributed(
+      distributedPageRank(e, iterations, scale, dedupEdges, hubDegreeThreshold, hubSalts)))
+  }
+
+  private def emptyEdgeList =
+    new IllegalArgumentException("pageRank: empty edge list — no nodes to rank")
+
+  /** Driver-local replica of the iteration loop. Its adjacency is every
+    * symmetrized (from, to) index pair: each distinct pair once when
+    * `dedupEdges` (collect_set — a self-loop counts once), else all of them
+    * (collect_list — outdeg is the multiset degree). Every node is a `to`
+    * of its own edges, so each step ranks every node, as the join does.
+    * Returns the final ranks in `g.nodes` order.
+    */
+  private def localPageRank(g: LocalEdges, iterations: Int, scale: Long,
+      dedupEdges: Boolean): Array[Long] = {
+    val n = g.nodes.length
+    if (n == 0) throw emptyEdgeList
+    val pairs = new Array[Long](2 * g.src.length) // (from << 32) | to
+    for (i <- g.src.indices) {
+      pairs(2 * i) = (g.src(i).toLong << 32) | g.dst(i)
+      pairs(2 * i + 1) = (g.dst(i).toLong << 32) | g.src(i)
+    }
+    var m = pairs.length
+    if (dedupEdges) { // sort, then compact the distinct pairs into the prefix
+      java.util.Arrays.parallelSort(pairs)
+      m = 0
+      for (p <- pairs) if (m == 0 || p != pairs(m - 1)) { pairs(m) = p; m += 1 }
+    }
+    val outdeg = new Array[Long](n)
+    for (j <- 0 until m) outdeg((pairs(j) >>> 32).toInt) += 1
+    val base: Long = scale / n
+    val teleport: Long = (15L * base) / 100L
+    var rank = Array.fill(n)(base)
+    for (_ <- 1 to iterations) {
+      val sum = new Array[Long](n)
+      for (j <- 0 until m) {
+        val from = (pairs(j) >>> 32).toInt
+        sum(pairs(j).toInt) += rank(from) / outdeg(from)
+      }
+      rank = sum.map(s => teleport + (85L * s) / 100L)
+    }
+    rank
+  }
+
+  /** The iteration loop past the edge gate, over the persisted edge frame
+    * `e`, which is released once the adjacency is cached. Returns the final
+    * rank frame, persisted.
+    */
+  private def distributedPageRank(e: DataFrame, iterations: Int, scale: Long,
+      dedupEdges: Boolean, hubDegreeThreshold: Long, hubSalts: Int): DataFrame = {
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val transients = scala.collection.mutable.ArrayBuffer[DataFrame](e)
+    // one-pass symmetrization: the union form scanned `e` twice. With
+    // dedupEdges, collect_set stays exact under salting: dst determines its
+    // salt bucket, so duplicates always land in the same sub-group.
+    val sym = symmetric(e)
+    val adj = (
       if (hubSalts == 1) {
         if (dedupEdges)
           sym.groupBy(col("src"))
@@ -184,60 +210,37 @@ object Graph {
           .select(col("src"), col("outdeg"), col("dsts"))
           .union(joined.filter(col("outdeg") > hubDegreeThreshold)
             .select(col("src"), col("outdeg"), col("dsts")))
-      }
-    // adjPartitions > 0 coalesces the CACHED adjacency: every iteration
-    // launches one stage over it, so on a small-n graph 32 near-empty
-    // cached partitions are pure task-launch overhead × iterations. A
-    // cluster-scale caller leaves 0 (keep the shuffle width).
-    val adj = (if (adjPartitions > 0) adjPlan.coalesce(adjPartitions) else adjPlan)
-      .persist(level)
+      }).persist(level)
     val nRows = adj.count() // one action: fills adj (and any transient cache)
     transients.foreach(_.unpersist())
     if (nRows == 0) { // would otherwise die as a bare `/ by zero` below
       adj.unpersist()
-      throw new IllegalArgumentException("pageRank: empty edge list — no nodes to rank")
+      throw emptyEdgeList
     }
     // under salting a hub occupies several adjacency rows — N is nodes
     val n = if (hubSalts == 1) nRows
       else adj.agg(count_distinct(col("src"))).head().getLong(0)
     val base: Long = scale / n
     val teleport: Long = (15L * base) / 100L
-    def step(ranks: DataFrame, bcast: Boolean) = {
-      val side = if (bcast) broadcast(ranks) else ranks
-      adj.join(side, col("src") === col("node"))
+    val nodes = adj.select(col("src").as("node"))
+    var ranks = (if (hubSalts == 1) nodes else nodes.distinct()).withColumn("rank", lit(base))
+    // each iteration materialized via persist+count (lineage checkpointing)
+    for (_ <- 1 to iterations) {
+      val next = adj
+        .join(ScaleGates.broadcastIf(ranks, n, ScaleGates.DriverNodes),
+          col("src") === col("node"))
         .select(explode(col("dsts")).as("dst"), expr("rank div outdeg").as("contrib"))
         .groupBy(col("dst"))
         .agg(sum(col("contrib")).as("s"))
         .select(col("dst").as("node"),
           expr(s"CAST($teleport + (85 * s) div 100 AS BIGINT)").as("rank"))
+        .persist(level)
+      next.count()
+      ranks.unpersist() // a no-op on the uncached initial vector
+      ranks = next
     }
-    val initNodes = if (hubSalts == 1) adj.select(col("src").as("node"))
-      else adj.select(col("src").as("node")).distinct()
-    val init = initNodes.select(col("node"), lit(base).as("rank"))
-    val rankSchema = StructType(Seq(
-      StructField("node", adj.schema("src").dataType),
-      StructField("rank", LongType, nullable = false)))
-    if (ScaleGates.fits(n, ScaleGates.DriverNodes)) {
-      var rows = step(init, bcast = true).collect()
-      for (_ <- 2 to iterations)
-        rows = step(localFrame(spark, rows, rankSchema), bcast = true).collect()
-      adj.unpersist()
-      Left((spark, rankSchema, rows)) // nothing left persisted
-    } else {
-      // rank vector past driver budget: shuffle joins, each iteration
-      // materialized via persist+count (lineage checkpointing)
-      var ranks = init
-      var prev: Option[DataFrame] = None
-      for (_ <- 1 to iterations) {
-        val next = step(ranks, bcast = false).persist(level)
-        next.count()
-        prev.foreach(_.unpersist())
-        prev = Some(next)
-        ranks = next
-      }
-      adj.unpersist()
-      Right(ranks)
-    }
+    adj.unpersist()
+    ranks
   }
 
   /** Whole-graph triangle statistics over an undirected simple graph given
@@ -660,7 +663,7 @@ object Graph {
       .limit(topK)
       .withColumn("rank", row_number().over(w).cast("long"))
       .select(col("rank"), col("u"), col("v"), col("common"), col("jaccard"))
-    // Size-adaptive driver path (the connectedComponents / pageRank-vector
+    // Size-adaptive driver path (the connectedComponents / pageRank
     // pattern, gated through ScaleGates): the candidate-pair graph behind
     // link prediction is driver-bounded whenever the edge list is (the
     // `ScaleGates.DriverEdges` budget connectedComponents shares), and the

@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+
+import graft.functions.Cols
 
 /** Gap-based sessionization of the events table (batch form; the streaming
   * twin with flatMapGroupsWithState lives in graft.streaming).
@@ -40,7 +41,7 @@ object Sessions {
         min(col("ts_us")).as("session_start_us"),
         max(col("ts_us")).as("session_end_us"),
         count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType).as("total_value"))
+        Cols.moneySum(col("value"), 6).as("total_value"))
   }
 
   /** Ordered funnel per user over `stages` event types: first timestamp of

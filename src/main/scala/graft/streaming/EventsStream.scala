@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.functions.Cols
+
 /** Structured Streaming over the events table.
   *
   * The reference is batch-only (SURVEY.md §2.11); this is the extension the
@@ -91,7 +93,7 @@ object EventsStream {
     .groupBy(window(col("ts"), "1 hour"), col("event_type"))
     .agg(
       count(lit(1)).as("cnt"),
-      sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType).as("total_value"))
+      Cols.moneySum(col("value"), 6).as("total_value"))
     .select(col("window.start").as("hour_start"), col("event_type"),
       col("cnt"), col("total_value"))
 
@@ -178,7 +180,7 @@ object EventsStream {
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"),
-        sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType).as("total_value"))
+        Cols.moneySum(col("value"), 6).as("total_value"))
     val sinkName = "events_dedup_stream_" + UUID.randomUUID().toString.replace("-", "")
     val q = agg.writeStream
       .outputMode("complete")
@@ -455,7 +457,7 @@ object EventsStream {
       .groupBy(col("c_mktsegment"))
       .agg(
         count(lit(1)).as("cnt"),
-        sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType).as("total_value"))
+        Cols.moneySum(col("value"), 6).as("total_value"))
     val sinkName = "events_segment_join_" + UUID.randomUUID().toString.replace("-", "")
     val q = agg.writeStream
       .outputMode("complete")

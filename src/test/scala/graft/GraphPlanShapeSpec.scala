@@ -82,17 +82,18 @@ class GraphPlanShapeSpec extends SparkSpec {
     assert(p.get.indexOf("Window") < p.get.indexOf("TakeOrderedAndProject"), p.get.take(4000))
   }
 
-  test("pagerank_bipartite: fused collect_set adjacency + broadcast rank vector") {
-    val plans = executedPlans("pagerank_bipartite")
+  test("pagerank_bipartite: fused collect_set past the gate, no adjacency under it") {
+    // the distributed branch: dedupEdges=true fuses the edge-distinct into
+    // the adjacency grouping — collect_set in ONE ObjectHashAggregate pass,
+    // no separate distinct
+    val plans = forcedDistributed(executedPlans("pagerank_bipartite"))
     val all = plans.mkString("\n===\n")
-    // dedupEdges=true fuses the edge-distinct into the adjacency grouping:
-    // collect_set in ONE ObjectHashAggregate pass, no separate distinct
     assert(anyPlan(plans)(p =>
       p.contains("ObjectHashAggregate") && p.contains("collect_set")), all.take(4000))
-    // rank-vector joins broadcast under the ScaleGates budget (driver path):
-    // an SMJ here would shuffle the adjacency once per iteration
-    assert(anyPlan(plans)(p =>
-      p.contains("BroadcastHashJoin") && p.contains("dsts")), all.take(4000))
+    // under the edge gate the kernel iterates on the driver: no Spark plan
+    // ever builds the adjacency
+    val local = executedPlans("pagerank_bipartite").mkString("\n===\n")
+    assert(!local.contains("dsts"), local.take(4000))
   }
 
   test("pageRank with hubSalts: the edge-scale shuffle is sub-grouped by (src, salt)") {
@@ -109,8 +110,9 @@ class GraphPlanShapeSpec extends SparkSpec {
         val edges = spark.read.parquet(s"${sf()}/lineitem.parquet")
           .select((col("l_partkey") * 2).cast("long").as("src"),
             (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-        ops.Graph.pageRank(edges, "src", "dst", iterations = 2,
-          dedupEdges = true, hubDegreeThreshold = 10L, hubSalts = 4).collect()
+        // salting exists only past the edge gate
+        forcedDistributed(ops.Graph.pageRank(edges, "src", "dst", iterations = 2,
+          dedupEdges = true, hubDegreeThreshold = 10L, hubSalts = 4).collect())
         var last = -1; var stable = 0
         val deadline = System.currentTimeMillis + 30000
         while (stable < 3 && System.currentTimeMillis < deadline) {

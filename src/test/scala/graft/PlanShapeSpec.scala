@@ -129,7 +129,7 @@ class PlanShapeSpec extends SparkSpec {
   // spec (round-11 verdict item 2). At 100 TB a contract that slips to a
   // post-scan Filter stage is the difference between free row-group
   // pruning and a full-table pass. pagerank_bipartite's src/dst contract
-  // is NOT here: its result frame is driver-local (the rank-vector path),
+  // is NOT here: its result frame is driver-local (the edge-gated kernel),
   // so the lineitem scan never appears in the result's plan — its
   // contract is pinned semantically in NullContractsSpec instead.
   private val contractPushdowns: Seq[(String, Seq[String])] = Seq(

@@ -114,32 +114,48 @@ class AnalyticsOpsSpec extends SparkSpec {
   test("pageRank on an empty edge list fails loudly, leaking no cache") {
     val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
     val base = spark.sparkContext.getPersistentRDDs.size
+    for (forced <- Seq(false, true)) { // the local kernel, then the loop
+      val e = intercept[IllegalArgumentException](
+        if (forced) forcedDistributed(Graph.pageRank(edges, "src", "dst", iterations = 3))
+        else Graph.pageRank(edges, "src", "dst", iterations = 3))
+      assert(e.getMessage.contains("empty edge list"))
+      assert(spark.sparkContext.getPersistentRDDs.size === base)
+    }
+  }
+
+  test("pageRank rejects non-integral node ids before caching anything") {
+    val edges = Seq(("a", "b")).toDF("src", "dst")
+    val base = spark.sparkContext.getPersistentRDDs.size
     val e = intercept[IllegalArgumentException](
       Graph.pageRank(edges, "src", "dst", iterations = 3))
-    assert(e.getMessage.contains("empty edge list"))
+    assert(e.getMessage.contains("node ids must be integral, got src: string"), e.getMessage)
     assert(spark.sparkContext.getPersistentRDDs.size === base)
   }
 
   test("pageRank hub salting: salted ranks are bit-identical to unsalted") {
     // forced hub: star centre 0 ↔ 1..120 plus a sparse ring so non-hub
-    // nodes have degree > 1; threshold 10 splits only the hub
+    // nodes have degree > 1; threshold 10 splits only the hub. Salting
+    // exists only past the edge gate, so every run is forced there.
     val star = (1 to 120).map(i => (0L, i.toLong))
     val ring = (1 to 119).map(i => (i.toLong, (i + 1).toLong))
     val edges = (star ++ ring).toDF("src", "dst")
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val plain = asMap(Graph.pageRank(edges, "src", "dst", iterations = 4))
-    val salted = asMap(Graph.pageRank(edges, "src", "dst", iterations = 4,
-      hubDegreeThreshold = 10L, hubSalts = 4))
-    assert(salted === plain)
-    // dedupEdges path too: double every edge, collect_set dedup under salt
-    val doubled = (star ++ star ++ ring ++ ring).toDF("src", "dst")
-    val plainD = asMap(Graph.pageRank(doubled, "src", "dst", iterations = 4,
-      dedupEdges = true))
-    val saltedD = asMap(Graph.pageRank(doubled, "src", "dst", iterations = 4,
-      dedupEdges = true, hubDegreeThreshold = 10L, hubSalts = 4))
-    assert(saltedD === plainD)
-    assert(plainD === plain) // dedup of doubled edges = the simple graph
+    forcedDistributed {
+      val plain = asMap(Graph.pageRank(edges, "src", "dst", iterations = 4))
+      val salted = asMap(Graph.pageRank(edges, "src", "dst", iterations = 4,
+        hubDegreeThreshold = 10L, hubSalts = 4))
+      assert(salted === plain)
+      // dedupEdges path too: double every edge, collect_set dedup under salt
+      val doubled = (star ++ star ++ ring ++ ring).toDF("src", "dst")
+      val plainD = asMap(Graph.pageRank(doubled, "src", "dst", iterations = 4,
+        dedupEdges = true))
+      val saltedD = asMap(Graph.pageRank(doubled, "src", "dst", iterations = 4,
+        dedupEdges = true, hubDegreeThreshold = 10L, hubSalts = 4))
+      assert(saltedD === plainD)
+      assert(plainD === plain) // dedup of doubled edges = the simple graph
+    }
+    spark.sharedState.cacheManager.clearCache() // the loop leaks by contract
   }
 
   test("pageRankTopK local render matches the Spark sort+render form on both paths") {

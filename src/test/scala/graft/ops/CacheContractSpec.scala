@@ -69,10 +69,10 @@ class CacheContractSpec extends SparkSpec {
     assert(released === 0)
   }
 
-  test("Graph.pageRank (vector path) leaks nothing; result is a local relation") {
+  test("Graph.pageRank (local kernel) leaks nothing; result is a local relation") {
     val edges = Seq((2L, 3L), (2L, 5L), (4L, 3L), (6L, 7L)).toDF("src", "dst")
     val (held, released) = deltaAround(Graph.pageRank(edges, "src", "dst", iterations = 3))
-    assert(held === 0) // collected rank vector — adj/edge caches all released
+    assert(held === 0) // driver-local ranks — the gate's edge cache released
     assert(released === 0)
   }
 

@@ -48,7 +48,21 @@ class ScaleGatesSpec extends SparkSpec {
       .toDF("src", "dst")
   }
 
-  test("pageRankTopK: distributed rank loop + SQL render match the vector path") {
+  test("pageRank: distributed rank loop matches the local kernel, with and without dedup") {
+    import spark.implicits._
+    // duplicate edges, both orientations of (1, 2), a self-loop on 7 and a
+    // hub 20: dedupEdges = true must dedupe the SYMMETRIZED pairs (the
+    // self-loop and the (1, 2)/(2, 1) pair each count once), false keeps
+    // every multiplicity
+    val e = (Seq((1L, 2L), (1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L), (4L, 5L), (5L, 6L),
+      (6L, 4L), (7L, 7L), (7L, 5L), (2L, 4L), (10L, 11L), (11L, 12L), (12L, 13L)) ++
+      (1L to 9L).map(v => (20L, v))).toDF("src", "dst")
+    for (dedup <- Seq(false, true))
+      bothPaths(s"pageRank[dedupEdges=$dedup]")(
+        Graph.pageRank(e, "src", "dst", iterations = 4, dedupEdges = dedup))
+  }
+
+  test("pageRankTopK: distributed rank loop + SQL render match the local kernel") {
     bothPaths("pageRankTopK") {
       Graph.pageRankTopK(edges, "src", "dst", iterations = 3, k = 5,
         renderLocal = n => "n:" + n, renderSql = "concat('n:', CAST(node AS STRING))")
@@ -127,7 +141,8 @@ class ScaleGatesSpec extends SparkSpec {
     val ops = Seq[(String, () => DataFrame)](
       "commonNeighborScores" -> (() => Graph.commonNeighborScores(e, minCommon = 1)),
       "triangleStats" -> (() => Graph.triangleStats(e)),
-      "kCore" -> (() => Graph.kCore(e, k = 2)))
+      "kCore" -> (() => Graph.kCore(e, k = 2)),
+      "pageRank" -> (() => Graph.pageRank(e, "src", "dst", iterations = 3)))
     for ((label, op) <- ops) {
       assert(ranLocally(op()), s"$label: driver-local path declined ids below 2^32")
       bothPaths(s"$label[2^32 - 1]")(op())
@@ -169,7 +184,7 @@ class ScaleGatesSpec extends SparkSpec {
   private val gateSites = Map(
     "ops/Dedup.scala" -> 1,
     "ops/Distribution.scala" -> 3,
-    "ops/Graph.scala" -> 6)
+    "ops/Graph.scala" -> 7)
 
   test("gate sites: every call and budget goes through ScaleGates") {
     import java.nio.file.{Files, Path, Paths}
