@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.functions.Cols
 import graft.functions.Cols.moneySumSql
+import graft.functions.PortableSketches.hash60
 import CatalogInputs._
 
 /** Aggregates and windows: grouping lattices (rollup, cube, grouping
@@ -321,7 +322,7 @@ private[graft] object AggregateQueries {
         // sweep; the > 0 predicate excludes NULL on both engines)
         .where(col("o_totalprice") > 0)
         .withColumn("u",
-          (ops.Replay.hash60(concat(lit("ws:"), col("o_orderkey").cast("string"))) + 1)
+          (hash60(concat(lit("ws:"), col("o_orderkey").cast("string"))) + 1)
             / lit(1152921504606846976.0))
         .withColumn("k", -log(col("u")) / col("o_totalprice"))
         .orderBy(col("k"), col("o_orderkey")).limit(100)

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.DoubleType
 import graft.etl.{Enrichment, Marts, Validation}
 import graft.functions.Cols
 import graft.functions.Cols.moneySumSql
+import graft.functions.PortableSketches.hash60
 import graft.io.Sources
 import CatalogInputs._
 
@@ -652,7 +653,7 @@ private[graft] object RelationalQueries {
         def positions(df: DataFrame): DataFrame = df.select(
           col("p_partkey"), col("actual_member"),
           explode(array((0 until 3).map(i =>
-            ops.Replay.hash60(concat(lit(s"bloom$i:"), col("p_partkey").cast("string"))) % 1024): _*))
+            hash60(concat(lit(s"bloom$i:"), col("p_partkey").cast("string"))) % 1024): _*))
             .as("pos"))
         val parts = T(s, d, "part").withColumn("actual_member", col("p_size") > 47)
         val bits = positions(parts.filter(col("actual_member")))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.PortableSketches.{hash60, hash60Sql}
+
 import CatalogInputs._
 import OracleSql._
 
@@ -19,7 +21,7 @@ import OracleSql._
   */
 private[graft] object TextQueries {
 
-  /** DuckDB replay of [[ops.Replay.minhashCandidates]] (k=64, 16 bands,
+  /** DuckDB replay of [[ops.Dedup.minhashCandidates]] (k=64, 16 bands,
     * 5-shingles, maxBucket 100, est ≥ 0.25) — the full-recompute oracle.
     * Shared verbatim by `dedup_minhash` AND the `dedup_incremental*`
     * entries: the incremental store's contract is exact equivalence with
@@ -76,7 +78,7 @@ private[graft] object TextQueries {
   /** DuckDB CANDIDATE-ALIGNED replay of the verified near-dup pair set
     * (r8 verdict item 4): the same portable minhash signatures, 16×4
     * banding, [2, maxBucket] bucket cap, and integer signature-match floor
-    * as [[ops.Replay.verifiedNearDupPairs]], then exact Jaccard on the
+    * as [[ops.Dedup.verifiedNearDupPairs]], then exact Jaccard on the
     * md5-60bit distinct gram-hash sets — the oracle recomputes the
     * CANDIDATE set too, so equality holds at ANY corpus scale by
     * construction (a brute-force oracle only matches when LSH recall is
@@ -123,9 +125,10 @@ private[graft] object TextQueries {
       |  FROM candf JOIN gs x ON x.doc_id = doc_a JOIN gs y ON y.doc_id = doc_b
       |)""".stripMargin
 
-  /** DuckDB replay of [[ops.Replay.fingerprints]] (winnowing k=8, w=4 over
-    * md5-60bit byte-gram hashes): identical explode → window-min → sorted
-    * distinct pipeline, so `fps` is bit-equal to the Spark frame.
+  /** DuckDB replay of [[ops.TextAnalysis.fingerprints]] (winnowing k=8,
+    * w=4 over md5-60bit character-gram hashes): identical explode →
+    * window-min → sorted distinct pipeline, so `fps` is bit-equal to the
+    * Spark frame.
     */
   private val fingerprintCtes: String =
     raw"""t AS (SELECT doc_id, text, ${normTextSql} AS norm
@@ -256,26 +259,23 @@ private[graft] object TextQueries {
         |FROM (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY weight DESC, term) AS rank FROM w)
         |WHERE rank <= 5""".stripMargin)),
 
-    // Winnowing fingerprints via the REPLAYABLE pipeline (ops.Replay:
-    // md5-60bit gram hashes + the same explode → window-min the oracle
-    // states), projected to scalars: set size + order-stable digest of the
-    // sorted hashes. The one-pass xxhash64 kernel (TextAnalysis
-    // .fingerprints) is the scale path, proven equal to this explode +
-    // window-min algorithm (same hash) by ReplaySpec; the gate pins the
-    // algorithm itself cross-engine.
+    // Winnowing fingerprints (md5-60bit gram hashes; the one-pass kernel
+    // is proven equal to the explode → window-min algorithm the oracle
+    // states by ReplaySpec), projected to scalars: set size +
+    // order-stable digest of the sorted hashes.
     CatalogEntry("doc_fingerprints",
-      (s, d) => ops.Replay.fingerprints(docs(s, d))
+      (s, d) => ops.TextAnalysis.fingerprints(docs(s, d))
         .select(col("doc_id"), col("content_hash"),
           size(col("fingerprint")).cast("long").as("n_fp"),
-          ops.Replay.hash60(concat_ws(",", col("fingerprint").cast("array<string>")))
+          hash60(concat_ws(",", col("fingerprint").cast("array<string>")))
             .as("fp_digest")),
       Some(s"""WITH $fingerprintCtes
         |SELECT doc_id, content_hash, CAST(len(fingerprint) AS BIGINT) AS n_fp,
-        |  ${ops.Replay.hash60Sql("array_to_string(fingerprint, ',')")} AS fp_digest
+        |  ${hash60Sql("array_to_string(fingerprint, ',')")} AS fp_digest
         |FROM fps""".stripMargin)),
 
     CatalogEntry("fingerprint_overlap",
-      (s, d) => ops.Replay.fingerprintOverlapPairs(docs(s, d)),
+      (s, d) => ops.TextAnalysis.fingerprintOverlapPairs(docs(s, d)),
       Some(s"""WITH $fingerprintCtes,
         |inv AS (SELECT doc_id, unnest(fingerprint) AS fp FROM fps),
         |sizes AS (SELECT doc_id, len(fingerprint) AS n_fp FROM fps),
@@ -308,11 +308,9 @@ private[graft] object TextQueries {
     // signatures with HUGEINT arithmetic and replays banding, bucket caps,
     // and the est-Jaccard fraction, pinning the candidate generator itself.
     // est values are multiples of 1/64 (exact doubles), so the >= 0.25 cut
-    // cannot straddle engines. The xxhash64 kernel (Dedup.minhashCandidates)
-    // is the scale path, exercised by dedup_minhash_verified's two-stage
-    // pipeline and DedupSpec.
+    // cannot straddle engines.
     CatalogEntry("dedup_minhash",
-      (s, d) => ops.Replay.minhashCandidates(docs(s, d),
+      (s, d) => ops.Dedup.minhashCandidates(docs(s, d),
         k = 64, bands = 16, shingleLen = 5, maxBucket = 100, minEstJaccard = 0.25),
       Some(minhashCandidatesSql)),
 
@@ -322,11 +320,9 @@ private[graft] object TextQueries {
     // would additionally assert total LSH recall, which is probabilistic
     // (catch rate 1-(1-J^4)^16: ~0.999 at J=0.8, ~0.14 at J=0.31) and
     // provably fails on tiny corpora (sf0.001 has 5 true pairs in the
-    // recall gap; ROUNDLOG r8). Recall contract documented in COVERAGE.md;
-    // the xxhash64 scale path (Dedup.verifiedNearDupPairs) is pinned by
-    // DedupSpec on a corpus whose true pairs sit in the high-recall zone.
+    // recall gap; ROUNDLOG r8). Recall contract documented in COVERAGE.md.
     CatalogEntry("dedup_minhash_verified",
-      (s, d) => ops.Replay.verifiedNearDupPairs(docs(s, d),
+      (s, d) => ops.Dedup.verifiedNearDupPairs(docs(s, d),
         threshold = 0.31, k = 64, bands = 16, shingleLen = 5, maxBucket = 100),
       Some(s"""WITH $verifiedPairsCtes
         |SELECT doc_a, doc_b, shared / (na + nb - shared) AS jaccard
@@ -344,19 +340,17 @@ private[graft] object TextQueries {
     CatalogEntry("dedup_corpus",
       (s, d) => {
         val dd = docs(s, d)
-        val pairs = ops.Replay.verifiedNearDupPairs(dd,
+        val pairs = ops.Dedup.verifiedNearDupPairs(dd,
           threshold = 0.31, k = 64, bands = 16, shingleLen = 5, maxBucket = 100)
         ops.Dedup.dedupCorpus(dd, pairs).select(col("doc_id"), col("lang"), col("source"))
       },
       Some(dedupCorpusSql)),
 
-    // SimHash near-dup pairs via the REPLAYABLE 60-bit variant (md5 token
-    // hashes — ops.Replay.simhashPairs): the oracle recomputes the vote
-    // sums, the bit packing, the 4×15-bit pigeonhole bands, the bucket cap,
-    // and the exact Hamming verify. The 64-bit xxhash64 form
-    // (Dedup.simhashPairs) is the scale path, pinned by DedupSpec.
+    // SimHash near-dup pairs, 60-bit over md5 token hashes: the oracle
+    // recomputes the vote sums, the bit packing, the 4×15-bit pigeonhole
+    // bands, the bucket cap, and the exact Hamming verify.
     CatalogEntry("dedup_simhash",
-      (s, d) => ops.Replay.simhashPairs(docs(s, d), maxHamming = 3, maxBucket = 200),
+      (s, d) => ops.Dedup.simhashPairs(docs(s, d), maxHamming = 3, maxBucket = 200),
       Some(raw"""WITH t AS (SELECT doc_id, ${normTextSql} AS norm
         |      FROM documents),
         |tok AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS tok FROM t),
@@ -712,7 +706,7 @@ private[graft] object TextQueries {
         val cnt = toks.groupBy(col("token")).agg(count(lit(1)).as("true_count"))
         val placed = cnt.select(col("token"), col("true_count"),
           explode(array((0 until 4).map(j => struct(lit(j).as("j"),
-            (ops.Replay.hash60(concat(lit(s"cms$j:"), col("token"))) % 32).as("bucket"))): _*))
+            (hash60(concat(lit(s"cms$j:"), col("token"))) % 32).as("bucket"))): _*))
             .as("p"))
           .select(col("token"), col("true_count"), col("p.j"), col("p.bucket"))
         val counters = placed.groupBy(col("j"), col("bucket"))
@@ -942,7 +936,7 @@ private[graft] object TextQueries {
             weights, "source", "n_docs", seats = 50L)
           .select(col("key").as("source"), col("seats"))
         docs(s, d)
-          .withColumn("hkey", ops.Replay.hash60(concat(lit("split:"),
+          .withColumn("hkey", hash60(concat(lit("split:"),
             col("doc_id").cast("string"))))
           .withColumn("rnk", row_number().over(w).cast("long"))
           .join(broadcast(quotas), "source")
@@ -965,7 +959,7 @@ private[graft] object TextQueries {
         |), r AS (
         |  SELECT doc_id, source,
         |    CAST(row_number() OVER (PARTITION BY source
-        |      ORDER BY ${ops.Replay.hash60Sql("'split:' || CAST(doc_id AS VARCHAR)")}, doc_id)
+        |      ORDER BY ${hash60Sql("'split:' || CAST(doc_id AS VARCHAR)")}, doc_id)
         |      AS BIGINT) AS rnk
         |  FROM documents
         |)
@@ -990,7 +984,7 @@ private[graft] object TextQueries {
           .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
           .groupBy(col("term"))
           .agg(count(lit(1)).as("df"), sum(col("tf")).as("total_tf"),
-            ops.Replay.hash60(concat_ws(",",
+            hash60(concat_ws(",",
               sort_array(collect_list(col("doc_id"))).cast("array<string>")))
               .as("postings_digest"))
           .filter(col("df") >= 5)
@@ -1004,7 +998,7 @@ private[graft] object TextQueries {
         |  WHERE length(term) > 0 GROUP BY 1, 2
         |)
         |SELECT term, COUNT(*) AS df, CAST(SUM(tf) AS BIGINT) AS total_tf,
-        |  ${ops.Replay.hash60Sql("array_to_string(list_sort(list(doc_id)), ',')")} AS postings_digest
+        |  ${hash60Sql("array_to_string(list_sort(list(doc_id)), ',')")} AS postings_digest
         |FROM tf GROUP BY 1 HAVING COUNT(*) >= 5""".stripMargin)),
 
     // Blocklist screening (the policy-filter mechanism of a curation

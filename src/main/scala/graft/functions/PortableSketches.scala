@@ -3,6 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{conv, md5, substring}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -10,17 +11,17 @@ import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Cross-engine-REPLAYABLE sketch kernels: same algorithms as
-  * [[TextSketches]], but built from primitives any SQL engine ships —
-  * md5 for the base hash, and a universal hash family modulo the Mersenne
-  * prime 2^61-1 for the MinHash permutations (a 128-bit product, exact in
-  * DuckDB HUGEINT and via Math.multiplyHigh here). The correctness gate
-  * uses these so the DuckDB oracle can recompute the SKETCH itself, not
-  * just downstream arithmetic — see [[graft.ops.Replay]].
-  *
-  * The xxhash64 kernels in [[TextSketches]] remain the production scale
-  * path (no per-gram MessageDigest); these trade ~2-3× kernel cost for
-  * oracle replayability and share the one-pass, no-explode shape.
+/** Cross-engine-REPLAYABLE sketch kernels, built from primitives any SQL
+  * engine ships — md5 for the base hash, and a universal hash family
+  * modulo the Mersenne prime 2^61-1 for the MinHash permutations (a
+  * 128-bit product, exact in DuckDB HUGEINT and via Math.multiplyHigh
+  * here). The near-dup operators ([[graft.ops.Dedup]],
+  * [[graft.ops.TextAnalysis.fingerprints]], [[graft.ops.IncrementalDedup]])
+  * use these so the DuckDB oracle can recompute the SKETCH itself, not
+  * just downstream arithmetic. Each kernel scans a document once inside
+  * whole-stage codegen (no explode); the price of replayability is one
+  * md5 per gram instead of a non-cryptographic hash (SCALE.md "Dedup
+  * family").
   *
   * Base hash: `hash60(s)` = first 15 hex chars of md5(s) as a long — i.e.
   * the top 60 bits of the digest, so both engines agree bit-for-bit
@@ -33,6 +34,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * gate corpus it inflated 0.25-est-Jaccard candidate pairs 4×). Both
   * sides derive the coefficients from the same md5 strings, so nothing is
   * hard-coded twice.
+  *
+  * All kernels return an EMPTY array (never null) for degenerate inputs,
+  * so codegen stays on `defineCodeGen`'s non-null fast path.
   */
 object PortableSketches {
 
@@ -60,6 +64,14 @@ object PortableSketches {
     be64(d, 0) >>> 4
   }
 
+  /** 60-bit md5 hash column — `hash60(s: String)` as Spark SQL. */
+  def hash60(c: Column): Column =
+    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+
+  /** The DuckDB fragment computing the same 60-bit hash of `x`. */
+  def hash60Sql(x: String): String =
+    s"('0x' || substr(md5($x), 1, 15))::BIGINT"
+
   private def be64(d: Array[Byte], off: Int): Long = {
     var r = 0L
     var i = 0
@@ -77,28 +89,26 @@ object PortableSketches {
     Array.tabulate(maxMixes)(j => hash60(s"mixb:$j")))
 
   /** Replayable MinHash signature: min over character k-grams of
-    * (a_j * hash60(gram) + b_j) mod (2^61 - 1), j < numHashes. Same
-    * one-pass shape as [[TextSketches.minhashSig]]; empty for docs
-    * shorter than k characters.
+    * (a_j * hash60(gram) + b_j) mod (2^61 - 1), j < numHashes, from one
+    * pass over the document; empty for docs shorter than k characters.
     */
   def portableMinhashSig(norm: Column, k: Int, numHashes: Int): Column =
-    bridge.column(PortableMinHashSig(bridge.expression(norm), k, numHashes))
+    bridge.column(PortableMinHash(bridge.expression(norm), k, numHashes))
 
   /** Replayable winnowing fingerprint: min of each w-window of md5-60bit
-    * character k-gram hashes, sorted distinct — the one-pass kernel twin of the
+    * character k-gram hashes, sorted distinct — the one-pass kernel form of the
     * explode → window-min algorithm the oracle states (proven equal in
     * ReplaySpec; the explode shape cost 5.5 s vs ~1 s at sf0.1). Empty for
     * docs with no full window (< k + w - 1 characters).
     */
-  def portableWinnowedFingerprint(norm: Column, k: Int, w: Int): Column =
-    bridge.column(PortableWinnowedFingerprint(bridge.expression(norm), k, w))
+  def portableWinnow(norm: Column, k: Int, w: Int): Column =
+    bridge.column(PortableWinnow(bridge.expression(norm), k, w))
 
-  /** Replayable distinct character-k-gram hash SET: sorted distinct hash60 of
-    * every k-gram — the md5 twin of [[TextSketches.charShingleHashes]],
-    * pairing with [[TextSketches.sortedIntersectCount]] for exact-Jaccard
-    * verification the oracle can recompute (`list_distinct([hash60(
-    * substr(norm, i, k)) ...])` in DuckDB). Empty for docs shorter than k
-    * characters.
+  /** Replayable distinct character-k-gram hash SET: sorted distinct hash60
+    * of every k-gram, pairing with [[TextSketches.sortedIntersectCount]]
+    * for exact-Jaccard verification the oracle can recompute
+    * (`list_distinct([hash60(substr(norm, i, k)) ...])` in DuckDB). Empty
+    * for docs shorter than k characters.
     */
   def portableGramHashes(norm: Column, k: Int): Column =
     bridge.column(PortableGramHashes(bridge.expression(norm), k))
@@ -211,7 +221,7 @@ object PortableSketches {
     if (nWindows <= 0) return empty
     val hashes = gramHashes(bytes, off, k, nGrams)
     // w is small (4 by default): rescanning each window beats deque
-    // bookkeeping — same shape as TextSketches.computeWinnow
+    // bookkeeping
     val mins = new Array[Long](nWindows)
     var i = 0
     while (i < nWindows) {
@@ -221,14 +231,7 @@ object PortableSketches {
       mins(i) = m
       i += 1
     }
-    java.util.Arrays.sort(mins)
-    var out = 0
-    var x = 0
-    while (x < nWindows) {
-      if (out == 0 || mins(x) != mins(out - 1)) { mins(out) = mins(x); out += 1 }
-      x += 1
-    }
-    new GenericArrayData(if (out == nWindows) mins else java.util.Arrays.copyOf(mins, out))
+    TextSketches.sortedDistinct(mins, nWindows)
   }
 
   def computePortableGramHashes(s: UTF8String, k: Int): ArrayData = {
@@ -236,20 +239,12 @@ object PortableSketches {
     val off = charOffsets(bytes, bytes.length)
     val n = off.length - 1 - k + 1
     if (n <= 0) return empty
-    val hashes = gramHashes(bytes, off, k, n)
-    java.util.Arrays.sort(hashes)
-    var out = 0
-    var i = 0
-    while (i < n) {
-      if (out == 0 || hashes(i) != hashes(out - 1)) { hashes(out) = hashes(i); out += 1 }
-      i += 1
-    }
-    new GenericArrayData(if (out == n) hashes else java.util.Arrays.copyOf(hashes, out))
+    TextSketches.sortedDistinct(gramHashes(bytes, off, k, n), n)
   }
 }
 
 /** `array<long>` replayable MinHash signature — see [[PortableSketches]]. */
-case class PortableMinHashSig(child: Expression, k: Int, numHashes: Int)
+case class PortableMinHash(child: Expression, k: Int, numHashes: Int)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "portable_minhash_sig"
@@ -281,7 +276,7 @@ case class PortableGramHashes(child: Expression, k: Int)
 }
 
 /** `array<long>` replayable winnowing fingerprint — see [[PortableSketches]]. */
-case class PortableWinnowedFingerprint(child: Expression, k: Int, w: Int)
+case class PortableWinnow(child: Expression, k: Int, w: Int)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "portable_winnowed_fingerprint"

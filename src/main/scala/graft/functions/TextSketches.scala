@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.util.SplittableRandom
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
@@ -13,46 +11,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-pass text-sketch kernels as native Catalyst expressions.
+/** One-pass text kernels as native Catalyst expressions: word n-gram
+  * hashes for the n-gram Jaccard path, and the sorted-set intersection
+  * that verifies near-dup candidates.
   *
-  * The naive Spark shapes for these sketches — `explode(sequence(...))` +
-  * per-position `substring` (a row per shingle), or `transform` lambdas
-  * (interpreted, re-evaluated per element) — dominate the dedup family's
-  * runtime: at sf0.1 the explode stage alone costs ~4.6 s of a 6.7 s
-  * minhash pipeline, and at 100 TB it materializes ~|text| rows per
-  * document before the first aggregate. Each kernel here instead scans the
-  * document's bytes ONCE inside whole-stage codegen and emits the finished
-  * sketch (an `array<long>`), so the only thing that ever leaves the scan
-  * stage is (doc_id, sketch).
+  * The naive Spark shapes — `explode(sequence(...))` + per-position
+  * `substring` (a row per gram), or `transform` lambdas (interpreted,
+  * re-evaluated per element) — materialize ~|text| rows per document
+  * before the first aggregate. Each kernel here instead scans its input
+  * ONCE inside whole-stage codegen and emits the finished `array<long>`
+  * or count, hashing byte spans of the UTF8String's backing bytes in place
+  * via XXH64 (the hash family Spark's `xxhash64` exposes). The
+  * MinHash/winnowing/gram-set sketches live in [[PortableSketches]].
   *
-  * Windows are BYTE k-grams (on the already-normalized, single-spaced text)
-  * rather than char k-grams: for ASCII they coincide, for multi-byte text a
-  * window may split a code point — irrelevant for hash-sketch quality and it
-  * keeps the kernel allocation-free (hashes slice the UTF8String's backing
-  * bytes in place via XXH64, the same hash family Spark's `xxhash64`
-  * exposes).
-  *
-  * All kernels return an EMPTY array (never null) for degenerate inputs
-  * (doc shorter than a window, fewer than n tokens) — callers filter
-  * `size(sketch) > 0`, and codegen stays on `defineCodeGen`'s non-null
+  * Kernels return an EMPTY array (never null) for degenerate inputs
+  * (fewer than n tokens), so codegen stays on `defineCodeGen`'s non-null
   * fast path.
   */
 object TextSketches {
-
-  /** MinHash signature via one base hash per window + `numHashes` universal-
-    * hash mixes (a_j * h + b_j, a_j odd — the standard permutation family):
-    * one xxhash per shingle instead of k, no explode, no 64-buffer
-    * aggregate. Empty for docs shorter than `k` bytes.
-    */
-  def minhashSig(norm: Column, k: Int, numHashes: Int): Column =
-    bridge.column(MinHashSig(bridge.expression(norm), k, numHashes))
-
-  /** Winnowing fingerprint: min hash of each sliding window of `w`
-    * consecutive byte k-gram hashes, deduped and sorted. Empty for docs
-    * with no full window (len < k + w - 1 bytes).
-    */
-  def winnowedFingerprint(norm: Column, k: Int, w: Int): Column =
-    bridge.column(WinnowedFingerprint(bridge.expression(norm), k, w))
 
   /** Distinct word n-gram hashes of a single-spaced string: hash of the byte
     * span covering n consecutive tokens (equals hashing
@@ -61,17 +37,9 @@ object TextSketches {
   def ngramHashes(norm: Column, n: Int): Column =
     bridge.column(NgramHashes(bridge.expression(norm), n))
 
-  /** SORTED distinct hashes of every byte k-gram — the exact shingle set of
-    * a document in hash space (same hash family/seed as [[minhashSig]]'s
-    * base hashes). Sorted output makes pairwise set intersection a linear
-    * merge ([[SortedIntersectCount]]). Empty for docs shorter than k bytes.
-    */
-  def charShingleHashes(norm: Column, k: Int): Column =
-    bridge.column(CharShingleHashes(bridge.expression(norm), k))
-
   /** Size of the intersection of two SORTED long arrays (linear merge, no
-    * hash set) — pairs with [[charShingleHashes]] for exact-Jaccard
-    * verification of candidate pairs.
+    * hash set) — pairs with [[PortableSketches.portableGramHashes]] for
+    * exact-Jaccard verification of candidate pairs.
     */
   def sortedIntersectCount(a: Column, b: Column): Column =
     bridge.column(SortedIntersectCount(bridge.expression(a), bridge.expression(b)))
@@ -79,65 +47,6 @@ object TextSketches {
   // ------------------------------------------------------------- kernels
 
   private val empty = new GenericArrayData(Array.emptyLongArray)
-
-  /** Deterministic universal-hash coefficients (SplittableRandom's output is
-    * spec-fixed, so sketches are reproducible across JVMs/clusters).
-    */
-  private val maxMixes = 256
-  private val (mixA, mixB) = {
-    val rng = new SplittableRandom(0x5EEDL)
-    (Array.fill(maxMixes)(rng.nextLong() | 1L), // odd => bijective mod 2^64
-      Array.fill(maxMixes)(rng.nextLong()))
-  }
-
-  def computeMinHash(s: UTF8String, k: Int, numHashes: Int): ArrayData = {
-    require(numHashes <= maxMixes, s"numHashes $numHashes > $maxMixes")
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val len = s.numBytes()
-    if (len < k) return empty
-    val mins = new Array[Long](numHashes)
-    java.util.Arrays.fill(mins, Long.MaxValue)
-    var i = 0
-    while (i <= len - k) {
-      val h = XXH64.hashUnsafeBytes(base, off + i, k, 42L)
-      var j = 0
-      while (j < numHashes) {
-        val hj = mixA(j) * h + mixB(j)
-        if (hj < mins(j)) mins(j) = hj
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
-
-  def computeWinnow(s: UTF8String, k: Int, w: Int): ArrayData = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val len = s.numBytes()
-    val nGrams = len - k + 1
-    val nWindows = nGrams - w + 1
-    if (nWindows <= 0) return empty
-    val hashes = new Array[Long](nGrams)
-    var i = 0
-    while (i < nGrams) {
-      hashes(i) = XXH64.hashUnsafeBytes(base, off + i, k, 42L)
-      i += 1
-    }
-    // w is small (4 by default): rescanning each window (w loads) beats
-    // monotonic-deque bookkeeping
-    val mins = new Array[Long](nWindows)
-    i = 0
-    while (i < nWindows) {
-      var m = hashes(i)
-      var j = 1
-      while (j < w) { if (hashes(i + j) < m) m = hashes(i + j); j += 1 }
-      mins(i) = m
-      i += 1
-    }
-    sortedDistinct(mins, nWindows)
-  }
 
   def computeNgrams(s: UTF8String, n: Int): ArrayData = {
     val base = s.getBaseObject
@@ -165,21 +74,6 @@ object TextSketches {
     sortedDistinct(grams, grams.length)
   }
 
-  def computeShingleHashes(s: UTF8String, k: Int): ArrayData = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val len = s.numBytes()
-    val n = len - k + 1
-    if (n <= 0) return empty
-    val hashes = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      hashes(i) = XXH64.hashUnsafeBytes(base, off + i, k, 42L)
-      i += 1
-    }
-    sortedDistinct(hashes, n)
-  }
-
   def computeSortedIntersect(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements()
     val nb = b.numElements()
@@ -197,7 +91,7 @@ object TextSketches {
   }
 
   /** Sort `a[0,n)` in place and return the distinct prefix as ArrayData. */
-  private def sortedDistinct(a: Array[Long], n: Int): ArrayData = {
+  private[functions] def sortedDistinct(a: Array[Long], n: Int): ArrayData = {
     java.util.Arrays.sort(a, 0, n)
     var out = 0
     var i = 0
@@ -207,38 +101,6 @@ object TextSketches {
     }
     new GenericArrayData(if (out == n) a else java.util.Arrays.copyOf(a, out))
   }
-}
-
-/** `array<long>` MinHash signature of a string — see [[TextSketches]]. */
-case class MinHashSig(child: Expression, k: Int, numHashes: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  override def nullSafeEval(input: Any): Any =
-    TextSketches.computeMinHash(input.asInstanceOf[UTF8String], k, numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextSketches$$.MODULE$$.computeMinHash($c, $k, $numHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** `array<long>` winnowing fingerprint of a string — see [[TextSketches]]. */
-case class WinnowedFingerprint(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnowed_fingerprint"
-
-  override def nullSafeEval(input: Any): Any =
-    TextSketches.computeWinnow(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextSketches$$.MODULE$$.computeWinnow($c, $k, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }
 
 /** `array<long>` distinct word n-gram hashes — see [[TextSketches]]. */
@@ -252,21 +114,6 @@ case class NgramHashes(child: Expression, n: Int) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
       s"graft.functions.TextSketches$$.MODULE$$.computeNgrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** `array<long>` sorted distinct byte k-gram hashes — see [[TextSketches]]. */
-case class CharShingleHashes(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "char_shingle_hashes"
-
-  override def nullSafeEval(input: Any): Any =
-    TextSketches.computeShingleHashes(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextSketches$$.MODULE$$.computeShingleHashes($c, $k)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }

@@ -3,12 +3,10 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{PortableSketches, TextSketches}
-
 /** Incremental MinHash+LSH deduplication against a PERSISTED signature
   * store — the daily-ingest shape at 100 TB (r12 verdict item 1).
   *
-  * The full-recompute family ([[Dedup]]/[[Replay]]) re-sketches the whole
+  * The full-recompute family ([[Dedup]]) re-sketches the whole
   * corpus per run. A production pipeline instead dedups each NEW batch
   * against yesterday's corpus: only the batch's text is ever scanned, and
   * the store contributes pre-computed sketches. The reference has exactly
@@ -20,10 +18,13 @@ import graft.functions.{PortableSketches, TextSketches}
   * == Exact equivalence contract ==
   *
   * The store's candidate-pair set after appending batches B1..Bn to base B0
-  * is EXACTLY `Replay.minhashCandidates(B0 ∪ … ∪ Bn)` (and likewise the
-  * verified pairs vs [[Replay.verifiedNearDupPairs]]). The argument:
-  * bucket membership is a pure function of (band_idx, band_key), and pairs
-  * are generated per bucket from its FULL membership under the
+  * is EXACTLY `Dedup.minhashCandidates(B0 ∪ … ∪ Bn)` (and likewise the
+  * verified pairs vs [[Dedup.verifiedNearDupPairs]]). Both sides share
+  * one sketch stage, one banding and one join-back ([[Dedup.sketch]],
+  * [[Dedup.bandsOf]], [[Dedup.estJaccard]], [[Dedup.verifiedJaccard]]),
+  * so sketches and band keys agree by construction. The argument for the
+  * pairs: bucket membership is a pure function of (band_idx, band_key),
+  * and pairs are generated per bucket from its FULL membership under the
   * `[2, maxBucket]` cap. Appends never remove members, so a bucket's
   * membership changes only when a batch TOUCHES it (contributes a row).
   * Each append therefore recomputes pairs only for touched buckets — from
@@ -116,12 +117,11 @@ object IncrementalDedup {
     * identity — [[SignatureStore.append]] re-asserts them against the
     * store's persisted config).
     *
-    * `portable = true` uses the md5-based replayable kernels
-    * ([[PortableSketches]]) so results are DuckDB-oracle-checkable;
-    * `false` uses the xxhash64 scale kernels ([[TextSketches]]).
-    * `withGrams` additionally persists each doc's sorted distinct gram
-    * hashes, enabling [[SignatureStore.verifiedPairs]] (exact-Jaccard
-    * verification without re-reading any text).
+    * Sketches use the md5-based replayable kernels of [[Dedup.sketch]],
+    * so results are DuckDB-oracle-checkable. `withGrams` additionally
+    * persists each doc's sorted distinct gram hashes, enabling
+    * [[SignatureStore.verifiedPairs]] (exact-Jaccard verification without
+    * re-reading any text).
     *
     * `writePartitions` caps the files per generation part. Generation
     * directories are batch-scale DELTAS, so inheriting the compute
@@ -139,63 +139,13 @@ object IncrementalDedup {
     * layout, like sketch parameters, is fixed per store.
     */
   final case class Config(k: Int = 64, bands: Int = 16, shingleLen: Int = 5,
-      maxBucket: Int = 100, portable: Boolean = true, withGrams: Boolean = false,
+      maxBucket: Int = 100, withGrams: Boolean = false,
       writePartitions: Int = 4, bandBuckets: Int = 0) {
-    require(k % bands == 0,
-      s"k=$k must be divisible by bands=$bands — otherwise the trailing " +
-        s"${k % bands} signature positions are never banded and recall drops silently")
+    Dedup.requireBanding(k, bands)
     require(writePartitions >= 1, "writePartitions must be >= 1")
     require(bandBuckets >= 0, "bandBuckets must be >= 0 (0 = plain layout)")
     def rowsPerBand: Int = k / bands
   }
-
-  /** (doc_id, sig[, grams]) for one batch — ONE text scan, portable or
-    * scale kernel per the config. Mirrors [[Replay.minhashCandidates]]'s
-    * sketch stage (same normalize, same length drop-out).
-    */
-  private[graft] def sketch(docs: DataFrame, cfg: Config,
-      textCol: String, idCol: String): DataFrame = {
-    // short-doc drop-out via the kernels' exact empty contract (code
-    // points / bytes < shingleLen ⇒ empty sig), stated as a one-row
-    // Generate so normalize AND the kernels evaluate exactly once per row
-    // — per APPEND, on every batch. The r15 length-precondition filter
-    // kept the kernels single-pass but still ran the normalize regex
-    // twice (pushed scan-stage filter + projection; guide §4.4). With
-    // grams, `norm` is materialized below the Generate — a non-cheap
-    // alias referenced twice is never inlined by CollapseProject.
-    def sig(norm: org.apache.spark.sql.Column) =
-      if (cfg.portable) PortableSketches.portableMinhashSig(norm, cfg.shingleLen, cfg.k)
-      else TextSketches.minhashSig(norm, cfg.shingleLen, cfg.k)
-    val base = docs.repartition(col(idCol))
-    if (cfg.withGrams) {
-      def grams(norm: org.apache.spark.sql.Column) =
-        if (cfg.portable) PortableSketches.portableGramHashes(norm, cfg.shingleLen)
-        else TextSketches.charShingleHashes(norm, cfg.shingleLen)
-      base
-        .select(col(idCol).as("doc_id"), Shingles.normalize(col(textCol)).as("norm"))
-        .select(col("doc_id"),
-          Shingles.onceOrDrop(
-            struct(sig(col("norm")).as("sig"), grams(col("norm")).as("grams")),
-            p => size(p.getField("sig")) > 0).as("sk"))
-        .select(col("doc_id"), col("sk.sig").as("sig"), col("sk.grams").as("grams"))
-    } else
-      base.select(col(idCol).as("doc_id"),
-        Shingles.onceOrDrop(sig(Shingles.normalize(col(textCol))),
-          s => size(s) > 0).as("sig"))
-  }
-
-  /** (doc_id, band_idx, band_key) — band_key is the raw signature slice
-    * (injective, zero-conversion; Replay lesson 28).
-    */
-  private[ops] def bandsOf(sigs: DataFrame, cfg: Config): DataFrame =
-    sigs.select(
-      col("doc_id"),
-      explode(array((0 until cfg.bands).map(b =>
-        struct(
-          lit(b).as("band_idx"),
-          slice(col("sig"), b * cfg.rowsPerBand + 1, cfg.rowsPerBand).as("band_key"))): _*))
-        .as("band"))
-      .select(col("doc_id"), col("band.band_idx"), col("band.band_key"))
 
   /** In-bucket unordered pair expansion KEEPING the bucket key (the
     * provenance that makes latest-wins supersession possible) —
@@ -235,10 +185,15 @@ object IncrementalDedup {
 
     private def configPath = new org.apache.hadoop.fs.Path(root, "_config")
     // bandBuckets is part of the persisted identity: generations with
-    // different band layouts cannot be unioned by the per-root readers
+    // different band layouts cannot be unioned by the per-root readers.
+    // `portable=true` is a fixed format token: stores written before the
+    // md5 kernels became the only sketch family carry it, so their line
+    // still matches, and a `portable=false` store (xxhash64 band keys,
+    // which nothing here can recompute) fails the equality check below
+    // instead of being misread.
     private def configLine =
       s"k=${cfg.k};bands=${cfg.bands};shingleLen=${cfg.shingleLen};" +
-        s"maxBucket=${cfg.maxBucket};portable=${cfg.portable};withGrams=${cfg.withGrams};" +
+        s"maxBucket=${cfg.maxBucket};portable=true;withGrams=${cfg.withGrams};" +
         s"bandBuckets=${cfg.bandBuckets}"
 
     /** Mixing sketch parameters across generations would change band keys
@@ -465,10 +420,10 @@ object IncrementalDedup {
         crashBeforeCommit: Boolean, idempotencyKey: Option[String]): Unit = {
       val prior = committedGens()
       val gen = if (prior.isEmpty) 0 else prior.max + 1
-      val newSigs = sketch(batch, cfg, textCol, idCol)
+      val newSigs = Dedup.sketch(batch, cfg.k, cfg.shingleLen, cfg.withGrams, textCol, idCol)
         // bands + (via bands) pairs + the parquet write read it; one compute
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val newBands = bandsOf(newSigs, cfg)
+      val newBands = Dedup.bandsOf(newSigs, cfg.bands, cfg.rowsPerBand)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // three consumers (own write, members semi-join, stale-pairs mask) —
       // persist, or the distinct shuffle re-runs per consumer
@@ -583,12 +538,14 @@ object IncrementalDedup {
     }
 
     /** Candidate near-duplicate pairs over the WHOLE stored corpus —
-      * equal to `Replay.minhashCandidates(all batches)` by the equivalence
+      * equal to `Dedup.minhashCandidates(all batches)` by the equivalence
       * contract. Output: (doc_a, doc_b, est_jaccard).
       */
     def candidates(minEstJaccard: Double = 0.0): DataFrame =
-      estJaccard(pairs().select("doc_a", "doc_b").dropDuplicates("doc_a", "doc_b"),
-        minEstJaccard)
+      // the batch operator's own join-back; the live `sigs()` view also
+      // drops tombstone-masked docs
+      Dedup.estJaccard(pairs().select("doc_a", "doc_b").dropDuplicates("doc_a", "doc_b"),
+        sigs(), cfg.k, minEstJaccard)
 
     /** Candidate pairs INVOLVING one generation's batch — "what did THIS
       * batch collide with", the nightly-ingest question that never needs
@@ -640,63 +597,20 @@ object IncrementalDedup {
         .drop("doc_id").withColumnRenamed("hit", "hit_b")
         .filter(col("hit_a").isNotNull || col("hit_b").isNotNull)
         .select("doc_a", "doc_b").dropDuplicates("doc_a", "doc_b")
-      estJaccard(involving, minEstJaccard)
-    }
-
-    /** Signature-estimate join shared by the corpus-wide, batch-scoped,
-      * and snapshot candidate reads: attach each side's stored sketch
-      * (which also drops tombstone-masked docs — `sg` is a live view) and
-      * estimate Jaccard from matching minhash positions.
-      */
-    private def estJaccard(pairIds: DataFrame, minEstJaccard: Double): DataFrame =
-      estJaccardOver(pairIds, minEstJaccard, sigs())
-
-    private def estJaccardOver(pairIds: DataFrame, minEstJaccard: Double,
-        sg: DataFrame): DataFrame = {
-      // both pair ends join the IDENTICAL sg subtree — same projection,
-      // same join key (doc_id), renames applied AFTER each join — so
-      // ReuseExchange serves the second join's build side from the first's
-      // (one evaluation of the live-sig union + any tombstone mask join
-      // per read, not one per pair end). The per-side projection form
-      // (`doc_id as doc_a`) defeated that reuse: two almost-identical
-      // subtrees differing only in output names are not `sameResult`.
-      val s = sg.select(col("doc_id"), col("sig"))
-      pairIds
-        .join(s, col("doc_a") === col("doc_id")).drop("doc_id")
-        .withColumnRenamed("sig", "sig_a")
-        .join(s, col("doc_b") === col("doc_id")).drop("doc_id")
-        .withColumnRenamed("sig", "sig_b")
-        .select(col("doc_a"), col("doc_b"),
-          (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), v => v))
-            .cast("double") / lit(cfg.k.toDouble)).as("est_jaccard"))
-        .filter(col("est_jaccard") >= minEstJaccard)
+      Dedup.estJaccard(involving, sigs(), cfg.k, minEstJaccard)
     }
 
     /** Exact-Jaccard-verified pairs over the whole stored corpus (requires
-      * `cfg.withGrams`) — equal to `Replay.verifiedNearDupPairs(all)`:
-      * same integer minMatches candidate floor, same gram-set Jaccard
-      * threshold, no text re-read (grams come from the store).
+      * `cfg.withGrams`) — equal to `Dedup.verifiedNearDupPairs(all)`: the
+      * same join-back ([[Dedup.verifiedJaccard]]), integer minMatches
+      * candidate floor and gram-set Jaccard threshold, no text re-read
+      * (grams come from the store).
       */
     def verifiedPairs(threshold: Double = 0.3, minMatches: Int = 10): DataFrame = {
       require(cfg.withGrams, "verifiedPairs needs a store built with withGrams = true")
-      // identical sg subtree on both pair ends (renames after the join) so
-      // ReuseExchange builds the sig+gram side once — see estJaccardOver
-      val sg = sigs().select(col("doc_id"), col("sig"), col("grams"))
-      val cand = pairs()
-        .select("doc_a", "doc_b").dropDuplicates("doc_a", "doc_b")
-        .join(sg, col("doc_a") === col("doc_id")).drop("doc_id")
-        .withColumnRenamed("sig", "sig_a").withColumnRenamed("grams", "grams_a")
-        .join(sg, col("doc_b") === col("doc_id")).drop("doc_id")
-        .withColumnRenamed("sig", "sig_b").withColumnRenamed("grams", "grams_b")
-        .filter(size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), v => v))
-          >= minMatches)
-      cand
-        .select(col("doc_a"), col("doc_b"),
-          TextSketches.sortedIntersectCount(col("grams_a"), col("grams_b")).as("shared"),
-          size(col("grams_a")).as("na"), size(col("grams_b")).as("nb"))
-        .select(col("doc_a"), col("doc_b"),
-          (col("shared").cast("double") / (col("na") + col("nb") - col("shared"))).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
+      Dedup.verifiedJaccard(
+        pairs().select("doc_a", "doc_b").dropDuplicates("doc_a", "doc_b"),
+        sigs(), minMatches, threshold)
     }
 
     /** A consistent multi-read view pinned to the generations committed
@@ -733,9 +647,9 @@ object IncrementalDedup {
         * taken, whatever has committed since.
         */
       def candidates(minEstJaccard: Double = 0.0): DataFrame =
-        estJaccardOver(
+        Dedup.estJaccard(
           pairs().select("doc_a", "doc_b").dropDuplicates("doc_a", "doc_b"),
-          minEstJaccard, sigs())
+          sigs(), cfg.k, minEstJaccard)
     }
 
     /** Pin the current committed state for consistent multi-query reads —

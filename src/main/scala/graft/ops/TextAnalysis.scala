@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.PortableSketches
+
 /** Text analysis for training-data pipelines: stats/quality scoring,
   * token counting, language ID, and document fingerprinting. All map-only
   * column expressions — each metric is computed where the document is read.
@@ -97,7 +99,7 @@ object TextAnalysis {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // identical subtrees on both join sides (aliases; renames ABOVE the
     // join) so ReuseExchange shuffles the capped index once and builds the
-    // sizes side once — see Replay.fingerprintOverlapPairs
+    // sizes side once (per-side projections are not `sameResult`)
     val shared = capped.as("a")
       .join(capped.as("b"), col("a.fp") === col("b.fp"))
       .filter(col("a.doc_id") < col("b.doc_id"))
@@ -322,31 +324,32 @@ object TextAnalysis {
         round(avg(-log2(col("cond_p"))), 4).as("bits_per_bigram"))
   }
 
-  /** Winnowing-style document fingerprint: hash all byte k-grams, keep the
-    * minimum hash in each sliding window of `w` consecutive k-grams, distinct
-    * the survivors (sorted for a deterministic output). Robust to small
-    * edits.
+  /** Winnowing-style document fingerprint: hash all character k-grams,
+    * keep the minimum hash in each sliding window of `w` consecutive
+    * k-grams, distinct the survivors (sorted for a deterministic output).
+    * Robust to small edits. Returns (doc_id, fingerprint, content_hash).
     *
     * Computed by the one-pass codegen'd kernel
-    * [[graft.functions.TextSketches.winnowedFingerprint]] — the document
-    * never explodes into per-gram rows and nothing shuffles but
-    * (doc_id, fingerprint). (The previous explode → window-min → collect_set
-    * shape shuffled one row per character and cost 3.7 s at sf0.1.)
+    * [[graft.functions.PortableSketches.portableWinnow]] over
+    * md5-60-bit gram hashes — proven equal to the explode → window-min
+    * algorithm the SQL oracle states (ReplaySpec). The document never
+    * explodes into per-gram rows and nothing shuffles but
+    * (doc_id, fingerprint); the explode shape cost 5.5 s vs ~1 s at sf0.1.
     */
   def fingerprints(docs: DataFrame, k: Int = 8, w: Int = 4,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     docs
       .repartition(col(idCol))
       // short-doc drop-out via the winnow kernel's exact empty contract
-      // (bytes < k+w-1 ⇒ no full window ⇒ empty), as a one-row Generate:
-      // kernel AND normalize evaluate once per row (guide §4.4 — the r15
-      // length filter still ran the normalize regex twice)
+      // (code points < k+w-1 ⇒ no full window ⇒ empty), as a one-row
+      // Generate: kernel AND normalize evaluate once per row (guide §4.4 —
+      // the r15 length filter still ran the normalize regex twice)
       .select(col(idCol).as("doc_id"),
         Shingles.onceOrDrop(
           struct(
-            graft.functions.TextSketches.winnowedFingerprint(
+            PortableSketches.portableWinnow(
               Shingles.normalize(col(textCol)), k, w).as("fingerprint"),
-            xxhash64(col(textCol)).as("content_hash")),
+            PortableSketches.hash60(col(textCol)).as("content_hash")),
           p => size(p.getField("fingerprint")) > 0).as("fp"))
       .select(col("doc_id"), col("fp.fingerprint").as("fingerprint"),
         col("fp.content_hash").as("content_hash"))

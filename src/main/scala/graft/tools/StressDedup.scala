@@ -7,7 +7,9 @@ import graft.ops.Dedup
 
 /** Dev stress: dedup family at 10× the sf0.1 document count (synthetic,
   * generated in-memory — validates that bucket caps bound the pair
-  * explosion and wall time scales ~linearly with corpus size).
+  * explosion and wall time scales ~linearly with corpus size). One pass
+  * each of MinHash candidates, SimHash pairs and n-gram Jaccard; the
+  * document count is the first argument (default 50000).
   */
 object StressDedup {
   def main(args: Array[String]): Unit = {
@@ -49,21 +51,6 @@ object StressDedup {
     spark.catalog.clearCache()
     time(s"ngram_jaccard n=$n") {
       val c = Dedup.ngramJaccardPairs(docs, n = 3, threshold = 0.01, maxBucket = 100).count()
-      println(s"  pairs: $c")
-    }
-    // Portable md5 replay kernels (the oracle-gate twins, VERDICT r4 item
-    // 8): same shuffle shape as the xxhash64 production kernels above, a
-    // constant-factor-heavier hash. These runs confirm the 2-3× kernel
-    // cost stays a constant factor (linear in corpus size), not a new
-    // asymptotic term.
-    spark.catalog.clearCache()
-    time(s"replay_minhash_candidates n=$n") {
-      val c = graft.ops.Replay.minhashCandidates(docs, minEstJaccard = 0.25).count()
-      println(s"  pairs: $c")
-    }
-    spark.catalog.clearCache()
-    time(s"replay_simhash_pairs n=$n") {
-      val c = graft.ops.Replay.simhashPairs(docs, maxHamming = 3).count()
       println(s"  pairs: $c")
     }
     spark.stop()

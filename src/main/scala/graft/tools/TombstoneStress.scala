@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{IVF, IVFStore, IncrementalDedup, Replay}
+import graft.ops.{Dedup, IVF, IVFStore, IncrementalDedup}
 
 /** Delete-heavy stress axis for the persisted stores (r13 open thread:
   * "no pseudo-scale cell runs WITH tombstones present ... a delete-heavy
@@ -23,7 +23,7 @@ import graft.ops.{IVF, IVFStore, IncrementalDedup, Replay}
   *   id space above the centroid-init prefix), one resurrect append.
   *
   * Gate = exact equivalence with the from-scratch engines over the
-  * SURVIVOR set (candidates vs Replay.minhashCandidates; topK vs IVF.topK)
+  * SURVIVOR set (candidates vs Dedup.minhashCandidates; topK vs IVF.topK)
   * plus evidence that the stress was real: ≥5 (dedup) / ≥3 (IVF) live
   * tombstone generations and a deleted fraction ≥ 20%. Prints one summary
   * line per store and exits non-zero on any violation — wired as the
@@ -69,7 +69,7 @@ object TombstoneStress {
     val storeSet = st.candidates(0.25)
       .select("doc_a", "doc_b", "est_jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fullSet = Replay.minhashCandidates(survivors, minEstJaccard = 0.25)
+    val fullSet = Dedup.minhashCandidates(survivors, minEstJaccard = 0.25)
       .select("doc_a", "doc_b", "est_jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     check("dedup candidates == full recompute over survivors")(

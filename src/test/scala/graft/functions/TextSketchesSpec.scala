@@ -11,23 +11,6 @@ import org.apache.spark.unsafe.types.UTF8String
 class TextSketchesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def winnowRef(s: String, k: Int, w: Int): Seq[Long] = {
-    val bytes = s.getBytes("UTF-8")
-    val grams = (0 to bytes.length - k).map { i =>
-      val u = UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, i, i + k))
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        u.getBaseObject, u.getBaseOffset, k, 42L)
-    }
-    grams.sliding(w).map(_.min).toSeq.distinct.sorted
-  }
-
-  test("winnowed fingerprint matches sliding-window reference") {
-    val s = "the quick brown fox jumps over the lazy dog the quick brown cat"
-    val got = TextSketches.computeWinnow(UTF8String.fromString(s), 8, 4)
-      .toLongArray().toSeq
-    assert(got === winnowRef(s, 8, 4))
-  }
-
   test("ngram hashes = distinct hashes of space-joined token windows") {
     val s = "a bb ccc a bb ddd"
     val toks = s.split(" ")
@@ -39,17 +22,7 @@ class TextSketchesSpec extends SparkSpec {
     val got = TextSketches.computeNgrams(UTF8String.fromString(s), 3)
       .toLongArray().toSeq
     assert(got === want)
-  }
-
-  test("minhash: identical inputs identical, disjoint inputs disagree, degenerate empty") {
-    val a = TextSketches.computeMinHash(UTF8String.fromString("abcdefghij"), 5, 64).toLongArray().toSeq
-    val b = TextSketches.computeMinHash(UTF8String.fromString("abcdefghij"), 5, 64).toLongArray().toSeq
-    val c = TextSketches.computeMinHash(UTF8String.fromString("zzzzyyyyxxxx"), 5, 64).toLongArray().toSeq
-    assert(a === b)
-    assert(a !== c)
-    assert(TextSketches.computeMinHash(UTF8String.fromString("abc"), 5, 64).numElements() === 0)
     assert(TextSketches.computeNgrams(UTF8String.fromString("a b"), 3).numElements() === 0)
-    assert(TextSketches.computeWinnow(UTF8String.fromString("abcdefghij"), 8, 4).numElements() === 0)
   }
 
   test("codegen path (DataFrame) agrees with the interpreted kernel") {
@@ -57,16 +30,17 @@ class TextSketchesSpec extends SparkSpec {
       (2L, "pack my box with five dozen liquor jugs"))
       .toDF("id", "norm")
     val rows = df.select(col("id"),
-        TextSketches.minhashSig(col("norm"), 5, 16).as("sig"),
-        TextSketches.winnowedFingerprint(col("norm"), 8, 4).as("fp"),
+        PortableSketches.portableMinhashSig(col("norm"), 5, 16).as("sig"),
+        PortableSketches.portableWinnow(col("norm"), 8, 4).as("fp"),
         TextSketches.ngramHashes(col("norm"), 2).as("ng"))
       .orderBy("id").collect()
     for (r <- rows) {
       val norm = if (r.getLong(0) == 1L) "the quick brown fox jumps over the lazy dog"
         else "pack my box with five dozen liquor jugs"
       val u = UTF8String.fromString(norm)
-      assert(r.getSeq[Long](1) === TextSketches.computeMinHash(u, 5, 16).toLongArray().toSeq)
-      assert(r.getSeq[Long](2) === TextSketches.computeWinnow(u, 8, 4).toLongArray().toSeq)
+      assert(r.getSeq[Long](1) ===
+        PortableSketches.computePortableMinHash(u, 5, 16).toLongArray().toSeq)
+      assert(r.getSeq[Long](2) === PortableSketches.computePortableWinnow(u, 8, 4).toLongArray().toSeq)
       assert(r.getSeq[Long](3) === TextSketches.computeNgrams(u, 2).toLongArray().toSeq)
     }
   }

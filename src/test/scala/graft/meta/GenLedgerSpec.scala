@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ops.{IVF, IVFStore, IncrementalDedup, Replay}
+import graft.ops.{Dedup, IVF, IVFStore, IncrementalDedup}
 
 /** The generation-ledger contracts that r14 promoted from scaladoc to
   * enforcement: the exclusive writer lease (second writer fails loudly,
@@ -262,7 +262,7 @@ class GenLedgerSpec extends SparkSpec {
     }
     val (d9, d10, r11) = mutations(col("doc_id"))
     val survivors = docs.filter((!d9 && !d10) || r11)
-    val expected = Replay.minhashCandidates(survivors, minEstJaccard = 0.25)
+    val expected = Dedup.minhashCandidates(survivors, minEstJaccard = 0.25)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val inference = "spark.sql.sources.partitionColumnTypeInference.enabled"
     Seq(true, false).foreach { infer =>

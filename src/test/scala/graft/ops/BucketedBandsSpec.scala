@@ -32,7 +32,7 @@ class BucketedBandsSpec extends SparkSpec {
     val st = IncrementalDedup.store(spark, tempRoot(), bucketedCfg)
     st.append(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0))
     st.append(docs.filter(pmod(col("doc_id"), lit(5)) === 0))
-    val full = Replay.minhashCandidates(docs, minEstJaccard = 0.25)
+    val full = Dedup.minhashCandidates(docs, minEstJaccard = 0.25)
     assert(candSet(st.candidates(0.25)) === candSet(full))
 
     st.delete(docs.filter(pmod(col("doc_id"), lit(9)) === 1).select("doc_id"))
@@ -41,7 +41,7 @@ class BucketedBandsSpec extends SparkSpec {
     val survivors = docs.filter(
       pmod(col("doc_id"), lit(9)) =!= 1 ||
         (pmod(col("doc_id"), lit(9)) === 1 && pmod(col("doc_id"), lit(2)) === 0))
-    val fullSurv = Replay.minhashCandidates(survivors, minEstJaccard = 0.25)
+    val fullSurv = Dedup.minhashCandidates(survivors, minEstJaccard = 0.25)
     assert(candSet(st.candidates(0.25)) === candSet(fullSurv))
 
     // compact folds into ONE bucketed generation and changes nothing

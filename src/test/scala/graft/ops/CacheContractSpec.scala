@@ -44,15 +44,13 @@ class CacheContractSpec extends SparkSpec {
     assert(released === 0)
   }
 
-  test("minhashCandidates twins leak exactly one handle; unpersist clears all (r15 opt)") {
+  test("minhashCandidates leaks exactly one handle; unpersist clears all") {
     // the r15 shuffle-bytes optimization re-attaches signatures to pair
     // survivors from a persisted sketch cache instead of carrying them
-    // through the banding shuffle — the operators became eager with the
+    // through the banding shuffle — the operator became eager with the
     // standard one-leaked-handle contract
-    val (heldA, releasedA) = deltaAround(Dedup.minhashCandidates(docs))
-    assert(heldA === 1 && releasedA === 0) // result handle only — sigs released
-    val (heldB, releasedB) = deltaAround(Replay.minhashCandidates(docs))
-    assert(heldB === 1 && releasedB === 0)
+    val (held, released) = deltaAround(Dedup.minhashCandidates(docs))
+    assert(held === 1 && released === 0) // result handle only — sigs released
   }
 
   test("ngramJaccardPairs leaks exactly one handle; unpersist clears all") {
@@ -103,14 +101,12 @@ class CacheContractSpec extends SparkSpec {
     assert(released === 0)
   }
 
-  test("fingerprintOverlapPairs twins leak exactly one handle each (review r9)") {
+  test("fingerprintOverlapPairs leaks exactly one handle (review r9)") {
     val many = (1 to 6).map(i => (i.toLong,
       s"shared boilerplate header block number ${i % 2} with trailing text $i"))
       .toDF("doc_id", "text")
-    val (heldA, releasedA) = deltaAround(TextAnalysis.fingerprintOverlapPairs(many))
-    assert(heldA === 1 && releasedA === 0) // fps + capped released
-    val (heldB, releasedB) = deltaAround(Replay.fingerprintOverlapPairs(many))
-    assert(heldB === 1 && releasedB === 0)
+    val (held, released) = deltaAround(TextAnalysis.fingerprintOverlapPairs(many))
+    assert(held === 1 && released === 0) // fps + capped released
   }
 
   test("tfidfTopTerms leaks exactly one handle; unpersist clears all (review r9)") {

@@ -26,7 +26,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val st = IncrementalDedup.store(spark, tempRoot())
     st.append(testdataDocs.filter(pmod(col("doc_id"), lit(7)) =!= 0))
     st.append(testdataDocs.filter(pmod(col("doc_id"), lit(7)) === 0))
-    val full = Replay.minhashCandidates(testdataDocs, minEstJaccard = 0.25)
+    val full = Dedup.minhashCandidates(testdataDocs, minEstJaccard = 0.25)
     assert(candSet(st.candidates(0.25)) === candSet(full))
     assert(st.committedGens() === Seq(0, 1))
   }
@@ -62,7 +62,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("three appends: multi-generation latest-wins == full recompute (testdata)") {
     val st = IncrementalDedup.store(spark, tempRoot())
     (0 to 2).foreach(r => st.append(testdataDocs.filter(pmod(col("doc_id"), lit(3)) === r)))
-    val full = Replay.minhashCandidates(testdataDocs, minEstJaccard = 0.25)
+    val full = Dedup.minhashCandidates(testdataDocs, minEstJaccard = 0.25)
     assert(candSet(st.candidates(0.25)) === candSet(full))
   }
 
@@ -72,7 +72,7 @@ class IncrementalDedupSpec extends SparkSpec {
     st.append(testdataDocs.filter(pmod(col("doc_id"), lit(5)) =!= 0))
     st.append(testdataDocs.filter(pmod(col("doc_id"), lit(5)) === 0))
     val inc = st.verifiedPairs(threshold = 0.31, minMatches = 10)
-    val full = Replay.verifiedNearDupPairs(testdataDocs, threshold = 0.31)
+    val full = Dedup.verifiedNearDupPairs(testdataDocs, threshold = 0.31)
     assert(candSet(inc) === candSet(full))
     full.unpersist()
   }
@@ -97,7 +97,7 @@ class IncrementalDedupSpec extends SparkSpec {
     st.append(craft(4L -> textA, 11L -> textB))
     val afterBatch = candSet(st.candidates())
     assert(afterBatch.map(p => (p._1, p._2)) === Set((10L, 11L)))
-    val full = Replay.minhashCandidates(
+    val full = Dedup.minhashCandidates(
       craft(1L -> textA, 2L -> textA, 3L -> textA, 10L -> textB, 4L -> textA, 11L -> textB),
       maxBucket = 3)
     assert(afterBatch === candSet(full))
@@ -111,11 +111,11 @@ class IncrementalDedupSpec extends SparkSpec {
     st.append(batch, crashBeforeCommit = true)
     // the half-written gen=1 has data files but no marker: readers see base only
     assert(st.committedGens() === Seq(0))
-    assert(candSet(st.candidates()) === candSet(Replay.minhashCandidates(base)))
+    assert(candSet(st.candidates()) === candSet(Dedup.minhashCandidates(base)))
     // retry overwrites the orphaned directory and commits
     st.append(batch)
     assert(st.committedGens() === Seq(0, 1))
-    assert(candSet(st.candidates()) === candSet(Replay.minhashCandidates(base.union(batch))))
+    assert(candSet(st.candidates()) === candSet(Dedup.minhashCandidates(base.union(batch))))
   }
 
   test("compact folds generations without changing candidates") {
@@ -128,7 +128,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // a post-compact append still works and stays equivalent
     val extra = craft(1000000L -> textA, 1000001L -> textA)
     st.append(extra)
-    val full = Replay.minhashCandidates(testdataDocs.select("doc_id", "text").union(extra),
+    val full = Dedup.minhashCandidates(testdataDocs.select("doc_id", "text").union(extra),
       minEstJaccard = 0.25)
     assert(candSet(st.candidates(0.25)) === candSet(full))
   }
@@ -139,7 +139,7 @@ class IncrementalDedupSpec extends SparkSpec {
     st.append(testdataDocs.filter(pmod(col("doc_id"), lit(7)) === 0))
     st.delete(testdataDocs.filter(pmod(col("doc_id"), lit(7)) === 3).select("doc_id"))
     val survivors = testdataDocs.filter(pmod(col("doc_id"), lit(7)) =!= 3)
-    val full = Replay.minhashCandidates(survivors, minEstJaccard = 0.25)
+    val full = Dedup.minhashCandidates(survivors, minEstJaccard = 0.25)
     assert(candSet(st.candidates(0.25)) === candSet(full))
     assert(st.deleteGens() === Seq(2))
   }
@@ -173,7 +173,7 @@ class IncrementalDedupSpec extends SparkSpec {
     st.delete(craft(2L -> textA).select("doc_id"))
     assert(st.deleteGens() === Seq(1))
     assert(candSet(st.candidates())
-      === candSet(Replay.minhashCandidates(craft(1L -> textA, 3L -> textB))))
+      === candSet(Dedup.minhashCandidates(craft(1L -> textA, 3L -> textB))))
   }
 
   test("re-append after delete resurrects the id (latest event wins)") {
@@ -183,7 +183,7 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(candSet(st.candidates()).isEmpty)
     st.append(craft(2L -> textA))
     assert(candSet(st.candidates())
-      === candSet(Replay.minhashCandidates(craft(1L -> textA, 2L -> textA, 3L -> textB))))
+      === candSet(Dedup.minhashCandidates(craft(1L -> textA, 2L -> textA, 3L -> textB))))
   }
 
   test("compact folds tombstones away and restores the join-free path") {
@@ -210,6 +210,30 @@ class IncrementalDedupSpec extends SparkSpec {
       IncrementalDedup.Config(bands = 8))
     val e = intercept[IllegalArgumentException] { reopened.append(craft(2L -> textB)) }
     assert(e.getMessage.contains("sketch parameters are fixed per store"))
+  }
+
+  test("a default store's _config line is pinned byte for byte") {
+    // stores written before the md5 sketch kernels became the only family
+    // carry this exact line; any drift would make them unopenable
+    val root = tempRoot()
+    IncrementalDedup.store(spark, root).append(craft(1L -> textA))
+    val line = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(root, "_config")), "UTF-8")
+    assert(line === "k=64;bands=16;shingleLen=5;maxBucket=100;portable=true;" +
+      "withGrams=false;bandBuckets=0")
+    IncrementalDedup.store(spark, root).append(craft(2L -> textB)) // reopens
+    assert(IncrementalDedup.store(spark, root).committedGens() === Seq(0, 1))
+  }
+
+  test("a portable=false store (xxhash64 band keys) is refused, not misread") {
+    val root = tempRoot()
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_config"),
+      ("k=64;bands=16;shingleLen=5;maxBucket=100;portable=false;" +
+        "withGrams=false;bandBuckets=0").getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException] {
+      IncrementalDedup.store(spark, root).append(craft(1L -> textA))
+    }
+    assert(e.getMessage.contains("sketch parameters are fixed per store"), e.getMessage)
   }
 
   test("verifiedPairs without grams fails loudly") {

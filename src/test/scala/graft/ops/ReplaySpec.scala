@@ -4,12 +4,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.{PortableSketches, TextSketches}
+import graft.functions.PortableSketches
 
-/** The replayable sketch family (ops.Replay / functions.PortableSketches):
-  * arithmetic known-answer + property checks, and the kernel-vs-algorithm
-  * equivalence that lets the fast xxhash64 winnowing kernel be "pinned by
-  * spec" while the gate pins the portable algorithm cross-engine.
+/** The replayable sketch family (functions.PortableSketches and the
+  * near-dup operators built on it, whose sketches the DuckDB oracle
+  * replays): arithmetic known-answer + property checks, and the
+  * kernel-vs-algorithm equivalences that let the one-pass kernels stand
+  * in for the explode shapes the oracle SQL states.
   */
 class ReplaySpec extends SparkSpec {
 
@@ -20,7 +21,7 @@ class ReplaySpec extends SparkSpec {
     assert(PortableSketches.hash60("hello") === 419982666956583591L)
     // column twin agrees with the driver-side twin
     val got = Seq("hello", "", "spark graft", "ünïcødé")
-      .toDF("s").select(Replay.hash60(col("s"))).as[Long].collect()
+      .toDF("s").select(PortableSketches.hash60(col("s"))).as[Long].collect()
     assert(got.toSeq === Seq("hello", "", "spark graft", "ünïcødé").map(PortableSketches.hash60))
   }
 
@@ -57,12 +58,12 @@ class ReplaySpec extends SparkSpec {
   }
 
   test("portable winnowing kernel == explode + window-min algorithm (hash60)") {
-    // the Replay.fingerprints kernel and the SQL the oracle states are the
+    // the TextAnalysis.fingerprints kernel and the SQL the oracle states are the
     // same computation: prove it by running the explode shape with the
     // SAME portable hash and comparing fingerprints exactly
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet").limit(50)
     val k = 8; val w = 4
-    val kernel = Replay.fingerprints(docs, k, w)
+    val kernel = TextAnalysis.fingerprints(docs, k, w)
       .select(col("doc_id"), col("fingerprint"))
     val win = Window.partitionBy(col("doc_id")).orderBy(col("i")).rowsBetween(0, w - 1)
     val explodeForm = docs
@@ -71,34 +72,7 @@ class ReplaySpec extends SparkSpec {
       .filter(col("n_grams") - lit(w - 1) > 0)
       .select(col("doc_id"), col("norm"), col("n_grams"),
         explode(sequence(lit(1), col("n_grams"))).as("i"))
-      .withColumn("h", Replay.hash60(col("norm").substr(col("i"), lit(k))))
-      .withColumn("wmin", min(col("h")).over(win))
-      .filter(col("i") <= col("n_grams") - lit(w - 1))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_set(col("wmin"))).as("fingerprint"))
-    val km = kernel.as[(Long, Seq[Long])].collect().toMap
-    val em = explodeForm.as[(Long, Seq[Long])].collect().toMap
-    assert(km.keySet === em.keySet)
-    km.foreach { case (id, fp) => assert(fp === em(id), s"doc $id") }
-  }
-
-  test("xxhash64 winnowing kernel == explode + window-min algorithm") {
-    // the fast TextSketches kernel and the Replay/oracle algorithm are the
-    // same computation modulo the hash family; prove it by running the
-    // explode shape WITH xxhash64 (Spark's builtin shares the kernel's
-    // seed-42 byte hashing) and comparing fingerprints exactly
-    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet").limit(50)
-    val kernel = TextAnalysis.fingerprints(docs, k = 8, w = 4)
-      .select(col("doc_id"), col("fingerprint"))
-    val k = 8; val w = 4
-    val win = Window.partitionBy(col("doc_id")).orderBy(col("i")).rowsBetween(0, w - 1)
-    val explodeForm = docs
-      .withColumn("norm", Shingles.normalize(col("text")))
-      .withColumn("n_grams", length(col("norm")) - lit(k - 1))
-      .filter(col("n_grams") - lit(w - 1) > 0)
-      .select(col("doc_id"), col("norm"), col("n_grams"),
-        explode(sequence(lit(1), col("n_grams"))).as("i"))
-      .withColumn("h", xxhash64(col("norm").substr(col("i"), lit(k))))
+      .withColumn("h", PortableSketches.hash60(col("norm").substr(col("i"), lit(k))))
       .withColumn("wmin", min(col("h")).over(win))
       .filter(col("i") <= col("n_grams") - lit(w - 1))
       .groupBy(col("doc_id"))
@@ -143,7 +117,7 @@ class ReplaySpec extends SparkSpec {
       (2L, "alpha beta gamma delta epsilon zeta"),
       (3L, "totally different words entirely here now")
     ).toDF("doc_id", "text")
-    val pairs = Replay.simhashPairs(docs, maxHamming = 0)
+    val pairs = Dedup.simhashPairs(docs, maxHamming = 0)
       .as[(Long, Long, Long)].collect()
     assert(pairs.toSeq === Seq((1L, 2L, 0L)))
   }
@@ -154,7 +128,7 @@ class ReplaySpec extends SparkSpec {
       (2L, "alpha beta gamma delta epsilon zeta eta theta"),
       (3L, "the completely different document body with other words")
     ).toDF("doc_id", "text")
-    val cands = Replay.minhashCandidates(docs, k = 32, bands = 8, minEstJaccard = 0.25)
+    val cands = Dedup.minhashCandidates(docs, k = 32, bands = 8, minEstJaccard = 0.25)
       .as[(Long, Long, Double)].collect()
     assert(cands.toSeq === Seq((1L, 2L, 1.0)))
   }
@@ -172,7 +146,7 @@ class ReplaySpec extends SparkSpec {
       .filter(col("n") > 0)
       .select(col("doc_id"), col("norm"),
         explode(sequence(lit(1), col("n"))).as("i"))
-      .select(col("doc_id"), Replay.hash60(col("norm").substr(col("i"), lit(k))).as("h"))
+      .select(col("doc_id"), PortableSketches.hash60(col("norm").substr(col("i"), lit(k))).as("h"))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("h"))).as("ghs"))
     val km = kernel.as[(Long, Seq[Long])].collect().toMap
@@ -188,30 +162,11 @@ class ReplaySpec extends SparkSpec {
       (3L, "the completely different document body with other words instead")
     ).toDF("doc_id", "text")
     val base = spark.sparkContext.getPersistentRDDs.size
-    val pairs = Replay.verifiedNearDupPairs(docs, threshold = 0.31)
+    val pairs = Dedup.verifiedNearDupPairs(docs, threshold = 0.31)
     assert(pairs.as[(Long, Long, Double)].collect().toSeq === Seq((1L, 2L, 1.0)))
     // internal sketch cache released; the result is the one persisted handle
     assert(spark.sparkContext.getPersistentRDDs.size === base + 1)
     pairs.unpersist(blocking = true)
     assert(spark.sparkContext.getPersistentRDDs.size === base)
-  }
-
-  test("replay verified pairs equal the xxhash64 scale path on high-J pairs") {
-    // in the high-recall zone (J = 1 here: catch probability 1 for any
-    // banding) the portable gate operator and the xxhash64 production
-    // operator must produce the same verified pair set — Jaccard on
-    // distinct gram-HASH sets is hash-family-independent barring
-    // collisions, and both use the same banding/caps/threshold
-    val docs = (1 to 40).map { i =>
-      if (i % 2 == 0) (i.toLong, s"shared prefix words run ${i / 2} common tail block alpha beta gamma")
-      else (i.toLong, s"shared prefix words run ${(i + 1) / 2} common tail block alpha beta gamma")
-    }.toDF("doc_id", "text")
-    val replay = Replay.verifiedNearDupPairs(docs, threshold = 0.31)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
-    val scale = Dedup.verifiedNearDupPairs(docs, threshold = 0.31)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
-    assert(replay.nonEmpty)
-    assert(replay === scale)
-    spark.catalog.clearCache()
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ops.{IncrementalDedup, Replay}
+import graft.ops.{Dedup, IncrementalDedup}
 
 /** Pins [[DedupIngestStream]]: a file-drop stream appended micro-batch by
   * micro-batch into the persisted signature store equals the full
@@ -45,7 +45,7 @@ class DedupIngestStreamSpec extends SparkSpec {
     DedupIngestStream.runOnce(spark, inbox, docs.schema, s"$root/store", s"$root/ckpt")
     val st = IncrementalDedup.store(spark, s"$root/store")
     assert(st.committedGens().size === 3) // maxFilesPerTrigger=1 → one gen per file
-    val full = Replay.minhashCandidates(docs, minEstJaccard = 0.25)
+    val full = Dedup.minhashCandidates(docs, minEstJaccard = 0.25)
     assert(candSet(st.candidates(0.25)) === candSet(full))
 
     // the at-least-once window: the store committed its generation but the
@@ -75,7 +75,7 @@ class DedupIngestStreamSpec extends SparkSpec {
     dropFile(extra, inbox, 3)
     DedupIngestStream.runOnce(spark, inbox, docs.schema, s"$root/store", s"$root/ckpt")
     assert(st.committedGens().size === 4)
-    val fullPlus = Replay.minhashCandidates(
+    val fullPlus = Dedup.minhashCandidates(
       docs.select("doc_id", "text").unionByName(extra), minEstJaccard = 0.25)
     assert(candSet(st.candidates(0.25)) === candSet(fullPlus))
   }
